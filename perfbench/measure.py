@@ -49,6 +49,29 @@ def summary(values: list[float]) -> dict:
             "tail": tail(values)}
 
 
+def steal_ticks(stat: str = "/proc/stat") -> tuple[int, int]:
+    """(ticks stolen by the hypervisor, all ticks) over all CPUs so far."""
+    with open(stat) as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
+def steal_share(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """Share of the CPUs' time the hypervisor stole between two
+    ``steal_ticks`` readings: a slow run on a busy host shows here."""
+    total = after[1] - before[1]
+    return (after[0] - before[0]) / total if total else 0.0
+
+
+def stolen_per_cpu_s(before: tuple[int, int], after: tuple[int, int],
+                     ncpu: int | None = None) -> float:
+    """Seconds the hypervisor stole from each CPU, on average, between two
+    ``steal_ticks`` readings: for a block that kept every CPU busy, how
+    long it waited for CPUs the machine did not get."""
+    ncpu = ncpu or os.cpu_count() or 1
+    return (after[0] - before[0]) / ncpu / os.sysconf("SC_CLK_TCK")
+
+
 def tree_cpu_s(root: int, proc: str = "/proc") -> float:
     """CPU seconds (user and system, with those of reaped children) used so
     far by process ``root`` and its live descendants: for the benchmark,

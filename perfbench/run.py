@@ -8,13 +8,17 @@ Run from the repository root:
         --seconds 10 --trace 0
 
 Prints one JSON line with the run's provenance and workload detail (wall
-and CPU times of every operation, wall median and tail), then, as the last
+and CPU times of every operation, wall median and tail, the share of CPU
+time the hypervisor stole during the run), then, as the last
 line, ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end
 metrics with ``--trace 0``, the per-layer ones with ``--trace 1``.
 
 End-to-end metrics: ``setup_s``, the median CPU seconds of opening a
 ``Searcher`` and answering its first query; ``op_cpu_ms``, the median CPU
 milliseconds of the workload's operation (a build, or a top-10 query);
+``build_s``, the median wall seconds of a warm ``build_index`` of the
+corpus less the time the hypervisor stole from each CPU meanwhile (the only
+bounded wall time: CPU time cannot see lost parallelism);
 ``index_bytes_per_input_byte``, the built index's size over the corpus
 text's. Everything it writes goes under ``.perfbench-work/`` in the
 repository; a traced run leaves its spans there as JSON.
@@ -85,7 +89,7 @@ def main(argv=None) -> int:
     sys.path.insert(0, str(ROOT))
     import lucene_spark  # noqa: F401 — fail before any work without the engine
 
-    from measure import summary
+    from measure import steal_share, steal_ticks, summary
     from workloads import Bench
 
     base = ROOT / ".perfbench-work"
@@ -103,6 +107,7 @@ def main(argv=None) -> int:
     tempfile.tempdir = str(work / "tmp")
 
     bench = Bench(args.workload, args.seed, args.seconds, bool(args.trace), work)
+    steal_before = steal_ticks()
     try:
         bench.setup()
         getattr(bench, f"run_{args.workload}")()
@@ -121,8 +126,10 @@ def main(argv=None) -> int:
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "provenance": provenance(bench), "latency_ms": summary(bench.op_ms),
         "cpu_ms": summary(bench.op_cpu_ms), "op_ms": bench.op_ms,
-        "op_cpu_ms": bench.op_cpu_ms,
+        "op_cpu_ms": bench.op_cpu_ms, "op_what": bench.op_what,
+        "build_s": bench.build_s,
         "failed_op_ratio": t.failed_ratio, "errors": t.errors,
+        "host_steal_share": steal_share(steal_before, steal_ticks()),
         "detail": bench.detail}, default=str))
     print(json.dumps({"correct": t.failed == 0, "attempted": t.attempted,
                       "failed": t.failed, "metrics": metrics}))

@@ -6,7 +6,8 @@ import os
 import pytest
 
 from measure import (JobCounts, Span, Tally, Tracer, count_jobs, nearest_rank,
-                     self_times, tail, tree_cpu_s)
+                     self_times, steal_share, steal_ticks, stolen_per_cpu_s,
+                     tail, tree_cpu_s)
 
 
 # -- the percentile rule -------------------------------------------------------
@@ -191,3 +192,18 @@ def test_tree_cpu_of_this_process_grows_with_work():
     before = tree_cpu_s(os.getpid())
     sum(i * i for i in range(3_000_000))
     assert tree_cpu_s(os.getpid()) > before
+
+
+def test_steal_share_between_two_readings(tmp_path):
+    stat = tmp_path / "stat"
+    # user nice system idle iowait irq softirq steal guest guest_nice
+    stat.write_text("cpu  100 0 20 800 10 0 5 15 0 0\ncpu0 1 2 3\n")
+    before = steal_ticks(str(stat))
+    assert before == (15, 950)
+    stat.write_text("cpu  160 0 30 1060 10 0 5 65 0 0\n")
+    assert steal_share(before, steal_ticks(str(stat))) == pytest.approx(
+        50 / 380)
+    assert steal_share(before, before) == 0.0
+    # 50 ticks stolen over 2 CPUs: 25 ticks from each
+    assert stolen_per_cpu_s(before, steal_ticks(str(stat)), ncpu=2) == \
+        pytest.approx(25 / os.sysconf("SC_CLK_TCK"))

@@ -6,24 +6,39 @@ seeded ``generate_corpus`` written to parquet, one ``build_index`` into 16
 segments (also the Spark/JIT warm-up), then ``SETUP_REPS`` set-ups, each
 opening a ``Searcher`` on that index and running its first query. Work a
 change moves into opening or a first query shows in ``setup_s``; work it
-moves into the build shows in ingest's ``op_cpu_ms``. The workload's own
-operations are timed after all of this and one untimed warm-up.
+moves into the build shows in ingest's ``op_cpu_ms`` and in ``build_s``.
+The workload's own operations are timed after all of this and one untimed
+warm-up.
 
 The end-to-end times are CPU times of the whole system (this process, the
 Spark JVM and its Python workers), not wall times: on a shared 4-core host
 the share of time the host steals varied from 3 to 22 % between runs, and
 the median query wall time with it by up to 1.8x, while CPU time moved
 far less. Wall times, with their tail, are in every run's detail line.
+CPU time cannot see a change that serializes work onto fewer cores or adds
+idle waits, so ``build_s`` is an end-to-end metric too: the median wall
+time of a warm build less the time the hypervisor stole from each CPU
+during it. Raw build walls moved with steal (about 2.4 s in runs with 1 %
+steal, 3.1-3.4 s in runs with 7-8 %); a build keeps every CPU busy, so the
+time stolen from each is time the build waited for a CPU the machine did
+not get. A build serialized onto one core, or an idle wait, still shows in
+full. The search workload times ``REF_BUILDS`` builds after its set-up to
+report it. Query walls spread too widely between runs for any bound the
+benchmark may set, so query latency is only the per-layer
+``wall.op_p50_ms``: an idle wait added to a query shows in no bounded
+metric.
 
 Traced runs (``--trace 1``) add what untraced runs must not pay for:
 Spark job accounting per operation, spans around the driver-side layers
 (installed by wrapping the calls at run time; no engine file changes),
 an in-process kernel probe per query, a 1-core invert probe, and one
 churn cycle (update, delete, merge, reopen, batch read) so the write layers
-report too. Traced and untraced operations alternate inside the timed
-window, which gives ``trace.overhead_ratio``.
+report too. In a traced run every operation of the timed window runs
+twice, traced and untraced, in alternating order: every operation the
+stream yields is traced, and ``trace.overhead_ratio`` compares the same
+operations.
 
-Churn is no timed workload of its own: a run pays about 30 s of JVM start,
+Churn is no timed workload of its own: a run pays about 20 s of JVM start,
 cold first build and set-ups before it times anything, and a churn window
 needs a warm-up and a timed cycle of about 10 s each on top. Keeping it to
 the traced run keeps a full set of seeded runs short.
@@ -42,13 +57,14 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 
-from measure import Tally, Tracer, count_jobs, tree_cpu_s
+from measure import (Tally, Tracer, count_jobs, steal_ticks, stolen_per_cpu_s,
+                     tree_cpu_s)
 
 N_DOCS = 5_000
 NUM_SEGMENTS = 16
 SETUP_REPS = 3
-#: untimed builds after the set-up one: the first build after it still
-#: costs up to a fifth more CPU than later ones
+#: untimed builds after the set-up one: the first build after it runs
+#: slower than later ones
 WARM_BUILDS = 1
 K = 10
 #: docs the traced churn cycle replaces
@@ -56,9 +72,11 @@ CHURN_UPDATE_DOCS = 40
 #: the churn cycle deletes by a term whose df is within this share of the
 #: corpus
 CHURN_DELETE_DF = (0.002, 0.008)
-#: query shapes in the order the interactive stream cycles through them
-STREAM_SHAPES = ("term", "and", "or", "phrase", "term", "and", "or",
-                 "sloppy", "term", "and", "or", "prefix")
+#: builds the search workload times for ``build_s``
+REF_BUILDS = 5
+#: the interactive stream's hot subset: this many queries of each shape
+#: take this share of the shape's picks. Chosen, not measured: the mix
+#: only has to repeat some queries so a driver-side cache would show.
 HOT_PER_SHAPE = 2
 HOT_SHARE = 0.5
 #: docs the 1-core invert probe analyzes and inverts
@@ -145,18 +163,36 @@ def queries_by_shape(qs: dict[str, str]) -> dict[str, list[str]]:
     return by_shape
 
 
-def query_stream(qs: dict[str, str], seed: int):
-    """Endless seeded stream of query ids. Shapes follow ``STREAM_SHAPES``,
-    so every seed times the same mix; within a shape a seeded hot pair
-    takes ``HOT_SHARE`` of the picks, so a driver-side cache would show."""
+def shape_cycle(counts: dict[str, int]) -> list[str]:
+    """One period of shapes, each as often as its count, spread evenly by
+    smooth weighted round robin (ties go to the earlier shape)."""
+    total = sum(counts.values())
+    credit = dict.fromkeys(counts, 0)
+    out = []
+    for _ in range(total):
+        for shape, n in counts.items():
+            credit[shape] += n
+        pick = max(credit, key=credit.get)
+        credit[pick] -= total
+        out.append(pick)
+    return out
+
+
+def query_stream(qs: dict[str, str], seed: int, cover: bool = False):
+    """Endless seeded stream of query ids. Shapes come in the proportions
+    of the query set itself (``generate_query_set``'s counts plus the
+    sloppy and prefix ones of ``make_queries``), in one order for every
+    seed. With ``cover``, one query of each shape comes first, so that
+    even a short window reaches every shape. Within a shape a seeded hot
+    pair takes ``HOT_SHARE`` of the picks."""
     rng = np.random.RandomState(seed + 2)
     by_shape = queries_by_shape(qs)
     hot = {shape: rng.choice(ids, min(HOT_PER_SHAPE, len(ids)),
                              replace=False).tolist()
            for shape, ids in by_shape.items()}
-    shapes = [x for x in STREAM_SHAPES if x in by_shape]
-    for i in itertools.count():
-        shape = shapes[i % len(shapes)]
+    cycle = shape_cycle({shape: len(ids) for shape, ids in by_shape.items()})
+    for shape in itertools.chain(by_shape if cover else (),
+                                 itertools.cycle(cycle)):
         pool = hot[shape] if rng.rand() < HOT_SHARE else by_shape[shape]
         yield pool[rng.randint(len(pool))]
 
@@ -184,7 +220,10 @@ class Bench:
         self.detail: dict = {}
         self.jobs: list = []
         self.op_ms: list[float] = []
+        #: what each timed operation did: "build", or the query id
+        self.op_what: list[str] = []
         self.op_cpu_ms: list[float] = []
+        self.build_s: list[float] = []
         self.pid = os.getpid()
         self._patches = ExitStack()
         self._op_seq = 0
@@ -196,6 +235,12 @@ class Bench:
         self.samples.setdefault(name, []).append(float(value))
 
     def spark_conf(self) -> dict[str, str]:
+        # The JVM compiles with C1 only. With C2 as well, compilation kept
+        # adding CPU time to every operation of a one-minute run (4-core
+        # VM, 5k-doc corpus): a build's CPU fell from 9.3 to 6.5 s over its
+        # first five builds and a query's from about 2 s to 1.1 s over
+        # forty, while with C1 alone both were flat from the first
+        # (5.5-6.7 s, 0.7-1.2 s).
         return {
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
@@ -203,7 +248,8 @@ class Bench:
             "spark.local.dir": str(self.work / "spark-local"),
             "spark.sql.warehouse.dir": str(self.work / "warehouse"),
             "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={self.work / 'tmp'} -XX:-UsePerfData",
+                f"-Djava.io.tmpdir={self.work / 'tmp'} -XX:-UsePerfData"
+                " -XX:TieredStopAtLevel=1",
         }
 
     def start_session(self, master: str):
@@ -249,43 +295,52 @@ class Bench:
                 self.jobs.append((name, count_jobs(sc.statusTracker(), op_id)))
             self.tracer.enabled = was
 
-    def window(self):
-        """Yields (index, traced) for the timed window's operations: at
-        least one, and another only while the mean so far says it will end
-        inside ``seconds``, so slow operations do not overrun the window by
-        a varying count. A traced run alternates traced and untraced
-        operations."""
+    def window(self, min_ops: int = 1):
+        """Yields (index, modes) for the timed window's operations: at
+        least ``min_ops``, and another only while the mean so far says it
+        will end inside ``seconds``, so slow operations do not overrun the
+        window by a varying count. ``modes`` says how to run the operation:
+        ``(False,)`` untraced, or in a traced run once traced and once
+        untraced, the order alternating so neither run is always second."""
         t0 = time.perf_counter()
         i = 0
         while True:
-            yield i, (not self.trace) or i % 2 == 0
+            if not self.trace:
+                yield i, (False,)
+            else:
+                yield i, (True, False) if i % 2 == 0 else (False, True)
             i += 1
             elapsed = time.perf_counter() - t0
-            if elapsed * (i + 1) / i > self.seconds:
+            if i >= min_ops and elapsed * (i + 1) / i > self.seconds:
                 return
 
     @contextmanager
     def stopwatch(self):
-        """Wall and CPU milliseconds of the block, put in the yielded dict
-        when it ends without raising."""
+        """Wall, CPU and stolen (per CPU) milliseconds of the block, put
+        in the yielded dict when it ends without raising."""
         out: dict[str, float] = {}
+        s0 = steal_ticks()
         c0, t0 = tree_cpu_s(self.pid), time.perf_counter()
         yield out
         out["wall_ms"] = (time.perf_counter() - t0) * 1e3
         out["cpu_ms"] = (tree_cpu_s(self.pid) - c0) * 1e3
+        out["stolen_ms"] = stolen_per_cpu_s(s0, steal_ticks()) * 1e3
 
-    def timed(self, sw: dict[str, float], traced: bool) -> None:
+    def timed(self, sw: dict[str, float], traced: bool, what: str) -> None:
+        self.op_what.append(what)
         self.op_ms.append(sw["wall_ms"])
         self.op_cpu_ms.append(sw["cpu_ms"])
         (self._traced_ms if traced else self._untraced_ms).append(sw["wall_ms"])
 
     def install_spans(self) -> None:
         """Traced runs: spans around calls the engine makes into its own
-        layers (term stats, catalog loads)."""
+        layers (term stats, catalog loads, query rewrites)."""
         import lucene_spark.operators.build as build_mod
+        import lucene_spark.plans.query as query_mod
         from lucene_spark.sources.catalog import SnapshotCatalog
         self._patch(build_mod, "compute_term_stats", "build.term_stats")
         self._patch(SnapshotCatalog, "load", "catalog.load")
+        self._patch(query_mod, "rewrite_fixed_point", "plans.rewrite")
 
     def _patch(self, owner, attr: str, span: str) -> None:
         orig = getattr(owner, attr)
@@ -335,11 +390,8 @@ class Bench:
 
     def query(self, searcher, text: str) -> list[tuple[int, float]]:
         from lucene_spark.plans.parser import parse
-        from lucene_spark.plans.query import rewrite_fixed_point
         with self.tracer.span("plans.parse"):
             q = parse(text)
-        with self.tracer.span("plans.rewrite"):
-            q = rewrite_fixed_point(q)
         with self.tracer.span("search.job"):
             rows = searcher.search(q, k=K).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
@@ -474,29 +526,42 @@ class Bench:
                      len(part) / (time.perf_counter() - t0))
 
     # -- workloads ------------------------------------------------------------------
+    def checked_build(self, index_dir: Path, name: str, traced: bool) \
+            -> dict | None:
+        """One build of the whole corpus, checked and removed again; its
+        stopwatch reading, or None if it raised. Warm builds (all but
+        ``warm-up``) add their wall time less stolen time to ``build_s``."""
+        try:
+            with self.stopwatch() as sw, self.op(name, traced):
+                snap = self.build(index_dir)
+        except Exception as e:  # noqa: BLE001 — count it and go on
+            self.tally.record(False, f"{name}: {e!r}")
+            return None
+        why = self.check_snapshot(snap)
+        self.tally.record(not why, f"{name}: {why}")
+        shutil.rmtree(index_dir)
+        if name != "warm-up":
+            self.build_s.append((sw["wall_ms"] - sw["stolen_ms"]) / 1e3)
+        return sw
+
     def run_ingest(self) -> None:
         """``build_index`` of the whole corpus, again and again, after
-        ``WARM_BUILDS`` untimed ones (index None)."""
+        ``WARM_BUILDS`` untimed ones."""
         index_dir = self.work / "ingest"
-        for i, traced in itertools.chain([(None, False)] * WARM_BUILDS,
-                                         self.window()):
-            try:
-                with self.stopwatch() as sw, \
-                        self.op("warm-up" if i is None else "build", traced):
-                    snap = self.build(index_dir)
-            except Exception as e:  # noqa: BLE001 — count it and go on
-                self.tally.record(False, f"build {i}: {e!r}")
-                continue
-            if i is not None:
-                self.timed(sw, traced)
-            why = self.check_snapshot(snap)
-            self.tally.record(not why, f"build {i}: {why}")
-            shutil.rmtree(index_dir)
+        for _ in range(WARM_BUILDS):
+            self.checked_build(index_dir, "warm-up", False)
+        for _, modes in self.window():
+            for traced in modes:
+                sw = self.checked_build(index_dir, "build", traced)
+                if sw is not None:
+                    self.timed(sw, traced, "build")
         self.detail["build_docs_per_s"] = N_DOCS / (_median(self.op_ms) / 1e3)
 
     def run_search_interactive(self) -> None:
-        """One client, one top-10 ``Searcher.search`` per operation. One
-        untimed query per shape comes first: the first run of a plan shape
+        """One client, one top-10 ``Searcher.search`` per operation. First
+        come ``REF_BUILDS`` builds for ``build_s`` (with no warm-up
+        build of their own: the median passes over the first, slower one),
+        then one untimed query per shape: the first run of a plan shape
         costs up to twice a warm one."""
         from lucene_spark.oracle import OracleIndex
         from lucene_spark.plans.parser import parse
@@ -520,15 +585,21 @@ class Bench:
             ops.append((qid, why))
             return sw
 
+        builds = self.work / "builds"
+        for _ in range(REF_BUILDS):
+            self.checked_build(builds, "build", True)
         by_shape = queries_by_shape(self.queries)
-        for shape in dict.fromkeys(STREAM_SHAPES):
-            if shape in by_shape:
-                ask(by_shape[shape][0], "warm-up", False)
-        stream = query_stream(self.queries, self.seed)
-        for _, traced in self.window():
-            sw = ask(next(stream), "query", traced)
-            if sw is not None:
-                self.timed(sw, traced)
+        for ids in by_shape.values():
+            ask(ids[0], "warm-up", False)
+        # a traced window runs at least one query of each shape
+        stream = query_stream(self.queries, self.seed, cover=self.trace)
+        min_ops = len(by_shape) if self.trace else 1
+        for _, modes in self.window(min_ops):
+            qid = next(stream)
+            for traced in modes:
+                sw = ask(qid, "query", traced)
+                if sw is not None:
+                    self.timed(sw, traced, qid)
         # every distinct query against the oracle, outside all timing
         oracle = OracleIndex.build(list(self.terms.content.items()))
         wrong = {qid for qid, hits in first.items()
@@ -647,6 +718,7 @@ class Bench:
         return {
             "setup_s": {"value": _median(self.setup_cpu_s), "unit": "s"},
             "op_cpu_ms": {"value": _median(self.op_cpu_ms), "unit": "ms"},
+            "build_s": {"value": _median(self.build_s), "unit": "s"},
             "index_bytes_per_input_byte": {"value": self.index_bytes_ratio,
                                            "unit": "ratio"},
         }
