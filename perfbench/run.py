@@ -105,6 +105,14 @@ def main(argv=None) -> int:
     os.environ["SPARK_LAUNCHER_OPTS"] = " ".join(
         filter(None, (os.environ.get("SPARK_LAUNCHER_OPTS"), "-XX:-UsePerfData")))
     tempfile.tempdir = str(work / "tmp")
+    # whatever the caller's environment: Spark binds to the loopback only
+    # (it would otherwise pick an interface by the host name, which a
+    # machine without a network may lack), and its Python workers run
+    # this interpreter
+    os.environ["SPARK_LOCAL_IP"] = "127.0.0.1"
+    os.environ["SPARK_LOCAL_HOSTNAME"] = "localhost"
+    os.environ["PYSPARK_PYTHON"] = sys.executable
+    os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
 
     bench = Bench(args.workload, args.seed, args.seconds, bool(args.trace), work)
     steal_before = steal_ticks()

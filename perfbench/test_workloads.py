@@ -5,7 +5,10 @@ import itertools
 from collections import Counter
 from pathlib import Path
 
-from workloads import Bench, query_stream, queries_by_shape, shape_cycle
+import numpy as np
+
+from workloads import (Bench, fold_seed, query_stream, queries_by_shape,
+                       shape_cycle)
 
 COUNTS = {"and": 20, "or": 15, "phrase": 5, "prefix": 4, "sloppy": 5,
           "term": 16}
@@ -58,3 +61,12 @@ def test_untraced_window_runs_each_operation_once():
 def test_traced_window_runs_each_operation_both_ways_in_turn():
     assert list(_bench(True).window(min_ops=3)) == [
         (0, (True, False)), (1, (False, True)), (2, (True, False))]
+
+
+def test_any_integer_seed_folds_into_the_generators_range():
+    assert fold_seed(7) == 7
+    for seed in (-1, 2**32 - 1, 2**32, 123456789012, -2**63):
+        folded = fold_seed(seed)
+        assert 0 <= folded and folded + 3 < 2**32
+        np.random.RandomState(folded + 3)           # does not raise
+    assert Bench("ingest", -1, 0.0, False, Path(".")).seed == fold_seed(-1)

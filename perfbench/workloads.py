@@ -50,6 +50,7 @@ import itertools
 import os
 import shutil
 import statistics
+import subprocess
 import time
 from contextlib import ExitStack, contextmanager
 from pathlib import Path
@@ -83,6 +84,16 @@ HOT_SHARE = 0.5
 INVERT_PROBE_DOCS = 2000
 #: the workload operation whose Spark jobs ``spark.*_per_op`` count
 OP_NAME = {"ingest": "build", "search_interactive": "query"}
+#: seeds are folded below this: numpy's RandomState, which the corpus and
+#: query generators use, takes 0 <= seed < 2**32, and the benchmark adds
+#: small offsets to the seed for its own generators
+SEED_RANGE = 2**31
+
+
+def fold_seed(seed: int) -> int:
+    """Any integer seed (negative, or 2**32 and above) as one the
+    generators accept; seeds already in range stay as they are."""
+    return seed % SEED_RANGE
 
 
 def _median(xs):
@@ -209,7 +220,7 @@ class Bench:
     def __init__(self, workload: str, seed: int, seconds: float, trace: bool,
                  work: Path):
         self.workload = workload
-        self.seed = seed
+        self.seed = fold_seed(seed)
         self.seconds = seconds
         self.trace = trace
         self.work = work
@@ -245,10 +256,12 @@ class Bench:
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "2g",
+            "spark.driver.host": "127.0.0.1",
+            "spark.driver.bindAddress": "127.0.0.1",
             "spark.local.dir": str(self.work / "spark-local"),
             "spark.sql.warehouse.dir": str(self.work / "warehouse"),
             "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={self.work / 'tmp'} -XX:-UsePerfData"
+                f"-Djava.io.tmpdir=\"{self.work / 'tmp'}\" -XX:-UsePerfData"
                 " -XX:TieredStopAtLevel=1",
         }
 
@@ -259,22 +272,30 @@ class Bench:
         self.spark.sparkContext.setLogLevel("ERROR")
 
     def stop(self) -> None:
-        """Stop Spark, the JVM it launched and its Python workers."""
+        """Stop Spark, the JVM it launched and its Python workers; the JVM
+        is killed if Spark or the gateway fails to stop, or it outlives
+        ``terminate`` by 30 s."""
         self._patches.close()
         if self.spark is None:
             return
         from pyspark import SparkContext
         gateway = SparkContext._gateway
-        self.spark.stop()
-        self.spark = None
-        if gateway is not None:
-            proc = getattr(gateway, "proc", None)
-            gateway.shutdown()
+        proc = getattr(gateway, "proc", None)
+        try:
+            self.spark.stop()
+            if gateway is not None:
+                gateway.shutdown()
+        finally:
+            self.spark = None
             SparkContext._gateway = None
             SparkContext._jvm = None
             if proc is not None:
                 proc.terminate()
-                proc.wait(timeout=60)
+                try:
+                    proc.wait(timeout=30)
+                except subprocess.TimeoutExpired:
+                    proc.kill()
+                    proc.wait()
 
     @contextmanager
     def op(self, name: str, traced: bool = True):
@@ -652,7 +673,7 @@ class Bench:
         from lucene_spark.operators.delete import delete_by_term, update_documents
         from lucene_spark.operators.merge import maintain
         from lucene_spark.plans.parser import parse as parse_query
-        rng = np.random.RandomState(self.seed * 1000)
+        rng = np.random.RandomState(self.seed + 3)
         index_dir = self.work / "churn"
         shutil.copytree(self.index_dir, index_dir)
         ids = sorted(rng.choice(N_DOCS, CHURN_UPDATE_DOCS, replace=False).tolist())
