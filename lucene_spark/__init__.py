@@ -21,3 +21,8 @@ Architecture (NOT a port):
 """
 
 __version__ = "0.1.0"
+
+from .session import bootstrap_worker
+
+# in a Spark Python worker this runs when an engine UDF is first unpickled
+bootstrap_worker()

@@ -50,6 +50,11 @@ STATS_SCHEMA = ("seg_id int, num_docs long, num_terms long, num_postings long, "
 POSTINGS_COLUMNS = ["term", "seg_id", "df", "ttf", "doc_bytes", "tf_bytes",
                     "pos_bytes", "block_last", "impact_bytes"]
 
+#: Snapshot ``extra`` keys that describe the state of committed segments
+#: (tombstones, docvalues updates) and so carry across an append build
+_SEGMENT_STATE_KEYS = ("deletes", "num_deleted", "soft_deletes",
+                       "num_soft_deleted", "dv_updates", "num_dv_updates")
+
 
 def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
                    doc_id_col: str, stopwords: frozenset,
@@ -897,8 +902,11 @@ def build_index(spark, df, index_dir: str, *,
                            (F.pmod(F.col(doc_id_col), F.lit(num_segments))
                             + F.lit(seg_id_offset)).cast("int"))
 
+    # resume set: this build's own seg-id range only, so segment dirs of
+    # other builds (merged away, or never committed) stay out of the commit
     durable = {sid: st for sid, st in catalog.durable_segments().items()
-               if st.get("origin", "build") == "build"}
+               if st.get("origin", "build") == "build"
+               and seg_id_offset <= sid < seg_id_offset + num_segments}
     if resume and durable:
         work = work.filter(~F.col(SEG_COL).isin(list(durable.keys())))
 
@@ -934,7 +942,11 @@ def build_index(spark, df, index_dir: str, *,
                  .applyInPandas(builder, schema=STATS_SCHEMA)
                  .collect())
 
-    seg_stats: dict[int, dict] = dict(durable)
+    # an append keeps the latest snapshot's segments and the tombstones
+    # and docvalues updates that apply to them
+    latest = catalog.load()
+    live = {s["seg_id"]: s for s in latest.segments} if latest else {}
+    seg_stats: dict[int, dict] = {**durable, **live}
     for row in new_stats:
         seg_stats[row["seg_id"]] = {**row.asDict(), "origin": "build"}
     segments = [seg_stats[s] for s in sorted(seg_stats)]
@@ -944,7 +956,6 @@ def build_index(spark, df, index_dir: str, *,
         "sum_total_term_freq": int(sum(
             s.get("sum_token_len", s["sum_doc_len"]) for s in segments)),
     }
-    latest = catalog.load()
     next_id = (latest.snapshot_id + 1) if latest else 1
     ts_path = None
     if compute_stats:
@@ -952,10 +963,22 @@ def build_index(spark, df, index_dir: str, *,
             spark, catalog, [s["seg_id"] for s in segments],
             os.path.join(index_dir, "term_stats", f"gen-{next_id}"))
     from ..functions.codec import CODEC_VERSION
-    extra = {"num_segments": num_segments,
-             "doc_id_col": doc_id_col,
-             "store_positions": store_positions,
-             "codec_version": CODEC_VERSION}
+    extra = {k: v for k, v in (latest.extra if latest else {}).items()
+             if k in _SEGMENT_STATE_KEYS}
+    rebuilt = sorted(set(live) & {row["seg_id"] for row in new_stats})
+    if rebuilt:
+        # a segment rebuilt in place (resume=False) drops the tombstones
+        # and docvalues updates that addressed its old docs
+        from .delete import carry_tombstones
+        from .docvalues import carry_updates
+        carry_tombstones(spark, catalog, latest, extra, rebuilt, next_id)
+        carry_tombstones(spark, catalog, latest, extra, rebuilt, next_id,
+                         key="soft_deletes")
+        carry_updates(spark, catalog, latest, extra, rebuilt, next_id)
+    extra.update({"num_segments": num_segments,
+                  "doc_id_col": doc_id_col,
+                  "store_positions": store_positions,
+                  "codec_version": CODEC_VERSION})
     if sort_field is not None:
         extra["index_sort"] = {"field": sort_field,
                                "ascending": bool(sort_ascending)}

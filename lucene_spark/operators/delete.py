@@ -25,6 +25,7 @@ pushdown.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import numpy as np
@@ -119,6 +120,41 @@ def write_tombstone_table(spark, catalog: SnapshotCatalog, gen: int,
     count = int(spark.read.parquet(tmp).count())
     os.rename(tmp, final)
     return os.path.relpath(final, catalog.root), count
+
+
+def carry_tombstones(spark, catalog: SnapshotCatalog, snap, extra: dict,
+                     drop_seg_ids: list[int], next_gen: int,
+                     key: str = "deletes", add_df=None) -> None:
+    """Carry ``snap``'s tombstone table ``key`` into the next generation
+    without the rows of ``drop_seg_ids`` and with ``add_df``'s rows
+    (mutates ``extra`` in place) — filtered and rewritten on executors,
+    so the driver never holds the delete set."""
+    from pyspark.sql import functions as F
+
+    parts = []
+    rel_prev = (snap.extra or {}).get(key)
+    if rel_prev:
+        prev_path = rel_prev if os.path.isabs(rel_prev) \
+            else os.path.join(catalog.root, rel_prev)
+        parts.append(spark.read.parquet(prev_path)
+                     .filter(~F.col("seg_id")
+                             .isin([int(s) for s in drop_seg_ids])))
+    if add_df is not None:
+        parts.append(add_df)
+    if not parts:
+        return
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    rel, count = write_tombstone_table(spark, catalog, next_gen, df)
+    count_key = "num_deleted" if key == "deletes" else "num_soft_deleted"
+    if count:
+        extra[key] = rel
+        extra[count_key] = count
+    else:
+        shutil.rmtree(os.path.join(catalog.root, rel), ignore_errors=True)
+        extra.pop(key, None)
+        extra[count_key] = 0
 
 
 def delete_by_term(spark, index_dir: str, term: str):

@@ -606,8 +606,6 @@ def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
     each swap is independent of commit order."""
     import contextlib
 
-    from pyspark.sql import functions as F
-
     with (lock if lock is not None else contextlib.nullcontext()):
         snap = catalog.load()
         new_segments = [s for s in snap.segments
@@ -634,56 +632,18 @@ def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
         field_stats["sum_total_term_freq"] = int(sum(
             s2.get("sum_token_len", s2["sum_doc_len"])
             for s2 in new_segments))
-        # carry the surviving tombstones forward DISTRIBUTED: filter the
-        # previous tombstone table by segment on executors and write the
-        # next generation's table the same way — the driver never holds
-        # the full delete set (it only read the merged segments' slice)
-        rel_prev = (snap.extra or {}).get("deletes")
-        if rel_prev:
-            from .delete import write_tombstone_table
-            prev_path = rel_prev if os.path.isabs(rel_prev) \
-                else os.path.join(catalog.root, rel_prev)
-            rem_df = (spark.read.parquet(prev_path)
-                      .filter(~F.col("seg_id")
-                              .isin([int(s) for s in seg_ids])))
-            rel, count = write_tombstone_table(spark, catalog, next_id,
-                                               rem_df)
-            if count:
-                extra["deletes"] = rel
-                extra["num_deleted"] = count
-            else:
-                shutil.rmtree(os.path.join(catalog.root, rel),
-                              ignore_errors=True)
-                extra.pop("deletes", None)
-                extra["num_deleted"] = 0
-        # soft tombstones carry the same way, plus the retention-retained
-        # pairs re-tombstoned under the merged segment's ids (purged soft
+        # carry the surviving tombstones forward DISTRIBUTED: the driver
+        # never holds the full delete set (it only read the merged
+        # segments' slice). Soft tombstones add the retention-retained
+        # pairs re-tombstoned under the merged segment's id (purged soft
         # deletes simply drop out of the table here)
-        rel_soft = (snap.extra or {}).get("soft_deletes")
-        if rel_soft or (new_soft is not None and len(new_soft)):
-            from .delete import write_tombstone_table
-            parts = []
-            if rel_soft:
-                soft_path = rel_soft if os.path.isabs(rel_soft) \
-                    else os.path.join(catalog.root, rel_soft)
-                parts.append(spark.read.parquet(soft_path)
-                             .filter(~F.col("seg_id")
-                                     .isin([int(s) for s in seg_ids])))
-            if new_soft is not None and len(new_soft):
-                parts.append(spark.createDataFrame(new_soft))
-            soft_df = parts[0]
-            for p in parts[1:]:
-                soft_df = soft_df.unionByName(p)
-            rel, count = write_tombstone_table(spark, catalog, next_id,
-                                               soft_df)
-            if count:
-                extra["soft_deletes"] = rel
-                extra["num_soft_deleted"] = count
-            else:
-                shutil.rmtree(os.path.join(catalog.root, rel),
-                              ignore_errors=True)
-                extra.pop("soft_deletes", None)
-                extra["num_soft_deleted"] = 0
+        from .delete import carry_tombstones
+        carry_tombstones(spark, catalog, snap, extra, seg_ids, next_id)
+        carry_tombstones(spark, catalog, snap, extra, seg_ids, next_id,
+                         key="soft_deletes",
+                         add_df=(spark.createDataFrame(new_soft)
+                                 if new_soft is not None and len(new_soft)
+                                 else None))
         # DocValues-update overlay: merged segments' rows were baked into
         # the merged doc_meta; surviving segments' rows carry forward
         # (distributed filter-and-rewrite, like the tombstones above).

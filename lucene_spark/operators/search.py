@@ -1421,9 +1421,6 @@ def _live_mask(deletes: dict[int, np.ndarray] | None, seg_id: int,
 
 def _topk_merge(gids: np.ndarray, scores32: np.ndarray, k: int):
     """k best by (score desc, global doc_id asc)."""
-    if len(gids) <= k:
-        order = np.lexsort((gids, -scores32.astype(np.float64)))
-        return gids[order], scores32[order]
     order = np.lexsort((gids, -scores32.astype(np.float64)))[:k]
     return gids[order], scores32[order]
 

@@ -1,19 +1,70 @@
-"""Session helpers: tuned SparkSession factory + package shipping.
+"""Session helpers: tuned SparkSession factory, package shipping and the
+executor-side worker bootstrap.
 
 On a real cluster the package ships via ``spark-submit --py-files
 lucene_spark.zip`` (the north star's deployment mode). For driver-side
 programmatic use (notebooks, the test driver) :func:`ensure_shipped` zips
 the package once and registers it with ``sc.addPyFile`` so executor Python
-workers can import it regardless of their working directory.
+workers can import it regardless of their working directory. Once there,
+:func:`bootstrap_worker` (run by the package import) trims the fixed cost
+each Python UDF task pays before any engine code runs.
 """
 
 from __future__ import annotations
 
+import gc
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 _SHIPPED: set[str] = set()
+
+
+class _PinnedZipImporter(zipimport.zipimporter):
+    """A zipimporter that reads its archive's directory once, when created.
+
+    A plain one re-reads the whole central directory on every
+    ``importlib.invalidate_caches()``, which PySpark's worker calls before
+    each task (``pyspark/worker_util.py``, ``setup_spark_files``)."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def bootstrap_worker() -> None:
+    """Stop paying Python-worker set-up on every Spark task.
+
+    Does nothing outside a PySpark worker process (the driver, tests) and
+    when run again. In a worker:
+
+    * every zip finder in ``sys.path_importer_cache`` (``pyspark.zip``,
+      py4j, the Spark jar, the shipped engine zip) and every finder made
+      later keeps the directory it read when created. No archive on a
+      worker's path changes while the worker lives: the first three are
+      install files, :func:`ensure_shipped` writes the engine zip once per
+      app, and workers die with their SparkContext. A zip added later gets
+      a new finder, which reads its own directory; directory finders are
+      still invalidated as before;
+    * the libraries every engine UDF loads are imported and the import
+      heap is frozen once, so the full ``gc.collect()`` the daemon runs
+      after every task (``pyspark/daemon.py``) skips it. Freezing happens
+      once per process, while the first engine UDF is unpickled and before
+      its task reads a row, so task data is never frozen.
+    """
+    if "pyspark.worker" not in sys.modules \
+            or _PinnedZipImporter in sys.path_hooks:
+        return
+    sys.path_hooks[:] = [_PinnedZipImporter if h is zipimport.zipimporter
+                         else h for h in sys.path_hooks]
+    for finder in sys.path_importer_cache.values():
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = _PinnedZipImporter
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    gc.freeze()
 
 
 def ensure_shipped(spark) -> None:

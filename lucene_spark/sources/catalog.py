@@ -6,7 +6,7 @@ pointer flip (reference ``index/SegmentInfos.java:54-63,131-132``,
 ``index/IndexWriter.java:172-180,3849``). On a real deployment this layer
 is an Iceberg table commit (snapshot-id pinned reads = ``VERSION AS OF``);
 the sandbox has no Iceberg runtime on the classpath, so we implement the
-same contract with manifest JSON files: write-temp + atomic rename, highest
+same contract with manifest JSON files: write-temp + atomic link, highest
 generation wins, every snapshot lists its segments with build metrics
 (docs/terms/postings counts, bytes compressed) and its parent.
 
@@ -84,7 +84,7 @@ class SnapshotCatalog:
 
     def commit(self, segments: list[dict], field_stats: dict,
                term_stats_path: str | None = None, extra: dict | None = None) -> Snapshot:
-        """Atomic commit: temp write + rename; generation = parent + 1.
+        """Atomic commit: temp write + link; generation = parent + 1.
         Paths under the index root are stored relative so the whole index
         directory can be renamed/copied (segment dirs already are)."""
         parent = self.load()
@@ -105,13 +105,18 @@ class SnapshotCatalog:
         final = os.path.join(self.manifest_dir, f"snapshot-{sid}.json")
         # single-writer invariant (the reference's IndexWriter holds a
         # write.lock): a lost generation race would silently drop a
-        # commit, so detect it rather than overwrite
-        if os.path.exists(final):
-            os.unlink(tmp)
+        # commit, so detect it rather than overwrite. link() fails with
+        # EEXIST atomically, where an exists() check before rename() lets
+        # two writers both pass
+        try:
+            os.link(tmp, final)
+        except FileExistsError:
             raise RuntimeError(
                 f"concurrent commit detected: generation {sid} already "
-                f"exists in {self.manifest_dir} (one writer per index)")
-        os.rename(tmp, final)
+                f"exists in {self.manifest_dir} (one writer per index)"
+            ) from None
+        finally:
+            os.unlink(tmp)
         snap.term_stats_path = term_stats_path
         return snap
 

@@ -149,3 +149,91 @@ def test_merge_purges_deletes(spark, corpus, deleted_index, oracle_full):
         assert np.allclose([g[1] for g in got], [w[1] for w in want],
                            rtol=0, atol=0), q
     assert s.count(Q.Term(DEL_TERM)) == 0
+
+
+def _updated_corpus(corpus, upd_ids):
+    newdocs = corpus[corpus.doc_id.isin(upd_ids)].copy()
+    newdocs["content"] = [f"zzupdated marker doc {i}" for i in upd_ids]
+    return newdocs
+
+
+def _assert_matches_oracle(spark, d, live):
+    """doc_count and top-k equal a fresh oracle over ``live`` exactly."""
+    oracle = OracleIndex.build(list(zip(live.doc_id, live.content)))
+    assert SnapshotCatalog(d).load().field_stats["doc_count"] == len(live)
+    s = Searcher(spark, d)
+    for q in (Q.Term("zzupdated"), Q.Term(QUERY_TERM),
+              Q.Or((Q.Term(QUERY_TERM), Q.Term(DEL_TERM)))):
+        got = [(r["doc_id"], r["score"])
+               for r in s.search(q, k=10).collect()]
+        want = oracle.top_k(q, k=10)
+        assert [g[0] for g in got] == [w[0] for w in want], q
+        assert np.allclose([g[1] for g in got], [w[1] for w in want],
+                           rtol=0, atol=0), q
+
+
+def test_update_keeps_earlier_deletes(spark, corpus, oracle_full):
+    """An update on an index with tombstones keeps them: deleted docs stay
+    deleted before and after the purging merge."""
+    import pandas as pd
+
+    from lucene_spark.operators.delete import update_documents
+
+    d = tempfile.mkdtemp(prefix="lucene_spark_upddel_")
+    build_index(spark, spark.createDataFrame(corpus), d, num_segments=4)
+    delete_by_term(spark, d, DEL_TERM)
+    gone = _deleted_doc_ids(oracle_full)
+    upd_ids = [i for i in range(N_DOCS) if i not in gone][:3]
+    newdocs = _updated_corpus(corpus, upd_ids)
+    update_documents(spark, d, spark.createDataFrame(newdocs))
+
+    # stale stats count every copy until a merge purges the tombstones
+    snap = SnapshotCatalog(d).load()
+    assert snap.field_stats["doc_count"] == N_DOCS + len(upd_ids)
+    s = Searcher(spark, d)
+    assert s.count(Q.Term(DEL_TERM)) == 0
+    assert sorted(r["doc_id"] for r in
+                  s.search(Q.Term("zzupdated"), k=10).collect()) == upd_ids
+
+    force_merge(spark, d, max_segments=1)
+    live = pd.concat([corpus[~corpus.doc_id.isin(gone | set(upd_ids))],
+                      newdocs])
+    _assert_matches_oracle(spark, d, live)
+
+
+def test_update_after_merge_keeps_merged_away_segments_out(spark, corpus):
+    """An update after a merge commits the merged segment, not the
+    merged-away segment dirs still on disk."""
+    import pandas as pd
+
+    from lucene_spark.operators.delete import update_documents
+
+    d = tempfile.mkdtemp(prefix="lucene_spark_updmerge_")
+    build_index(spark, spark.createDataFrame(corpus), d, num_segments=4)
+    force_merge(spark, d, max_segments=1)
+    upd_ids = [3, 4, 5]
+    newdocs = _updated_corpus(corpus, upd_ids)
+    update_documents(spark, d, spark.createDataFrame(newdocs))
+
+    snap = SnapshotCatalog(d).load()
+    assert len(snap.seg_ids) == 2
+    assert snap.field_stats["doc_count"] == N_DOCS + len(upd_ids)
+
+    force_merge(spark, d, max_segments=1)
+    live = pd.concat([corpus[~corpus.doc_id.isin(upd_ids)], newdocs])
+    _assert_matches_oracle(spark, d, live)
+
+
+def test_rebuild_in_place_drops_its_tombstones(spark, corpus, oracle_full):
+    """A build with resume=False over committed segments replaces them,
+    and the tombstones that addressed their old docs go with them."""
+    d = tempfile.mkdtemp(prefix="lucene_spark_rebuild_")
+    df = spark.createDataFrame(corpus)
+    build_index(spark, df, d, num_segments=4)
+    delete_by_term(spark, d, DEL_TERM)
+    build_index(spark, df, d, num_segments=4, resume=False)
+    catalog = SnapshotCatalog(d)
+    snap = catalog.load()
+    assert not load_deletes(catalog, snap)
+    assert snap.extra["num_deleted"] == 0
+    _assert_matches_oracle(spark, d, corpus)
