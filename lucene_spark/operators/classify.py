@@ -46,39 +46,24 @@ def term_doc_pairs(searcher, terms: list[str] | None, terms_df=None):
     is a broadcast LEFT-SEMI join instead (unbounded term sets — no
     driver materialization, at the cost of parquet min/max pruning).
     Tombstoned docs are masked at decode."""
-    from .search import TermSegPostings, _live_mask
+    from .search import TermSegPostings
 
-    empty = pd.DataFrame({"term": pd.Series([], dtype=object),
-                          "doc_id": pd.Series([], dtype="int64")})
     if terms_df is None and not terms:
-        return searcher.spark.createDataFrame(empty,
-                                              "term string, doc_id long")
-    deletes = searcher.deletes
-    if terms_df is not None:
-        pf = searcher.postings.join(F.broadcast(terms_df.select("term")),
-                                    "term", "left_semi")
-    else:
-        pf = searcher.postings.filter(
-            F.col("term").isin(sorted(set(terms))))
+        return searcher.spark.createDataFrame([], "term string, doc_id long")
 
-    def seg_pairs(key, postings_pdf, norms_pdf):
-        if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-            return empty
-        nrow = norms_pdf.iloc[0]
-        gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-        live = _live_mask(deletes, int(key[0]), len(gids))
+    def seg_pairs(seg_id, ctx, gids):
         out_t, out_d = [], []
-        for _, r in postings_pdf.iterrows():
+        for t, r in ctx.rows.items():
             lids, _ = TermSegPostings(r).decode_all()
-            if live is not None:
-                lids = lids[live[lids]]
-            out_t.append(np.full(len(lids), r["term"], dtype=object))
+            if ctx.live is not None:
+                lids = lids[ctx.live[lids]]
+            out_t.append(np.full(len(lids), t, dtype=object))
             out_d.append(gids[lids])
         return pd.DataFrame({"term": np.concatenate(out_t),
                              "doc_id": np.concatenate(out_d)})
 
-    return (pf.groupBy("seg_id").cogroup(searcher.norms.groupBy("seg_id"))
-            .applyInPandas(seg_pairs, schema="term string, doc_id long"))
+    return searcher.map_segments(terms if terms_df is None else terms_df,
+                                 seg_pairs, "term string, doc_id long")
 
 
 def _tokenize_inputs(inputs_df, input_id_col: str, text_col: str,
@@ -586,14 +571,11 @@ def term_doc_scores(searcher, terms: list[str], similarity=None):
     are pushed-filtered, scoring is map-side, nothing shuffles but the
     emitted (term, doc, score) rows."""
     from ..functions import bm25
-    from .search import TermSegPostings, _live_mask
+    from .search import TermSegPostings
 
     schema = "term string, doc_id long, score float"
-    empty = pd.DataFrame({"term": pd.Series([], dtype=object),
-                          "doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float32")})
     if not terms:
-        return searcher.spark.createDataFrame(empty, schema)
+        return searcher.spark.createDataFrame([], schema)
     terms = sorted(set(terms))
     sim = similarity or searcher.similarity
     dfs, ttfs = searcher._global_stats(terms)
@@ -603,31 +585,21 @@ def term_doc_scores(searcher, terms: list[str], similarity=None):
     weights = {t: sim.weight(df, doc_count, 1.0, ttfs.get(t, 0),
                              searcher.sum_ttf)
                for t, df in dfs.items()}
-    deletes = searcher.deletes
-    pf = searcher.postings.filter(F.col("term").isin(terms))
 
-    def seg_scores(key, postings_pdf, norms_pdf):
-        if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-            return empty
-        nrow = norms_pdf.iloc[0]
-        norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-        gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-        live = _live_mask(deletes, int(key[0]), len(norm_bytes))
+    def seg_scores(seg_id, ctx, gids):
         out = []
-        for _, r in postings_pdf.iterrows():
+        for t, r in ctx.rows.items():
             lids, tfs = TermSegPostings(r).decode_all()
-            if live is not None:
-                keep = live[lids]
+            if ctx.live is not None:
+                keep = ctx.live[lids]
                 lids, tfs = lids[keep], tfs[keep]
-            s = bm25.score_block(tfs, norm_bytes[lids],
-                                 weights[r["term"]], cache)
+            s = bm25.score_block(tfs, ctx.norms[lids], weights[t], cache)
             out.append(pd.DataFrame(
-                {"term": np.full(len(lids), r["term"], dtype=object),
+                {"term": np.full(len(lids), t, dtype=object),
                  "doc_id": gids[lids], "score": s}))
-        return pd.concat(out) if out else empty
+        return pd.concat(out)
 
-    return (pf.groupBy("seg_id").cogroup(searcher.norms.groupBy("seg_id"))
-            .applyInPandas(seg_scores, schema=schema))
+    return searcher.map_segments(terms, seg_scores, schema, cache, sim)
 
 
 def bm25nb_classify(searcher, inputs_df, class_df,

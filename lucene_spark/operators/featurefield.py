@@ -49,15 +49,9 @@ def feature_query(searcher, field: str, function: str, weight: float,
     query path (liveDocs semantics)."""
     from pyspark.sql import functions as F
 
-    dv = searcher.docvalues(field)
-    src = dv.filter(F.col("value") > 0)
-    if searcher.deletes:
-        tomb = searcher.spark.createDataFrame(
-            [(int(s), int(d)) for s, v in searcher.deletes.items()
-             for d in v], "seg_id int, local_doc_id int")
-        src = src.join(F.broadcast(tomb),
-                       on=["seg_id", "local_doc_id"], how="left_anti")
-    src = src.select("doc_id", F.col("value").cast("long").alias("freq"))
+    src = (searcher.drop_deleted(searcher.docvalues(field)
+                                 .filter(F.col("value") > 0))
+           .select("doc_id", F.col("value").cast("long").alias("freq")))
 
     def score_batches(it):
         for pdf in it:
@@ -93,13 +87,7 @@ def distance_feature_query(searcher, field: str, origin: int, pivot: int,
         raise ValueError(f"pivotDistance must be > 0, got {pivot}")
     import numpy as np
     w64 = float(np.float32(weight))  # Java: float boost widened to double
-    dv = searcher.docvalues(field)
-    if searcher.deletes:
-        tomb = searcher.spark.createDataFrame(
-            [(int(s), int(d)) for s, v in searcher.deletes.items()
-             for d in v], "seg_id int, local_doc_id int")
-        dv = dv.join(F.broadcast(tomb),
-                     on=["seg_id", "local_doc_id"], how="left_anti")
+    dv = searcher.drop_deleted(searcher.docvalues(field))
     o = F.lit(int(origin)).cast("long")
     dist = (F.greatest(F.col("value"), o)
             - F.least(F.col("value"), o)).cast("double")

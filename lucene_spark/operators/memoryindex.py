@@ -10,10 +10,15 @@ this is the standalone API for the latter.
 Single-field engine: ``add_field`` appends to the one content field;
 repeated calls concatenate with a +1 position gap, the analyzer's
 position-increment-gap role (``MemoryIndex.java`` keeps per-field token
-streams; we have one field). Scoring is the same float32-exact BM25 /
-Similarity chain as the full engine, with the single-doc collection
-stats the reference exposes through its MemoryIndexReader (docCount=1,
-df∈{0,1}, avgdl = the doc's own length) — verified by sharing the
+streams; we have one field). ``freeze()`` makes the instance immutable
+(the reference's frozen mode rejects further addField); ``reset()``
+clears and unfreezes it for reuse. The analyzer chain takes the same
+knobs as ``OracleIndex.build`` / ``build_index``.
+
+Scoring is the same float32-exact BM25 / Similarity chain as the full
+engine, with the single-doc collection stats the reference exposes
+through its MemoryIndexReader (docCount=1, df∈{0,1}, avgdl = the doc's
+own length) — verified by sharing the
 :class:`lucene_spark.oracle.OracleIndex` kernel, which is
 differential-tested against the Spark engine everywhere.
 """
@@ -28,34 +33,45 @@ from ..plans.query import Query
 class MemoryIndex:
     """One-document index; queries score against it directly."""
 
-    def __init__(self, stopwords: frozenset[str] = frozenset(),
-                 stemmer: str | None = None):
+    def __init__(self, text: str | None = None, **analyzer_kwargs):
         self._parts: list[str] = []
-        self._stopwords = stopwords
-        self._stemmer = stemmer
+        self._kwargs = analyzer_kwargs
         self._idx: OracleIndex | None = None
+        self._frozen = False
+        if text is not None:
+            self.add_field(text)
 
     def add_field(self, text: str) -> "MemoryIndex":
-        """Append analyzed text to the document (chainable)."""
+        """Append analyzed text to the document (chainable); raises on a
+        frozen index."""
+        if self._frozen:
+            raise ValueError("cannot add fields to a frozen MemoryIndex")
         if text:
             self._parts.append(text)
         self._idx = None
         return self
 
+    def freeze(self) -> "MemoryIndex":
+        """``MemoryIndex.freeze()``: no further ``add_field``."""
+        self._frozen = True
+        return self
+
     def _index(self) -> OracleIndex:
         if self._idx is None:
-            self._idx = OracleIndex.build(
-                [(0, " ".join(self._parts))],
-                stopwords=self._stopwords, stemmer=self._stemmer)
+            self._idx = OracleIndex.build([(0, " ".join(self._parts))],
+                                          **self._kwargs)
         return self._idx
 
     def search(self, query: "Query | str", k1: float | None = None,
                b: float | None = None, sim=None) -> float:
         """Score of the document for ``query`` (0.0 when it doesn't
-        match) — ``MemoryIndex.search(Query)``'s float contract. String
-        queries go through the classic parser."""
+        match, or when no text was added) — ``MemoryIndex.search(Query)``'s
+        float contract. String queries go through the classic parser."""
+        if not self._parts:
+            return 0.0
         if isinstance(query, str):
-            query = parse(query, stopwords=self._stopwords)
+            query = parse(query,
+                          stopwords=self._kwargs.get("stopwords", frozenset()))
         kwargs = {}
         if k1 is not None:
             kwargs["k1"] = k1
@@ -84,7 +100,9 @@ class MemoryIndex:
         return sorted(self._index().postings)
 
     def reset(self) -> "MemoryIndex":
-        """Clear the document for reuse (``MemoryIndex.reset``)."""
+        """Clear the document for reuse (``MemoryIndex.reset``; like the
+        reference, this also unfreezes)."""
         self._parts.clear()
         self._idx = None
+        self._frozen = False
         return self

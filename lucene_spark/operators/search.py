@@ -720,7 +720,7 @@ class TermSegPostings:
 
 
 # ---------------------------------------------------------------------------
-# Per-segment evaluation kernels (numpy, run inside the cogroup UDF)
+# Per-segment evaluation kernels (numpy, run by Searcher.map_segments)
 # ---------------------------------------------------------------------------
 
 class _SegContext:
@@ -1402,10 +1402,6 @@ def _upper_bounds_cover(node, ctx: _SegContext,
     raise TypeError(type(node))
 
 
-def _upper_bounds(node, ctx: _SegContext, n_windows: int, n_docs: int) -> np.ndarray:
-    return _upper_bounds_cover(node, ctx, n_windows)[0]
-
-
 def _live_mask(deletes: dict[int, np.ndarray] | None, seg_id: int,
                n: int) -> np.ndarray | None:
     """bool[n] liveDocs for one segment (None when nothing is deleted)."""
@@ -1473,7 +1469,7 @@ def score_segment(compiled, postings_rows: dict[str, dict],
 
     # ---- block-max windowed pruning ----
     n_windows = (n + WINDOW - 1) // WINDOW
-    ub = _upper_bounds(compiled, ctx, n_windows, n)
+    ub, _ = _upper_bounds_cover(compiled, ctx, n_windows)
     worder = np.argsort(-ub, kind="stable")
     cand_g: list[np.ndarray] = []
     cand_s: list[np.ndarray] = []
@@ -1582,6 +1578,18 @@ class Searcher:
         from .docvalues import read_docvalues
         return read_docvalues(self.spark, self.catalog, self.snapshot,
                               self.doc_meta, field)
+
+    def drop_deleted(self, df):
+        """``df`` minus its tombstoned ``(seg_id, local_doc_id)`` rows —
+        liveDocs for DataFrame paths, as a broadcast left-anti join."""
+        if not self.deletes:
+            return df
+        from pyspark.sql import functions as F
+        tomb = self.spark.createDataFrame(
+            [(int(sg), int(d)) for sg, v in self.deletes.items()
+             for d in v], "seg_id int, local_doc_id int")
+        return df.join(F.broadcast(tomb),
+                       on=["seg_id", "local_doc_id"], how="left_anti")
 
     def feature_query(self, field: str, function: str = "log",
                       weight: float = 1.0, pivot: float | None = None,
@@ -1805,6 +1813,47 @@ class Searcher:
         cache = self.similarity.norm_cache(avgdl)
         return compiled, cache
 
+    # -- per-segment execution -----------------------------------------------
+    def map_segments(self, terms, kernel, schema: str,
+                     cache: np.ndarray | None = None,
+                     sim: Similarity | None = None):
+        """Run ``kernel(seg_id, ctx, gids)`` once per segment holding any
+        of ``terms`` — the one postings ⋈ norms cogroup every per-segment
+        kernel runs through. ``terms`` is a collection of strings (a
+        pushed ``In(term, …)`` filter over them, sorted) or a DataFrame
+        with a ``term`` column (a broadcast left-semi join). The kernel
+        gets the segment's :class:`_SegContext` (postings rows by term,
+        norm bytes, liveDocs, ``cache``, ``sim`` — default the
+        searcher's) and its global doc ids, and returns a pandas frame of
+        the DDL ``schema``, or None for no rows."""
+        from pyspark.sql import DataFrame
+        from pyspark.sql import functions as F
+        if isinstance(terms, DataFrame):
+            pf = self.postings.join(F.broadcast(terms.select("term")),
+                                    "term", "left_semi")
+        else:
+            pf = self.postings.filter(F.col("term").isin(sorted(set(terms))))
+        sim = sim or self.similarity
+        deletes = self.deletes
+        empty = pd.DataFrame(columns=[c.split()[0] for c in schema.split(",")])
+
+        def run(key, postings_pdf, norms_pdf):
+            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
+                return empty
+            seg_id = int(key[0])
+            nrow = norms_pdf.iloc[0]
+            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
+            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
+            rows = {r["term"]: r for r in postings_pdf.to_dict("records")}
+            ctx = _SegContext(rows, norm_bytes, cache, sim,
+                              live=_live_mask(deletes, seg_id,
+                                              len(norm_bytes)))
+            out = kernel(seg_id, ctx, gids)
+            return empty if out is None else out
+
+        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
+                .applyInPandas(run, schema=schema))
+
     # -- search ------------------------------------------------------------
     def point_range_docs(self, pr):
         """PointRangeQuery execution (reference ``search/PointRangeQuery
@@ -1819,13 +1868,7 @@ class Searcher:
             dv = dv.filter(F.col("value") >= pr.lower)
         if pr.upper is not None:
             dv = dv.filter(F.col("value") <= pr.upper)
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select(
+        return self.drop_deleted(dv).select(
             "doc_id",
             F.lit(float(np.float32(pr.boost))).cast("float")
              .alias("score"))
@@ -1943,37 +1986,20 @@ class Searcher:
                                        after=after)
 
         compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
-        spark = self.spark
         out_schema = "seg_id int, doc_id long, score float, seg_hits long"
         if compiled is None:
-            return spark.createDataFrame([], out_schema + ", rank int") \
+            return self.spark.createDataFrame([], out_schema + ", rank int") \
                         .select("doc_id", "score", "rank")
 
-        terms = sorted(set(_compiled_terms(compiled)))
-        pf = self.postings.filter(F.col("term").isin(terms))
-
-        def seg_topk(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame(columns=["seg_id", "doc_id", "score", "seg_hits"])
-            seg_id = int(key[0])
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, seg_id,
-                                              len(norm_bytes)))
-            g, s, hits = score_segment(compiled, rows, norm_bytes, gids,
+        def seg_topk(seg_id, ctx, gids):
+            g, s, hits = score_segment(compiled, ctx.rows, ctx.norms, gids,
                                        cache, k, mode, after, ctx=ctx)
             return pd.DataFrame({"seg_id": np.int32(seg_id), "doc_id": g,
                                  "score": s.astype(np.float32),
                                  "seg_hits": np.int64(hits)})
 
-        res = (pf.groupBy("seg_id")
-               .cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_topk, schema=out_schema))
+        res = self.map_segments(_compiled_terms(compiled), seg_topk,
+                                out_schema, cache)
         top = (res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                .withColumn("rank", F.row_number().over(
                    Window.orderBy(F.desc("score"), F.asc("doc_id")))))
@@ -2114,37 +2140,21 @@ class Searcher:
         postings themselves, and the per-segment kernel emits Arrow batches
         that downstream aggregations consume with map-side partial
         aggregation."""
-        from pyspark.sql import functions as F
-
         compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
         out_schema = "doc_id long, score float"
         if compiled is None:
             return self.spark.createDataFrame([], out_schema)
-        terms = sorted(set(_compiled_terms(compiled)))
-        pf = self.postings.filter(F.col("term").isin(terms))
 
-        def seg_all(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                     "score": pd.Series([], dtype="float32")})
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
-            mask, scores = _eval_range(compiled, ctx, 0, len(norm_bytes))
+        def seg_all(seg_id, ctx, gids):
+            mask, scores = _eval_range(compiled, ctx, 0, len(ctx.norms))
             if ctx.live is not None:
                 mask &= ctx.live
             lids = np.nonzero(mask)[0]
             return pd.DataFrame({"doc_id": gids[lids],
                                  "score": scores[lids].astype(np.float32)})
 
-        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-                .applyInPandas(seg_all, schema=out_schema))
+        return self.map_segments(_compiled_terms(compiled), seg_all,
+                                 out_schema, cache)
 
     def covering(self, clauses, min_match: int = 1, min_match_df=None):
         """CoveringQuery (reference ``sandbox/search/CoveringQuery.java:51``
@@ -2192,13 +2202,7 @@ class Searcher:
         a pushed IsNotNull scan of doc_meta, tombstones masked."""
         from pyspark.sql import functions as F
         dv = self.docvalues(field).where(F.col("value").isNotNull())
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id")
+        return self.drop_deleted(dv).select("doc_id")
 
     def docvalues_in_set(self, field: str, values):
         """DocValuesNumbersQuery role (reference ``sandbox/search/
@@ -2210,13 +2214,7 @@ class Searcher:
         from pyspark.sql import functions as F
         vals = [int(v) for v in values]
         dv = self.docvalues(field).where(F.col("value").isin(vals))
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id", "value")
+        return self.drop_deleted(dv).select("doc_id", "value")
 
     def payloads_for_query(self, query):
         """PayloadSpanUtil.getPayloadsForQuery (reference
@@ -2232,8 +2230,6 @@ class Searcher:
 
         Scale: one pushed postings scan per segment; the phrase spans
         reuse the exact-phrase key-intersection kernel."""
-        from pyspark.sql import functions as F
-
         specs: list[tuple[str, ...]] = []
 
         def walk(node):
@@ -2262,30 +2258,17 @@ class Searcher:
 
         walk(query)
         terms = sorted({t for s in specs for t in s})
-        deletes = self.deletes
         schema = "doc_id long, term string, pos int, payload float"
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                              "term": pd.Series([], dtype=object),
-                              "pos": pd.Series([], dtype="int32"),
-                              "payload": pd.Series([], dtype="float32")})
         if not terms:
-            return self.spark.createDataFrame(empty, schema)
-        pf = self.postings.filter(F.col("term").isin(terms))
+            return self.spark.createDataFrame([], schema)
         BIG = np.int64(1) << np.int64(32)
 
-        def seg_payloads(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return empty
-            nrow = norms_pdf.iloc[0]
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            live = _live_mask(deletes, int(key[0]), len(gids))
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
+        def seg_payloads(seg_id, ctx, gids):
             streams = {}
-            for t in {tt for s in specs for tt in s}:
-                r = rows.get(t)
-                if r is None:
+            for t in terms:
+                tp = ctx.tp(t)
+                if tp is None:
                     continue
-                tp = TermSegPostings(r)
                 pays = tp.payloads()
                 if pays is None:
                     raise ValueError("payloads_for_query over an index "
@@ -2293,8 +2276,8 @@ class Searcher:
                 ids, tfs = tp.decode_all()
                 docs_rep = np.repeat(ids, tfs)
                 pos = tp.positions()
-                if live is not None:
-                    keep = live[docs_rep]
+                if ctx.live is not None:
+                    keep = ctx.live[docs_rep]
                     docs_rep, pos, pays = (docs_rep[keep], pos[keep],
                                            pays[keep])
                 streams[t] = (docs_rep, pos, pays)
@@ -2329,15 +2312,14 @@ class Searcher:
                     out_p.append(p[sel])
                     out_y.append(y[sel])
             if not out_d:
-                return empty
+                return None
             return pd.DataFrame(
                 {"doc_id": gids[np.concatenate(out_d)],
                  "term": np.concatenate(out_t),
                  "pos": np.concatenate(out_p).astype(np.int32),
                  "payload": np.concatenate(out_y).astype(np.float32)})
 
-        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-                .applyInPandas(seg_payloads, schema=schema))
+        return self.map_segments(terms, seg_payloads, schema)
 
     def docvalues_terms_in_set(self, field: str, values):
         """DocValuesTermsQuery (reference ``sandbox/search/
@@ -2352,13 +2334,7 @@ class Searcher:
               .select("seg_id", "local_doc_id", "doc_id",
                       F.col(field).cast("string").alias("value"))
               .where(F.col("value").isin(vals)))
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id", "value")
+        return self.drop_deleted(dv).select("doc_id", "value")
 
     def high_freq_terms(self, num_terms: int = 100,
                         by: str = "df"):
@@ -2453,12 +2429,8 @@ class Searcher:
             wmap = F.create_map(*[F.lit(x) for kv in widen.items()
                                   for x in kv])
             cutoff = F.lit(k) + F.coalesce(wmap[F.col("seg_id")], F.lit(0))
-            tomb = self.spark.createDataFrame(
-                [(int(s), int(d)) for s, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            cand = (cand.filter(F.col("local_doc_id") < cutoff)
-                    .join(F.broadcast(tomb),
-                          on=["seg_id", "local_doc_id"], how="left_anti"))
+            cand = self.drop_deleted(
+                cand.filter(F.col("local_doc_id") < cutoff))
         else:
             cand = cand.filter(F.col("local_doc_id") < k)
         from pyspark.sql import Window
@@ -2532,7 +2504,6 @@ class Searcher:
         dfs, ttfs = self._global_stats(union_terms)
         avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
         sim = self.similarity
-        deletes = self.deletes
         cache = sim.norm_cache(avgdl)
         compiled = {qid: compile_query(q, dfs, self.doc_count, sim,
                                        ttfs, self.sum_ttf)
@@ -2542,33 +2513,19 @@ class Searcher:
         if not compiled:
             return self.spark.createDataFrame([], out_schema + ", rank int") \
                 .select("query_id", "doc_id", "score", "rank")
-        pf = self.postings.filter(F.col("term").isin(union_terms))
 
-        def seg_many(key, postings_pdf, norms_pdf):
-            empty = pd.DataFrame({"query_id": pd.Series([], dtype="object"),
-                                  "doc_id": pd.Series([], dtype="int64"),
-                                  "score": pd.Series([], dtype="float32")})
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return empty
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,  # shared decode
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
+        def seg_many(seg_id, ctx, gids):
             parts = []
-            for qid, comp in compiled.items():
-                g, s, _ = score_segment(comp, rows, norm_bytes, gids,
+            for qid, comp in compiled.items():   # one shared decode
+                g, s, _ = score_segment(comp, ctx.rows, ctx.norms, gids,
                                         cache, k, mode, ctx=ctx)
                 if len(g):
                     parts.append(pd.DataFrame({
                         "query_id": qid, "doc_id": g,
                         "score": s.astype(np.float32)}))
-            return pd.concat(parts, ignore_index=True) if parts else empty
+            return pd.concat(parts, ignore_index=True) if parts else None
 
-        res = (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_many, schema=out_schema))
+        res = self.map_segments(union_terms, seg_many, out_schema, cache)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.asc("doc_id"))
         return (res.withColumn("rank", F.row_number().over(w))
@@ -2687,29 +2644,16 @@ class Searcher:
                 and self.term_stats is not None:
             return self._global_dfs([query.term]).get(query.term, 0)
         compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
         if compiled is None:
             return 0
-        terms = sorted(set(_compiled_terms(compiled)))
-        pf = self.postings.filter(F.col("term").isin(terms))
 
-        def seg_count(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame({"hits": [0]})
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
-            _, _, hits = score_segment(compiled, rows, norm_bytes, gids,
+        def seg_count(seg_id, ctx, gids):
+            _, _, hits = score_segment(compiled, ctx.rows, ctx.norms, gids,
                                        cache, 1, "exhaustive", ctx=ctx)
             return pd.DataFrame({"hits": [hits]})
 
-        res = (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_count, schema="hits long"))
+        res = self.map_segments(_compiled_terms(compiled), seg_count,
+                                "hits long", cache)
         return int(res.agg(F.sum("hits")).collect()[0][0] or 0)
 
 

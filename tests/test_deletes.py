@@ -78,6 +78,59 @@ def test_count_excludes_deleted(spark, deleted_index, oracle_full):
     assert s.count(Q.Term(DEL_TERM)) == 0
 
 
+def _bits(score) -> int:
+    return int(np.float32(score).view(np.uint32))
+
+
+def test_map_segments_callers_mask_deleted(spark, deleted_index,
+                                           oracle_full):
+    """score_all, search_many, term_doc_pairs and term_doc_scores (all
+    run through Searcher.map_segments) never return a deleted doc, and on
+    the live docs equal the pre-delete oracle bit for bit (stale stats)."""
+    from lucene_spark.operators.classify import (term_doc_pairs,
+                                                 term_doc_scores)
+
+    s = Searcher(spark, deleted_index)
+    gone = _deleted_doc_ids(oracle_full)
+    assert {d for d, _, _ in oracle_full.postings[QUERY_TERM]} & gone
+    terms = [QUERY_TERM, DEL_TERM]
+    queries = {"term": Q.Term(QUERY_TERM),
+               "or": Q.Or((Q.Term(QUERY_TERM), Q.Term(DEL_TERM)))}
+
+    def live_scores(q):
+        return {int(d): _bits(sc) for d, sc in oracle_full.score(q).items()
+                if d not in gone}
+
+    for q in queries.values():
+        got = {int(r["doc_id"]): _bits(r["score"])
+               for r in s.score_all(q).collect()}
+        assert got == live_scores(q), q
+
+    rows = s.search_many(queries, k=10).collect()
+    for qid, q in queries.items():
+        got = [(int(r["doc_id"]), _bits(r["score"]))
+               for r in sorted(rows, key=lambda r: r["rank"])
+               if r["query_id"] == qid]
+        want = [(d, _bits(sc))
+                for d, sc in oracle_full.top_k(q, k=10 + len(gone))
+                if d not in gone][:10]
+        assert got == want, qid
+
+    want_pairs = {(t, d) for t in terms
+                  for d, _, _ in oracle_full.postings[t] if d not in gone}
+    terms_df = spark.createDataFrame([(t,) for t in terms], "term string")
+    for pairs in (term_doc_pairs(s, terms),
+                  term_doc_pairs(s, None, terms_df=terms_df)):
+        got = [(r["term"], int(r["doc_id"])) for r in pairs.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == want_pairs
+
+    got = {(r["term"], int(r["doc_id"])): _bits(r["score"])
+           for r in term_doc_scores(s, terms).collect()}
+    assert got == {(t, d): b for t in terms
+                   for d, b in live_scores(Q.Term(t)).items()}
+
+
 def test_update_documents(spark):
     """updateDocument role: replaced docs surface only with their new
     content; after force_merge the index equals a fresh oracle over the

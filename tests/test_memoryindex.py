@@ -1,6 +1,6 @@
 """MemoryIndex (single-doc in-memory index, reference
 ``memory/.../MemoryIndex.java:78``): scoring parity with a 1-doc
-engine-grade index, reader introspection, reset/reuse."""
+engine-grade index, reader introspection, freeze, reset/reuse."""
 
 from __future__ import annotations
 
@@ -8,8 +8,10 @@ import numpy as np
 import pytest
 
 from lucene_spark.operators.memoryindex import MemoryIndex
+from lucene_spark.oracle import OracleIndex
 from lucene_spark.plans import query as Q
 from lucene_spark.plans.parser import parse
+from lucene_spark.sources.corpus import generate_corpus
 
 
 def test_basic_match_and_score():
@@ -25,8 +27,6 @@ def test_basic_match_and_score():
 def test_score_equals_one_doc_oracle():
     """MemoryIndex.search == OracleIndex.score over the identical
     single-doc collection stats (float32-exact by construction)."""
-    from lucene_spark.oracle import OracleIndex
-
     text = "alpha beta alpha gamma delta alpha beta"
     mi = MemoryIndex().add_field(text)
     oracle = OracleIndex.build([(0, text)])
@@ -60,3 +60,46 @@ def test_stopwords_and_stemmer_chain():
     assert mi.matches("run")          # porter: running -> run
     assert not mi.matches(Q.Term("the"))  # stopped at index time
     assert mi.positions("dog") == [2]  # stop gap preserved
+
+
+def test_search_matches_one_doc_index():
+    corpus = generate_corpus(40, seed=61)
+    queries = [
+        Q.Term("parse"),
+        parse("parse AND emit"),
+        parse('"parse emit"~4'),
+        Q.SpanNear(("parse", "emit"), slop=6, in_order=False),
+        Q.Interval(("ordered", (("term", "parse"), ("term", "emit")))),
+        Q.MultiTerm("prefix", "pars"),
+    ]
+    matched = 0
+    for text in corpus.content:
+        mi = MemoryIndex(str(text))
+        ref = OracleIndex.build([(0, str(text))])
+        for q in queries:
+            got = mi.search(q)
+            want = float(ref.score(q).get(0, 0.0))
+            assert np.float32(got) == np.float32(want)
+            matched += got > 0
+    assert matched > 0
+
+
+def test_single_doc_statistics():
+    # idf comes from the ONE document: df = 1, N = 1 — exactly the
+    # reference's ephemeral-index behavior
+    mi = MemoryIndex("alpha beta alpha")
+    s1 = mi.search(Q.Term("alpha"))
+    s2 = mi.search(Q.Term("beta"))
+    assert s1 > s2 > 0          # tf 2 vs tf 1, same idf
+    assert mi.search(Q.Term("gamma")) == 0.0
+
+
+def test_freeze_and_reset():
+    mi = MemoryIndex("alpha beta")
+    mi.freeze()
+    with pytest.raises(ValueError):
+        mi.add_field("x")
+    mi.reset()
+    assert mi.search(Q.Term("alpha")) == 0.0
+    mi.add_field("gamma")
+    assert mi.search(Q.Term("gamma")) > 0
