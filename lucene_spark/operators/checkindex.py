@@ -8,7 +8,8 @@ like the reference's command-line tool.
 
 The per-segment check is self-contained by design: ``check_index``
 walks segments on the driver by default (small indexes, CLI use), and
-with ``spark=`` fans the SAME check out as one task per segment — the
+with ``spark=`` fans the SAME check out over segment ids
+(``search.fan_out``, the fan-out ``Searcher.map_segments`` runs) — the
 shape that holds at 10^12 docs, where no single machine can sweep the
 index (segment files live on shared storage, so any executor can read
 its assigned segment).
@@ -104,8 +105,9 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
                 spark=None) -> dict:
     """Verify every segment of a snapshot + the snapshot-level stats.
     Returns totals; raises :class:`CheckIndexError` on any violation.
-    With ``spark``, segments are verified in parallel — one executor
-    task per segment, only (counts | error) rows return to the driver."""
+    With ``spark``, segments are verified in parallel executor tasks
+    (:func:`~.search.fan_out`); only (counts | error) rows return to the
+    driver."""
     from .delete import load_deletes
     catalog = SnapshotCatalog(index_dir)
     snap = catalog.load(snapshot_id)
@@ -117,29 +119,23 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
     lineage = {s["seg_id"]: s for s in snap.segments}
 
     if spark is not None and snap.seg_ids:
-        segs = [(int(s), catalog.segment_dir(s)) for s in snap.seg_ids]
-        sdf = spark.createDataFrame(segs, "seg_id int, dir string")
+        from .search import fan_out
 
-        def run(batches):
-            for pdf in batches:
-                for r in pdf.itertuples(index=False):
-                    try:
-                        res = check_segment(r.dir, int(r.seg_id),
-                                            store_positions)
-                        res = {**res, "seg_id": int(r.seg_id), "error": ""}
-                    except CheckIndexError as e:
-                        res = {"num_docs": 0, "num_terms": 0,
-                               "num_postings": 0, "sum_ttf": 0,
-                               "sum_doc_len": 0, "seg_id": int(r.seg_id),
-                               "error": str(e)}
-                    yield pd.DataFrame([res])
+        def run(seg):
+            seg_id, seg_dir = seg
+            try:
+                res = {**check_segment(seg_dir, seg_id, store_positions),
+                       "error": ""}
+            except CheckIndexError as e:
+                res = {"num_docs": 0, "num_terms": 0, "num_postings": 0,
+                       "sum_ttf": 0, "sum_doc_len": 0, "error": str(e)}
+            return pd.DataFrame([{**res, "seg_id": seg_id}])
 
-        rows = (sdf.repartition(len(segs))
-                .mapInPandas(run, "num_docs long, num_terms long, "
-                                  "num_postings long, sum_ttf long, "
-                                  "sum_doc_len long, seg_id int, "
-                                  "error string")
-                .collect())
+        rows = fan_out(spark, [(int(s), catalog.segment_dir(s))
+                               for s in snap.seg_ids], run,
+                       "num_docs long, num_terms long, num_postings long, "
+                       "sum_ttf long, sum_doc_len long, seg_id int, "
+                       "error string").collect()
         per_seg = {int(r["seg_id"]): r for r in rows}
         for s in snap.seg_ids:
             r = per_seg[int(s)]

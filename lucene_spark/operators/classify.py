@@ -46,10 +46,10 @@ def term_doc_pairs(searcher, terms: list[str] | None, terms_df=None):
     is a broadcast LEFT-SEMI join instead (unbounded term sets — no
     driver materialization, at the cost of parquet min/max pruning).
     Tombstoned docs are masked at decode."""
-    from .search import TermSegPostings
+    from .search import TermSegPostings, empty_frame
 
     if terms_df is None and not terms:
-        return searcher.spark.createDataFrame([], "term string, doc_id long")
+        return empty_frame(searcher.spark, "term string, doc_id long")
 
     def seg_pairs(seg_id, ctx, gids):
         out_t, out_d = [], []
@@ -571,11 +571,11 @@ def term_doc_scores(searcher, terms: list[str], similarity=None):
     are pushed-filtered, scoring is map-side, nothing shuffles but the
     emitted (term, doc, score) rows."""
     from ..functions import bm25
-    from .search import TermSegPostings
+    from .search import TermSegPostings, empty_frame
 
     schema = "term string, doc_id long, score float"
     if not terms:
-        return searcher.spark.createDataFrame([], schema)
+        return empty_frame(searcher.spark, schema)
     terms = sorted(set(terms))
     sim = similarity or searcher.similarity
     dfs, ttfs = searcher._global_stats(terms)

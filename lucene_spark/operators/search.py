@@ -1,15 +1,16 @@
 """Query read path: distributed BM25 top-k over the segment tables.
 
-Spark shape (SURVEY.md §3.2): global term statistics come from the
-precomputed ``term_stats`` table (the reference aggregates df/ttf across
-all leaves at weight creation: ``index/TermStates.java:99,184-190``); the
-postings scan is filtered to the query's terms (parquet predicate pushdown
-— the term dictionary's role); one vectorized cogroup kernel per segment
-scores and collects a local top-k with the exact reference tie-break
-(score desc, docID asc: ``search/HitQueue.java:78-84``); the global merge
-is an ``ORDER BY score DESC, doc_id ASC LIMIT k`` over ≤ k rows per
-segment (TakeOrderedAndProject — only k·S tiny rows ever move, postings
-never shuffle at query time; reference merge: ``search/TopDocs.java:71-90``).
+Spark shape (SURVEY.md §3.2): global term statistics are read on the
+driver from the precomputed ``term_stats`` dictionary, pushed down to the
+query's terms (the reference aggregates df/ttf across all leaves at
+weight creation: ``index/TermStates.java:99,184-190``); one Spark job then
+fans out over segment ids with no shuffle, and each task reads its own
+segments' postings, filtered to the query's terms (parquet predicate
+pushdown — the term dictionary's role), and norms. A vectorized kernel per
+segment scores and collects a local top-k with the exact reference
+tie-break (score desc, docID asc: ``search/HitQueue.java:78-84``); the
+driver merges the ≤ k·S candidates with the same tie-break (postings
+never move at query time; reference merge: ``search/TopDocs.java:71-90``).
 
 Two execution strategies, mirroring Boolean scorer selection
 (``search/Boolean2ScorerSupplier.java:141-244``):
@@ -1517,6 +1518,45 @@ def score_segment(compiled, postings_rows: dict[str, dict],
 # The distributed Searcher
 # ---------------------------------------------------------------------------
 
+def _columns(schema: str) -> list[str]:
+    """Column names of a flat DDL schema."""
+    return [c.split()[0] for c in schema.split(",")]
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema: str):
+    """A DataFrame of the DDL ``schema`` over a driver-held pandas frame,
+    built from an Arrow table into a local relation: no Spark job runs on
+    any action, empty or not. (A list, or an empty pandas frame, takes a
+    path that runs a Python-worker job on every action.)"""
+    import pyarrow as pa
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), schema)
+
+
+def empty_frame(spark, schema: str):
+    """A typed empty DataFrame that runs no Spark job."""
+    return local_frame(spark, pd.DataFrame(columns=_columns(schema)), schema)
+
+
+def fan_out(spark, items: list, fn, schema: str):
+    """``fn(item)`` → a pandas frame of the DDL ``schema`` (or None) for
+    every item, in ``min(len(items), defaultParallelism)`` Python tasks over
+    a range of item indexes: no shuffle, and only the indexes leave the
+    JVM. The items travel in the task closure."""
+    if not items:
+        return empty_frame(spark, schema)
+
+    def run(batches):
+        for pdf in batches:
+            for i in pdf["id"]:
+                out = fn(items[int(i)])
+                if out is not None:
+                    yield out
+
+    n = min(len(items), spark.sparkContext.defaultParallelism)
+    return spark.range(len(items), numPartitions=n).mapInPandas(run, schema)
+
+
 class Searcher:
     """Point-in-time reader + searcher over a committed snapshot
     (DirectoryReader/IndexSearcher role)."""
@@ -1539,13 +1579,19 @@ class Searcher:
         from ..functions.codec import check_codec_version
         check_codec_version(snap)
         self.snapshot = snap
-        seg_dirs = [self.catalog.segment_dir(s) for s in snap.seg_ids]
+        #: seg_id → segment directory, what each map_segments task reads
+        self.seg_dirs = {int(s): self.catalog.segment_dir(s)
+                         for s in snap.seg_ids}
+        seg_dirs = list(self.seg_dirs.values())
         self.postings = spark.read.parquet(
             *[os.path.join(d, "postings.parquet") for d in seg_dirs])
         self.norms = spark.read.parquet(
             *[os.path.join(d, "norms.parquet") for d in seg_dirs])
         self.doc_meta = spark.read.parquet(
             *[os.path.join(d, "doc_meta.parquet") for d in seg_dirs])
+        #: the term dictionaries _global_stats reads on the driver
+        self.term_stats_paths = ([snap.term_stats_path]
+                                 if snap.term_stats_path else [])
         self.term_stats = (spark.read.parquet(snap.term_stats_path)
                            if snap.term_stats_path else None)
         self.doc_count = int(snap.field_stats["doc_count"])
@@ -1585,9 +1631,12 @@ class Searcher:
         if not self.deletes:
             return df
         from pyspark.sql import functions as F
-        tomb = self.spark.createDataFrame(
-            [(int(sg), int(d)) for sg, v in self.deletes.items()
-             for d in v], "seg_id int, local_doc_id int")
+        tomb = pd.DataFrame({
+            "seg_id": np.concatenate([np.full(len(v), sg, np.int32)
+                                      for sg, v in self.deletes.items()]),
+            "local_doc_id": np.concatenate([v.astype(np.int32) for v in
+                                            self.deletes.values()])})
+        tomb = local_frame(self.spark, tomb, "seg_id int, local_doc_id int")
         return df.join(F.broadcast(tomb),
                        on=["seg_id", "local_doc_id"], how="left_anti")
 
@@ -1611,24 +1660,29 @@ class Searcher:
 
     # -- stats -------------------------------------------------------------
     def _global_dfs(self, terms: list[str]) -> dict[str, int]:
-        if not terms:
-            return {}
-        from pyspark.sql import functions as F
-        rows = (self.term_stats.filter(F.col("term").isin(terms))
-                .select("term", "df").collect())
-        return {r["term"]: int(r["df"]) for r in rows}
+        return self._global_stats(terms)[0]
 
     def _global_stats(self, terms: list[str]) \
             -> tuple[dict[str, int], dict[str, int]]:
         """(dfs, ttfs) per term in one dictionary probe (TermStates.build
-        role: global stats before scoring)."""
+        role: global stats before scoring), read on the driver. The
+        dictionary files are range-bucketed and term-sorted, so the pushed
+        ``term in`` filter prunes row groups and the read is bounded by
+        ``terms``; several dictionaries (MultiSearcher) sum."""
+        import pyarrow.parquet as pq
+        dfs: dict[str, int] = {}
+        ttfs: dict[str, int] = {}
+        terms = sorted(set(terms))
         if not terms:
-            return {}, {}
-        from pyspark.sql import functions as F
-        rows = (self.term_stats.filter(F.col("term").isin(terms))
-                .select("term", "df", "ttf").collect())
-        return ({r["term"]: int(r["df"]) for r in rows},
-                {r["term"]: int(r["ttf"]) for r in rows})
+            return dfs, ttfs
+        for path in self.term_stats_paths:
+            t = pq.read_table(path, columns=["term", "df", "ttf"],
+                              filters=[("term", "in", terms)])
+            for term, df, ttf in zip(*(t.column(c).to_pylist()
+                                       for c in ("term", "df", "ttf"))):
+                dfs[term] = dfs.get(term, 0) + df
+                ttfs[term] = ttfs.get(term, 0) + ttf
+        return dfs, ttfs
 
     def _resolve(self, q):
         """Expand MultiTerm nodes against the term dictionary (the
@@ -1818,41 +1872,61 @@ class Searcher:
                      cache: np.ndarray | None = None,
                      sim: Similarity | None = None):
         """Run ``kernel(seg_id, ctx, gids)`` once per segment holding any
-        of ``terms`` — the one postings ⋈ norms cogroup every per-segment
-        kernel runs through. ``terms`` is a collection of strings (a
-        pushed ``In(term, …)`` filter over them, sorted) or a DataFrame
-        with a ``term`` column (a broadcast left-semi join). The kernel
-        gets the segment's :class:`_SegContext` (postings rows by term,
-        norm bytes, liveDocs, ``cache``, ``sim`` — default the
-        searcher's) and its global doc ids, and returns a pandas frame of
-        the DDL ``schema``, or None for no rows."""
+        of ``terms`` — the one per-segment execution every postings kernel
+        runs through. ``terms`` is a collection of strings or a DataFrame
+        with a ``term`` column. For strings, a shuffle-free job fans out
+        over segment ids (:func:`fan_out`) and each task reads its
+        segments' ``postings.parquet`` with a pushed ``term in`` filter
+        over the sorted terms. A DataFrame keeps a broadcast left-semi
+        join grouped by segment. Either way the task reads the segment's
+        ``norms.parquet`` from :attr:`seg_dirs`, and a segment with no
+        matching postings is skipped. The kernel gets the segment's
+        :class:`_SegContext` (postings rows by term, norm bytes, liveDocs,
+        ``cache``, ``sim`` — default the searcher's) and its global doc
+        ids, and returns a pandas frame of the DDL ``schema``, or None for
+        no rows."""
+        import os
+
+        import pyarrow.parquet as pq
         from pyspark.sql import DataFrame
         from pyspark.sql import functions as F
-        if isinstance(terms, DataFrame):
-            pf = self.postings.join(F.broadcast(terms.select("term")),
-                                    "term", "left_semi")
-        else:
-            pf = self.postings.filter(F.col("term").isin(sorted(set(terms))))
         sim = sim or self.similarity
         deletes = self.deletes
-        empty = pd.DataFrame(columns=[c.split()[0] for c in schema.split(",")])
+        seg_dirs = self.seg_dirs
 
-        def run(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return empty
-            seg_id = int(key[0])
-            nrow = norms_pdf.iloc[0]
+        def segment(seg_id, rows):
+            nrow = pq.read_table(
+                os.path.join(seg_dirs[seg_id], "norms.parquet"),
+                columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
             norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
             gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for r in postings_pdf.to_dict("records")}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
+            ctx = _SegContext({r["term"]: r for r in rows}, norm_bytes,
+                              cache, sim,
                               live=_live_mask(deletes, seg_id,
                                               len(norm_bytes)))
-            out = kernel(seg_id, ctx, gids)
-            return empty if out is None else out
+            return kernel(seg_id, ctx, gids)
 
-        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-                .applyInPandas(run, schema=schema))
+        if isinstance(terms, DataFrame):
+            empty = pd.DataFrame(columns=_columns(schema))
+
+            def run_group(key, postings_pdf):
+                out = segment(int(key[0]), postings_pdf.to_dict("records"))
+                return empty if out is None else out
+
+            return (self.postings
+                    .join(F.broadcast(terms.select("term")), "term",
+                          "left_semi")
+                    .groupBy("seg_id").applyInPandas(run_group, schema))
+        terms = sorted(set(terms))
+
+        def run(seg):
+            seg_id, seg_dir = seg
+            rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
+                                 filters=[("term", "in", terms)]).to_pylist()
+            return segment(seg_id, rows) if rows else None
+
+        return fan_out(self.spark, sorted(seg_dirs.items()) if terms else [],
+                       run, schema)
 
     # -- search ------------------------------------------------------------
     def point_range_docs(self, pr):
@@ -1976,34 +2050,30 @@ class Searcher:
                after: tuple[float, int] | None = None):
         """Returns a DataFrame (doc_id, score float32, rank) of the global
         top-k; ``after=(score, doc_id)`` pages past a previous hit
-        (searchAfter: ``search/IndexSearcher.java:490-546``)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
+        (searchAfter: ``search/IndexSearcher.java:490-546``). The ≤ k·S
+        per-segment candidates are merged on the driver (TopDocs.merge)."""
         pointsplit = self._split_point_clauses(query)
         if pointsplit is not None:
             return self._search_points(*pointsplit, k=k, mode=mode,
                                        after=after)
 
         compiled, cache = self._compile(query)
-        out_schema = "seg_id int, doc_id long, score float, seg_hits long"
+        out_schema = "doc_id long, score float, rank int"
         if compiled is None:
-            return self.spark.createDataFrame([], out_schema + ", rank int") \
-                        .select("doc_id", "score", "rank")
+            return empty_frame(self.spark, out_schema)
 
         def seg_topk(seg_id, ctx, gids):
-            g, s, hits = score_segment(compiled, ctx.rows, ctx.norms, gids,
-                                       cache, k, mode, after, ctx=ctx)
-            return pd.DataFrame({"seg_id": np.int32(seg_id), "doc_id": g,
-                                 "score": s.astype(np.float32),
-                                 "seg_hits": np.int64(hits)})
+            g, s, _ = score_segment(compiled, ctx.rows, ctx.norms, gids,
+                                    cache, k, mode, after, ctx=ctx)
+            return pd.DataFrame({"doc_id": g, "score": s.astype(np.float32)})
 
-        res = self.map_segments(_compiled_terms(compiled), seg_topk,
-                                out_schema, cache)
-        top = (res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+        cand = self.map_segments(_compiled_terms(compiled), seg_topk,
+                                 "doc_id long, score float", cache).toPandas()
+        g, s = _topk_merge(cand["doc_id"].to_numpy(np.int64),
+                           cand["score"].to_numpy(np.float32), k)
+        return local_frame(self.spark, pd.DataFrame(
+            {"doc_id": g, "score": s,
+             "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)
 
     def expand_terms(self, like: str | None = None, rlike: str | None = None,
                      fuzzy: tuple[str, int] | None = None,
@@ -2125,7 +2195,7 @@ class Searcher:
         """Constant-score union of exact terms (TermInSetQuery / the
         CONSTANT_SCORE MultiTermQuery rewrite): DataFrame (doc_id long)."""
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long")
+            return empty_frame(self.spark, "doc_id long")
         return self.matching_docs(
             Q.Or(tuple(Q.Term(t) for t in sorted(set(terms)))))
 
@@ -2143,7 +2213,7 @@ class Searcher:
         compiled, cache = self._compile(query)
         out_schema = "doc_id long, score float"
         if compiled is None:
-            return self.spark.createDataFrame([], out_schema)
+            return empty_frame(self.spark, out_schema)
 
         def seg_all(seg_id, ctx, gids):
             mask, scores = _eval_range(compiled, ctx, 0, len(ctx.norms))
@@ -2260,7 +2330,7 @@ class Searcher:
         terms = sorted({t for s in specs for t in s})
         schema = "doc_id long, term string, pos int, payload float"
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         BIG = np.int64(1) << np.int64(32)
 
         def seg_payloads(seg_id, ctx, gids):
@@ -2511,8 +2581,7 @@ class Searcher:
         compiled = {qid: c for qid, c in compiled.items() if c is not None}
         out_schema = "query_id string, doc_id long, score float"
         if not compiled:
-            return self.spark.createDataFrame([], out_schema + ", rank int") \
-                .select("query_id", "doc_id", "score", "rank")
+            return empty_frame(self.spark, out_schema + ", rank int")
 
         def seg_many(seg_id, ctx, gids):
             parts = []
@@ -2636,12 +2705,12 @@ class Searcher:
         ``search/TermQuery.java`` count override): a single-term query
         over an index with NO deletes answers from the term dictionary's
         global df — one pushed-predicate stats probe, no postings
-        decode. Everything else runs the per-segment match kernel."""
-        from pyspark.sql import functions as F
+        decode. Everything else runs the per-segment match kernel and sums
+        its ≤ S per-segment counts on the driver."""
         if isinstance(query, str):
             query = parse_query(query)
         if isinstance(query, Q.Term) and not self.deletes \
-                and self.term_stats is not None:
+                and self.term_stats_paths:
             return self._global_dfs([query.term]).get(query.term, 0)
         compiled, cache = self._compile(query)
         if compiled is None:
@@ -2654,7 +2723,7 @@ class Searcher:
 
         res = self.map_segments(_compiled_terms(compiled), seg_count,
                                 "hits long", cache)
-        return int(res.agg(F.sum("hits")).collect()[0][0] or 0)
+        return sum(int(r["hits"]) for r in res.collect())
 
 
 class MultiSearcher(Searcher):
@@ -2665,8 +2734,10 @@ class MultiSearcher(Searcher):
 
     Sub-index segment ids are remapped to disjoint ranges at read time
     (a cheap column expression — no data movement); global stats are the
-    sums over sub-indexes, and term stats union + re-aggregate (one tiny
-    job over pre-aggregated dictionary rows). Global doc_ids must be
+    sums over sub-indexes: a query's term stats sum the sub-dictionaries
+    on the driver, and the ``term_stats`` DataFrame unions and
+    re-aggregates them (one tiny job over pre-aggregated dictionary
+    rows). Global doc_ids must be
     disjoint across sub-indexes (MultiReader's docBase contract mapped
     onto our global doc_id space; CheckIndex-style uniqueness applies).
     """
@@ -2693,6 +2764,8 @@ class MultiSearcher(Searcher):
         self.doc_count = 0
         self.sum_ttf = 0
         self.deletes = {}
+        self.seg_dirs = {}
+        self.term_stats_paths = []
         offset = 0
         for d in index_dirs:
             cat = SnapshotCatalog(d)
@@ -2701,6 +2774,8 @@ class MultiSearcher(Searcher):
                 raise ValueError(f"no snapshot in {d}")
             self.snapshots.append(snap)
             seg_dirs = [cat.segment_dir(s) for s in snap.seg_ids]
+            self.seg_dirs.update({int(s) + offset: cat.segment_dir(s)
+                                  for s in snap.seg_ids})
             shift = (F.col("seg_id") + offset).cast("int")
             post_parts.append(
                 spark.read.parquet(*[os.path.join(p, "postings.parquet")
@@ -2715,6 +2790,7 @@ class MultiSearcher(Searcher):
                                      for p in seg_dirs])
                 .withColumn("seg_id", shift))
             if snap.term_stats_path:
+                self.term_stats_paths.append(snap.term_stats_path)
                 ts_parts.append(spark.read.parquet(snap.term_stats_path)
                                 .select("term", "df", "ttf"))
             for s, ids in load_deletes(cat, snap).items():

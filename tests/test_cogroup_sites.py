@@ -1,10 +1,11 @@
 """Every per-segment postings kernel runs through ``Searcher.map_segments``.
 
-The package may hold exactly two ``.cogroup(`` calls: the primitive
-itself and ``combinedfield.py``, whose cogroup joins the norms of several
-searchers per segment. A new entry point that hand-writes the postings ⋈
-norms wrapper again fails here; pass a kernel to ``map_segments``
-instead.
+``map_segments`` fans out over segment ids and each task reads its own
+segment files, so no query kernel needs a shuffle. The package may hold
+exactly one ``.cogroup(`` call, in ``combinedfield.py``, whose cogroup
+joins the norms of several searchers per segment. A new entry point that
+hand-writes a postings ⋈ norms cogroup fails here; pass a kernel to
+``map_segments`` instead.
 """
 
 from __future__ import annotations
@@ -40,8 +41,7 @@ def _cogroup_sites() -> list[tuple[str, str]]:
     return sites
 
 
-def test_only_map_segments_and_combinedfield_cogroup():
+def test_only_combinedfield_cogroups():
     sites = _cogroup_sites()
-    assert len(sites) == 2, sites
-    assert ("operators/search.py", "Searcher.map_segments") in sites
-    assert [s for s in sites if s[0] == "operators/combinedfield.py"], sites
+    assert len(sites) == 1, sites
+    assert sites[0][0] == "operators/combinedfield.py", sites

@@ -177,6 +177,78 @@ def test_update_documents(spark):
     assert snap.field_stats["doc_count"] == len(updated)
 
 
+def _jobs_of(spark, group: str, action):
+    """``action()``'s result and the Spark jobs it ran under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return out, [tracker.getJobInfo(j)
+                 for j in tracker.getJobIdsForGroup(group)]
+
+
+def _dictionary_stats(spark, paths, terms):
+    """{term: (df, ttf)} summed over the dictionaries by Spark."""
+    from pyspark.sql import functions as F
+    df = spark.read.parquet(*paths)
+    rows = (df.where(F.col("term").isin(terms)).groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
+            .collect())
+    return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+
+
+def test_search_is_one_shuffle_free_job(spark, deleted_index, oracle_full):
+    """``Searcher.search`` runs one Spark job of one stage (the stats probe
+    and the top-k merge run on the driver), its segment fan-out plans no
+    Exchange, and its hits equal the oracle's in ids and float32 bits
+    with deleted docs masked. The driver-side stats equal Spark's
+    aggregation of the dictionary, on a Searcher and on a two-index
+    MultiSearcher."""
+    from lucene_spark.operators.search import MultiSearcher
+
+    s = Searcher(spark, deleted_index)
+    gone = _deleted_doc_ids(oracle_full)
+    queries = (Q.Term(QUERY_TERM),
+               Q.Or((Q.Term(QUERY_TERM), Q.Term(DEL_TERM))),
+               Q.And((Q.Term("codec"), Q.Term("util"))),
+               Q.Phrase(("mixed", "case")))
+    for i, q in enumerate(queries):
+        rows, jobs = _jobs_of(spark, f"search-{i}",
+                              lambda: s.search(q, k=10).collect())
+        assert len(jobs) == 1, q
+        assert len(jobs[0].stageIds) == 1, q
+        got = [(int(r["doc_id"]), _bits(r["score"])) for r in rows]
+        want = [(d, _bits(sc)) for d, sc in
+                oracle_full.top_k(q, k=10 + len(gone)) if d not in gone][:10]
+        assert got and got == want, q
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+
+    fanned = s.map_segments([QUERY_TERM], lambda seg, ctx, gids: None,
+                            "doc_id long")
+    plan = fanned._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+
+    other = tempfile.mkdtemp(prefix="lucene_spark_del_other_")
+    extra = generate_corpus(60, seed=7)
+    extra["doc_id"] += 10 * N_DOCS
+    build_index(spark, spark.createDataFrame(extra), other, num_segments=2)
+    ms = MultiSearcher(spark, [deleted_index, other])
+    terms = [QUERY_TERM, DEL_TERM, "codec", "zz-absent-term"]
+    for searcher in (s, ms):
+        dfs, ttfs = searcher._global_stats(terms)
+        want = _dictionary_stats(spark, searcher.term_stats_paths, terms)
+        assert "zz-absent-term" not in dfs
+        assert {t: (dfs[t], ttfs[t]) for t in dfs} == want
+        assert searcher._global_dfs(terms) == dfs
+    assert len(ms.term_stats_paths) == 2
+    _, jobs = _jobs_of(spark, "multi-search",
+                       lambda: ms.search(Q.Term(QUERY_TERM), k=10).collect())
+    assert len(jobs) == 1 and len(jobs[0].stageIds) == 1
+
+
 def test_merge_purges_deletes(spark, corpus, deleted_index, oracle_full):
     """force_merge drops tombstoned docs, compacts docIDs, recomputes
     stats — results must equal a fresh oracle over the live corpus."""
