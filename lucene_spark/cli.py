@@ -15,7 +15,7 @@ Subcommands:
   stats   recompute global term stats via the salted token-level job
   delete  tombstone every doc containing a term (liveDocs semantics)
   check   CheckIndex: offline integrity verification of a snapshot
-  zip     write the --py-files archive
+  zip     write the --py-files archive (modules and data tables)
 
 In local runs (no spark-submit) the package auto-ships itself via
 ``sc.addPyFile`` (see ``session.ensure_shipped``).
@@ -188,17 +188,9 @@ def cmd_check(args) -> int:
 
 def cmd_zip(args) -> int:
     import os
-    import zipfile
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
     os.makedirs(os.path.dirname(os.path.abspath(args.out)) or ".",
                 exist_ok=True)
-    with zipfile.ZipFile(args.out, "w") as z:
-        for dirpath, _, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, root))
+    _imp("session").write_package_zip(args.out)
     print(f"wrote {args.out}")
     return 0
 

@@ -28,6 +28,7 @@ run inside ``mapInPandas``/``applyInPandas`` without per-row Python UDFs.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, fields, replace
 
 import numpy as np
 import pandas as pd
@@ -70,6 +71,7 @@ ENGLISH_STOP_WORDS = frozenset(
 )
 
 __all__ = [
+    "AnalyzerSpec",
     "TOKEN_PATTERN",
     "MAX_TOKEN_LENGTH",
     "ENGLISH_STOP_WORDS",
@@ -829,3 +831,178 @@ def expand_keyword_repeat_batch(doc_idx, terms, positions, n_docs,
             np.concatenate([terms, stem_u[codes][diff]]),
             np.concatenate([positions, positions[diff]]),
             overlaps)
+
+
+@dataclass(frozen=True)
+class AnalyzerSpec:
+    """One field's index-time analysis chain as one value: char filters,
+    a tokenizer and the token filters after it (the role of the
+    reference's ``Analyzer``, ``core/.../analysis/Analyzer.java:153,183``).
+    The defaults are StandardAnalyzer with an empty stop set.
+
+    Building a spec checks how its options combine, so a chain the build
+    kernel cannot run fails where it is declared (on the driver, before
+    any Spark job). Checks of a single value that need the data or a
+    loaded table stay where the value is used: unknown tokenizer kinds
+    and token-filter names, greek stemming under ``keyword_repeat`` and
+    the delimited term-frequency suffix.
+
+    Five options each select a whole tokenize/filter branch and are
+    mutually exclusive: ``cjk_bigrams``, a path or ngram ``tokenizer``,
+    ``word_delimiter``, ``capture_groups`` and ``keyword_repeat``. A
+    branch's rules apply only when it is the branch selected.
+    """
+
+    stopwords: frozenset = frozenset()
+    stemmer: str | None = None
+    synonyms: dict | None = None
+    discount_overlaps: bool = True
+    payload_delimiter: str | None = None
+    tokenizer: str | tuple = "standard"
+    shingles: tuple | None = None
+    ascii_folding: bool = False
+    common_grams: frozenset | None = None
+    elision: frozenset | None = None
+    cjk_bigrams: int | None = None
+    cjk_output_unigrams: bool = False
+    ngrams: tuple | None = None
+    ngram_edge: bool = False
+    ngram_preserve_original: bool = False
+    word_delimiter: int | None = None
+    word_delimiter_protected: frozenset = frozenset()
+    keyword_repeat: bool = False
+    pattern_replace: tuple | None = None
+    token_filters: tuple = ()
+    dictionary_compound: frozenset | tuple | None = None
+    capture_groups: tuple | None = None
+    char_filters: tuple = ()
+    reverse_tokens: bool = False
+    term_freq_delimiter: str | None = None
+    keyword_marker: frozenset = frozenset()
+    stemmer_override: dict | None = None
+    phonetic: tuple | None = None
+    hunspell: tuple | None = None
+    min_hash: tuple | None = None
+    concatenate_graph: bool | tuple = False
+    icu_folding: bool | str = False
+
+    @property
+    def whole_input_tokenizer(self) -> bool:
+        """(Reverse)PathHierarchyTokenizer or a raw (Edge)NGramTokenizer:
+        tokenizers that replace the whole filter chain."""
+        t = self.tokenizer
+        return t in ("path", "path_reverse") or (
+            isinstance(t, tuple) and t[0] not in ("pattern", "url_email"))
+
+    @property
+    def plain(self) -> bool:
+        """Only the stop set and the norm's overlap rule differ from the
+        defaults: the chain ``analyze_text_offsets`` reproduces."""
+        return replace(self, stopwords=frozenset(),
+                       discount_overlaps=True) == AnalyzerSpec()
+
+    def options(self) -> dict:
+        """Every field but ``stopwords``, as ``invert_segment`` keywords."""
+        return {f.name: getattr(self, f.name) for f in fields(self)
+                if f.name != "stopwords"}
+
+    def check_store_positions(self, store_positions: bool) -> None:
+        """The one rule that involves an index option, not a chain one."""
+        if self.term_freq_delimiter and store_positions:
+            raise ValueError("delimited term frequencies require "
+                             "store_positions=False (reference: "
+                             "IndexOptions.DOCS_AND_FREQS only)")
+
+    def __post_init__(self):
+        selected = [name for name, on in (
+            ("cjk_bigrams", self.cjk_bigrams is not None),
+            (f"tokenizer={self.tokenizer!r}", self.whole_input_tokenizer),
+            ("word_delimiter", self.word_delimiter is not None),
+            ("capture_groups", self.capture_groups is not None),
+            ("keyword_repeat", self.keyword_repeat)) if on]
+        if len(selected) > 1:
+            raise ValueError(" and ".join(selected) + " select different "
+                             "analysis chains; set at most one")
+        graph = (self.synonyms or self.shingles or self.common_grams
+                 or self.payload_delimiter)
+        rewriting = (self.stemmer or graph or self.ascii_folding
+                     or self.icu_folding or self.elision)
+        compound = self.dictionary_compound is not None
+        ngrams = self.ngrams is not None
+        phonetic = self.phonetic is not None
+        if self.cjk_bigrams is not None:
+            # bigrams are position-dependent graph tokens
+            if rewriting or self.tokenizer != "standard":
+                raise ValueError("cjk_bigrams is mutually exclusive with "
+                                 "stemmer/synonyms/shingles/common_grams/"
+                                 "ascii_folding/elision/payloads and "
+                                 "non-standard tokenizers")
+        elif self.whole_input_tokenizer:
+            if rewriting or self.stopwords or self.ngrams:
+                raise ValueError("path/ngram tokenizers are mutually "
+                                 "exclusive with the token-filter chain "
+                                 "(stopwords/stemmer/synonyms/shingles/"
+                                 "common_grams/ascii_folding/elision/"
+                                 "payloads/ngrams)")
+        elif self.word_delimiter is not None:
+            if rewriting or self.stopwords or ngrams:
+                raise ValueError("word_delimiter is mutually exclusive with "
+                                 "the other token filters")
+            if self.tokenizer != "whitespace":
+                raise ValueError("word_delimiter requires "
+                                 "tokenizer='whitespace' (the reference "
+                                 "pairs WDGF with a non-splitting tokenizer)")
+        elif self.capture_groups is not None:
+            if rewriting or self.stopwords or ngrams:
+                raise ValueError("capture_groups is mutually exclusive with "
+                                 "the other token filters")
+        elif self.keyword_repeat:
+            if self.stemmer is None:
+                raise ValueError("keyword_repeat requires a stemmer")
+            if graph or ngrams:
+                raise ValueError("keyword_repeat is mutually exclusive with "
+                                 "synonyms/shingles/common_grams/payloads/"
+                                 "ngrams")
+        # the stream-rewriting filters after the branch, in kernel order
+        expanding = graph or compound or ngrams
+        if self.concatenate_graph and (
+                expanding or self.keyword_repeat or phonetic
+                or self.min_hash is not None):
+            raise ValueError("concatenate_graph is mutually exclusive "
+                             "with the other stream-rewriting filters")
+        if self.min_hash is not None and (
+                expanding or self.keyword_repeat or phonetic):
+            raise ValueError("min_hash is mutually exclusive with the "
+                             "other stream-rewriting filters")
+        if phonetic and (expanding or self.keyword_repeat):
+            raise ValueError("phonetic is mutually exclusive with the "
+                             "graph-expanding filters")
+        if self.hunspell is not None and (
+                expanding or self.keyword_repeat or phonetic):
+            raise ValueError("hunspell is mutually exclusive with the "
+                             "other graph-expanding filters")
+        if self.term_freq_delimiter and expanding:
+            raise ValueError("term_freq_delimiter is mutually exclusive "
+                             "with synonyms/shingles/common_grams/"
+                             "payloads/compound/ngrams")
+        if self.reverse_tokens and self.payload_delimiter:
+            raise ValueError("reverse_tokens is mutually exclusive with "
+                             "payloads (the delimiter suffix would be "
+                             "reversed away)")
+        if self.payload_delimiter and self.synonyms:
+            raise ValueError("payloads and index-time synonyms are "
+                             "mutually exclusive")
+        # graph overlays share the parallel token arrays
+        if self.shingles and (self.synonyms or self.payload_delimiter):
+            raise ValueError("shingles are mutually exclusive with "
+                             "synonyms and payloads")
+        if self.common_grams and (self.synonyms or self.payload_delimiter
+                                  or self.shingles):
+            raise ValueError("common_grams is mutually exclusive with "
+                             "synonyms, payloads and shingles")
+        if (compound or ngrams) and (self.synonyms or self.payload_delimiter
+                                     or self.shingles or self.common_grams):
+            raise ValueError(
+                ("dictionary_compound" if compound else "the ngrams filter")
+                + " is mutually exclusive with synonyms, payloads, "
+                "shingles and common_grams")

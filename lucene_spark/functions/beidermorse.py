@@ -33,17 +33,16 @@ Faithful quirks kept on purpose:
 
 from __future__ import annotations
 
-import os
+import io
 import re
 from functools import lru_cache
 
 import numpy as np
 import pandas as pd
 
-__all__ = ["PhoneticEngine", "bm_encode", "beider_morse_batch"]
+from .resources import data_file
 
-_RULES_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "bm_rules")
+__all__ = ["PhoneticEngine", "bm_encode", "beider_morse_batch"]
 
 #: languages == None means ANY_LANGUAGE
 ANY = None
@@ -95,10 +94,10 @@ def _is_empty(a):
 def _resource_lines(name: str):
     """Logical lines of ``bm_rules/<name>.txt``: multiline ``/* */``
     blocks skipped, ``//`` comments stripped, blanks dropped."""
-    path = os.path.join(_RULES_DIR, f"{name}.txt")
     out = []
     in_cmt = False
-    with open(path, encoding="utf-8") as f:
+    with io.TextIOWrapper(data_file("bm_rules", f"{name}.txt"),
+                          encoding="utf-8") as f:
         for raw in f:
             raw = raw.strip()
             if in_cmt:

@@ -30,11 +30,9 @@ Scale shape: applied at vocabulary level in the Arrow batch analyzer
 from __future__ import annotations
 
 import gzip
-import os
 from functools import lru_cache
 
-_DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "icu_data")
+from .resources import data_file
 
 _SBASE, _LBASE, _VBASE, _TBASE = 0xAC00, 0x1100, 0x1161, 0x11A7
 _LCOUNT, _VCOUNT, _TCOUNT = 19, 21, 28
@@ -70,7 +68,7 @@ class _NormData:
 
 @lru_cache(maxsize=4)
 def _data(which: str) -> _NormData:
-    return _NormData(os.path.join(_DATA_DIR, which + ".tsv.gz"))
+    return _NormData(data_file("icu_data", which + ".tsv.gz"))
 
 
 def _decompose(s: str, d: _NormData) -> list:

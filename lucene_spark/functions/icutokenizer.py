@@ -51,10 +51,9 @@ from __future__ import annotations
 
 import bisect
 import gzip
-import os
 import unicodedata
 
-_DATA = os.path.join(os.path.dirname(__file__), "icu_data")
+from .resources import data_file
 
 # UScript constants (verified against the dumped table)
 COMMON, INHERITED = 0, 1
@@ -99,10 +98,10 @@ def _ranges(path, idx=(0, 1, 2)):
 def _load():
     if _tables:
         return _tables
-    _tables["script"] = _ranges(os.path.join(_DATA, "scripts.tsv.gz"))
-    _tables["wb"] = _ranges(os.path.join(_DATA, "wordbreak.tsv.gz"))
+    _tables["script"] = _ranges(data_file("icu_data", "scripts.tsv.gz"))
+    _tables["wb"] = _ranges(data_file("icu_data", "wordbreak.tsv.gz"))
     sets: dict = {}
-    with gzip.open(os.path.join(_DATA, "uax29_sets.tsv.gz"), "rt",
+    with gzip.open(data_file("icu_data", "uax29_sets.tsv.gz"), "rt",
                    encoding="utf-8") as f:
         for ln in f:
             name, a, b = ln.split("\t")
@@ -121,7 +120,7 @@ def _load_cjdict():
     if "cjdict" not in t:
         words: dict = {}
         prefixes: set = set()
-        with gzip.open(os.path.join(_DATA, "cjdict.tsv.gz"), "rt",
+        with gzip.open(data_file("icu_data", "cjdict.tsv.gz"), "rt",
                        encoding="utf-8") as f:
             for ln in f:
                 w, v = ln.rstrip("\n").split("\t")
@@ -677,7 +676,7 @@ class _SeaEngine:
         if key not in t:
             words: dict = {}
             prefixes: set = set()
-            with gzip.open(os.path.join(_DATA, self.dict_file), "rt",
+            with gzip.open(data_file("icu_data", self.dict_file), "rt",
                            encoding="utf-8") as f:
                 for ln in f:
                     w, v = ln.rstrip("\n").split("\t")

@@ -29,12 +29,10 @@ exactly.
 from __future__ import annotations
 
 import gzip
-import os
 from bisect import bisect_right
 from functools import lru_cache
 
-_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "smartcn_data", "jdk_sentence_dfa.txt.gz")
+from .resources import data_file
 
 _START_STATE = 1
 _STOP_STATE = 0
@@ -44,7 +42,8 @@ _DONE = -1
 @lru_cache(maxsize=1)
 def _tables():
     fields = {}
-    with gzip.open(_DATA, "rt", encoding="utf-8") as f:
+    with gzip.open(data_file("smartcn_data", "jdk_sentence_dfa.txt.gz"),
+                   "rt", encoding="utf-8") as f:
         for line in f:
             k, v = line.rstrip("\n").split("\t")
             fields[k] = v

@@ -42,14 +42,13 @@ hunspell/beider-morse.
 from __future__ import annotations
 
 import gzip
-import os
+import io
 import struct
 from bisect import bisect_left
 from functools import lru_cache
 from math import log
 
-_DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "smartcn_data")
+from .resources import data_file
 
 # WordType constants (cn/smart/WordType.java)
 SENTENCE_BEGIN = 0
@@ -114,7 +113,7 @@ def char_type(ch: str) -> int:
 # dictionary loading (portable dump of the reference's .mem arrays)
 
 
-def _load_core_dict(path: str):
+def _load_core_dict(path):
     """Returns (words_by_char, freq_by_char): for each first CHAR, the
     sorted list of word TAILS (word minus first char) and their
     frequencies — the charIndexTable/wordIndexTable hash indirection
@@ -164,7 +163,7 @@ def _load_core_dict(path: str):
     return words_by_char, rows
 
 
-def _load_bigram_dict(path: str):
+def _load_bigram_dict(path):
     with gzip.open(path, "rb") as f:
         data = f.read()
     (n,) = struct.unpack_from(">i", data, 0)
@@ -175,12 +174,12 @@ def _load_bigram_dict(path: str):
 
 @lru_cache(maxsize=1)
 def _core():
-    return _load_core_dict(os.path.join(_DATA_DIR, "coredict.bin.gz"))[0]
+    return _load_core_dict(data_file("smartcn_data", "coredict.bin.gz"))[0]
 
 
 @lru_cache(maxsize=1)
 def _bigram():
-    return _load_bigram_dict(os.path.join(_DATA_DIR, "bigramdict.bin.gz"))
+    return _load_bigram_dict(data_file("smartcn_data", "bigramdict.bin.gz"))
 
 
 # ---------------------------------------------------------------------------
@@ -508,8 +507,8 @@ def smartcn_stop_set() -> frozenset:
     semantics: skip lines STARTING with '//', Java trim() (only chars
     <= U+0020 — the IDEOGRAPHIC-SPACE stopword survives)."""
     words = []
-    with open(os.path.join(_DATA_DIR, "stopwords_cn.txt"),
-              encoding="utf-8") as f:
+    with io.TextIOWrapper(data_file("smartcn_data", "stopwords_cn.txt"),
+                          encoding="utf-8") as f:
         for line in f:
             w = line.strip(_JAVA_TRIM)
             if w and not w.startswith("//"):

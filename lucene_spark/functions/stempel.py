@@ -44,9 +44,11 @@ per-token hot path.
 from __future__ import annotations
 
 import gzip
-import os
+import io
 import struct
 from functools import lru_cache
+
+from .resources import data_file
 
 _DASH = ord("-")
 _R = ord("R")
@@ -301,14 +303,11 @@ def _units_to_str(units) -> str:
     return "".join(out)
 
 
-_DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "stempel_data")
-
-
-def load_trie(path: str):
-    """Load a stemmer table (optionally .gz).  StempelStemmer.load:
-    a header UTF containing 'M' selects MultiTrie2, else plain Trie."""
-    opener = gzip.open if path.endswith(".gz") else open
-    with opener(path, "rb") as f:
+def load_trie(src):
+    """Load a gzipped stemmer table from a path or binary stream.
+    StempelStemmer.load: a header UTF containing 'M' selects MultiTrie2,
+    else plain Trie."""
+    with gzip.open(src, "rb") as f:
         data = f.read()
     di = _DataInput(data)
     method = _units_to_str(di.read_utf()).upper()
@@ -338,7 +337,7 @@ class StempelStemmer:
 @lru_cache(maxsize=1)
 def polish_stemmer() -> StempelStemmer:
     return StempelStemmer(
-        load_trie(os.path.join(_DATA_DIR, "stemmer_20000.tbl.gz")))
+        load_trie(data_file("stempel_data", "stemmer_20000.tbl.gz")))
 
 
 def stem_polish(word: str) -> str:
@@ -355,7 +354,8 @@ def polish_stop_set() -> frozenset:
     """The PolishAnalyzer default stop set (carrot2 list, BSD — shipped
     verbatim in stempel_data/stopwords_pl.txt)."""
     words = []
-    with open(os.path.join(_DATA_DIR, "stopwords_pl.txt"), encoding="utf-8") as f:
+    with io.TextIOWrapper(data_file("stempel_data", "stopwords_pl.txt"),
+                          encoding="utf-8") as f:
         for line in f:
             line = line.split("#")[0].strip()
             if line:

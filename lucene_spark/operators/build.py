@@ -34,7 +34,7 @@ import uuid
 import numpy as np
 import pandas as pd
 
-from ..functions.analysis import analyze_batch
+from ..functions.analysis import AnalyzerSpec, analyze_batch
 from ..functions.codec import encode_postings_batch
 from ..functions.smallfloat import int_to_byte4
 from ..sources.catalog import SnapshotCatalog
@@ -58,41 +58,10 @@ _SEGMENT_STATE_KEYS = ("deletes", "num_deleted", "soft_deletes",
 
 def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
                    doc_id_col: str, stopwords: frozenset,
-                   store_positions: bool,
-                   stemmer: str | None = None,
-                   synonyms: dict | None = None,
-                   discount_overlaps: bool = True,
+                   store_positions: bool, *,
                    sort_field: str | None = None,
                    sort_ascending: bool = True,
-                   payload_delimiter: str | None = None,
-                   tokenizer: str = "standard",
-                   shingles: tuple | None = None,
-                   ascii_folding: bool = False,
-                   common_grams: frozenset | None = None,
-                   elision: frozenset | None = None,
-                   cjk_bigrams: int | None = None,
-                   cjk_output_unigrams: bool = False,
-                   ngrams: tuple | None = None,
-                   ngram_edge: bool = False,
-                   ngram_preserve_original: bool = False,
-                   word_delimiter: int | None = None,
-                   word_delimiter_protected: frozenset = frozenset(),
-                   keyword_repeat: bool = False,
-                   pattern_replace: tuple | None = None,
-                   token_filters: tuple = (),
-                   dictionary_compound=None,
-                   capture_groups: tuple | None = None,
-                   char_filters: tuple = (),
-                   reverse_tokens: bool = False,
-                   term_freq_delimiter: str | None = None,
-                   keyword_marker: frozenset = frozenset(),
-                   stemmer_override: dict | None = None,
-                   phonetic: tuple | None = None,
-                   hunspell: tuple | None = None,
-                   min_hash: tuple | None = None,
-                   concatenate_graph: bool | tuple = False,
-                   icu_folding: bool | str = False
-                   ) -> tuple[pd.DataFrame, pd.DataFrame, dict, int]:
+                   **chain) -> tuple[pd.DataFrame, pd.DataFrame, dict, int]:
     """Pure kernel: docs of one segment →
     (postings, doc_meta, norms_payload, sum_token_len).
 
@@ -107,7 +76,11 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
     the norm length (``BM25Similarity.java:142-143``). sum_token_len
     counts EVERY indexed token (the sumTotalTermFreq basis), diverging
     from sum_doc_len exactly when overlaps are discounted.
+
+    ``chain`` holds the other :class:`AnalyzerSpec` options as keywords.
     """
+    spec = AnalyzerSpec(stopwords=stopwords, **chain)
+    spec.check_store_positions(store_positions)
     if sort_field is not None:
         # IndexSorter (reference ``index/IndexSorter.java:44``): local doc
         # ids follow the sort key, so a sorted-field top-k reads only each
@@ -124,97 +97,67 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
     # out as an object ndarray anyway
     texts = pdf[content_col].to_numpy(dtype=object, copy=True)
     texts[pd.isna(texts)] = ""
-    if char_filters:
+    if spec.char_filters:
         # Analyzer.initReader: char filters rewrite the raw text BEFORE
         # the tokenizer (charfilter/HTMLStripCharFilter.java,
         # MappingCharFilter.java) — one pass per doc inside this batch
         from ..functions.charfilter import compile_char_filters
-        _cf = compile_char_filters(char_filters)
+        _cf = compile_char_filters(spec.char_filters)
         texts = np.array([_cf(s) for s in texts], dtype=object)
     texts = pd.Series(texts)
     n_docs = len(pdf)
-    if cjk_bigrams is not None:
+    if spec.cjk_bigrams is not None:
         # CJKAnalyzer chain (tokenize → width → lowercase → bigram →
         # stop); bigrams are position-dependent graph tokens, mutually
         # exclusive with every token-rewriting/expanding option
-        if (stemmer or synonyms or shingles or common_grams
-                or ascii_folding or icu_folding or elision or payload_delimiter
-                or tokenizer != "standard"):
-            raise ValueError("cjk_bigrams is mutually exclusive with "
-                             "stemmer/synonyms/shingles/common_grams/"
-                             "ascii_folding/elision/payloads and "
-                             "non-standard tokenizers")
         from ..functions.cjk import cjk_analyze_batch
         doc_idx, terms, positions, lengths, cjk_over = cjk_analyze_batch(
-            pd.Series(texts.to_numpy(dtype=object)), stopwords=stopwords,
-            flags=cjk_bigrams, output_unigrams=cjk_output_unigrams)
-    elif tokenizer in ("path", "path_reverse") or (
-            isinstance(tokenizer, tuple)
-            and tokenizer[0] not in ("pattern", "url_email")):
+            pd.Series(texts.to_numpy(dtype=object)),
+            stopwords=spec.stopwords, flags=spec.cjk_bigrams,
+            output_unigrams=spec.cjk_output_unigrams)
+    elif spec.whole_input_tokenizer:
         # (Reverse)PathHierarchyTokenizer / raw (Edge)NGramTokenizer —
         # whole-input tokenizers that replace the analysis chain; the
         # stream-rewriting filters don't compose with them
-        if (stemmer or synonyms or shingles or common_grams
-                or ascii_folding or icu_folding or elision or payload_delimiter
-                or stopwords or ngrams):
-            raise ValueError("path/ngram tokenizers are mutually "
-                             "exclusive with the token-filter chain "
-                             "(stopwords/stemmer/synonyms/shingles/"
-                             "common_grams/ascii_folding/elision/"
-                             "payloads/ngrams)")
         from ..functions.ngram import (ngram_tokenize_batch,
                                        path_tokenize_batch)
         texts_ser = pd.Series(texts.to_numpy(dtype=object))
-        if tokenizer in ("path", "path_reverse"):
+        if spec.tokenizer in ("path", "path_reverse"):
             doc_idx, terms, positions, lengths, cjk_over = \
-                path_tokenize_batch(texts_ser,
-                                    reverse=(tokenizer == "path_reverse"))
+                path_tokenize_batch(
+                    texts_ser, reverse=(spec.tokenizer == "path_reverse"))
         else:
-            kind, mn, mx = tokenizer
+            kind, mn, mx = spec.tokenizer
             if kind not in ("ngram", "edge_ngram"):
-                raise ValueError(f"unknown tokenizer {tokenizer!r}")
+                raise ValueError(f"unknown tokenizer {spec.tokenizer!r}")
             doc_idx, terms, positions, lengths = ngram_tokenize_batch(
                 texts_ser, mn, mx, edge=(kind == "edge_ngram"))
             cjk_over = np.zeros(n_docs, dtype=np.int64)
-    elif word_delimiter is not None:
+    elif spec.word_delimiter is not None:
         # WordDelimiterGraphFilter chain (reference recommendation:
         # whitespace tokenize -> WDGF -> lowercase; case information
         # drives the splits, so LowerCaseFilter comes AFTER)
-        if (stemmer or synonyms or shingles or common_grams
-                or ascii_folding or icu_folding or elision or payload_delimiter
-                or stopwords or ngrams is not None):
-            raise ValueError("word_delimiter is mutually exclusive with "
-                             "the other token filters")
-        if tokenizer != "whitespace":
-            raise ValueError("word_delimiter requires "
-                             "tokenizer='whitespace' (the reference "
-                             "pairs WDGF with a non-splitting tokenizer)")
         from ..functions.worddelim import expand_worddelim_batch
         doc_idx, terms, positions, lengths = analyze_batch(
             pd.Series(texts.to_numpy(dtype=object)),
             tokenizer="whitespace", lowercase=False)
         doc_idx, terms, positions, lengths, cjk_over = \
             expand_worddelim_batch(doc_idx, terms, positions, n_docs,
-                                   word_delimiter,
-                                   word_delimiter_protected)
+                                   spec.word_delimiter,
+                                   spec.word_delimiter_protected)
         if len(terms):
             codes, uniq = pd.factorize(terms)
             terms = np.array([u.lower() for u in uniq],
                              dtype=object)[codes]
-    elif capture_groups is not None:
+    elif spec.capture_groups is not None:
         # PatternCaptureGroupTokenFilter chain (reference composition:
         # tokenize -> captures -> lowercase — case information drives
         # the camelCase patterns, so LowerCaseFilter comes AFTER)
-        if (stemmer or synonyms or shingles or common_grams
-                or ascii_folding or icu_folding or elision or payload_delimiter
-                or stopwords or ngrams is not None or keyword_repeat):
-            raise ValueError("capture_groups is mutually exclusive with "
-                             "the other token filters")
         from ..functions.pattern import expand_capture_groups_batch
-        patterns, preserve_original = capture_groups
+        patterns, preserve_original = spec.capture_groups
         doc_idx, terms, positions, lengths = analyze_batch(
             pd.Series(texts.to_numpy(dtype=object)),
-            tokenizer=tokenizer, lowercase=False)
+            tokenizer=spec.tokenizer, lowercase=False)
         doc_idx, terms, positions, cjk_over = expand_capture_groups_batch(
             doc_idx, terms, positions, n_docs, patterns,
             preserve_original)
@@ -222,45 +165,38 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
             codes, uniq = pd.factorize(terms)
             terms = np.array([u.lower() for u in uniq],
                              dtype=object)[codes]
-    elif keyword_repeat:
+    elif spec.keyword_repeat:
         # KeywordRepeatFilter chain (lowercase → stop → KeywordRepeat →
         # stem → RemoveDuplicates): analyze WITHOUT the stemmer so the
         # original surface form survives, then add stemmed posInc-0
         # overlaps where stemming changed the token
-        if stemmer is None:
-            raise ValueError("keyword_repeat requires a stemmer")
-        if (synonyms or shingles or common_grams or payload_delimiter
-                or ngrams is not None):
-            raise ValueError("keyword_repeat is mutually exclusive with "
-                             "synonyms/shingles/common_grams/payloads/"
-                             "ngrams")
         from ..functions.analysis import expand_keyword_repeat_batch
         doc_idx, terms, positions, lengths = analyze_batch(
             pd.Series(texts.to_numpy(dtype=object)),
-            stopwords=stopwords,
-            tokenizer=tokenizer,
-            ascii_folding=ascii_folding,
-            icu_folding=icu_folding,
-            elision=elision,
-            pattern_replace=pattern_replace,
-            token_filters=token_filters)
+            stopwords=spec.stopwords,
+            tokenizer=spec.tokenizer,
+            ascii_folding=spec.ascii_folding,
+            icu_folding=spec.icu_folding,
+            elision=spec.elision,
+            pattern_replace=spec.pattern_replace,
+            token_filters=spec.token_filters)
         doc_idx, terms, positions, cjk_over = expand_keyword_repeat_batch(
-            doc_idx, terms, positions, n_docs, stemmer)
+            doc_idx, terms, positions, n_docs, spec.stemmer)
     else:
         doc_idx, terms, positions, lengths = analyze_batch(
             pd.Series(texts.to_numpy(dtype=object)),
-            stopwords=stopwords,
-            stemmer=stemmer,
-            tokenizer=tokenizer,
-            ascii_folding=ascii_folding,
-            icu_folding=icu_folding,
-            elision=elision,
-            pattern_replace=pattern_replace,
-            token_filters=token_filters,
-            keyword_marker=keyword_marker,
-            stemmer_override=stemmer_override)
+            stopwords=spec.stopwords,
+            stemmer=spec.stemmer,
+            tokenizer=spec.tokenizer,
+            ascii_folding=spec.ascii_folding,
+            icu_folding=spec.icu_folding,
+            elision=spec.elision,
+            pattern_replace=spec.pattern_replace,
+            token_filters=spec.token_filters,
+            keyword_marker=spec.keyword_marker,
+            stemmer_override=spec.stemmer_override)
         cjk_over = np.zeros(n_docs, dtype=np.int64)
-    if concatenate_graph:
+    if spec.concatenate_graph:
         # ConcatenateGraphFilter (miscellaneous/ConcatenateGraphFilter
         # .java): the whole surviving stream becomes ONE token, tokens
         # joined by SEP_LABEL (U+001F) with one extra separator per
@@ -268,14 +204,8 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         # TokenStreamToAutomaton hole encoding) — the CompletionAnalyzer
         # key shape. concatenate_graph = True or (sep, preserve_posinc).
         sep, preserve_inc = ("\u001f", True)
-        if isinstance(concatenate_graph, tuple):
-            sep, preserve_inc = concatenate_graph
-        if (synonyms or shingles or common_grams or payload_delimiter
-                or dictionary_compound is not None or ngrams is not None
-                or keyword_repeat or phonetic is not None
-                or min_hash is not None):
-            raise ValueError("concatenate_graph is mutually exclusive "
-                             "with the other stream-rewriting filters")
+        if isinstance(spec.concatenate_graph, tuple):
+            sep, preserve_inc = spec.concatenate_graph
         out_d, out_t = [], []
         lengths = np.zeros(n_docs, dtype=np.int64)
         if len(terms):
@@ -297,7 +227,7 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         doc_idx = np.array(out_d, dtype=np.int64)
         terms = np.array(out_t, dtype=object)
         positions = np.zeros(len(out_d), dtype=np.int64)
-    if min_hash is not None:
+    if spec.min_hash is not None:
         # MinHashFilter pipeline (analysis/minhash/MinHashFilter.java):
         # k-shingle the analyzed stream (ShingleFilter with
         # outputUnigrams=false, space separator), then collapse each doc
@@ -305,27 +235,18 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         # 0), so norms see length 1 and the overlays count only into
         # sumTotalTermFreq. min_hash = (k, hash_count, bucket_count,
         # hash_set_size, with_rotation).
-        if (synonyms or shingles or common_grams or payload_delimiter
-                or dictionary_compound is not None or ngrams is not None
-                or keyword_repeat or phonetic is not None):
-            raise ValueError("min_hash is mutually exclusive with the "
-                             "other stream-rewriting filters")
         from ..functions.minhash import expand_minhash_batch
-        k, hc, bc, hss, rot = min_hash
+        k, hc, bc, hss, rot = spec.min_hash
         doc_idx, terms, positions, lengths, mh_over = \
             expand_minhash_batch(doc_idx, terms, positions, n_docs,
                                  int(k), int(hc), int(bc), int(hss), rot)
         cjk_over = cjk_over + mh_over
-    if phonetic is not None:
+    if spec.phonetic is not None:
         # PhoneticFilter (reference ``analysis/phonetic/PhoneticFilter
         # .java``): phonetic = (encoder_name, inject). inject=True emits
         # the encoding as a posInc=0 overlay beside the original (norm
         # discount like every overlay); inject=False replaces the term.
-        if (synonyms or shingles or common_grams or payload_delimiter
-                or dictionary_compound is not None or ngrams is not None
-                or keyword_repeat):
-            raise ValueError("phonetic is mutually exclusive with the "
-                             "graph-expanding filters")
+        phonetic = spec.phonetic
         enc_name = phonetic[0]
         inject = phonetic[1] if len(phonetic) > 1 else True
         if enc_name == "double_metaphone_filter":
@@ -364,19 +285,15 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         else:
             from ..functions.phonetic import replace_phonetic_batch
             terms = replace_phonetic_batch(terms, enc_name)
-    if hunspell is not None:
+    if spec.hunspell is not None:
         # HunspellStemFilter (reference ``analysis/hunspell/
         # HunspellStemFilter.java``): stems replace the token (first at
         # the source position, the rest posInc=0 overlays; stemless
         # tokens pass through). hunspell = (aff_path, dic_path[, dedup
         # [, longest_only[, ignore_case]]]) — the dictionary files must
         # be reachable from every executor (ship via --files at scale).
-        if (synonyms or shingles or common_grams or payload_delimiter
-                or dictionary_compound is not None or ngrams is not None
-                or keyword_repeat or phonetic is not None):
-            raise ValueError("hunspell is mutually exclusive with the "
-                             "other graph-expanding filters")
         from ..functions.hunspell import hunspell_stem_batch
+        hunspell = spec.hunspell
         aff_p, dic_p = hunspell[0], hunspell[1]
         dd = hunspell[2] if len(hunspell) > 2 else True
         lo = hunspell[3] if len(hunspell) > 3 else False
@@ -385,7 +302,7 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
             doc_idx, terms, positions, n_docs, aff_p, dic_p,
             dedup=dd, longest_only=lo, ignore_case=ic)
         cjk_over = cjk_over + hs_over
-    if term_freq_delimiter:
+    if spec.term_freq_delimiter:
         # DelimitedTermFrequencyTokenFilter (reference ``analysis/common/
         # .../miscellaneous/DelimitedTermFrequencyTokenFilter.java``):
         # split each token at the LAST delimiter, the integer suffix is
@@ -397,19 +314,10 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         # (FieldInvertState.length += termFrequency). Kernel shape:
         # repeat each token freq times — the run-length inversion then
         # produces exactly those tf/dl sums.
-        if store_positions:
-            raise ValueError("delimited term frequencies require "
-                             "store_positions=False (reference: "
-                             "IndexOptions.DOCS_AND_FREQS only)")
-        if synonyms or shingles or common_grams or payload_delimiter \
-                or dictionary_compound is not None or ngrams is not None:
-            raise ValueError("term_freq_delimiter is mutually exclusive "
-                             "with synonyms/shingles/common_grams/"
-                             "payloads/compound/ngrams")
         if len(terms):
             ser = pd.Series(terms)
-            parts = ser.str.rpartition(term_freq_delimiter)
-            has = (parts[1] == term_freq_delimiter).to_numpy()
+            parts = ser.str.rpartition(spec.term_freq_delimiter)
+            has = (parts[1] == spec.term_freq_delimiter).to_numpy()
             vals = pd.to_numeric(parts[2], errors="coerce").to_numpy()
             bad = has & (~np.isfinite(vals) | (vals < 0)
                          | (vals != np.floor(vals)))
@@ -425,7 +333,7 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
             positions = np.repeat(positions, freqs)
             lengths = np.bincount(doc_idx, minlength=n_docs) \
                 .astype(np.int64)
-    if reverse_tokens and len(terms):
+    if spec.reverse_tokens and len(terms):
         # ReverseStringFilter (reference ``analysis/common/.../reverse/
         # ReverseStringFilter.java``): reverse every final token. With a
         # reversed dictionary a leading wildcard (*suffix) becomes a
@@ -435,14 +343,10 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         # code points, which equals the reference's surrogate-aware
         # UTF-16 reverse. Vocabulary-level: each unique token reversed
         # once.
-        if payload_delimiter:
-            raise ValueError("reverse_tokens is mutually exclusive with "
-                             "payloads (the delimiter suffix would be "
-                             "reversed away)")
         codes, uniq = pd.factorize(terms)
         terms = np.array([u[::-1] for u in uniq], dtype=object)[codes]
     payloads = None
-    if payload_delimiter:
+    if spec.payload_delimiter:
         # DelimitedPayloadTokenFilter + FloatEncoder (reference
         # ``analysis/common/.../payloads/DelimitedPayloadTokenFilter
         # .java``): split each token at the LAST delimiter; the suffix
@@ -452,77 +356,61 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
         # the sum/avg functions we score with). Pair with the
         # whitespace tokenizer like the reference does — Standard
         # tokenization would split at the delimiter.
-        if synonyms:
-            raise ValueError("payloads and index-time synonyms are "
-                             "mutually exclusive")
         ser = pd.Series(terms)
-        parts = ser.str.rpartition(payload_delimiter)
-        has = (parts[1] == payload_delimiter).to_numpy()
+        parts = ser.str.rpartition(spec.payload_delimiter)
+        has = (parts[1] == spec.payload_delimiter).to_numpy()
         stripped = parts[0].to_numpy(dtype=object)
         terms = np.where(has, stripped, terms)
         payloads = np.zeros(len(terms), dtype=np.float32)
         vals = pd.to_numeric(parts[2], errors="coerce") \
             .fillna(0.0).to_numpy()
         payloads[has] = vals[has].astype(np.float32)
-    if synonyms:
+    if spec.synonyms:
         from ..functions.analysis import expand_synonyms_batch
         doc_idx, terms, positions, overlaps = expand_synonyms_batch(
-            doc_idx, terms, positions, n_docs, synonyms)
+            doc_idx, terms, positions, n_docs, spec.synonyms)
     else:
         overlaps = np.zeros(n_docs, dtype=np.int64)
-    if shingles:
+    if spec.shingles:
         # index-time ShingleFilter (outputUnigrams=true): shingle tokens
         # are posInc=0 overlaps at the first component's position —
         # mutually exclusive with synonyms (graph streams) and payloads
         # (parallel array alignment)
-        if synonyms or payload_delimiter:
-            raise ValueError("shingles are mutually exclusive with "
-                             "synonyms and payloads")
         from ..functions.analysis import expand_shingles_batch
-        mn, mx = shingles
+        mn, mx = spec.shingles
         doc_idx, terms, positions, sh_over = expand_shingles_batch(
             doc_idx, terms, positions, n_docs, mn, mx)
         overlaps = overlaps + sh_over
-    if common_grams:
+    if spec.common_grams:
         # CommonGramsFilter: like shingles but only around common words,
         # '_' separator; same mutual-exclusion rules
-        if synonyms or payload_delimiter or shingles:
-            raise ValueError("common_grams is mutually exclusive with "
-                             "synonyms, payloads and shingles")
         from ..functions.analysis import expand_common_grams_batch
         doc_idx, terms, positions, cg_over = expand_common_grams_batch(
-            doc_idx, terms, positions, n_docs, common_grams)
+            doc_idx, terms, positions, n_docs, spec.common_grams)
         overlaps = overlaps + cg_over
-    if dictionary_compound is not None:
+    if spec.dictionary_compound is not None:
         # DictionaryCompoundWordTokenFilter (compound/
         # DictionaryCompoundWordTokenFilter.java): subword overlays at
         # the source position — same graph shape as synonyms/shingles,
         # same mutual-exclusion rules (parallel array alignment)
-        if synonyms or payload_delimiter or shingles or common_grams:
-            raise ValueError("dictionary_compound is mutually exclusive "
-                             "with synonyms, payloads, shingles and "
-                             "common_grams")
         from ..functions.compound import expand_compound_batch
         doc_idx, terms, positions, dc_over = expand_compound_batch(
-            doc_idx, terms, positions, n_docs, dictionary_compound)
+            doc_idx, terms, positions, n_docs, spec.dictionary_compound)
         overlaps = overlaps + dc_over
-    if ngrams is not None:
+    if spec.ngrams is not None:
         # (Edge)NGramTokenFilter last in the chain (the reference's
         # usual composition); replaces per-doc lengths with emitting-
         # token counts (= posInc>0 tokens, the discountOverlaps norm)
-        if synonyms or payload_delimiter or shingles or common_grams:
-            raise ValueError("the ngrams filter is mutually exclusive "
-                             "with synonyms, payloads, shingles and "
-                             "common_grams")
         from ..functions.ngram import expand_ngrams_batch
-        mn, mx = ngrams
+        mn, mx = spec.ngrams
         doc_idx, terms, positions, lengths, ng_over = expand_ngrams_batch(
             doc_idx, terms, positions, n_docs, mn, mx,
-            preserve_original=ngram_preserve_original, edge=ngram_edge)
+            preserve_original=spec.ngram_preserve_original,
+            edge=spec.ngram_edge)
         overlaps = overlaps + ng_over
     overlaps = overlaps + cjk_over
     total_lengths = lengths + overlaps
-    norm_lengths = lengths if discount_overlaps else total_lengths
+    norm_lengths = lengths if spec.discount_overlaps else total_lengths
     sum_token_len = int(total_lengths.sum())
     norm_bytes = int_to_byte4(norm_lengths)
 
@@ -704,78 +592,24 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
 
 
 def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
-                  stopwords: frozenset, store_positions: bool,
-                  stemmer: str | None = None,
-                  synonyms: dict | None = None,
-                  discount_overlaps: bool = True,
-                  sort_field: str | None = None,
-                  sort_ascending: bool = True,
-                  payload_delimiter: str | None = None,
-                  tokenizer: str = "standard",
-                  shingles: tuple | None = None,
-                  ascii_folding: bool = False,
-                  common_grams: frozenset | None = None,
-                  store_term_vectors: bool = False,
-                  elision: frozenset | None = None,
-                  cjk_bigrams: int | None = None,
-                  cjk_output_unigrams: bool = False,
-                  ngrams: tuple | None = None,
-                  ngram_edge: bool = False,
-                  ngram_preserve_original: bool = False,
-                  word_delimiter: int | None = None,
-                  word_delimiter_protected: frozenset = frozenset(),
-                  keyword_repeat: bool = False,
-                  pattern_replace: tuple | None = None,
-                  token_filters: tuple = (),
-                  dictionary_compound=None,
-                  capture_groups: tuple | None = None,
-                  char_filters: tuple = (),
-                  reverse_tokens: bool = False,
-                  term_freq_delimiter: str | None = None,
-                  keyword_marker: frozenset = frozenset(),
-                  stemmer_override: dict | None = None,
-                  phonetic: tuple | None = None,
-                  hunspell: tuple | None = None,
-                  min_hash: tuple | None = None,
-                  concatenate_graph: bool | tuple = False,
-                  icu_folding: bool | str = False):
+                  spec: AnalyzerSpec, store_positions: bool,
+                  sort_field: str | None, sort_ascending: bool,
+                  store_term_vectors: bool):
     def build_one_segment(key, pdf):
         from pyspark import TaskContext
         seg_id = int(key[0])
         tc = TaskContext.get()
         part = tc.partitionId() if tc else -1
         postings, doc_meta, norms_payload, sum_token_len = invert_segment(
-            pdf, seg_id, content_col, doc_id_col, stopwords, store_positions,
-            stemmer, synonyms, discount_overlaps, sort_field,
-            sort_ascending, payload_delimiter, tokenizer, shingles,
-            ascii_folding, common_grams, elision,
-            icu_folding=icu_folding,
-            cjk_bigrams=cjk_bigrams,
-            cjk_output_unigrams=cjk_output_unigrams,
-            ngrams=ngrams, ngram_edge=ngram_edge,
-            ngram_preserve_original=ngram_preserve_original,
-            word_delimiter=word_delimiter,
-            word_delimiter_protected=word_delimiter_protected,
-            keyword_repeat=keyword_repeat,
-            pattern_replace=pattern_replace,
-            token_filters=token_filters,
-            dictionary_compound=dictionary_compound,
-            capture_groups=capture_groups,
-            char_filters=char_filters,
-            reverse_tokens=reverse_tokens,
-            term_freq_delimiter=term_freq_delimiter,
-            keyword_marker=keyword_marker,
-            stemmer_override=stemmer_override,
-            phonetic=phonetic,
-            hunspell=hunspell,
-            min_hash=min_hash,
-            concatenate_graph=concatenate_graph)
+            pdf, seg_id, content_col, doc_id_col, spec.stopwords,
+            store_positions, sort_field=sort_field,
+            sort_ascending=sort_ascending, **spec.options())
         stats = _write_segment(catalog_root, seg_id, postings, doc_meta,
                                norms_payload, part,
                                sum_token_len=sum_token_len)
         if store_term_vectors and stats["status"] == "built":
             _write_term_vectors(catalog_root, seg_id, pdf, content_col,
-                                doc_id_col, stopwords)
+                                doc_id_col, spec.stopwords)
         return pd.DataFrame([{
             "seg_id": stats["seg_id"], "num_docs": stats["num_docs"],
             "num_terms": stats["num_terms"], "num_postings": stats["num_postings"],
@@ -824,44 +658,14 @@ def build_index(spark, df, index_dir: str, *,
                 content_col: str = "content",
                 doc_id_col: str = "doc_id",
                 stopwords: frozenset = frozenset(),
-                stemmer: str | None = None,
                 store_positions: bool = True,
                 resume: bool = True,
                 compute_stats: bool = True,
                 seg_id_offset: int = 0,
-                synonyms: dict | None = None,
-                discount_overlaps: bool = True,
                 sort_field: str | None = None,
                 sort_ascending: bool = True,
-                payload_delimiter: str | None = None,
-                tokenizer: str = "standard",
-                shingles: tuple | None = None,
-                ascii_folding: bool = False,
-                common_grams: frozenset | None = None,
                 store_term_vectors: bool = False,
-                elision: frozenset | None = None,
-                cjk_bigrams: int | None = None,
-                cjk_output_unigrams: bool = False,
-                ngrams: tuple | None = None,
-                ngram_edge: bool = False,
-                ngram_preserve_original: bool = False,
-                word_delimiter: int | None = None,
-                word_delimiter_protected: frozenset = frozenset(),
-                keyword_repeat: bool = False,
-                pattern_replace: tuple | None = None,
-                token_filters: tuple = (),
-                dictionary_compound=None,
-                capture_groups: tuple | None = None,
-                char_filters: tuple = (),
-                reverse_tokens: bool = False,
-                term_freq_delimiter: str | None = None,
-                keyword_marker: frozenset = frozenset(),
-                stemmer_override: dict | None = None,
-                phonetic: tuple | None = None,
-                hunspell: tuple | None = None,
-                min_hash: tuple | None = None,
-                concatenate_graph: bool | tuple = False,
-                icu_folding: bool | str = False):
+                **chain):
     """Build (or resume) an index over ``df`` and commit a snapshot.
 
     ``df`` must carry a unique int64 ``doc_id`` column — the global docID
@@ -874,28 +678,23 @@ def build_index(spark, df, index_dir: str, *,
     :func:`operators.highlight.highlight_tv` to highlight without
     re-analysis. Stored keyed by GLOBAL doc_id at the index level (not
     per segment), so merges never rewrite it — the Spark-native shape of
-    "term vectors survive merges by bulk copy". Standard chain only:
-    token-rewriting filters would break offset→source-slice meaning.
+    "term vectors survive merges by bulk copy". Plain standard chain
+    only (:attr:`AnalyzerSpec.plain`): any other chain option would break
+    the offset→source-slice meaning.
+
+    ``chain`` holds the other :class:`AnalyzerSpec` options as keywords.
+    They become one spec before any Spark job, so a bad combination
+    raises ``ValueError`` and an unknown keyword ``TypeError`` here.
     """
     from pyspark.sql import functions as F
 
     from ..session import ensure_shipped
-    ensure_shipped(spark)
-    if shingles and (synonyms or payload_delimiter):
-        raise ValueError("shingles are mutually exclusive with "
-                         "synonyms and payloads")
-    if common_grams and (synonyms or payload_delimiter or shingles):
-        raise ValueError("common_grams is mutually exclusive with "
-                         "synonyms, payloads and shingles")
-    if store_term_vectors and (stemmer or synonyms or shingles
-                               or common_grams or ascii_folding or elision
-                               or cjk_bigrams is not None
-                               or ngrams is not None
-                               or word_delimiter is not None
-                               or char_filters
-                               or tokenizer != "standard"):
+    spec = AnalyzerSpec(stopwords=frozenset(stopwords), **chain)
+    spec.check_store_positions(store_positions)
+    if store_term_vectors and not spec.plain:
         raise ValueError("term vectors require the plain standard chain "
                          "(offsets must slice the source text)")
+    ensure_shipped(spark)
     catalog = SnapshotCatalog(index_dir)
     work = df.withColumn(SHA_COL, F.sha2(F.col(content_col).cast("string"), 256))
     work = work.withColumn(SEG_COL,
@@ -910,33 +709,9 @@ def build_index(spark, df, index_dir: str, *,
     if resume and durable:
         work = work.filter(~F.col(SEG_COL).isin(list(durable.keys())))
 
-    builder = _make_builder(index_dir, content_col, doc_id_col,
-                            frozenset(stopwords), store_positions, stemmer,
-                            synonyms, discount_overlaps,
-                            sort_field, sort_ascending, payload_delimiter,
-                            tokenizer, shingles, ascii_folding,
-                            common_grams, store_term_vectors, elision,
-                            icu_folding=icu_folding,
-                            cjk_bigrams=cjk_bigrams,
-                            cjk_output_unigrams=cjk_output_unigrams,
-                            ngrams=ngrams, ngram_edge=ngram_edge,
-                            ngram_preserve_original=ngram_preserve_original,
-                            word_delimiter=word_delimiter,
-                            word_delimiter_protected=word_delimiter_protected,
-                            keyword_repeat=keyword_repeat,
-                            pattern_replace=pattern_replace,
-                            token_filters=token_filters,
-                            dictionary_compound=dictionary_compound,
-                            capture_groups=capture_groups,
-                            char_filters=char_filters,
-                            reverse_tokens=reverse_tokens,
-                            term_freq_delimiter=term_freq_delimiter,
-                            keyword_marker=keyword_marker,
-                            stemmer_override=stemmer_override,
-                            phonetic=phonetic,
-                            hunspell=hunspell,
-                            min_hash=min_hash,
-                            concatenate_graph=concatenate_graph)
+    builder = _make_builder(index_dir, content_col, doc_id_col, spec,
+                            store_positions, sort_field, sort_ascending,
+                            store_term_vectors)
     new_stats = (work.repartition(num_segments, F.col(SEG_COL))
                  .groupBy(SEG_COL)
                  .applyInPandas(builder, schema=STATS_SCHEMA)
@@ -982,12 +757,12 @@ def build_index(spark, df, index_dir: str, *,
     if sort_field is not None:
         extra["index_sort"] = {"field": sort_field,
                                "ascending": bool(sort_ascending)}
-    if payload_delimiter is not None:
+    if spec.payload_delimiter is not None:
         extra["payloads"] = True
-    if shingles is not None:
-        extra["shingles"] = list(shingles)
-    if common_grams:
-        extra["common_grams"] = sorted(common_grams)
+    if spec.shingles is not None:
+        extra["shingles"] = list(spec.shingles)
+    if spec.common_grams:
+        extra["common_grams"] = sorted(spec.common_grams)
     if store_term_vectors or (latest and
                               (latest.extra or {}).get("term_vectors")):
         extra["term_vectors"] = True

@@ -67,22 +67,31 @@ def bootstrap_worker() -> None:
     gc.freeze()
 
 
+def write_package_zip(path: str) -> None:
+    """Zip the lucene_spark package to ``path`` for ``--py-files``: every
+    module and the data tables the analyzers load through
+    ``importlib.resources`` (``functions/icu_data``, ``bm_rules``,
+    ``stempel_data``, ``smartcn_data``), without bytecode caches."""
+    import lucene_spark
+    pkg_dir = os.path.dirname(os.path.abspath(lucene_spark.__file__))
+    root = os.path.dirname(pkg_dir)
+    with zipfile.ZipFile(path, "w") as z:
+        for dirpath, dirnames, files in os.walk(pkg_dir):
+            dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+            for fn in sorted(files):
+                if not fn.endswith(".pyc"):
+                    full = os.path.join(dirpath, fn)
+                    z.write(full, os.path.relpath(full, root))
+
+
 def ensure_shipped(spark) -> None:
     """Ship the lucene_spark package to executors (idempotent per app)."""
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED:
         return
-    import lucene_spark
-    pkg_dir = os.path.dirname(os.path.abspath(lucene_spark.__file__))
-    root = os.path.dirname(pkg_dir)
     zpath = os.path.join(tempfile.gettempdir(),
                          f"lucene_spark_pyfiles_{os.getpid()}.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for dirpath, _, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, root))
+    write_package_zip(zpath)
     spark.sparkContext.addPyFile(zpath)
     _SHIPPED.add(app_id)
 

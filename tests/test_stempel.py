@@ -50,9 +50,9 @@ def test_filter_min_length_passthrough():
 
 
 def test_multitrie_header_detected():
-    from lucene_spark.functions.stempel import (_DATA_DIR, _MultiTrie2,
-                                                load_trie)
-    t = load_trie(os.path.join(_DATA_DIR, "stemmer_20000.tbl.gz"))
+    from lucene_spark.functions.resources import data_file
+    from lucene_spark.functions.stempel import _MultiTrie2, load_trie
+    t = load_trie(data_file("stempel_data", "stemmer_20000.tbl.gz"))
     assert isinstance(t, _MultiTrie2)
     assert not t.forward  # Polish table is a backward (suffix) trie
     assert len(t.tries) >= 2

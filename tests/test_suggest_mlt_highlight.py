@@ -310,10 +310,13 @@ def test_highlight_tv_requires_flag(spark):
     with _pytest.raises(ValueError, match="term_vectors"):
         highlight_tv(s, spark.createDataFrame(corpus), "parse",
                      text_col="content")
-    with _pytest.raises(ValueError, match="standard chain"):
-        build_index(spark, spark.createDataFrame(corpus), d,
-                    num_segments=2, store_term_vectors=True,
-                    stemmer="porter")
+    # the sidecar holds the plain standard chain's terms, so every chain
+    # that indexes other terms is refused
+    for chain in ({"stemmer": "porter"}, {"reverse_tokens": True},
+                  {"phonetic": ("soundex", False)}):
+        with _pytest.raises(ValueError, match="standard chain"):
+            build_index(spark, spark.createDataFrame(corpus), d,
+                        num_segments=2, store_term_vectors=True, **chain)
 
 
 def test_highlight_tv_latest_wins_after_update(spark):
