@@ -40,15 +40,20 @@ from pyspark.sql import functions as F
 
 def term_doc_pairs(searcher, terms: list[str] | None, terms_df=None):
     """DataFrame ``(term string, doc_id long)`` — one row per (exact
-    term, live matching doc). With a ``terms`` list the postings scan is
-    pushed-filtered (the reference's per-term ``TermsEnum.postings``
-    walk, ``index/TermsEnum.java``); with ``terms_df`` the restriction
-    is a broadcast LEFT-SEMI join instead (unbounded term sets — no
-    driver materialization, at the cost of parquet min/max pruning).
-    Tombstoned docs are masked at decode."""
+    term, live matching doc). The postings scan is pushed-filtered to the
+    terms (the reference's per-term ``TermsEnum.postings`` walk,
+    ``index/TermsEnum.java``). A ``terms_df`` is first intersected with
+    the term dictionary by a left-semi join, and the surviving terms
+    take the same path. Tombstoned docs are masked at decode."""
     from .search import TermSegPostings, empty_frame
 
-    if terms_df is None and not terms:
+    if terms_df is not None:
+        # bounded by the index dictionary: only its terms survive the join
+        terms = [r["term"] for r in
+                 searcher.term_stats.select("term")
+                 .join(terms_df.select("term"), "term", "left_semi")
+                 .collect()]
+    if not terms:
         return empty_frame(searcher.spark, "term string, doc_id long")
 
     def seg_pairs(seg_id, ctx, gids):
@@ -62,8 +67,8 @@ def term_doc_pairs(searcher, terms: list[str] | None, terms_df=None):
         return pd.DataFrame({"term": np.concatenate(out_t),
                              "doc_id": np.concatenate(out_d)})
 
-    return searcher.map_segments(terms if terms_df is None else terms_df,
-                                 seg_pairs, "term string, doc_id long")
+    return searcher.map_segments(terms, seg_pairs,
+                                 "term string, doc_id long")
 
 
 def _tokenize_inputs(inputs_df, input_id_col: str, text_col: str,
@@ -133,8 +138,8 @@ def naive_bayes_classify(searcher, inputs_df, class_df,
 
     # small batch: driver-held vocabulary → literal pushed filter on the
     # range-bucketed postings (file-level min/max pruning); big batch:
-    # broadcast semi-join, no driver materialization (the 100 TB path —
-    # scan pruning is lost but nothing routes through the driver)
+    # intersected with the term dictionary first, so the driver holds at
+    # most the index's own vocabulary
     vocab_df = tf.select("word").distinct()
     vocab = [r["word"] for r in vocab_df.limit(20001).collect()]
     labels = class_df.select(F.col("doc_id"),

@@ -25,9 +25,10 @@ Spark shape: each field lives in its OWN single-field index built over
 the same ``doc_id`` space with the same ``num_segments`` — the build
 partitioner is ``doc_id % num_segments``, so segment i of every field
 holds the same documents in the same local order and the combination
-is segment-local (one cogroup, no doc-level shuffle). The pseudo-stats
-are O(fields) driver lookups against the pre-aggregated term_stats /
-field_stats tables.
+is segment-local: one shuffle-free ``fan_out`` task reads segment i of
+every field. The pseudo-stats are O(fields) driver reads of the
+term dictionaries and field stats, and the ≤ k·S candidates merge on
+the driver, so a call runs one Spark job.
 
 Seam vs the reference (documented): our ``field_stats.doc_count``
 counts every doc in the index, while Lucene's per-field docCount
@@ -44,7 +45,8 @@ import pandas as pd
 
 from ..functions import bm25
 from ..functions.smallfloat import LENGTH_TABLE, int_to_byte4
-from .search import TermSegPostings, _live_mask, _topk_merge
+from .search import (TermSegPostings, _live_mask, _topk_merge, empty_frame,
+                     fan_out, local_frame)
 
 
 def _pseudo_stats(fields, term: str):
@@ -55,11 +57,9 @@ def _pseudo_stats(fields, term: str):
     doc_count = 0
     sum_ttf = 0
     for searcher, weight in fields:
-        row = (searcher.term_stats.where(
-            searcher.term_stats.term == term)
-            .select("df", "ttf").collect())
-        df_f = int(row[0]["df"]) if row else 0
-        ttf_f = int(row[0]["ttf"]) if row else 0
+        dfs, ttfs = searcher._global_stats([term])
+        df_f = dfs.get(term, 0)
+        ttf_f = ttfs.get(term, 0)
         if df_f > 0:
             doc_freq = max(doc_freq, df_f)
             # Java: long += (double) weight * ttf — truncation per field
@@ -80,48 +80,42 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     ``num_segments`` (checked per segment via global-id equality).
     Returns (doc_id, score float32, rank) like ``Searcher.search``.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    import os
+
+    import pyarrow.parquet as pq
 
     if not fields:
         raise ValueError("fields must be non-empty")
     doc_freq, _ttf, doc_count, sum_ttf = _pseudo_stats(fields, term)
-    out_schema = "seg_id int, doc_id long, score float"
+    out_schema = "doc_id long, score float, rank int"
     if doc_freq == 0:
-        return (spark.createDataFrame([], out_schema + ", rank int")
-                .select("doc_id", "score", "rank"))
+        return empty_frame(spark, out_schema)
 
     idf = bm25.idf(doc_freq, doc_count)
     weight = np.float32(np.float32(boost) * idf)
     avgdl = bm25.avg_field_length(sum_ttf, doc_count)
     cache = bm25.norm_inverse_cache(avgdl, k1, b)
     weights = [np.float32(w) for _, w in fields]
-    deletes = [s.deletes for s, _ in fields]
 
-    pf = None
-    nf = None
-    for i, (searcher, _w) in enumerate(fields):
-        p = (searcher.postings.where(F.col("term") == term)
-             .withColumn("fidx", F.lit(i)))
-        n = (searcher.norms
-             .select("seg_id", "norm_bytes", "global_doc_ids")
-             .withColumn("fidx", F.lit(i)))
-        pf = p if pf is None else pf.unionByName(p)
-        nf = n if nf is None else nf.unionByName(n)
-
-    def seg_combined(key, postings_pdf, norms_pdf):
-        if len(norms_pdf) == 0:
-            return pd.DataFrame(columns=["seg_id", "doc_id", "score"])
-        seg_id = int(key[0])
-        by_fidx_n = {int(r["fidx"]): r for _, r in norms_pdf.iterrows()}
-        by_fidx_p = {int(r["fidx"]): r for _, r in postings_pdf.iterrows()}
+    def seg_combined(item):
+        """One segment of every field: ``item`` is ``(seg_id, [segment
+        directory or None per field], [tombstones or None per field])``."""
+        seg_id, seg_dirs, tombstones = item
+        postings = [
+            pq.read_table(os.path.join(d, "postings.parquet"),
+                          filters=[("term", "==", term)]).to_pylist()
+            if d else [] for d in seg_dirs]
+        if not any(postings):
+            return None
         gids = None
         n = 0
         comb_len = None
-        for i, w in enumerate(weights):
-            nrow = by_fidx_n.get(i)
-            if nrow is None:
+        for i, (d, w) in enumerate(zip(seg_dirs, weights)):
+            if d is None:
                 continue
+            nrow = pq.read_table(
+                os.path.join(d, "norms.parquet"),
+                columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
             g = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
             nb = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
             if gids is None:
@@ -135,36 +129,36 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
             # float32 accumulation in field order, exactly
             # MultiFieldNormValues.advanceExact
             comb_len += w * LENGTH_TABLE[nb]
-        if gids is None or n == 0:
-            return pd.DataFrame(columns=["seg_id", "doc_id", "score"])
+        if n == 0:
+            return None
         # Math.round(float) = floor(x + 0.5f) — then re-quantize byte4
         comb_byte = int_to_byte4(
             np.floor(comb_len + np.float32(0.5)).astype(np.int64))
         freq = np.zeros(n, dtype=np.float32)
-        for i, w in enumerate(weights):
-            prow = by_fidx_p.get(i)
-            if prow is None:
-                continue
-            ids, tfs = TermSegPostings(prow).decode_all()
-            freq[ids] += w * tfs.astype(np.float32)
+        for rows, w in zip(postings, weights):
+            for r in rows:
+                ids, tfs = TermSegPostings(r).decode_all()
+                freq[ids] += w * tfs.astype(np.float32)
         live = np.ones(n, dtype=bool)
-        for d in deletes:
-            lm = _live_mask(d, seg_id, n)
+        for d in tombstones:
+            lm = _live_mask({seg_id: d}, seg_id, n)
             if lm is not None:
                 live &= lm
-        mask = (freq > 0) & live
-        lids = np.nonzero(mask)[0]
+        lids = np.nonzero((freq > 0) & live)[0]
         scores = bm25.score_block(freq[lids],
                                   comb_byte[lids].astype(np.int64),
                                   weight, cache)
         g, s = _topk_merge(gids[lids], scores, k)
-        return pd.DataFrame({"seg_id": np.int32(seg_id), "doc_id": g,
-                             "score": s.astype(np.float32)})
+        return pd.DataFrame({"doc_id": g, "score": s.astype(np.float32)})
 
-    res = (pf.groupBy("seg_id")
-           .cogroup(nf.groupBy("seg_id"))
-           .applyInPandas(seg_combined, schema=out_schema))
-    top = (res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-           .withColumn("rank", F.row_number().over(
-               Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-    return top.select("doc_id", "score", "rank")
+    seg_ids = sorted({s for searcher, _ in fields for s in searcher.seg_dirs})
+    items = [(s, [searcher.seg_dirs.get(s) for searcher, _ in fields],
+              [searcher.deletes.get(s) for searcher, _ in fields])
+             for s in seg_ids]
+    cand = fan_out(spark, items, seg_combined,
+                   "doc_id long, score float").toPandas()
+    g, s = _topk_merge(cand["doc_id"].to_numpy(np.int64),
+                       cand["score"].to_numpy(np.float32), k)
+    return local_frame(spark, pd.DataFrame(
+        {"doc_id": g, "score": s,
+         "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)

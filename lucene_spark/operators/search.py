@@ -30,6 +30,7 @@ Two execution strategies, mirroring Boolean scorer selection
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -1540,21 +1541,23 @@ def empty_frame(spark, schema: str):
 
 def fan_out(spark, items: list, fn, schema: str):
     """``fn(item)`` → a pandas frame of the DDL ``schema`` (or None) for
-    every item, in ``min(len(items), defaultParallelism)`` Python tasks over
-    a range of item indexes: no shuffle, and only the indexes leave the
-    JVM. The items travel in the task closure."""
+    every item, in ``min(len(items), defaultParallelism)`` Python tasks: no
+    shuffle. The items are pickled into the rows of a local relation, so
+    each task carries only its own slice of them, and ``fn``'s closure is
+    the only state every task shares."""
+    import pickle
     if not items:
         return empty_frame(spark, schema)
 
     def run(batches):
         for pdf in batches:
-            for i in pdf["id"]:
-                out = fn(items[int(i)])
+            for blob in pdf["item"]:
+                out = fn(pickle.loads(blob))
                 if out is not None:
                     yield out
 
-    n = min(len(items), spark.sparkContext.defaultParallelism)
-    return spark.range(len(items), numPartitions=n).mapInPandas(run, schema)
+    rows = pd.DataFrame({"item": [pickle.dumps(it) for it in items]})
+    return local_frame(spark, rows, "item binary").mapInPandas(run, schema)
 
 
 class Searcher:
@@ -1563,57 +1566,106 @@ class Searcher:
 
     def __init__(self, spark, index_dir: str, snapshot_id: int | None = None,
                  similarity: Similarity | None = None):
-        import os
+        self._open(spark, [(index_dir, snapshot_id)], similarity)
+        self.index_dir = index_dir
 
-        from pyspark.sql import functions as F  # noqa: F401
+    def _open(self, spark, indexes: list[tuple[str, int | None]],
+              similarity: Similarity | None) -> None:
+        """Open ``(index_dir, snapshot_id)`` sub-indexes as one reader
+        (``DirectoryReader.open`` reads segment metadata only): manifests,
+        tombstones and collection stats, on the driver, with no Spark job.
+        Each sub-index's seg ids shift past the previous ones' (the
+        MultiReader docBase role), so ``seg_dirs`` and ``deletes`` key
+        every segment uniquely; a query task reads the files itself."""
+        from collections import OrderedDict
 
+        from ..functions.codec import check_codec_version
         from ..session import ensure_shipped
+        from .delete import load_deletes
         ensure_shipped(spark)
         self.spark = spark
         self.similarity = similarity or BM25Similarity()
-        self.index_dir = index_dir
-        self.catalog = SnapshotCatalog(index_dir)
-        snap = self.catalog.load(snapshot_id)
-        if snap is None:
-            raise ValueError(f"no snapshot in {index_dir}")
-        from ..functions.codec import check_codec_version
-        check_codec_version(snap)
-        self.snapshot = snap
+        #: (catalog, snapshot, seg_id offset) per sub-index
+        self._subs: list[tuple[SnapshotCatalog, object, int]] = []
         #: seg_id → segment directory, what each map_segments task reads
-        self.seg_dirs = {int(s): self.catalog.segment_dir(s)
-                         for s in snap.seg_ids}
-        seg_dirs = list(self.seg_dirs.values())
-        self.postings = spark.read.parquet(
-            *[os.path.join(d, "postings.parquet") for d in seg_dirs])
-        self.norms = spark.read.parquet(
-            *[os.path.join(d, "norms.parquet") for d in seg_dirs])
-        self.doc_meta = spark.read.parquet(
-            *[os.path.join(d, "doc_meta.parquet") for d in seg_dirs])
+        self.seg_dirs: dict[int, str] = {}
         #: the term dictionaries _global_stats reads on the driver
-        self.term_stats_paths = ([snap.term_stats_path]
-                                 if snap.term_stats_path else [])
-        self.term_stats = (spark.read.parquet(snap.term_stats_path)
-                           if snap.term_stats_path else None)
-        self.doc_count = int(snap.field_stats["doc_count"])
-        self.sum_ttf = int(snap.field_stats["sum_total_term_freq"])
+        self.term_stats_paths: list[str] = []
         # liveDocs: tombstones mask results at collection time; stats stay
         # stale until merge, like the reference (.liv semantics). Soft
         # tombstones mask IDENTICALLY for readers (PendingSoftDeletes
         # folds the soft-deletes DV into the same liveDocs bitset) —
         # hard vs soft only diverge at merge time (retention policy).
-        from .delete import load_deletes
-        self.deletes = load_deletes(self.catalog, snap)
-        for _s, _v in load_deletes(self.catalog, snap,
-                                   key="soft_deletes").items():
-            prev = self.deletes.get(_s)
-            self.deletes[_s] = _v if prev is None else \
-                np.unique(np.concatenate((prev, _v)))
+        self.deletes: dict[int, np.ndarray] = {}
+        self.doc_count = 0
+        self.sum_ttf = 0
+        offset = 0
+        for index_dir, snapshot_id in indexes:
+            cat = SnapshotCatalog(index_dir)
+            snap = cat.load(snapshot_id)
+            if snap is None:
+                raise ValueError(f"no snapshot in {index_dir}")
+            check_codec_version(snap)
+            self._subs.append((cat, snap, offset))
+            self.seg_dirs.update({int(s) + offset: cat.segment_dir(s)
+                                  for s in snap.seg_ids})
+            if snap.term_stats_path:
+                self.term_stats_paths.append(snap.term_stats_path)
+            for key in ("deletes", "soft_deletes"):
+                for s, ids in load_deletes(cat, snap, key=key).items():
+                    prev = self.deletes.get(s + offset)
+                    self.deletes[s + offset] = ids if prev is None else \
+                        np.unique(np.concatenate((prev, ids)))
+            self.doc_count += int(snap.field_stats["doc_count"])
+            self.sum_ttf += int(snap.field_stats["sum_total_term_freq"])
+            offset += (max(snap.seg_ids) + 1) if snap.seg_ids else 0
+        self.catalog, self.snapshot = (self._subs[0][:2]
+                                       if len(self._subs) == 1
+                                       else (None, None))
         # LRUQueryCache role: match-set cache for repeated filter queries
-        from collections import OrderedDict
         self._filter_cache: "OrderedDict[str, object]" = OrderedDict()  # key -> persisted DataFrame
         self._filter_uses: dict[str, int] = {}
         self._filter_cache_max = 32
         self.cache_hits = 0
+
+    def _union_subs(self, frames: list):
+        """Sub-index i's DataFrame ``frames[i]`` (in its own seg_id space)
+        unioned into the reader's, seg_id shifted by each offset."""
+        from pyspark.sql import functions as F
+        return reduce(lambda a, b: a.unionByName(b), (
+            df.withColumn("seg_id", (F.col("seg_id") + off).cast("int"))
+            if off else df for df, (_, _, off) in zip(frames, self._subs)))
+
+    @cached_property
+    def _doc_metas(self) -> list:
+        """Each sub-index's doc_meta scan, in its own seg_id space."""
+        import os
+        return [self.spark.read.parquet(
+                    *[os.path.join(cat.segment_dir(s), "doc_meta.parquet")
+                      for s in snap.seg_ids])
+                for cat, snap, _ in self._subs]
+
+    @cached_property
+    def doc_meta(self):
+        """Every doc's stored fields, docvalues and norms as one DataFrame
+        (``seg_id, local_doc_id, doc_id, …``), built on first use."""
+        return self._union_subs(self._doc_metas)
+
+    @cached_property
+    def term_stats(self):
+        """The term dictionary ``(term, df, ttf, …)`` as a DataFrame, built
+        on first use (None when the index has none). Several dictionaries
+        (MultiSearcher) union and sum per term — TermStates.build
+        accumulates across ALL leaves; one is a plain scan."""
+        from pyspark.sql import functions as F
+        paths = self.term_stats_paths
+        if len(paths) <= 1:
+            return self.spark.read.parquet(paths[0]) if paths else None
+        parts = [self.spark.read.parquet(p).select("term", "df", "ttf")
+                 for p in paths]
+        return (reduce(lambda a, b: a.unionByName(b), parts)
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf")))
 
     # -- docvalues ---------------------------------------------------------
     def docvalues(self, field: str):
@@ -1622,8 +1674,9 @@ class Searcher:
         with committed ``updateNumericDocValue`` generations
         (``index/ReadersAndUpdates.java:287`` reader-side resolution)."""
         from .docvalues import read_docvalues
-        return read_docvalues(self.spark, self.catalog, self.snapshot,
-                              self.doc_meta, field)
+        return self._union_subs([
+            read_docvalues(self.spark, cat, snap, meta, field)
+            for (cat, snap, _), meta in zip(self._subs, self._doc_metas)])
 
     def drop_deleted(self, df):
         """``df`` minus its tombstoned ``(seg_id, local_doc_id)`` rows —
@@ -1872,14 +1925,12 @@ class Searcher:
                      cache: np.ndarray | None = None,
                      sim: Similarity | None = None):
         """Run ``kernel(seg_id, ctx, gids)`` once per segment holding any
-        of ``terms`` — the one per-segment execution every postings kernel
-        runs through. ``terms`` is a collection of strings or a DataFrame
-        with a ``term`` column. For strings, a shuffle-free job fans out
-        over segment ids (:func:`fan_out`) and each task reads its
-        segments' ``postings.parquet`` with a pushed ``term in`` filter
-        over the sorted terms. A DataFrame keeps a broadcast left-semi
-        join grouped by segment. Either way the task reads the segment's
-        ``norms.parquet`` from :attr:`seg_dirs`, and a segment with no
+        of the strings ``terms`` — the one per-segment execution every
+        postings kernel runs through. A shuffle-free job fans out over the
+        segments (:func:`fan_out`); each item is ``(seg_id, segment
+        directory, that segment's tombstones)``, and its task reads the
+        segment's ``postings.parquet`` with a pushed ``term in`` filter
+        over the sorted terms, then ``norms.parquet``. A segment with no
         matching postings is skipped. The kernel gets the segment's
         :class:`_SegContext` (postings rows by term, norm bytes, liveDocs,
         ``cache``, ``sim`` — default the searcher's) and its global doc
@@ -1888,45 +1939,29 @@ class Searcher:
         import os
 
         import pyarrow.parquet as pq
-        from pyspark.sql import DataFrame
-        from pyspark.sql import functions as F
         sim = sim or self.similarity
-        deletes = self.deletes
-        seg_dirs = self.seg_dirs
+        terms = sorted(set(terms))
 
-        def segment(seg_id, rows):
+        def run(item):
+            seg_id, seg_dir, tombstones = item
+            rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
+                                 filters=[("term", "in", terms)]).to_pylist()
+            if not rows:
+                return None
             nrow = pq.read_table(
-                os.path.join(seg_dirs[seg_id], "norms.parquet"),
+                os.path.join(seg_dir, "norms.parquet"),
                 columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
             norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
             gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
             ctx = _SegContext({r["term"]: r for r in rows}, norm_bytes,
                               cache, sim,
-                              live=_live_mask(deletes, seg_id,
+                              live=_live_mask({seg_id: tombstones}, seg_id,
                                               len(norm_bytes)))
             return kernel(seg_id, ctx, gids)
 
-        if isinstance(terms, DataFrame):
-            empty = pd.DataFrame(columns=_columns(schema))
-
-            def run_group(key, postings_pdf):
-                out = segment(int(key[0]), postings_pdf.to_dict("records"))
-                return empty if out is None else out
-
-            return (self.postings
-                    .join(F.broadcast(terms.select("term")), "term",
-                          "left_semi")
-                    .groupBy("seg_id").applyInPandas(run_group, schema))
-        terms = sorted(set(terms))
-
-        def run(seg):
-            seg_id, seg_dir = seg
-            rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
-                                 filters=[("term", "in", terms)]).to_pylist()
-            return segment(seg_id, rows) if rows else None
-
-        return fan_out(self.spark, sorted(seg_dirs.items()) if terms else [],
-                       run, schema)
+        items = [(s, d, self.deletes.get(s))
+                 for s, d in sorted(self.seg_dirs.items())] if terms else []
+        return fan_out(self.spark, items, run, schema)
 
     # -- search ------------------------------------------------------------
     def point_range_docs(self, pr):
@@ -2243,8 +2278,6 @@ class Searcher:
         min-match join shuffles only the ≤|matches| aggregated rows.
         Sub-scores sum in float64 then cast, the engine's BooleanQuery
         SHOULD convention (shared by oracle and SQL twin)."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
         parts = [self.score_all(c) for c in clauses]
@@ -2477,9 +2510,15 @@ class Searcher:
         ``ascending`` must match the index sort direction (like the
         reference, which only early-terminates when the query sort is a
         prefix of the index sort); None = the index direction. Returns
-        (doc_id, <field>, rank)."""
+        (doc_id, <field>, rank). Over several sub-indexes every one must
+        record the same index sort."""
         from pyspark.sql import functions as F
-        info = (self.snapshot.extra or {}).get("index_sort")
+        sorts = [(snap.extra or {}).get("index_sort")
+                 for _, snap, _ in self._subs]
+        info = sorts[0]
+        if any(s != info for s in sorts):
+            raise ValueError(f"sub-indexes record different index sorts: "
+                             f"{sorts}")
         if not info:
             raise ValueError("index was not built with sort_field — "
                              "sorted_top_k needs a sorted index")
@@ -2604,35 +2643,41 @@ class Searcher:
     def explain(self, query, doc_id: int) -> dict:
         """Score breakdown for one document (Weight.explain role:
         reference ``search/Weight.java:128``, BM25's explain at
-        ``similarities/BM25Similarity.java:271+``). Driver-side small
-        lookups; returns a nested dict mirroring Lucene's Explanation tree:
+        ``similarities/BM25Similarity.java:271+``). Term and boolean trees
+        are explained from pyarrow reads on the driver: a pushed
+        ``doc_id`` read of each segment's ``doc_meta.parquet`` finds the
+        doc, then that one segment's postings are read for the query's
+        terms. Returns a nested dict mirroring Lucene's Explanation tree:
         value, description, details."""
+        import os
+
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         compiled, cache = self._compile(query)
         if compiled is None:
             return {"match": False, "value": 0.0,
                     "description": "no scorer (all terms absent)"}
-        meta = (self.doc_meta.filter(F.col("doc_id") == doc_id)
-                .select("seg_id", "doc_len", "norm_byte").collect())
-        if not meta:
+        for seg_dir in self.seg_dirs.values():
+            meta = pq.read_table(
+                os.path.join(seg_dir, "doc_meta.parquet"),
+                columns=["local_doc_id", "doc_len", "norm_byte"],
+                filters=[("doc_id", "==", int(doc_id))]).to_pylist()
+            if meta:
+                break
+        else:
             return {"match": False, "value": 0.0,
                     "description": f"doc {doc_id} not in index"}
+        local = int(meta[0]["local_doc_id"])
         norm_byte = int(meta[0]["norm_byte"])
         doc_len = int(meta[0]["doc_len"])
         terms = sorted(set(_compiled_terms(compiled)))
-        rows = (self.postings
-                .filter(F.col("term").isin(terms))
-                .filter(F.col("seg_id") == int(meta[0]["seg_id"]))
-                .collect())
-        nrow = (self.norms.filter(F.col("seg_id") == int(meta[0]["seg_id"]))
-                .collect())[0]
-        gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-        local = int(np.searchsorted(gids, doc_id))
+        rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
+                             filters=[("term", "in", terms)]).to_pylist() \
+            if terms else []
         tf_of: dict[str, int] = {}
         for r in rows:
-            tp = TermSegPostings(r.asDict())
-            ids, tfs = tp.decode_all()
+            ids, tfs = TermSegPostings(r).decode_all()
             j = np.searchsorted(ids, local)
             if j < len(ids) and ids[j] == local:
                 tf_of[r["term"]] = int(tfs[j])
@@ -2732,95 +2777,18 @@ class MultiSearcher(Searcher):
     collection statistics aggregated across all of them, nothing copied
     — contrast ``merge.add_indexes`` which imports files).
 
-    Sub-index segment ids are remapped to disjoint ranges at read time
-    (a cheap column expression — no data movement); global stats are the
-    sums over sub-indexes: a query's term stats sum the sub-dictionaries
-    on the driver, and the ``term_stats`` DataFrame unions and
-    re-aggregates them (one tiny job over pre-aggregated dictionary
-    rows). Global doc_ids must be
+    The same reader as :class:`Searcher`, opened over each index's latest
+    snapshot: sub-index segment ids shift to disjoint ranges, and global
+    stats are the sums over sub-indexes — a query's term stats sum the
+    sub-dictionaries on the driver, and the ``term_stats`` DataFrame
+    unions and re-aggregates them when first used. Global doc_ids must be
     disjoint across sub-indexes (MultiReader's docBase contract mapped
     onto our global doc_id space; CheckIndex-style uniqueness applies).
     """
 
     def __init__(self, spark, index_dirs: list[str],
                  similarity: Similarity | None = None):
-        import os
-        from collections import OrderedDict
-
-        from pyspark.sql import functions as F
-
-        from ..session import ensure_shipped
-        from .delete import load_deletes
-        ensure_shipped(spark)
         if not index_dirs:
             raise ValueError("MultiSearcher needs at least one index")
-        self.spark = spark
-        self.similarity = similarity or BM25Similarity()
+        self._open(spark, [(d, None) for d in index_dirs], similarity)
         self.index_dir = list(index_dirs)
-        self.catalog = None
-        self.snapshot = None
-        self.snapshots = []
-        post_parts, norm_parts, meta_parts, ts_parts = [], [], [], []
-        self.doc_count = 0
-        self.sum_ttf = 0
-        self.deletes = {}
-        self.seg_dirs = {}
-        self.term_stats_paths = []
-        offset = 0
-        for d in index_dirs:
-            cat = SnapshotCatalog(d)
-            snap = cat.load()
-            if snap is None:
-                raise ValueError(f"no snapshot in {d}")
-            self.snapshots.append(snap)
-            seg_dirs = [cat.segment_dir(s) for s in snap.seg_ids]
-            self.seg_dirs.update({int(s) + offset: cat.segment_dir(s)
-                                  for s in snap.seg_ids})
-            shift = (F.col("seg_id") + offset).cast("int")
-            post_parts.append(
-                spark.read.parquet(*[os.path.join(p, "postings.parquet")
-                                     for p in seg_dirs])
-                .withColumn("seg_id", shift))
-            norm_parts.append(
-                spark.read.parquet(*[os.path.join(p, "norms.parquet")
-                                     for p in seg_dirs])
-                .withColumn("seg_id", shift))
-            meta_parts.append(
-                spark.read.parquet(*[os.path.join(p, "doc_meta.parquet")
-                                     for p in seg_dirs])
-                .withColumn("seg_id", shift))
-            if snap.term_stats_path:
-                self.term_stats_paths.append(snap.term_stats_path)
-                ts_parts.append(spark.read.parquet(snap.term_stats_path)
-                                .select("term", "df", "ttf"))
-            for s, ids in load_deletes(cat, snap).items():
-                self.deletes[int(s) + offset] = ids
-            for s, ids in load_deletes(cat, snap,
-                                       key="soft_deletes").items():
-                prev = self.deletes.get(int(s) + offset)
-                self.deletes[int(s) + offset] = ids if prev is None else \
-                    np.unique(np.concatenate((prev, ids)))
-            self.doc_count += int(snap.field_stats["doc_count"])
-            self.sum_ttf += int(snap.field_stats["sum_total_term_freq"])
-            offset += (max(snap.seg_ids) + 1) if snap.seg_ids else 0
-
-        def _union(parts):
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-
-        self.postings = _union(post_parts)
-        self.norms = _union(norm_parts)
-        self.doc_meta = _union(meta_parts)
-        # global dictionary: df/ttf summed across sub-indexes
-        # (TermStates.build accumulates across ALL leaves)
-        self.term_stats = (_union(ts_parts)
-                           .groupBy("term")
-                           .agg(F.sum("df").alias("df"),
-                                F.sum("ttf").alias("ttf"))
-                           if ts_parts else None)
-        self._filter_cache = OrderedDict()
-        self._filter_uses = {}
-        self._filter_cache_max = 32
-        self.cache_hits = 0

@@ -1,11 +1,11 @@
-"""Every per-segment postings kernel runs through ``Searcher.map_segments``.
+"""Every per-segment kernel runs through a shuffle-free fan-out.
 
-``map_segments`` fans out over segment ids and each task reads its own
-segment files, so no query kernel needs a shuffle. The package may hold
-exactly one ``.cogroup(`` call, in ``combinedfield.py``, whose cogroup
-joins the norms of several searchers per segment. A new entry point that
-hand-writes a postings ⋈ norms cogroup fails here; pass a kernel to
-``map_segments`` instead.
+``Searcher.map_segments`` (and ``combinedfield``, which reads several
+searchers' segments at once) fans out over segment ids with
+``search.fan_out``, and each task reads its own segment files, so no query
+kernel needs a shuffle. A new entry point that hand-writes a postings ⋈
+norms cogroup, or a grouped map over a ``Searcher`` DataFrame, fails here;
+pass a kernel to ``map_segments`` or ``fan_out`` instead.
 """
 
 from __future__ import annotations
@@ -18,9 +18,9 @@ import lucene_spark
 PACKAGE = Path(lucene_spark.__file__).parent
 
 
-def _cogroup_sites() -> list[tuple[str, str]]:
+def _call_sites(attr: str) -> list[tuple[str, str]]:
     """``(path relative to the package, enclosing qualified name)`` of
-    every ``.cogroup(...)`` call in the package."""
+    every ``.<attr>(...)`` call in the package."""
     sites = []
 
     def visit(node, scope):
@@ -31,7 +31,7 @@ def _cogroup_sites() -> list[tuple[str, str]]:
                 inner = scope + (child.name,)
             if (isinstance(child, ast.Call)
                     and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "cogroup"):
+                    and child.func.attr == attr):
                 sites.append((rel, ".".join(scope)))
             visit(child, inner)
 
@@ -41,7 +41,11 @@ def _cogroup_sites() -> list[tuple[str, str]]:
     return sites
 
 
-def test_only_combinedfield_cogroups():
-    sites = _cogroup_sites()
-    assert len(sites) == 1, sites
-    assert sites[0][0] == "operators/combinedfield.py", sites
+def test_no_cogroup_sites():
+    assert _call_sites("cogroup") == []
+
+
+def test_search_has_no_grouped_map():
+    sites = [s for s in _call_sites("applyInPandas")
+             if s[0] == "operators/search.py"]
+    assert sites == []
