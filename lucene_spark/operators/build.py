@@ -33,6 +33,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..functions.analysis import AnalyzerSpec, analyze_batch
 from ..functions.codec import encode_postings_batch
@@ -47,8 +48,38 @@ STATS_SCHEMA = ("seg_id int, num_docs long, num_terms long, num_postings long, "
                 "bytes_compressed long, build_partition int, "
                 "status string")
 
-POSTINGS_COLUMNS = ["term", "seg_id", "df", "ttf", "doc_bytes", "tf_bytes",
-                    "pos_bytes", "block_last", "impact_bytes"]
+#: arrow schema of a segment's ``postings.parquet``, written by build and
+#: merge alike; an index with payloads appends ``pay_bytes``
+POSTINGS_SCHEMA = pa.schema([
+    ("term", pa.string()), ("seg_id", pa.int32()), ("df", pa.int32()),
+    ("ttf", pa.int64()), ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
+    ("pos_bytes", pa.binary()), ("block_last", pa.binary()),
+    ("impact_bytes", pa.binary()),
+])
+POSTINGS_COLUMNS = POSTINGS_SCHEMA.names
+
+
+def postings_schema(payloads: bool) -> pa.Schema:
+    return (POSTINGS_SCHEMA.append(pa.field("pay_bytes", pa.binary()))
+            if payloads else POSTINGS_SCHEMA)
+
+
+def write_segment_file(table: pa.Table, path: str) -> None:
+    """Write one parquet file of a segment, built or merged alike: no
+    pandas metadata, dictionary pages only for flat columns that repeat
+    values, and no min/max statistics on binary columns (the postings
+    blobs would fill the footer)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    pq.write_table(
+        table.replace_schema_metadata(None), path,
+        use_dictionary=[f.name for f in table.schema
+                        if not pa.types.is_nested(f.type)
+                        and 2 * pc.count_distinct(table[f.name]).as_py()
+                        < table.num_rows],
+        write_statistics=[f.name for f in table.schema
+                          if not pa.types.is_binary(f.type)])
+
 
 #: Snapshot ``extra`` keys that describe the state of committed segments
 #: (tombstones, docvalues updates) and so carry across an append build
@@ -487,18 +518,7 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
                    build_partition: int, origin: str = "build",
                    sum_token_len: int | None = None) -> dict:
     """Flush one immutable segment dir atomically (tmp + rename)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-
-    fields = [
-        ("term", pa.string()), ("seg_id", pa.int32()), ("df", pa.int32()),
-        ("ttf", pa.int64()), ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
-        ("pos_bytes", pa.binary()), ("block_last", pa.binary()),
-        ("impact_bytes", pa.binary()),
-    ]
-    if "pay_bytes" in postings.columns:
-        fields.append(("pay_bytes", pa.binary()))
-    postings_schema = pa.schema(fields)
 
     seg_dir = os.path.join(catalog_root, "segments", f"seg={seg_id}")
     if os.path.exists(os.path.join(seg_dir, "stats.json")):
@@ -509,18 +529,18 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
 
     tmp = os.path.join(catalog_root, "segments", f"_tmp-{seg_id}-{uuid.uuid4().hex}")
     os.makedirs(tmp, exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(postings, schema=postings_schema,
-                                        preserve_index=False),
-                   os.path.join(tmp, "postings.parquet"))
-    pq.write_table(pa.Table.from_pandas(doc_meta, preserve_index=False),
-                   os.path.join(tmp, "doc_meta.parquet"))
+    write_segment_file(pa.Table.from_pandas(
+        postings, schema=postings_schema("pay_bytes" in postings.columns),
+        preserve_index=False), os.path.join(tmp, "postings.parquet"))
+    write_segment_file(pa.Table.from_pandas(doc_meta, preserve_index=False),
+                       os.path.join(tmp, "doc_meta.parquet"))
     norms_tbl = pa.table({
         "seg_id": pa.array([norms_payload["seg_id"]], pa.int32()),
         "num_docs": pa.array([norms_payload["num_docs"]], pa.int64()),
         "norm_bytes": pa.array([norms_payload["norm_bytes"]], pa.binary()),
         "global_doc_ids": pa.array([norms_payload["global_doc_ids"]], pa.binary()),
     })
-    pq.write_table(norms_tbl, os.path.join(tmp, "norms.parquet"))
+    write_segment_file(norms_tbl, os.path.join(tmp, "norms.parquet"))
 
     bytes_compressed = int(sum(
         postings[c].str.len().sum() for c in
@@ -560,7 +580,6 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
     doc_id (seg_id kept so readers can latest-win across updateDocument
     generations). Executor-written, atomic rename; idempotent on resume
     (segment status 'built' gates the write)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ..functions.analysis import analyze_text_offsets

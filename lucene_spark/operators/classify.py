@@ -388,18 +388,7 @@ def doc_to_double_vectors(searcher, doc_ids_df, dense: bool = False):
     The TV read is one pushed broadcast-join scan; counting and vector
     assembly are Catalyst aggregations (dense adds one broadcast vocab
     map inside an Arrow-batched kernel)."""
-    import os
-
-    if not (searcher.snapshot.extra or {}).get("term_vectors"):
-        raise ValueError("index was built without store_term_vectors")
-    from pyspark.sql import Window
-    tvs = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "term_vectors"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("seg_id").desc())
-    live = (tvs.join(F.broadcast(doc_ids_df.select("doc_id")), "doc_id")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", "terms"))
+    live = searcher.term_vectors(doc_ids_df).select("doc_id", "terms")
     tf = (live.select("doc_id", F.explode("terms").alias("term"))
           .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     if not dense:

@@ -143,45 +143,11 @@ def read_docvalues(spark, catalog: SnapshotCatalog, snap, doc_meta,
                     F.coalesce(F.col("_ov"), F.col("_base")).alias("value")))
 
 
-def bake_updates(spark, catalog: SnapshotCatalog, snap, metas,
-                 seg_ids: list[int]):
-    """Apply the overlay to a doc_meta DataFrame of the segments being
-    merged (pre-remap coordinates): for every updated field present in
-    the merged slice, overwrite the column with the overlay value cast to
-    the column's own type — the merge-time bake that retires update
-    generations (``SegmentMerger`` merging the updated reader view)."""
-    from pyspark.sql import functions as F
-
-    path = _overlay_path(catalog, snap)
-    if not path:
-        return metas
-    ov = (spark.read.parquet(path)
-          .filter(F.col("seg_id").isin([int(s) for s in seg_ids])))
-    fields = [r["field"] for r in ov.select("field").distinct().collect()]
-    fields = [f for f in fields if f in metas.columns]
-    if not fields:
-        return metas
-    dtypes = dict(metas.dtypes)
-    for f_name in fields:
-        sl = (ov.filter(F.col("field") == f_name)
-              .select(F.col("seg_id").alias("_os"),
-                      F.col("local_doc_id").alias("_ol"),
-                      F.col("value").alias("_ov")))
-        metas = (metas.join(sl, (F.col("seg_id") == F.col("_os"))
-                            & (F.col("local_doc_id") == F.col("_ol")),
-                            "left")
-                 .withColumn(f_name,
-                             F.coalesce(F.col("_ov").cast(dtypes[f_name]),
-                                        F.col(f_name)))
-                 .drop("_os", "_ol", "_ov"))
-    return metas
-
-
 def carry_updates(spark, catalog: SnapshotCatalog, snap, extra: dict,
                   merged_seg_ids: list[int], next_gen: int) -> None:
     """Carry the overlay rows of segments NOT in this merge forward into
     the next generation's table (mutates ``extra`` in place) — the merged
-    segments' rows were baked by :func:`bake_updates` and drop out, the
+    segments' rows were baked into the merged doc_meta and drop out, the
     same distributed filter-and-rewrite the tombstone table gets."""
     from pyspark.sql import functions as F
 

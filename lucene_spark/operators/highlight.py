@@ -22,7 +22,7 @@ coverage, then densest, then earliest.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analysis import _TOKEN_RE
@@ -116,26 +116,15 @@ def highlight_tv(searcher, docs_df: DataFrame, query, k: int = 10,
     for fragment text. Plan shape: hits (≤k rows) broadcast against BOTH
     the term-vector sidecar scan and the source table — two
     broadcast-hash joins, snippet assembly in one Arrow batch."""
-    import os
-
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     from ..plans.parser import parse
     if isinstance(query, str):
         query = parse(query)
-    if not (searcher.snapshot.extra or {}).get("term_vectors"):
-        raise ValueError("index was built without store_term_vectors")
     terms = frozenset(query.scoring_terms())
     hits = searcher.search(query, k, mode=mode)
-    tvs = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "term_vectors"))
-    # latest-win across updateDocument generations: the newest segment's
-    # vector is the live doc's (same row count as hits afterwards)
-    w = Window.partitionBy("doc_id").orderBy(F.col("seg_id").desc())
-    tv_hits = (tvs.join(F.broadcast(hits.select("doc_id")), on="doc_id")
-               .withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1).drop("_rn", "seg_id"))
+    tv_hits = searcher.term_vectors(hits)
     joined = (docs_df.select(F.col(id_col).alias("doc_id"),
                              F.col(text_col).alias("_text"))
               .join(F.broadcast(hits), on="doc_id")

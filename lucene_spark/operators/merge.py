@@ -1,23 +1,27 @@
-"""Tiered segment merges: repartition + group-by-term re-encode.
+"""Tiered segment merges as two shuffle-free fan-outs.
 
 The reference picks ~10-segment merges by size tier (``index/
-TieredMergePolicy.java:85-91,295,371``: segsPerTier=10, maxMergeAtOnce=10)
-and concatenates postings with docIDs remapped by docBase (``index/
-SegmentMerger.java:103-140``, ``index/DocIDMerger.java:32``). Here a merge
-is one Spark job: the selected segments' postings tables are unioned,
-hash-repartitioned by term, and a vectorized kernel per term decodes the
-≤K per-segment lists, offsets local docIDs by docBase, concatenates in
-segment order and re-encodes (blocks + impacts rebuilt over the merged
-norms). The merged segment commits as a new snapshot generation.
+TieredMergePolicy.java:85-91,295,371``: segsPerTier=10, maxMergeAtOnce=10).
+Its ``SegmentMerger`` streams the already term-sorted inputs and remaps
+doc ids through each segment's docMap (``index/SegmentMerger.java:103-140``,
+``index/DocIDMerger.java:32``); nothing is re-partitioned. A merge here has
+the same shape over the segment files, in two ``search.fan_out`` jobs:
 
-Skew at scale: the inputs to the term group-by are pre-aggregated —
-at most one row per (term, source segment) — so a reducer group holds
-≤ maxMergeAtOnce rows; *work* per group is ∝ merged df. The tiered policy
-itself is the primary skew bound: merging 10 bounded segments bounds the
-densest term's payload per merge (that is also why the reference discourages
-forceMerge(1) on huge indexes). AQE skew-join split handles residual
-imbalance; for token-level aggregations where a single key's inputs are NOT
-pre-aggregated, see the explicitly salted path in ``operators/stats.py``.
+1. Assembly, one task: each input's norms and global ids, masked by its
+   tombstones and concatenated at its doc base (under an index sort, also
+   merge-sorted by the key), become the merged ``norms.parquet``.
+2. Rewrite: n term ranges and n merged-doc-id ranges, n one per 64 MB
+   of input postings and at most the default parallelism. A term-range
+   task reads the k inputs' postings with a pushed range filter, remaps,
+   re-encodes and writes one part file of ``postings.parquet``; a
+   doc-id-range task writes one part of ``doc_meta.parquet`` with the
+   docvalues overlay baked in. The parts are numbered in range order, so
+   each directory reads back sorted like a built segment's file.
+
+Every doc id moves through one docMap, :func:`_doc_map`. The merged segment
+commits as a new snapshot generation. A term-range task's work is
+proportional to its range's postings; the tiered policy bounds the size of
+a merge, and the cut points split the largest input's dictionary evenly.
 """
 
 from __future__ import annotations
@@ -32,49 +36,92 @@ import pandas as pd
 
 from ..functions.codec import decode_postings, encode_postings_batch
 from ..sources.catalog import SnapshotCatalog
-from .build import POSTINGS_COLUMNS, compute_term_stats
+from .build import (POSTINGS_COLUMNS, compute_term_stats, postings_schema,
+                    write_segment_file)
+
+#: the fan-out result row of one merge task: a term range's postings
+#: stats or a doc-id range's doc count and length sum
+_PART_STATS = ("num_terms long, num_postings long, sum_ttf long, "
+               "bytes long, num_docs long, sum_doc_len long")
+
+#: the input postings bytes per part file: AQE's default advisory
+#: partition size, which sized the part files when a merge shuffled by term
+_PART_BYTES = 64 << 20
 
 
-#: Per-worker cache for merge-phase artifacts (merged norms array, remap
-#: tables): every re-encode partition on a worker reuses one load. Keyed
-#: by the tmp-segment file path (unique per merge), so entries from a
-#: finished merge are dead weight — the cache holds only the latest few.
-_MERGE_WORKER_CACHE: dict = {}
+def _doc_map(doc_bases: dict, deletes: dict, table: dict | None = None):
+    """``new_ids(seg_id, old_ids)`` → merged doc ids, -1 where purged (the
+    docMap of ``DocIDMerger``). A live doc moves to ``base + old − #dead
+    below old``; under an index sort ``table`` holds, per input segment,
+    the assembly's new id of every old id."""
+    def new_ids(seg_id: int, old_ids) -> np.ndarray:
+        old = np.asarray(old_ids, np.int64)
+        if table is not None:
+            return table[seg_id][old]
+        dead = deletes.get(seg_id)
+        if dead is None or not len(dead):
+            return old + doc_bases[seg_id]
+        below = np.searchsorted(dead, old)
+        new = doc_bases[seg_id] + old - below
+        new[dead[np.minimum(below, len(dead) - 1)] == old] = -1
+        return new
+    return new_ids
 
 
-def _merge_cached(key, load):
-    if key not in _MERGE_WORKER_CACHE:
-        if len(_MERGE_WORKER_CACHE) > 6:
-            _MERGE_WORKER_CACHE.clear()
-        _MERGE_WORKER_CACHE[key] = load()
-    return _MERGE_WORKER_CACHE[key]
+def _bake(meta, overlay: pd.DataFrame):
+    """One segment's doc_meta rows with the docvalues overlay rows
+    ``(local_doc_id, field, value)`` written over their columns, cast to
+    each column's type: the updated reader view ``SegmentMerger`` reads."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    old = meta.column("local_doc_id").to_numpy()
+    for name, rows in overlay.groupby("field"):
+        if name not in meta.column_names:
+            continue
+        at = pd.Index(rows["local_doc_id"].to_numpy()).get_indexer(old)
+        hit = at >= 0
+        i = meta.column_names.index(name)
+        value = pa.array(rows["value"].to_numpy()[np.where(hit, at, 0)],
+                         pa.int64()).cast(meta.schema.field(i).type)
+        meta = meta.set_column(i, meta.schema.field(i),
+                               pc.if_else(pa.array(hit), value,
+                                          meta.column(i)))
+    return meta
 
 
-def _remap_from_tombstones(tombs: dict, seg_nums: dict) -> dict:
-    """(seg → old local id → compacted live id, -1 = purged) from the
-    sparse tombstone arrays — O(num_docs) per segment, executor-side."""
-    out = {}
-    for s, num in seg_nums.items():
-        live = np.ones(num, dtype=bool)
-        dead = tombs.get(int(s))
-        if dead is not None:
-            live[dead[dead < num]] = False
-        remap = np.full(num, -1, dtype=np.int64)
-        remap[live] = np.arange(int(live.sum()), dtype=np.int64)
-        out[int(s)] = remap
-    return out
+def _retained_soft_deletes(spark, catalog, soft_dels: dict,
+                           predicate: str) -> dict[int, np.ndarray]:
+    """The soft-deleted docs whose doc_meta row matches the retention
+    ``predicate``, in one Spark job; the rows that reach the driver are
+    bounded by the merged segments' soft-delete count."""
+    import pyarrow.dataset as ds
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
+    paths = [os.path.join(catalog.segment_dir(s), "doc_meta.parquet")
+             for s in sorted(soft_dels)]
+    none = np.empty(0, np.int64)
 
-def _remap_from_table(path: str, seg_nums: dict) -> dict:
-    """(seg → old local id → ABSOLUTE sorted new id, -1 = purged) from
-    the phase-1 sort-remap parquet."""
-    pdf = pd.read_parquet(path)
-    out = {int(s): np.full(num, -1, dtype=np.int64)
-           for s, num in seg_nums.items()}
-    for s, g in pdf.groupby("seg_id"):
-        out[int(s)][g["local_doc_id"].to_numpy(np.int64)] = \
-            g["new_id"].to_numpy(np.int64)
-    return out
+    def soft_deleted(batches):
+        for pdf in batches:
+            seg = pdf["seg_id"].to_numpy()
+            keep = np.zeros(len(pdf), dtype=bool)
+            for s in np.unique(seg):
+                m = seg == s
+                keep[m] = np.isin(pdf["local_doc_id"].to_numpy()[m],
+                                  soft_dels.get(int(s), none))
+            yield pdf[keep]
+
+    # the schema from one footer on the driver: no schema-inference job
+    schema = from_arrow_schema(ds.dataset(paths[0]).schema)
+    rows = (spark.read.schema(schema).parquet(*paths)
+            .filter(F.expr(predicate))
+            .select(F.col("seg_id").cast("int"),
+                    F.col("local_doc_id").cast("int"))
+            .mapInPandas(soft_deleted, "seg_id int, local_doc_id int")
+            .toPandas())
+    return {int(s): np.unique(g["local_doc_id"].to_numpy(np.int64))
+            for s, g in rows.groupby("seg_id")}
 
 
 def plan_merges(segments: list[dict], segs_per_tier: int = 10,
@@ -84,13 +131,13 @@ def plan_merges(segments: list[dict], segs_per_tier: int = 10,
     segs_per_tier, merge the ``max_merge_at_once`` smallest segments.
 
     ``max_merged_docs`` bounds the doc count of any single merge (the
-    reference's maxMergedSegmentMB role, ``TieredMergePolicy.java:60``):
-    the merged norms/global-id assembly (~9-17 bytes/doc) runs in ONE
-    executor task (see the Phase-1 comment below, around line 190 — the
-    driver holds only O(segments + tombstones) deltas), so an unbounded
-    merge routes the whole merged doc axis through one executor's heap.
-    The default cap keeps that task's peak at ~1 GB; ``None`` lifts it
-    (opt-in, documented-discouraged at 10^12-doc scale)."""
+    reference's maxMergedSegmentMB role, ``TieredMergePolicy.java:60``).
+    The merged norms and global ids (~9-17 bytes/doc) are assembled in
+    ONE executor task (phase 1 of :func:`merge_segments`; the driver holds
+    only O(segments + tombstones) state), so an unbounded merge routes the
+    whole merged doc axis through one executor's heap. The default cap
+    keeps that task's peak at ~1 GB; ``None`` lifts it (opt-in, discouraged
+    at 10^12-doc scale)."""
     segs = sorted(segments, key=lambda s: (s["num_docs"], s["seg_id"]))
     merges = []
     while len(segs) > segs_per_tier:
@@ -124,18 +171,22 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     search) — while non-matching soft deletes are purged like hard ones.
     ``None`` (the reference's no-retention default) purges all soft
     deletes at merge. The predicate is evaluated as one Spark job over
-    the merged segments' doc_meta (broadcast semi-join on the tombstone
-    pairs); only the retained pair list routes through the driver,
-    bounded by the soft-delete count of the segments being merged."""
-    from pyspark.sql import functions as F
+    the merged segments' doc_meta; only the retained pair list routes
+    through the driver, bounded by the soft-delete count of the segments
+    being merged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    from ..functions.codec import check_codec_version
     from ..session import ensure_shipped
+    from .delete import load_deletes
+    from .docvalues import _overlay_path
+    from .search import fan_out
     ensure_shipped(spark)
     catalog = SnapshotCatalog(index_dir)
     snap = catalog.load()
     if snap is None:
         raise ValueError("nothing to merge")
-    from ..functions.codec import check_codec_version
     check_codec_version(snap)   # a v1 block would misdecode, not error
     missing = set(seg_ids) - set(snap.seg_ids)
     if missing:
@@ -150,7 +201,6 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     # drops deletes; docIDs compact per segment before docBase concat).
     # Only the MERGED segments' tombstones are read to the driver (pushed
     # seg_id filter) — other segments' tombstones stay in the table.
-    from .delete import load_deletes
     seg_deletes = {s: v
                    for s, v in load_deletes(catalog, snap, seg_ids).items()
                    if len(v)}
@@ -161,64 +211,46 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                  load_deletes(catalog, snap, seg_ids,
                               key="soft_deletes").items() if len(v)}
     retained: dict[int, np.ndarray] = {}
-    if soft_dels:
-        if soft_retention is not None:
-            from pyspark.sql import functions as F2
-            pairs = pd.DataFrame(
-                [(int(s), int(d)) for s, v in soft_dels.items()
-                 for d in v], columns=["seg_id", "local_doc_id"])
-            meta0 = spark.read.parquet(
-                *[os.path.join(catalog.segment_dir(s), "doc_meta.parquet")
-                  for s in sorted(soft_dels)])
-            kept_rows = (meta0.join(
-                F2.broadcast(spark.createDataFrame(pairs)),
-                on=["seg_id", "local_doc_id"], how="leftsemi")
-                .filter(F2.expr(soft_retention))
-                .select("seg_id", "local_doc_id").collect())
-            for r in kept_rows:
-                retained.setdefault(int(r["seg_id"]), []).append(
-                    int(r["local_doc_id"]))
-            retained = {s: np.unique(np.asarray(v, np.int64))
-                        for s, v in retained.items()}
-        for s, v in soft_dels.items():
-            purge = v[~np.isin(v, retained.get(s, np.empty(0, np.int64)))]
-            if len(purge):
-                prev = seg_deletes.get(s, np.empty(0, np.int64))
-                seg_deletes[s] = np.unique(
-                    np.concatenate((prev, purge.astype(np.int64))))
+    if soft_dels and soft_retention is not None:
+        retained = _retained_soft_deletes(spark, catalog, soft_dels,
+                                          soft_retention)
+        # a doc that is hard-deleted too is purged whatever it matches
+        retained = {s: keep for s, v in retained.items() if len(
+            keep := np.setdiff1d(v, seg_deletes.get(s, v[:0])))}
+    for s, v in soft_dels.items():
+        purge = v[~np.isin(v, retained.get(s, np.empty(0, np.int64)))]
+        if len(purge):
+            prev = seg_deletes.get(s, np.empty(0, np.int64))
+            seg_deletes[s] = np.unique(
+                np.concatenate((prev, purge.astype(np.int64))))
 
     # docBase remap (DocIDMerger): concatenate in ascending seg_id order.
-    # DRIVER holds only O(segments + tombstones) state — live counts come
-    # from segment stats + the tombstone lengths; the per-doc work (norms
-    # mask/concat, sort permutation) runs in ONE executor task below, and
-    # the re-encode tasks rebuild remaps from the broadcast SPARSE
-    # tombstones (or read the sort-remap table) instead of receiving
-    # full per-doc arrays. At the 50M-doc merge cap the driver's delta
-    # is KBs; the assembly task peaks at ~9-17 B/doc, executor-side.
+    # The DRIVER holds only O(segments + tombstones) state: live counts
+    # come from segment stats and the tombstone lengths. The per-doc work
+    # runs in the tasks below, which rebuild the docMap from the sparse
+    # tombstones (or read the assembly's sort table).
     stats_by_seg = {s["seg_id"]: s for s in snap.segments}
     seg_nums = {s: int(stats_by_seg[s]["num_docs"]) for s in seg_ids}
+    seg_dirs = {s: catalog.segment_dir(s) for s in seg_ids}
     doc_bases: dict[int, int] = {}
-    n_deleted_merged = 0
+    n_dead: dict[int, int] = {}
     base = 0
     for s in seg_ids:
         dead = seg_deletes.get(s)
-        n_dead = int((dead < seg_nums[s]).sum()) if dead is not None else 0
-        n_deleted_merged += n_dead
+        n_dead[s] = int((dead < seg_nums[s]).sum()) if dead is not None \
+            else 0
         doc_bases[s] = base
-        base += seg_nums[s] - n_dead
+        base += seg_nums[s] - n_dead[s]
     n_docs = base
     sort_info = (snap.extra or {}).get("index_sort")
-    sorting = sort_info is not None
-    has_deletes = bool(seg_deletes)
-    bases = dict(doc_bases) if not sorting else {s: 0 for s in seg_ids}
-    bc_tombs = spark.sparkContext.broadcast(
-        {s: v.astype(np.int64) for s, v in seg_deletes.items()})
+    field = sort_info["field"] if sort_info else None
+    s_asc = bool(sort_info["ascending"]) if sort_info else True
 
     tmp = os.path.join(index_dir, "segments",
                        f"_tmp-{new_seg_id}-{uuid.uuid4().hex}")
     os.makedirs(tmp, exist_ok=True)
     norms_path = os.path.join(tmp, "norms.parquet")
-    remap_path = os.path.join(tmp, "remap.parquet") if sorting else None
+    remap_path = os.path.join(tmp, "remap.parquet")
 
     # Phase 1 — norms/gids assembly, one executor task (the only place
     # the whole merged doc axis is materialized): mask each segment's
@@ -227,30 +259,18 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     # ``index/IndexSorter.java:44`` + the sorting DocIDMerger,
     # ``index/DocIDMerger.java:97``) also merge-sort by (key asc|desc,
     # global doc_id asc) — each input is already key-ordered — permute,
-    # and write the (seg, old local) → ABSOLUTE new id table for the
-    # re-encode/doc_meta phases. Files land in the tmp segment dir the
-    # same way build tasks write theirs (shared index storage contract).
-    seg_spec = pd.DataFrame({
-        "seg_id": np.asarray(seg_ids, np.int32),
-        "dir": [catalog.segment_dir(s) for s in seg_ids],
-        "base": np.asarray([doc_bases[s] for s in seg_ids], np.int64),
-    })
-    field = sort_info["field"] if sorting else None
-    s_asc = bool(sort_info["ascending"]) if sorting else True
-
-    def assemble(batches):
-        import pyarrow as pa_
-        import pyarrow.parquet as pq_
-        spec = pd.concat(list(batches), ignore_index=True) \
-            .sort_values("seg_id")
-        tombs = bc_tombs.value
-        norm_parts, gid_parts, key_parts = [], [], []
-        remap_rows = []
-        for row in spec.itertuples(index=False):
-            npdf = pd.read_parquet(os.path.join(row.dir, "norms.parquet"))
+    # and write each input's old id → new id table for phase 2. Files land
+    # in the tmp segment dir the same way build tasks write theirs (shared
+    # index storage contract). Retained soft deletes follow their docs to
+    # the new ids here, where the docMap is first known.
+    def assemble(_):
+        norm_parts, gid_parts, key_parts, live_ids = [], [], [], []
+        for s in seg_ids:
+            npdf = pd.read_parquet(os.path.join(seg_dirs[s],
+                                                "norms.parquet"))
             num = int(npdf.iloc[0]["num_docs"])
             live = np.ones(num, dtype=bool)
-            dead = tombs.get(int(row.seg_id))
+            dead = seg_deletes.get(s)
             if dead is not None:
                 live[dead[dead < num]] = False
             norm_parts.append(np.frombuffer(
@@ -259,119 +279,187 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                 npdf.iloc[0]["global_doc_ids"], dtype="<i8")[live])
             if field is not None:
                 kdf = pd.read_parquet(
-                    os.path.join(row.dir, "doc_meta.parquet"),
+                    os.path.join(seg_dirs[s], "doc_meta.parquet"),
                     columns=["local_doc_id", field]) \
                     .sort_values("local_doc_id")
                 key_parts.append(kdf[field].reset_index(drop=True)[live])
-                remap_rows.append((int(row.seg_id),
-                                   np.nonzero(live)[0].astype(np.int32)))
-        merged_norms = np.concatenate(norm_parts) if norm_parts \
-            else np.empty(0, np.uint8)
-        merged_gids = np.concatenate(gid_parts) if gid_parts \
-            else np.empty(0, "<i8")
+                live_ids.append(np.nonzero(live)[0])
+        merged_norms = np.concatenate(norm_parts)
+        merged_gids = np.concatenate(gid_parts)
+        table = None
         if field is not None:
-            keys_all = pd.concat(key_parts, ignore_index=True) \
-                if key_parts else pd.Series([], dtype="float64")
-            order = (pd.DataFrame({"k": keys_all, "g": merged_gids})
+            order = (pd.DataFrame({"k": pd.concat(key_parts,
+                                                  ignore_index=True),
+                                   "g": merged_gids})
                      .sort_values(["k", "g"], ascending=[s_asc, True],
                                   kind="mergesort").index.to_numpy())
             inv = np.empty(len(order), dtype=np.int64)
             inv[order] = np.arange(len(order), dtype=np.int64)
             merged_norms = merged_norms[order]
             merged_gids = merged_gids[order]
-            segs_col, olds_col, news_col = [], [], []
-            off = 0
-            for sid, old_ids in remap_rows:
-                cnt = len(old_ids)
-                segs_col.append(np.full(cnt, sid, np.int32))
-                olds_col.append(old_ids)
-                news_col.append(inv[off:off + cnt].astype(np.int32))
-                off += cnt
-            pq_.write_table(pa_.table({
-                "seg_id": np.concatenate(segs_col) if segs_col
-                else np.empty(0, np.int32),
-                "local_doc_id": np.concatenate(olds_col) if olds_col
-                else np.empty(0, np.int32),
-                "new_id": np.concatenate(news_col) if news_col
-                else np.empty(0, np.int32)}), remap_path)
-        pq_.write_table(pa_.table({
-            "seg_id": pa_.array([new_seg_id], pa_.int32()),
-            "num_docs": pa_.array([len(merged_norms)], pa_.int64()),
-            "norm_bytes": pa_.array([merged_norms.tobytes()],
-                                    pa_.binary()),
-            "global_doc_ids": pa_.array([merged_gids.tobytes()],
-                                        pa_.binary()),
+            table, off = {}, 0
+            for s, olds in zip(seg_ids, live_ids):
+                table[s] = np.full(seg_nums[s], -1, np.int64)
+                table[s][olds] = inv[off:off + len(olds)]
+                off += len(olds)
+            pq.write_table(pa.table({
+                "seg_id": pa.array(seg_ids, pa.int32()),
+                "new_ids": pa.array([table[s].tobytes() for s in seg_ids],
+                                    pa.binary())}), remap_path)
+        write_segment_file(pa.table({
+            "seg_id": pa.array([new_seg_id], pa.int32()),
+            "num_docs": pa.array([len(merged_norms)], pa.int64()),
+            "norm_bytes": pa.array([merged_norms.tobytes()],
+                                   pa.binary()),
+            "global_doc_ids": pa.array([merged_gids.tobytes()],
+                                       pa.binary()),
         }), norms_path)
-        yield pd.DataFrame({"n_docs": [len(merged_norms)]})
+        new_ids = _doc_map(doc_bases, seg_deletes, table)
+        soft = [new_ids(s, v) for s, v in sorted(retained.items())]
+        return pd.DataFrame({
+            "n_docs": [len(merged_norms)],
+            "soft": [np.concatenate(soft).astype("<i4").tobytes()
+                     if soft else b""]})
 
-    got = (spark.createDataFrame(seg_spec).repartition(1)
-           .mapInPandas(assemble, "n_docs long").collect())
-    if int(got[0]["n_docs"]) != n_docs:
+    got = fan_out(spark, [None], assemble,
+                  "n_docs long, soft binary").collect()[0]
+    if int(got["n_docs"]) != n_docs:
         raise RuntimeError(
-            f"norms assembly produced {got[0]['n_docs']} docs, "
+            f"norms assembly produced {got['n_docs']} docs, "
             f"stats+tombstones imply {n_docs}")
-
-    # retained soft deletes follow their docs to the new ids
     new_soft: pd.DataFrame | None = None
     if retained:
-        if sorting:
-            pairs = pd.DataFrame(
-                [(int(s), int(d)) for s, v in sorted(retained.items())
-                 for d in v], columns=["seg_id", "local_doc_id"])
-            hit = (spark.read.parquet(remap_path)
-                   .join(F.broadcast(spark.createDataFrame(pairs)),
-                         on=["seg_id", "local_doc_id"], how="leftsemi")
-                   .select("new_id").collect())
-            new_ids = np.asarray([r["new_id"] for r in hit], np.int32)
-        else:
-            # compacted id = old - (#purged tombstones below it) + base;
-            # retained docs are live, so never tombstoned themselves
-            parts = []
-            for s, v in sorted(retained.items()):
-                dead = seg_deletes.get(s, np.empty(0, np.int64))
-                parts.append(doc_bases[s] + v
-                             - np.searchsorted(dead, v, side="left"))
-            new_ids = np.concatenate(parts).astype(np.int32)
-        new_soft = pd.DataFrame({"seg_id": np.int32(new_seg_id),
-                                 "local_doc_id": new_ids})
+        new_soft = pd.DataFrame({
+            "seg_id": np.int32(new_seg_id),
+            "local_doc_id": np.frombuffer(got["soft"], "<i4")})
 
-    def reencode_partition(batches):
-        """One call per term-hash partition: decode every (term, segment)
-        row, concatenate per term in segment order with docBase offsets,
-        then re-encode ALL the partition's terms in one batched pass
-        (``encode_postings_batch``) — the per-term Python/Arrow overhead of
-        a term-keyed cogroup would dominate a merge otherwise."""
+    # Phase 2 — one fan-out over n term ranges and n merged-id ranges, one
+    # part file each: one per _PART_BYTES of input postings, at most P.
+    # Term cut points: the quantiles of the largest input's dictionary.
+    # This driver read is bounded by that one segment's `term` column; no
+    # sampling job runs. Every task's closure carries the merged segments'
+    # tombstones (8 bytes each, at most their num_docs), shipped once per
+    # task, 2n ≤ 2P times. Under an index sort a doc-id range's old ids
+    # scatter, so each doc-id item reads every input's doc_meta whole:
+    # doc_meta is read n times (once below _PART_BYTES).
+    P = spark.sparkContext.defaultParallelism
+    size = sum(int(stats_by_seg[s]["bytes_compressed"]) for s in seg_ids)
+    n = max(1, min(P, -(-size // _PART_BYTES)))
+    cuts = []
+    if n > 1:
+        largest = max(seg_ids,
+                      key=lambda s: (stats_by_seg[s]["num_terms"], s))
+        terms = np.sort(pq.read_table(
+            os.path.join(seg_dirs[largest], "postings.parquet"),
+            columns=["term"]).column("term").to_numpy(zero_copy_only=False))
+        cuts = sorted({terms[len(terms) * i // n] for i in range(1, n)}) \
+            if len(terms) else []
+    term_bounds = [None, *cuts, None]
+    doc_bounds = sorted({n_docs * i // n for i in range(n + 1)})
+    if len(doc_bounds) == 1:
+        doc_bounds *= 2          # an empty merge still writes doc_meta
+    items = [("postings", i, lo, hi)
+             for i, (lo, hi) in enumerate(zip(term_bounds, term_bounds[1:]))]
+    items += [("doc_meta", i, lo, hi)
+              for i, (lo, hi) in enumerate(zip(doc_bounds, doc_bounds[1:]))]
+    # interleave the kinds, so each task gets a share of both
+    items.sort(key=lambda it: (it[1], it[0] == "doc_meta"))
+    for name in ("postings", "doc_meta"):
+        os.makedirs(os.path.join(tmp, f"{name}.parquet"))
+    overlay_path = _overlay_path(catalog, snap)
+    out_schema = postings_schema(has_payloads)
+    task: dict = {}   # per task: each task unpickles its own copy
+
+    def docmap():
+        if "new_ids" not in task:
+            table = None
+            if field is not None:
+                rdf = pd.read_parquet(remap_path)
+                table = {int(s): np.frombuffer(b, "<i8")
+                         for s, b in zip(rdf["seg_id"], rdf["new_ids"])}
+            task["new_ids"] = _doc_map(doc_bases, seg_deletes, table)
+        return task["new_ids"]
+
+    def part_path(name, i):
+        return os.path.join(tmp, f"{name}.parquet", f"part-{i:05d}.parquet")
+
+    def rewrite(item):
+        kind, i, lo, hi = item
+        if kind == "postings":
+            out = reencode(lo, hi)
+            write_segment_file(pa.Table.from_pandas(
+                out, schema=out_schema, preserve_index=False),
+                part_path(kind, i))
+            return pd.DataFrame({
+                "num_terms": [len(out)],
+                "num_postings": [int(out["df"].sum())],
+                "sum_ttf": [int(out["ttf"].sum())],
+                "bytes": [int(sum(out[c].str.len().sum() for c in
+                                  ("doc_bytes", "tf_bytes", "pos_bytes",
+                                   "block_last", "impact_bytes")))],
+                "num_docs": [0], "sum_doc_len": [0]})
+        meta = remap_meta(lo, hi)
+        write_segment_file(meta, part_path(kind, i))
+        return pd.DataFrame({
+            "num_terms": [0], "num_postings": [0], "sum_ttf": [0],
+            "bytes": [0], "num_docs": [meta.num_rows],
+            "sum_doc_len": [int(meta.column("doc_len").to_numpy().sum())]})
+
+    def remap_meta(lo, hi):
+        """The doc_meta rows of merged ids [lo, hi), by new id: each
+        input's rows that land there, with the overlay baked in."""
+        new_ids = docmap()
+        if "overlay" not in task:
+            task["overlay"] = (pd.read_parquet(
+                overlay_path, filters=[("seg_id", "in", seg_ids)])
+                if overlay_path else None)
+        overlay = task["overlay"]
+        parts = []
+        for s in seg_ids:
+            filters = None   # sorted: a range's old ids scatter
+            if field is None:    # unsorted: they are contiguous
+                filters = [("local_doc_id", ">=", lo - doc_bases[s]),
+                           ("local_doc_id", "<",
+                            hi - doc_bases[s] + n_dead[s])]
+            meta = pq.read_table(
+                os.path.join(seg_dirs[s], "doc_meta.parquet"),
+                filters=filters)
+            new = new_ids(s, meta.column("local_doc_id").to_numpy())
+            keep = (new >= lo) & (new < hi)
+            meta = meta.filter(pa.array(keep))
+            if overlay is not None:
+                meta = _bake(meta, overlay[overlay["seg_id"] == s])
+            for name, col in (("seg_id", np.full(len(meta), new_seg_id)),
+                              ("local_doc_id", new[keep])):
+                meta = meta.set_column(
+                    meta.column_names.index(name),
+                    pa.field(name, pa.int32()), pa.array(col, pa.int32()))
+            parts.append(meta)
+        return pa.concat_tables(parts, promote_options="permissive") \
+            .sort_by("local_doc_id")
+
+    def reencode(lo, hi):
+        """One term range: decode every (term, segment) row, concatenate
+        per term in segment order at the merged ids, then re-encode ALL
+        the range's terms in one batched pass (``encode_postings_batch``)
+        — per-term Python/Arrow overhead would dominate a merge otherwise."""
         out_cols = POSTINGS_COLUMNS + (["pay_bytes"] if has_payloads
                                        else [])
-        batches = list(batches)
-        if not batches:
-            # repartition(col) can leave empty partitions when
-            # shuffle.partitions > distinct terms and AQE coalescing is off
-            yield pd.DataFrame(columns=out_cols)
-            return
-        pdf = pd.concat(batches, ignore_index=True)
+        filters = ([("term", ">=", lo)] if lo is not None else []) \
+            + ([("term", "<", hi)] if hi is not None else [])
+        pdf = pd.concat(
+            [pd.read_parquet(os.path.join(seg_dirs[s], "postings.parquet"),
+                             filters=filters or None) for s in seg_ids],
+            ignore_index=True)
         if len(pdf) == 0:
-            yield pd.DataFrame(columns=out_cols)
-            return
+            return pd.DataFrame(columns=out_cols)
         pdf = pdf.sort_values(["term", "seg_id"], kind="mergesort")
-        # merged norms read from the phase-1 file (worker-cached): a
-        # 50M-doc merge ships 50 MB once per executor instead of a
-        # driver-built broadcast; remaps rebuilt from the SPARSE
-        # tombstone broadcast (or the sort-remap table) on demand
-        norms = _merge_cached(
-            norms_path, lambda: np.frombuffer(
+        new_ids = docmap()
+        if "norms" not in task:
+            task["norms"] = np.frombuffer(
                 pd.read_parquet(norms_path).iloc[0]["norm_bytes"],
-                dtype=np.uint8))
-        if sorting:
-            rmaps = _merge_cached(
-                remap_path,
-                lambda: _remap_from_table(remap_path, seg_nums))
-        elif has_deletes:
-            rmaps = _merge_cached(
-                ("tombs", norms_path),
-                lambda: _remap_from_tombstones(bc_tombs.value, seg_nums))
-        else:
-            rmaps = None
+                dtype=np.uint8)
+        norms = task["norms"]
         ids_parts, tf_parts, pos_parts, pay_parts = [], [], [], []
         row_lens = np.empty(len(pdf), dtype=np.int64)
         tok_lens = np.empty(len(pdf), dtype=np.int64)
@@ -384,19 +472,18 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                 if store_positions else None
             pay = np.frombuffer(row.pay_bytes, dtype="<f4") \
                 if has_payloads else None
-            if rmaps is not None:
-                newids = rmaps[int(row.seg_id)][ids]
-                keep = newids >= 0
-                if not keep.all():
-                    tok_keep = np.repeat(keep, tfs)
-                    if store_positions:
-                        pos = pos[tok_keep]
-                    if pay is not None:
-                        pay = pay[tok_keep]
-                    ids, tfs = newids[keep], tfs[keep]
-                else:
-                    ids = newids
-            ids_parts.append(ids + bases[int(row.seg_id)])
+            newids = new_ids(int(row.seg_id), ids)
+            keep = newids >= 0
+            if not keep.all():
+                tok_keep = np.repeat(keep, tfs)
+                if store_positions:
+                    pos = pos[tok_keep]
+                if pay is not None:
+                    pay = pay[tok_keep]
+                ids, tfs = newids[keep], tfs[keep]
+            else:
+                ids = newids
+            ids_parts.append(ids)
             tf_parts.append(tfs)
             row_lens[i] = len(ids)
             tok_lens[i] = int(tfs.sum())
@@ -414,7 +501,7 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         new_term[0] = True
         new_term[1:] = term_of_row[1:] != term_of_row[:-1]
         term_ids = np.cumsum(new_term) - 1
-        if sorting and len(ids):
+        if field is not None and len(ids):
             # sorting merge: remapped ids follow the index sort key, so a
             # term's postings from different segments INTERLEAVE — restore
             # the strictly-ascending-per-term codec invariant with one
@@ -442,8 +529,7 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         alive = term_tot > 0
         term_off = np.concatenate(([0], np.cumsum(term_tot[alive])))
         if len(ids) == 0:
-            yield pd.DataFrame(columns=out_cols)
-            return
+            return pd.DataFrame(columns=out_cols)
         enc = encode_postings_batch(ids, tfs, pos, norms, term_off)
         if has_payloads:
             tok_tot = np.bincount(term_ids,
@@ -452,7 +538,7 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
             pay_bytes = [pay[tok_off[i]:tok_off[i + 1]]
                          .astype("<f4").tobytes()
                          for i in range(len(tok_off) - 1)]
-        yield pd.DataFrame({
+        return pd.DataFrame({
             "term": term_of_row[term_row_starts][alive],
             "seg_id": np.int32(new_seg_id),
             "df": enc["df"].astype(np.int64),
@@ -465,112 +551,23 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
             **({"pay_bytes": pay_bytes} if has_payloads else {}),
         }, columns=out_cols)
 
-    postings_schema = ("term string, seg_id int, df int, ttf long, "
-                       "doc_bytes binary, tf_bytes binary, pos_bytes binary, "
-                       "block_last binary, impact_bytes binary"
-                       + (", pay_bytes binary" if has_payloads else ""))
-    union = spark.read.parquet(
-        *[os.path.join(catalog.segment_dir(s), "postings.parquet") for s in seg_ids])
-    # RANGE partition by term (not hash): co-locates each term's ≤K
-    # per-segment rows like hash would, but partition index follows term
-    # order, so the multi-file parquet output reads back globally
-    # term-sorted (the BlockTree range-bucketed dictionary invariant that
-    # CheckIndex asserts and file-level min/max pruning relies on)
-    merged_postings = (union.repartitionByRange(F.col("term"))
-                       .mapInPandas(reencode_partition, postings_schema))
-    merged_postings.write.mode("overwrite").parquet(os.path.join(tmp, "postings.parquet"))
-
-    # doc_meta: remap seg_id/local_doc_id (deleted docs dropped via the
-    # inner join on the live remap table when tombstones exist)
-    metas = spark.read.parquet(
-        *[os.path.join(catalog.segment_dir(s), "doc_meta.parquet") for s in seg_ids])
-    # numeric DocValues updates BAKE at merge (SegmentMerger reads the
-    # updated reader view): overlay values overwrite the base columns
-    # before the remap, so the merged segment needs no overlay rows
-    from .docvalues import bake_updates
-    metas = bake_updates(spark, catalog, snap, metas, seg_ids)
-    if sorting:
-        # the phase-1 remap table carries the absolute sorted ids; a
-        # plain (non-broadcast) join keeps the 50M-row table off every
-        # executor's heap at once
-        remap_sdf = (spark.read.parquet(remap_path)
-                     .withColumnRenamed("new_id", "_new_id"))
-        remapped = (metas.join(remap_sdf,
-                               on=["seg_id", "local_doc_id"], how="inner")
-                    .withColumn("local_doc_id", F.col("_new_id"))
-                    .drop("_new_id")
-                    .withColumn("seg_id", F.lit(new_seg_id).cast("int")))
-    elif has_deletes:
-        # compacted id = base + old - (#tombstones below old), computed
-        # per Arrow batch from the sparse tombstone broadcast — no
-        # per-doc remap table anywhere
-        meta_schema = metas.schema
-
-        def remap_meta(batches):
-            tombs = bc_tombs.value
-            for mpdf in batches:
-                segs = mpdf["seg_id"].to_numpy()
-                olds = mpdf["local_doc_id"].to_numpy(np.int64)
-                keep = np.ones(len(mpdf), dtype=bool)
-                new = olds.copy()
-                for s in np.unique(segs):
-                    m = segs == s
-                    dead = tombs.get(int(s))
-                    off = bases[int(s)]
-                    if dead is None:
-                        new[m] = olds[m] + off
-                        continue
-                    keep[m] &= ~np.isin(olds[m], dead)
-                    new[m] = (olds[m] + off
-                              - np.searchsorted(dead, olds[m], "left"))
-                out = mpdf[keep].copy()
-                out["local_doc_id"] = new[keep].astype(np.int32)
-                out["seg_id"] = np.int32(new_seg_id)
-                yield out
-
-        remapped = metas.mapInPandas(remap_meta, meta_schema)
-    else:
-        base_map = F.create_map(*[F.lit(x) for kv in bases.items() for x in kv])
-        remapped = (metas
-                    .withColumn("local_doc_id",
-                                (base_map[F.col("seg_id")] + F.col("local_doc_id"))
-                                .cast("int"))
-                    .withColumn("seg_id", F.lit(new_seg_id).cast("int")))
-    # range-clustered multi-file write: a 50M-doc merge's doc_meta no
-    # longer funnels through one task (the old coalesce(1)); readers
-    # treat the directory exactly like the single-file layout
-    (remapped.repartitionByRange(F.col("local_doc_id"))
-     .sortWithinPartitions("local_doc_id")
-     .write.mode("overwrite").parquet(os.path.join(tmp, "doc_meta.parquet")))
-    if remap_path is not None:
+    parts = fan_out(spark, items, rewrite, _PART_STATS).toPandas().sum()
+    if field is not None:
         os.unlink(remap_path)   # phase-internal; not part of the segment
-
-    stats_pdf = spark.read.parquet(os.path.join(tmp, "postings.parquet")) \
-        .agg(F.count("*").alias("num_terms"), F.sum("df").alias("num_postings"),
-             F.sum("ttf").alias("sum_ttf"),
-             F.sum(F.octet_length("doc_bytes") + F.octet_length("tf_bytes")
-                   + F.octet_length("pos_bytes") + F.octet_length("block_last")
-                   + F.octet_length("impact_bytes")).alias("bytes")).collect()[0]
-    old = {s["seg_id"]: s for s in snap.segments}
-    old_sum_doc_len = int(sum(old[s]["sum_doc_len"] for s in seg_ids))
-    if has_deletes:
-        # exact post-purge length sum from the surviving doc_meta rows
-        new_sum_doc_len = int(
-            spark.read.parquet(os.path.join(tmp, "doc_meta.parquet"))
-            .agg(F.sum("doc_len")).collect()[0][0] or 0)
-    else:
-        new_sum_doc_len = old_sum_doc_len
+    if int(parts["num_docs"]) != n_docs:
+        raise RuntimeError(f"doc_meta rewrite wrote {parts['num_docs']} "
+                           f"docs, stats+tombstones imply {n_docs}")
     stats = {
         "seg_id": int(new_seg_id),
         "num_docs": int(n_docs),
-        "num_terms": int(stats_pdf["num_terms"] or 0),
-        "num_postings": int(stats_pdf["num_postings"] or 0),
-        "sum_doc_len": new_sum_doc_len,
+        "num_terms": int(parts["num_terms"]),
+        "num_postings": int(parts["num_postings"]),
+        "sum_doc_len": int(parts["sum_doc_len"]),
         # exact token count of the merged postings (Σ ttf) — the
         # sumTotalTermFreq basis; equals sum_doc_len unless index-time
         # synonym overlaps were discounted from norms
-        "sum_token_len": int(stats_pdf["sum_ttf"] or 0),
-        "bytes_compressed": int(stats_pdf["bytes"] or 0),
+        "sum_token_len": int(parts["sum_ttf"]),
+        "bytes_compressed": int(parts["bytes"]),
         "build_partition": -1,
         "origin": "merge",
         "merged_from": seg_ids,
@@ -836,6 +833,37 @@ def split_index(spark, src_dir: str, dest_dir: str,
     return dest.commit(kept, field_stats, ts_path, extra=extra)
 
 
+def _split_tombstoned(spark, src_dir: str, out: str, seg_ids: list[int],
+                      unwanted):
+    """Copy ``seg_ids`` of ``src_dir`` into ``out`` (:func:`split_index`)
+    and tombstone the doc_meta rows ``unwanted(doc_meta)`` selects, on top
+    of the tombstones the copy already carries; commit and return the
+    snapshot. The complement strategy the three splitters share: the rows
+    are computed and written by executors, so no doc id passes through the
+    driver."""
+    from pyspark.sql import functions as F
+
+    from .delete import write_tombstone_table
+    part = split_index(spark, src_dir, out, seg_ids)
+    cat = SnapshotCatalog(out)
+    meta = spark.read.parquet(
+        *[os.path.join(cat.segment_dir(sid), "doc_meta.parquet")
+          for sid in part.seg_ids])
+    pair = [F.col("seg_id").cast("int"), F.col("local_doc_id").cast("int")]
+    complement = unwanted(meta).select(*pair)
+    rel_prev = (part.extra or {}).get("deletes")
+    if rel_prev:   # an absolute path joins to itself
+        complement = complement.unionByName(
+            spark.read.parquet(os.path.join(out, rel_prev)).select(*pair))
+    rel, count = write_tombstone_table(spark, cat, part.snapshot_id + 1,
+                                       complement)
+    extra = dict(part.extra or {})
+    extra["deletes"] = rel
+    extra["num_deleted"] = count
+    return cat.commit(part.segments, part.field_stats,
+                      part.term_stats_path, extra=extra)
+
+
 def multi_pass_split(spark, src_dir: str, out_dirs: list[str]):
     """MultiPassIndexSplitter role (reference
     ``misc/src/java/org/apache/lucene/misc/index/
@@ -851,40 +879,16 @@ def multi_pass_split(spark, src_dir: str, out_dirs: list[str]):
     Returns the list of committed Snapshots."""
     from pyspark.sql import functions as F
 
-    from .delete import write_tombstone_table
-    src = SnapshotCatalog(src_dir)
-    snap = src.load()
+    snap = SnapshotCatalog(src_dir).load()
     if snap is None:
         raise ValueError(f"no snapshot in {src_dir}")
     n = len(out_dirs)
     if n < 2:
         raise ValueError("need at least 2 output dirs")
-    snaps = []
-    for i, out in enumerate(out_dirs):
-        part = split_index(spark, src_dir, out, snap.seg_ids)
-        cat = SnapshotCatalog(out)
-        reader_meta = spark.read.parquet(
-            *[os.path.join(cat.segment_dir(sid), "doc_meta.parquet")
-              for sid in part.seg_ids])
-        complement = (reader_meta
-                      .where(F.pmod(F.col("doc_id"), F.lit(n)) != i)
-                      .select(F.col("seg_id").cast("int"),
-                              F.col("local_doc_id").cast("int")))
-        rel_prev = (part.extra or {}).get("deletes")
-        if rel_prev:
-            prev = rel_prev if os.path.isabs(rel_prev)                 else os.path.join(out, rel_prev)
-            complement = complement.unionByName(
-                spark.read.parquet(prev)
-                .select(F.col("seg_id").cast("int"),
-                        F.col("local_doc_id").cast("int")))
-        gen = part.snapshot_id + 1
-        rel, count = write_tombstone_table(spark, cat, gen, complement)
-        extra = dict(part.extra or {})
-        extra["deletes"] = rel
-        extra["num_deleted"] = count
-        snaps.append(cat.commit(part.segments, part.field_stats,
-                                part.term_stats_path, extra=extra))
-    return snaps
+    return [_split_tombstoned(
+        spark, src_dir, out, snap.seg_ids,
+        lambda meta, i=i: meta.where(F.pmod(F.col("doc_id"), F.lit(n)) != i))
+        for i, out in enumerate(out_dirs)]
 
 
 def pk_split(spark, src_dir: str, out_match_dir: str, out_rest_dir: str,
@@ -902,44 +906,18 @@ def pk_split(spark, src_dir: str, out_match_dir: str, out_rest_dir: str,
     kernel over live docs) and each part's complement tombstones are a
     doc_meta scan anti/semi-joined against it — the driver never holds a
     doc id. Returns (matching_snapshot, rest_snapshot)."""
-    from pyspark.sql import functions as F
-
-    from .delete import write_tombstone_table
     from .search import Searcher
 
-    src = SnapshotCatalog(src_dir)
-    snap = src.load()
+    snap = SnapshotCatalog(src_dir).load()
     if snap is None:
         raise ValueError(f"no snapshot in {src_dir}")
     matches = (Searcher(spark, src_dir).score_all(query)
                .select("doc_id").distinct())
-    snaps = []
-    for out, how in ((out_match_dir, "left_anti"),
-                     (out_rest_dir, "left_semi")):
-        part = split_index(spark, src_dir, out, snap.seg_ids)
-        cat = SnapshotCatalog(out)
-        meta = spark.read.parquet(
-            *[os.path.join(cat.segment_dir(sid), "doc_meta.parquet")
-              for sid in part.seg_ids])
-        complement = (meta.join(matches, "doc_id", how)
-                      .select(F.col("seg_id").cast("int"),
-                              F.col("local_doc_id").cast("int")))
-        rel_prev = (part.extra or {}).get("deletes")
-        if rel_prev:
-            prev = (rel_prev if os.path.isabs(rel_prev)
-                    else os.path.join(out, rel_prev))
-            complement = complement.unionByName(
-                spark.read.parquet(prev)
-                .select(F.col("seg_id").cast("int"),
-                        F.col("local_doc_id").cast("int"))).distinct()
-        gen = part.snapshot_id + 1
-        rel, count = write_tombstone_table(spark, cat, gen, complement)
-        extra = dict(part.extra or {})
-        extra["deletes"] = rel
-        extra["num_deleted"] = count
-        snaps.append(cat.commit(part.segments, part.field_stats,
-                                part.term_stats_path, extra=extra))
-    return tuple(snaps)
+    return tuple(_split_tombstoned(
+        spark, src_dir, out, snap.seg_ids,
+        lambda meta, how=how: meta.join(matches, "doc_id", how))
+        for out, how in ((out_match_dir, "left_anti"),
+                         (out_rest_dir, "left_semi")))
 
 
 def rearrange_index(spark, src_dir: str, dest_dir: str, selectors):
@@ -963,50 +941,26 @@ def rearrange_index(spark, src_dir: str, dest_dir: str, selectors):
     are independent jobs."""
     import tempfile
 
-    from pyspark.sql import functions as F  # noqa: F401
-
     from .search import Searcher
 
-    src = SnapshotCatalog(src_dir)
-    snap = src.load()
+    snap = SnapshotCatalog(src_dir).load()
     if snap is None:
         raise ValueError(f"no snapshot in {src_dir}")
     dest = SnapshotCatalog(dest_dir)
     if dest.load() is not None:
         raise ValueError(f"{dest_dir} already holds an index")
-    from .delete import write_tombstone_table
     searcher = Searcher(spark, src_dir)
     parts = []
     for sel in selectors:
         out = tempfile.mkdtemp(prefix="lucene_spark_rearrange_")
         shutil.rmtree(out)
-        part = split_index(spark, src_dir, out, snap.seg_ids)
-        cat = SnapshotCatalog(out)
         if hasattr(sel, "columns"):          # DataFrame selector
             matches = sel.select("doc_id").distinct()
         else:                                # query-node selector
             matches = searcher.score_all(sel).select("doc_id").distinct()
-        meta = spark.read.parquet(
-            *[os.path.join(cat.segment_dir(sid), "doc_meta.parquet")
-              for sid in part.seg_ids])
-        complement = (meta.join(matches, "doc_id", "left_anti")
-                      .select(F.col("seg_id").cast("int"),
-                              F.col("local_doc_id").cast("int")))
-        rel_prev = (part.extra or {}).get("deletes")
-        if rel_prev:
-            prev = (rel_prev if os.path.isabs(rel_prev)
-                    else os.path.join(out, rel_prev))
-            complement = complement.unionByName(
-                spark.read.parquet(prev)
-                .select(F.col("seg_id").cast("int"),
-                        F.col("local_doc_id").cast("int"))).distinct()
-        gen = part.snapshot_id + 1
-        rel, count = write_tombstone_table(spark, cat, gen, complement)
-        extra = dict(part.extra or {})
-        extra["deletes"] = rel
-        extra["num_deleted"] = count
-        cat.commit(part.segments, part.field_stats,
-                   part.term_stats_path, extra=extra)
+        _split_tombstoned(spark, src_dir, out, snap.seg_ids,
+                          lambda meta: meta.join(matches, "doc_id",
+                                                 "left_anti"))
         force_merge(spark, out, max_segments=1, max_merged_docs=None)
         parts.append(out)
     first, rest = parts[0], parts[1:]
@@ -1032,7 +986,7 @@ def maintain(spark, index_dir: str, segs_per_tier: int = 10,
 
     ``max_concurrent > 1`` runs each planned round's merges as PARALLEL
     Spark jobs from scheduler threads — sound because one round's merges
-    cover disjoint segment sets, heavy work (decode/re-encode shuffles,
+    cover disjoint segment sets, heavy work (decode/re-encode fan-outs,
     segment-dir writes) is embarrassingly job-parallel, and commits
     serialize on a lock with a commit-time snapshot re-read (so each
     commit swaps its own inputs against the LATEST generation, whatever
@@ -1070,29 +1024,22 @@ def maintain(spark, index_dir: str, segs_per_tier: int = 10,
 def force_merge(spark, index_dir: str, max_segments: int = 1,
                 max_merged_docs: int | None = 50_000_000,
                 soft_retention: str | None = None):
-    """IndexWriter.forceMerge(n) analogue (IndexWriter.java:2105).
+    """IndexWriter.forceMerge(n) analogue (IndexWriter.java:2105): merge
+    the smallest segments, by :func:`plan_merges`' first batch, until at
+    most ``max_segments`` remain.
 
-    ``max_merged_docs`` caps the docs routed through any single merge op
-    (see plan_merges): forceMerge(1) over an unbounded index would
-    otherwise concatenate every segment's norms in one executor task's
-    heap (the Phase-1 assembly task in merge_segments). With the
-    cap, the index converges to the fewest segments the cap allows; pass
-    ``None`` for the reference's literal (and equally discouraged)
+    ``max_merged_docs`` caps the docs routed through any single merge
+    (see :func:`plan_merges`): forceMerge(1) over an unbounded index would
+    otherwise assemble every segment's norms in one executor task. With
+    the cap, the index converges to the fewest segments the cap allows;
+    pass ``None`` for the reference's literal (and equally discouraged)
     merge-everything behavior."""
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
+    snap = SnapshotCatalog(index_dir).load()
     while len(snap.seg_ids) > max_segments:
-        sizes = {s["seg_id"]: int(s["num_docs"]) for s in snap.segments}
-        batch, docs = [], 0
-        for sid in sorted(snap.seg_ids, key=lambda i: (sizes[i], i)):
-            if len(batch) >= 10:
-                break
-            if batch and max_merged_docs and docs + sizes[sid] > max_merged_docs:
-                break   # ascending order: every later segment is larger
-            batch.append(sid)
-            docs += sizes[sid]
-        if len(batch) < 2:
+        merges = plan_merges(snap.segments, max_segments, 10,
+                             max_merged_docs)
+        if not merges:
             break       # cannot shrink further under the cap
-        snap = merge_segments(spark, index_dir, batch,
+        snap = merge_segments(spark, index_dir, merges[0],
                               soft_retention=soft_retention)
     return snap

@@ -1534,6 +1534,31 @@ def local_frame(spark, pdf: pd.DataFrame, schema: str):
         pa.Table.from_pandas(pdf, preserve_index=False), schema)
 
 
+def ranked_top_k(spark, rows, key: str, ascending: bool, k: int):
+    """The first ``k`` of ``rows`` by (``key``, ``doc_id`` ascending) with
+    a 1-based ``rank int``, as a local frame. ``rows`` is an arrow table on
+    the driver, or a DataFrame whose ≤ k leading rows one job collects
+    (TakeOrderedAndProject). The driver orders and numbers them, the way
+    ``search`` merges its top k: no unpartitioned Window runs."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if not isinstance(rows, pa.Table):
+        # collect(), not toArrow(): only collect takes the ordered rows
+        # without a shuffle to one partition
+        schema = to_arrow_schema(rows.schema)
+        rows = pa.Table.from_pylist(
+            [r.asDict() for r in
+             rows.orderBy(F.asc(key) if ascending else F.desc(key),
+                          F.asc("doc_id")).limit(k).collect()], schema)
+    top = rows.sort_by(
+        [(key, "ascending" if ascending else "descending"),
+         ("doc_id", "ascending")],
+        null_placement="at_start" if ascending else "at_end").slice(0, k)
+    rank = np.arange(1, top.num_rows + 1, dtype=np.int32)
+    return spark.createDataFrame(top.append_column("rank", pa.array(rank)))
+
+
 def empty_frame(spark, schema: str):
     """A typed empty DataFrame that runs no Spark job."""
     return local_frame(spark, pd.DataFrame(columns=_columns(schema)), schema)
@@ -1650,6 +1675,28 @@ class Searcher:
         """Every doc's stored fields, docvalues and norms as one DataFrame
         (``seg_id, local_doc_id, doc_id, …``), built on first use."""
         return self._union_subs(self._doc_metas)
+
+    def term_vectors(self, doc_ids_df):
+        """The stored term vectors ``(doc_id, terms, starts, ends)`` of the
+        docs in ``doc_ids_df`` (a ``doc_id`` column), read from every
+        sub-index's sidecar with seg_id shifted like ``doc_meta``. The
+        newest segment's vector wins per doc: it is the live one across
+        updateDocument generations. Raises ``ValueError`` when an index
+        was built without ``store_term_vectors``."""
+        import os
+
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+        if not all((snap.extra or {}).get("term_vectors")
+                   for _, snap, _ in self._subs):
+            raise ValueError("index was built without store_term_vectors")
+        tvs = self._union_subs([
+            self.spark.read.parquet(os.path.join(cat.root, "term_vectors"))
+            for cat, _, _ in self._subs])
+        w = Window.partitionBy("doc_id").orderBy(F.col("seg_id").desc())
+        return (tvs.join(F.broadcast(doc_ids_df.select("doc_id")), "doc_id")
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn", "seg_id"))
 
     @cached_property
     def term_stats(self):
@@ -2047,7 +2094,6 @@ class Searcher:
         semi/anti-join on doc_id, and each MUST point adds its constant
         score — one double-precision sum, one float32 cast
         (ConjunctionScorer's score chain)."""
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         const = float(sum(np.float64(np.float32(p.boost))
@@ -2076,10 +2122,8 @@ class Searcher:
             base = base.filter(
                 (F.col("score") < s0)
                 | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
-        top = (base.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+        return ranked_top_k(self.spark, base.select("doc_id", "score"),
+                            "score", False, k)
 
     def search(self, query, k: int = 10, mode: str = "auto",
                after: tuple[float, int] | None = None):
@@ -2471,31 +2515,29 @@ class Searcher:
         (combined DESC, doc_id ASC) and truncate to ``topn``
         (``:113-137``).
 
-        Spark shape: the second query scores once over its own
-        pushed-filter postings scan (``score_all``); the ≤k first-pass
-        rows broadcast into a semi-join so only candidate docs survive
-        the kernel output, the combine is a k-row left join, and the
-        truncation is one TakeOrderedAndProject — no exchange beyond
-        the second query's per-segment kernel."""
-        from pyspark.sql import Window
+        Shape: the ≤k first-pass rows come to the driver, the second
+        query scores once over its own postings scan (``score_all``)
+        filtered to those doc ids, and the combine runs on the driver in
+        the same double-then-float arithmetic; :func:`ranked_top_k`
+        truncates and ranks. No exchange, no broadcast."""
+        import pyarrow as pa
         from pyspark.sql import functions as F
 
-        hits = first_pass.select("doc_id", F.col("score").alias("first_s"))
+        hits = first_pass.select("doc_id", "score").toPandas()
         second = (self.score_all(query)
-                  .withColumnRenamed("score", "second_s")
-                  .join(F.broadcast(hits.select("doc_id")), "doc_id",
-                        "left_semi"))
-        combined = hits.join(second, "doc_id", "left").select(
-            "doc_id",
-            F.when(F.col("second_s").isNotNull(),
-                   (F.col("first_s").cast("double")
-                    + F.lit(float(weight))
-                    * F.col("second_s").cast("double")).cast("float"))
-            .otherwise(F.col("first_s")).alias("score"))
-        top = (combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(topn)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+                  .where(F.col("doc_id").isin(
+                      [int(d) for d in hits["doc_id"]]))
+                  .withColumnRenamed("score", "second_s").toPandas())
+        both = hits.merge(second, on="doc_id", how="left")
+        first_s = both["score"].to_numpy(np.float32)
+        second_s = both["second_s"].to_numpy(np.float64)
+        both["score"] = np.where(
+            np.isnan(second_s), first_s,
+            (first_s.astype(np.float64) + float(weight) * second_s)
+            .astype(np.float32))
+        return ranked_top_k(self.spark, pa.Table.from_pandas(
+            both[["doc_id", "score"]], preserve_index=False),
+            "score", False, topn)
 
     def sorted_top_k(self, k: int = 10, ascending: bool | None = None):
         """Early-terminating top-k by the index sort field (reference
@@ -2542,14 +2584,8 @@ class Searcher:
                 cand.filter(F.col("local_doc_id") < cutoff))
         else:
             cand = cand.filter(F.col("local_doc_id") < k)
-        from pyspark.sql import Window
-        order = [F.asc(field) if ascending else F.desc(field),
-                 F.asc("doc_id")]
-        w = Window.orderBy(*order)
-        return (cand.orderBy(*order).limit(k)
-                .withColumn("rank", F.row_number().over(w))
-                .select("doc_id", field,
-                        F.col("rank").cast("int").alias("rank")))
+        return ranked_top_k(self.spark, cand.select("doc_id", field),
+                            field, ascending, k)
 
     def matching_docs(self, query, use_cache: bool = True):
         """DataFrame ``(doc_id long)`` of every match — constant-score

@@ -6,6 +6,10 @@ searchers' segments at once) fans out over segment ids with
 kernel needs a shuffle. A new entry point that hand-writes a postings ⋈
 norms cogroup, or a grouped map over a ``Searcher`` DataFrame, fails here;
 pass a kernel to ``map_segments`` or ``fan_out`` instead.
+
+A merge streams the term-sorted inputs the same way: its tasks read the
+segment files by term or doc-id range, so it needs neither a range shuffle
+nor a broadcast.
 """
 
 from __future__ import annotations
@@ -49,3 +53,10 @@ def test_search_has_no_grouped_map():
     sites = [s for s in _call_sites("applyInPandas")
              if s[0] == "operators/search.py"]
     assert sites == []
+
+
+def test_merge_has_no_shuffle_or_broadcast():
+    for attr in ("repartitionByRange", "broadcast"):
+        sites = [s for s in _call_sites(attr)
+                 if s[0] == "operators/merge.py"]
+        assert sites == [], attr

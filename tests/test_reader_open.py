@@ -169,3 +169,99 @@ def test_fan_out_item_carries_its_own_tombstones(spark, indexes,
     a_after, b_after = task_sizes()
     assert a_after == a_before
     assert b_after > b_before + 10_000 * 8
+
+
+def _window_top_k(spark, rows, key, ascending, k):
+    """The replaced top-k tail: orderBy().limit() ranked by an
+    unpartitioned Window."""
+    import pyarrow as pa
+    from pyspark.sql import Window
+    if isinstance(rows, pa.Table):
+        rows = spark.createDataFrame(rows)
+    order = [F.asc(key) if ascending else F.desc(key), F.asc("doc_id")]
+    return (rows.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
+
+
+def _stages(spark, jobs) -> int:
+    tracker = spark.sparkContext.statusTracker()
+    return sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+
+def test_top_k_tails_rank_on_the_driver(spark, indexes, monkeypatch):
+    """rescore, point-range search and sorted_top_k collect their ≤ k rows
+    and number the ranks on the driver: the same rows, types and float32
+    bits as the Window tail, in fewer Spark stages, and for rescore
+    (which combines on the driver too) fewer jobs."""
+    s = Searcher(spark, indexes[0])
+    ms = MultiSearcher(spark, indexes[:2])
+    first = s.search(Q.Term("parse"), k=20)
+    calls = {
+        "rescore": lambda: s.rescore(first, Q.Term("scan"), 2.0, topn=10),
+        "points": lambda: s.search(
+            Q.And((Q.Term("parse"), Q.PointRange(FIELD, 3, 7))), k=10),
+        "sorted": lambda: s.sorted_top_k(7),
+        "sorted_multi": lambda: ms.sorted_top_k(7),
+    }
+
+    def run(call):
+        df = call()
+        return df.dtypes, [tuple(r) for r in df.collect()]
+
+    for name, call in calls.items():
+        run(call)   # warm: the first doc_meta read infers its schema
+        new, new_jobs = _jobs(spark, f"topk-new-{name}", lambda: run(call))
+        with monkeypatch.context() as m:
+            m.setattr(search_mod, "ranked_top_k", _window_top_k)
+            old, old_jobs = _jobs(spark, f"topk-old-{name}",
+                                  lambda: run(call))
+        assert new[1] and new == old, name
+        assert len(new_jobs) <= len(old_jobs), name
+        assert _stages(spark, new_jobs) < _stages(spark, old_jobs), name
+        if name == "rescore":
+            assert len(new_jobs) < len(old_jobs)
+
+
+@pytest.fixture(scope="module")
+def tv_indexes(spark, corpora):
+    dirs = []
+    for pdf in corpora:
+        d = tempfile.mkdtemp(prefix="lucene_spark_tv_")
+        build_index(spark, spark.createDataFrame(pdf), d, num_segments=2,
+                    store_term_vectors=True)
+        dirs.append(d)
+    return dirs
+
+
+def test_multi_searcher_term_vectors(spark, corpora, tv_indexes):
+    """highlight_tv and the term-vector doc vectors read every
+    sub-index's sidecar: over a two-index MultiSearcher they equal the
+    per-index results."""
+    import pandas as pd
+
+    from lucene_spark.operators.classify import doc_to_double_vectors
+    from lucene_spark.operators.highlight import highlight_tv
+    subs = [Searcher(spark, d) for d in tv_indexes]
+    ms = MultiSearcher(spark, tv_indexes)
+    docs = spark.createDataFrame(
+        pd.concat(corpora)[["doc_id", "content"]]
+        .rename(columns={"content": "text"}))
+
+    def snippets(reader):
+        return {r["doc_id"]: r["snippet"] for r in
+                highlight_tv(reader, docs, "parse OR scan", k=1000)
+                .collect()}
+
+    got = snippets(ms)
+    assert got and got == {d: snip for sub in subs
+                           for d, snip in snippets(sub).items()}
+
+    ids = docs.select("doc_id").where(F.col("doc_id") % 5 == 0)
+
+    def vectors(reader):
+        return {r["doc_id"]: (list(r["terms"]), list(r["vector"]))
+                for r in doc_to_double_vectors(reader, ids).collect()}
+
+    got = vectors(ms)
+    assert {d // 10_000 for d in got} == {0, 1}
+    assert got == {**vectors(subs[0]), **vectors(subs[1])}
