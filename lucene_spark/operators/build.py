@@ -765,8 +765,8 @@ def build_index(spark, df, index_dir: str, *,
         # and docvalues updates that addressed its old docs
         from .delete import carry_tombstones
         from .docvalues import carry_updates
-        carry_tombstones(spark, catalog, latest, extra, rebuilt, next_id)
-        carry_tombstones(spark, catalog, latest, extra, rebuilt, next_id,
+        carry_tombstones(catalog, latest, extra, rebuilt, next_id, segments)
+        carry_tombstones(catalog, latest, extra, rebuilt, next_id, segments,
                          key="soft_deletes")
         carry_updates(spark, catalog, latest, extra, rebuilt, next_id)
     extra.update({"num_segments": num_segments,

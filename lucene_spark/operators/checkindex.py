@@ -178,22 +178,24 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
     _check(totals["sum_ttf"]
            == int(snap.field_stats["sum_total_term_freq"]), -1,
            "field_stats sum_total_term_freq != total indexed tokens")
-    deletes = load_deletes(catalog, snap)
-    for s, ids in deletes.items():
-        _check(s in lineage, s, "tombstones for unknown segment")
-        _check(np.all((ids >= 0) & (ids < lineage[s]["num_docs"])), s,
-               "tombstone local id out of range")
-    # raw tombstone TABLE invariants (load_deletes dedupes, so dupes and
-    # count drift are only visible on the store itself): no duplicate
-    # (seg, doc) rows, and the snapshot's num_deleted matches the table
-    rel = (snap.extra or {}).get("deletes")
-    if rel:
-        path = rel if os.path.isabs(rel) else os.path.join(index_dir, rel)
-        raw = pd.read_parquet(path)
-        _check(int(raw.duplicated(["seg_id", "local_doc_id"]).sum()) == 0,
-               -1, "duplicate tombstone rows")
-        _check(int(snap.extra.get("num_deleted", -1)) == len(raw), -1,
-               "extra.num_deleted != tombstone table rows")
-    totals["num_deleted"] = int(sum(len(v) for v in deletes.values()))
+    # hard and soft tombstones: known segments, ids in range, and (on the
+    # raw table, since load_deletes dedupes) no duplicate rows and a
+    # count that matches the snapshot's
+    for key, count_key in (("deletes", "num_deleted"),
+                           ("soft_deletes", "num_soft_deleted")):
+        deletes = load_deletes(catalog, snap, key=key)
+        for s, ids in deletes.items():
+            _check(s in lineage, s, f"{key} for unknown segment")
+            _check(np.all((ids >= 0) & (ids < lineage[s]["num_docs"])), s,
+                   f"{key} local id out of range")
+        rel = (snap.extra or {}).get(key)
+        if rel:
+            path = rel if os.path.isabs(rel) else os.path.join(index_dir, rel)
+            raw = pd.read_parquet(path)
+            _check(int(raw.duplicated(["seg_id", "local_doc_id"]).sum())
+                   == 0, -1, f"duplicate {key} rows")
+            _check(int(snap.extra.get(count_key, -1)) == len(raw), -1,
+                   f"extra.{count_key} != {key} table rows")
+        totals[count_key] = int(sum(len(v) for v in deletes.values()))
     totals["snapshot_id"] = snap.snapshot_id
     return totals

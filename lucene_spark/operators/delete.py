@@ -1,4 +1,4 @@
-"""Delete-by-term with live-docs semantics.
+"""Deletes and soft deletes with live-docs semantics.
 
 Reference: ``IndexWriter.deleteDocuments(Term)`` buffers term deletes
 (``index/BufferedUpdates.java``), which become a per-segment live-docs
@@ -6,26 +6,27 @@ bitset (the ``.liv`` file); searches skip deleted docs at collection time
 while postings and collection statistics stay untouched until a merge
 physically purges them (``index/FreqProxTermsWriter.java:53-80`` applies
 deletes at flush; ``SegmentMerger`` drops them). We reproduce exactly
-that: ``delete_by_term`` writes a tombstone table + new snapshot, the
-Searcher masks tombstoned docs after scoring, stats remain stale until
-``merge_segments`` compacts them away.
+that: a delete commits a snapshot generation with a new tombstone file,
+the Searcher masks tombstoned docs after scoring, and stats remain stale
+until ``merge_segments`` compacts them away.
 
-Tombstones live in a parquet table ``(seg_id int, local_doc_id int)``
-per snapshot generation, referenced from ``Snapshot.extra["deletes"]``
-(relative path — index dirs stay relocatable): a single driver-written
-file for the bounded ``delete_by_ids`` path, an executor-written parquet
-DIRECTORY for the unbounded ``delete_by_term`` path (decoded, deduped
-and written entirely on executors — the driver never materializes a
-tombstone row). At 100 TB the tombstone table stays tiny relative to the
-corpus (deletes ≤ 33% triggers merges in the reference's
-TieredMergePolicy); readers slice it per segment with parquet predicate
-pushdown.
+Each generation's hard and its soft tombstones are one parquet file each,
+``(seg_id int, local_doc_id int)``, sorted and unique, referenced from
+``Snapshot.extra["deletes"]`` / ``["soft_deletes"]`` (relative paths —
+index dirs stay relocatable). They live on the driver, as a reader's live
+docs do: a ``Searcher`` loads every tombstone at open, the way Lucene's
+reader loads each segment's ``.liv`` whole. So every change here is
+:func:`load_deletes` → numpy set operations → :func:`write_tombstones`,
+the one writer, which refuses an id outside its segment. The driver holds
+at write time exactly what every reader holds at open: the snapshot's
+tombstones, 8 bytes each, at most one per doc of the corpus. Only finding
+the docs of a term runs on Spark, as one shuffle-free fan-out
+(:func:`_docs_with_term`).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 import numpy as np
@@ -34,17 +35,24 @@ import pandas as pd
 from ..functions.codec import decode_postings
 from ..sources.catalog import SnapshotCatalog
 
+_COUNT_KEYS = {"deletes": "num_deleted", "soft_deletes": "num_soft_deleted"}
+
+
+def ids_by_segment(pdf: pd.DataFrame) -> dict[int, np.ndarray]:
+    """{seg_id: sorted unique local_doc_ids} of a ``(seg_id,
+    local_doc_id)`` frame."""
+    return {int(s): np.unique(g["local_doc_id"].to_numpy(np.int64))
+            for s, g in pdf.groupby("seg_id")}
+
 
 def load_deletes(catalog: SnapshotCatalog, snap,
                  seg_ids=None, key: str = "deletes") -> dict[int, np.ndarray]:
     """{seg_id: sorted unique local_doc_ids} for a snapshot ({} if none).
 
-    The tombstone store is a parquet file (driver-written, delete_by_ids
-    path) or a parquet DIRECTORY (executor-written, delete_by_term path)
-    — pyarrow reads both. ``seg_ids`` restricts the read to those
-    segments via parquet predicate pushdown, so a caller that only needs
-    a few segments' tombstones (a merge) never materializes the full
-    table. ``key`` selects the tombstone class: ``"deletes"`` (hard) or
+    The tombstones are a parquet file, or a parquet directory as older
+    generations wrote them; pandas reads both. ``seg_ids`` restricts the
+    read to those segments via parquet predicate pushdown. ``key``
+    selects the tombstone class: ``"deletes"`` (hard) or
     ``"soft_deletes"``."""
     rel = (snap.extra or {}).get(key)
     if not rel:
@@ -52,25 +60,44 @@ def load_deletes(catalog: SnapshotCatalog, snap,
     path = rel if os.path.isabs(rel) else os.path.join(catalog.root, rel)
     filters = ([("seg_id", "in", [int(s) for s in seg_ids])]
                if seg_ids is not None else None)
-    pdf = pd.read_parquet(path, filters=filters)
-    return {int(s): np.unique(g["local_doc_id"].to_numpy(np.int64))
-            for s, g in pdf.groupby("seg_id")}
+    return ids_by_segment(pd.read_parquet(path, filters=filters))
 
 
-def write_tombstone_file(catalog: SnapshotCatalog, gen: int,
-                         deletes: dict[int, np.ndarray]) -> tuple[str, int]:
-    """Atomically write the tombstone parquet; returns (relpath, count)."""
+def write_tombstones(catalog: SnapshotCatalog, segments: list[dict],
+                     gen: int, deletes: dict, extra: dict,
+                     key: str = "deletes") -> None:
+    """The one tombstone writer: ``deletes`` ({seg_id: local ids}) become
+    generation ``gen``'s ``key`` file, sorted and unique, written
+    atomically, and ``extra`` points at it with its count (an empty set
+    drops ``key`` and counts 0). ``segments`` are the segments the
+    generation commits: a segment not among them, or an id outside
+    ``[0, num_docs)``, raises ``ValueError``, since ``_live_mask`` would
+    otherwise hide another doc or count a doc that is not there."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    num_docs = {int(s["seg_id"]): int(s["num_docs"]) for s in segments}
+    sets = {}
+    for s, ids in deletes.items():
+        s, ids = int(s), np.unique(np.asarray(ids, np.int64))
+        if not len(ids):
+            continue
+        if s not in num_docs:
+            raise ValueError(f"tombstones for segment {s}, which is not "
+                             f"in the snapshot")
+        if ids[0] < 0 or ids[-1] >= num_docs[s]:
+            raise ValueError(f"segment {s}: tombstone ids must lie in "
+                             f"[0, {num_docs[s]})")
+        sets[s] = ids
+    if not sets:
+        extra.pop(key, None)
+        extra[_COUNT_KEYS[key]] = 0
+        return
+    order = sorted(sets)
+    segs = np.concatenate([np.full(len(sets[s]), s, np.int32) for s in order])
+    locs = np.concatenate([sets[s] for s in order]).astype(np.int32)
     del_dir = os.path.join(catalog.root, "deletes")
     os.makedirs(del_dir, exist_ok=True)
-    segs = np.concatenate([np.full(len(v), s, dtype=np.int32)
-                           for s, v in sorted(deletes.items())]) \
-        if deletes else np.empty(0, np.int32)
-    locs = np.concatenate([v.astype(np.int32)
-                           for _, v in sorted(deletes.items())]) \
-        if deletes else np.empty(0, np.int32)
     tmp = os.path.join(del_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
     pq.write_table(pa.table({"seg_id": pa.array(segs, pa.int32()),
                              "local_doc_id": pa.array(locs, pa.int32())}),
@@ -78,194 +105,138 @@ def write_tombstone_file(catalog: SnapshotCatalog, gen: int,
     final = os.path.join(del_dir,
                          f"gen-{gen}-{uuid.uuid4().hex[:8]}.parquet")
     os.rename(tmp, final)
-    return os.path.relpath(final, catalog.root), int(len(locs))
+    extra[key] = os.path.relpath(final, catalog.root)
+    extra[_COUNT_KEYS[key]] = int(len(locs))
 
 
-def _write_deletes(catalog: SnapshotCatalog, snap,
-                   deletes: dict[int, np.ndarray],
-                   key: str = "deletes") -> "object":
-    """Write the tombstone parquet + commit a snapshot that carries it
-    (segments/stats unchanged — the delete is metadata-only, like a
-    ``segments_N`` generation that only swaps .liv files)."""
-    rel, count = write_tombstone_file(catalog, snap.snapshot_id + 1, deletes)
+def _union(deletes: dict, more: dict) -> dict:
+    out = dict(deletes)
+    for s, ids in more.items():
+        out[int(s)] = np.concatenate((out.get(int(s), np.empty(0, np.int64)),
+                                      np.asarray(ids, np.int64)))
+    return out
+
+
+def carry_tombstones(catalog: SnapshotCatalog, snap, extra: dict,
+                     drop_seg_ids, next_gen: int, segments: list[dict],
+                     key: str = "deletes", add: dict | None = None) -> None:
+    """Carry ``snap``'s ``key`` tombstones into generation ``next_gen``,
+    whose segments are ``segments``, without the rows of ``drop_seg_ids``
+    and with ``add``'s ({seg_id: ids}); mutates ``extra`` in place."""
+    if not (snap.extra or {}).get(key) and not add:
+        return
+    drop = {int(s) for s in drop_seg_ids}
+    kept = {s: v for s, v in load_deletes(catalog, snap, key=key).items()
+            if s not in drop}
+    write_tombstones(catalog, segments, next_gen, _union(kept, add or {}),
+                     extra, key)
+
+
+def _commit_tombstones(index_dir: str, key: str, edit):
+    """Commit the next generation with ``key``'s tombstones replaced by
+    ``edit(catalog, snap, tombstones)``; segments and stats are unchanged,
+    like a ``segments_N`` that only swaps .liv files. Returns the new
+    Snapshot."""
+    catalog = SnapshotCatalog(index_dir)
+    snap = catalog.load()
+    if snap is None:
+        raise ValueError(f"no snapshot in {index_dir}")
     extra = dict(snap.extra or {})
-    extra[key] = rel
-    extra["num_deleted" if key == "deletes" else "num_soft_deleted"] = count
+    write_tombstones(catalog, snap.segments, snap.snapshot_id + 1,
+                     edit(catalog, snap, load_deletes(catalog, snap,
+                                                      key=key)),
+                     extra, key)
     return catalog.commit(snap.segments, snap.field_stats,
                           snap.term_stats_path, extra=extra)
 
 
-def write_tombstone_table(spark, catalog: SnapshotCatalog, gen: int,
-                          deletes_df) -> tuple[str, int]:
-    """Write a (seg_id, local_doc_id) DataFrame as the snapshot's
-    tombstone table — a parquet DIRECTORY written by executors (tasks
-    write their own files; the directory renames into place atomically),
-    so no tombstone row ever routes through the driver. Rows are
-    deduplicated (one shuffle on the tiny tombstone keys) and
-    range-clustered by segment so a reader's per-segment slice is a
-    contiguous row-group scan. Returns (relpath, row count)."""
-    from pyspark.sql import functions as F
+def _docs_with_term(spark, catalog: SnapshotCatalog, snap, term: str):
+    """``(seg_id int, local_doc_id int)`` of every doc of ``snap`` whose
+    postings hold ``term``, tombstoned or not: one shuffle-free
+    :func:`~.search.fan_out` over the segments, each task reading its own
+    ``postings.parquet`` with a pushed ``term ==`` filter (at most one
+    row) and decoding the doc ids."""
+    import pyarrow.parquet as pq
 
-    del_dir = os.path.join(catalog.root, "deletes")
-    os.makedirs(del_dir, exist_ok=True)
-    tmp = os.path.join(del_dir, f"_tmp-{uuid.uuid4().hex}")
-    final = os.path.join(del_dir, f"gen-{gen}-{uuid.uuid4().hex[:8]}")
-    (deletes_df
-     .select(F.col("seg_id").cast("int"),
-             F.col("local_doc_id").cast("int"))
-     .dropDuplicates(["seg_id", "local_doc_id"])
-     .repartitionByRange(F.col("seg_id"), F.col("local_doc_id"))
-     .sortWithinPartitions("seg_id", "local_doc_id")
-     .write.mode("overwrite").parquet(tmp))
-    count = int(spark.read.parquet(tmp).count())
-    os.rename(tmp, final)
-    return os.path.relpath(final, catalog.root), count
+    from ..session import ensure_shipped
+    from .search import fan_out
+    ensure_shipped(spark)
+
+    def hits(item):
+        seg_id, path = item
+        rows = pq.read_table(path, columns=["df", "doc_bytes", "tf_bytes"],
+                             filters=[("term", "==", term)]).to_pylist()
+        if not rows:
+            return None
+        ids = decode_postings(rows[0])["doc_ids"]
+        return pd.DataFrame({"seg_id": np.full(len(ids), seg_id, np.int32),
+                             "local_doc_id": ids.astype(np.int32)})
+
+    return fan_out(spark, [(int(s), os.path.join(catalog.segment_dir(s),
+                                                 "postings.parquet"))
+                           for s in snap.seg_ids],
+                   hits, "seg_id int, local_doc_id int")
 
 
-def carry_tombstones(spark, catalog: SnapshotCatalog, snap, extra: dict,
-                     drop_seg_ids: list[int], next_gen: int,
-                     key: str = "deletes", add_df=None) -> None:
-    """Carry ``snap``'s tombstone table ``key`` into the next generation
-    without the rows of ``drop_seg_ids`` and with ``add_df``'s rows
-    (mutates ``extra`` in place) — filtered and rewritten on executors,
-    so the driver never holds the delete set."""
-    from pyspark.sql import functions as F
-
-    parts = []
-    rel_prev = (snap.extra or {}).get(key)
-    if rel_prev:
-        prev_path = rel_prev if os.path.isabs(rel_prev) \
-            else os.path.join(catalog.root, rel_prev)
-        parts.append(spark.read.parquet(prev_path)
-                     .filter(~F.col("seg_id")
-                             .isin([int(s) for s in drop_seg_ids])))
-    if add_df is not None:
-        parts.append(add_df)
-    if not parts:
-        return
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    rel, count = write_tombstone_table(spark, catalog, next_gen, df)
-    count_key = "num_deleted" if key == "deletes" else "num_soft_deleted"
-    if count:
-        extra[key] = rel
-        extra[count_key] = count
-    else:
-        shutil.rmtree(os.path.join(catalog.root, rel), ignore_errors=True)
-        extra.pop(key, None)
-        extra[count_key] = 0
+def _add_term(spark, term: str):
+    """An edit for :func:`_commit_tombstones` that adds ``term``'s docs.
+    One job collects them: at most the snapshot's doc count, the bound a
+    ``Searcher`` open already holds."""
+    def edit(catalog, snap, tombstones):
+        hits = _docs_with_term(spark, catalog, snap, term).toPandas()
+        return _union(tombstones, ids_by_segment(hits))
+    return edit
 
 
 def delete_by_term(spark, index_dir: str, term: str):
     """Mark every document containing ``term`` as deleted; returns the new
-    Snapshot. Fully distributed: the postings scan is filtered to the
-    single term (predicate pushdown — at most one row per segment),
-    DECODED ON EXECUTORS (``mapInPandas``), unioned with the previous
-    generation's tombstone table, deduplicated, and written back as the
-    next tombstone table by the same executors
-    (:func:`write_tombstone_table`) — the driver never materializes a
-    single (seg, doc) pair, so deleting by a common term over a
-    10^12-doc index stays a bounded-memory operation everywhere.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
-    if snap is None:
-        raise ValueError(f"no snapshot in {index_dir}")
-    paths = [os.path.join(catalog.segment_dir(s), "postings.parquet")
-             for s in snap.seg_ids]
-
-    def decode_ids(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                dec = decode_postings(row._asdict(), with_positions=False)
-                yield pd.DataFrame({
-                    "seg_id": np.full(len(dec["doc_ids"]), row.seg_id,
-                                      dtype=np.int32),
-                    "local_doc_id": dec["doc_ids"].astype(np.int32)})
-
-    hits = (spark.read.parquet(*paths)
-            .filter(F.col("term") == term)
-            .mapInPandas(decode_ids, "seg_id int, local_doc_id int"))
-    rel_prev = (snap.extra or {}).get("deletes")
-    if rel_prev:
-        prev_path = rel_prev if os.path.isabs(rel_prev) \
-            else os.path.join(catalog.root, rel_prev)
-        hits = hits.unionByName(
-            spark.read.parquet(prev_path)
-            .select(F.col("seg_id").cast("int"),
-                    F.col("local_doc_id").cast("int")))
-    gen = snap.snapshot_id + 1
-    rel, count = write_tombstone_table(spark, catalog, gen, hits)
-    extra = dict(snap.extra or {})
-    extra["deletes"] = rel
-    extra["num_deleted"] = count
-    return catalog.commit(snap.segments, snap.field_stats,
-                          snap.term_stats_path, extra=extra)
+    Snapshot. One Spark job finds and collects the docs
+    (:func:`_docs_with_term`); they join the tombstones as
+    :func:`delete_by_ids` adds explicit ids."""
+    return _commit_tombstones(index_dir, "deletes", _add_term(spark, term))
 
 
 def delete_by_ids(spark, index_dir: str,
                   doc_ids: dict[int, np.ndarray]):
-    """Tombstone explicit (seg_id → local ids); returns the new Snapshot."""
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
-    if snap is None:
-        raise ValueError(f"no snapshot in {index_dir}")
-    deletes = load_deletes(catalog, snap)
-    for s, ids in doc_ids.items():
-        prev = deletes.get(int(s), np.empty(0, np.int64))
-        deletes[int(s)] = np.unique(
-            np.concatenate((prev, np.asarray(ids, np.int64))))
-    return _write_deletes(catalog, snap, deletes)
+    """Tombstone explicit (seg_id → local ids); returns the new Snapshot.
+    Runs no Spark job. An id outside its segment raises ``ValueError``."""
+    return _commit_tombstones(index_dir, "deletes",
+                              lambda c, s, t: _union(t, doc_ids))
 
 
 def locate_global_ids(catalog: SnapshotCatalog, snap,
                       global_ids, spark=None) -> dict[int, np.ndarray]:
     """Map global doc_ids → {seg_id: local ids}.
 
-    With a SparkSession, every segment's global_doc_ids array is probed
-    ON EXECUTORS (one norms row per segment, the wanted-id set shipped in
-    the closure) and only the hits return — the driver never reads a
-    segment blob, so the lookup scales to any segment count. Without
-    Spark (tiny-index/test convenience) it falls back to a driver-side
-    scan."""
+    Each segment's ``norms.parquet`` row holds its global_doc_ids array;
+    a probe reads it and returns the local ids of the wanted ids. With a
+    SparkSession the probes fan out over the segments
+    (:func:`~.search.fan_out`) and only the hits return, so the driver
+    never reads a segment blob; without one (tiny-index/test convenience)
+    the driver runs them."""
+    import pyarrow.parquet as pq
+
     want = np.unique(np.asarray(list(global_ids), dtype=np.int64))
-    out: dict[int, np.ndarray] = {}
-    paths = [os.path.join(catalog.segment_dir(s), "norms.parquet")
+
+    def probe(item):
+        seg_id, path = item
+        blob = pq.read_table(path, columns=["global_doc_ids"]).column(0)[0]
+        hit = np.nonzero(np.isin(np.frombuffer(blob.as_py(), "<i8"),
+                                 want))[0]
+        return pd.DataFrame({"seg_id": np.full(len(hit), seg_id, np.int32),
+                             "local_doc_id": hit.astype(np.int32)})
+
+    items = [(int(s), os.path.join(catalog.segment_dir(s), "norms.parquet"))
              for s in snap.seg_ids]
-    if spark is not None and paths:
-        import pandas as pd_
-
-        def probe(batches):
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    gids = np.frombuffer(row.global_doc_ids, dtype="<i8")
-                    hit = np.nonzero(np.isin(gids, want))[0]
-                    if len(hit):
-                        yield pd_.DataFrame({
-                            "seg_id": np.full(len(hit), row.seg_id,
-                                              dtype=np.int32),
-                            "local_doc_id": hit.astype(np.int64)})
-
-        rows = (spark.read.parquet(*paths)
-                .select("seg_id", "global_doc_ids")
-                .mapInPandas(probe, "seg_id int, local_doc_id long")
-                .collect())
-        for r in rows:
-            out.setdefault(int(r["seg_id"]), []).append(
-                int(r["local_doc_id"]))
-        return {s: np.unique(np.asarray(v, np.int64))
-                for s, v in out.items()}
-    for s in snap.seg_ids:
-        npdf = pd.read_parquet(
-            os.path.join(catalog.segment_dir(s), "norms.parquet"))
-        gids = np.frombuffer(npdf.iloc[0]["global_doc_ids"], dtype="<i8")
-        hit = np.nonzero(np.isin(gids, want))[0]
-        if len(hit):
-            out[int(s)] = hit.astype(np.int64)
-    return out
+    if not items:
+        return {}
+    if spark is None:
+        return ids_by_segment(pd.concat([probe(it) for it in items]))
+    from ..session import ensure_shipped
+    from .search import fan_out
+    ensure_shipped(spark)
+    return ids_by_segment(fan_out(spark, items, probe,
+                                  "seg_id int, local_doc_id int").toPandas())
 
 
 def soft_delete_by_ids(spark, index_dir: str,
@@ -281,61 +252,18 @@ def soft_delete_by_ids(spark, index_dir: str,
     :func:`lucene_spark.operators.merge.merge_segments` purges them
     unless its ``soft_retention`` predicate keeps them (the
     ``SoftDeletesRetentionMergePolicy.java:51`` role). Here the DV field
-    is a second tombstone table (``extra["soft_deletes"]``), which is the
+    is a second tombstone file (``extra["soft_deletes"]``), which is the
     same reader-visible state the reference derives from the DV field."""
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
-    if snap is None:
-        raise ValueError(f"no snapshot in {index_dir}")
-    deletes = load_deletes(catalog, snap, key="soft_deletes")
-    for s, ids in doc_ids.items():
-        prev = deletes.get(int(s), np.empty(0, np.int64))
-        deletes[int(s)] = np.unique(
-            np.concatenate((prev, np.asarray(ids, np.int64))))
-    return _write_deletes(catalog, snap, deletes, key="soft_deletes")
+    return _commit_tombstones(index_dir, "soft_deletes",
+                              lambda c, s, t: _union(t, doc_ids))
 
 
 def soft_delete_by_term(spark, index_dir: str, term: str):
     """Soft-delete every document containing ``term``; returns the new
-    Snapshot. Distributed exactly like :func:`delete_by_term` (postings
-    row decoded on executors, tombstone table written by executors) —
-    only the snapshot key differs."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
-    if snap is None:
-        raise ValueError(f"no snapshot in {index_dir}")
-    paths = [os.path.join(catalog.segment_dir(s), "postings.parquet")
-             for s in snap.seg_ids]
-
-    def decode_ids(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                dec = decode_postings(row._asdict(), with_positions=False)
-                yield pd.DataFrame({
-                    "seg_id": np.full(len(dec["doc_ids"]), row.seg_id,
-                                      dtype=np.int32),
-                    "local_doc_id": dec["doc_ids"].astype(np.int32)})
-
-    hits = (spark.read.parquet(*paths)
-            .filter(F.col("term") == term)
-            .mapInPandas(decode_ids, "seg_id int, local_doc_id int"))
-    rel_prev = (snap.extra or {}).get("soft_deletes")
-    if rel_prev:
-        prev_path = rel_prev if os.path.isabs(rel_prev) \
-            else os.path.join(catalog.root, rel_prev)
-        hits = hits.unionByName(
-            spark.read.parquet(prev_path)
-            .select(F.col("seg_id").cast("int"),
-                    F.col("local_doc_id").cast("int")))
-    gen = snap.snapshot_id + 1
-    rel, count = write_tombstone_table(spark, catalog, gen, hits)
-    extra = dict(snap.extra or {})
-    extra["soft_deletes"] = rel
-    extra["num_soft_deleted"] = count
-    return catalog.commit(snap.segments, snap.field_stats,
-                          snap.term_stats_path, extra=extra)
+    Snapshot. Found like :func:`delete_by_term`'s docs; only the snapshot
+    key differs."""
+    return _commit_tombstones(index_dir, "soft_deletes",
+                              _add_term(spark, term))
 
 
 def soft_undelete_by_ids(spark, index_dir: str,
@@ -343,29 +271,13 @@ def soft_undelete_by_ids(spark, index_dir: str,
     """Revive soft-deleted docs (the reference revives by writing the
     soft-deletes DV field back to absent — ``IndexWriter.
     updateNumericDocValue`` on the soft-deletes field): remove the pairs
-    from the soft tombstone table and commit. Docs never soft-deleted
-    are ignored. Returns the new Snapshot."""
-    catalog = SnapshotCatalog(index_dir)
-    snap = catalog.load()
-    if snap is None:
-        raise ValueError(f"no snapshot in {index_dir}")
-    deletes = load_deletes(catalog, snap, key="soft_deletes")
-    for s, ids in doc_ids.items():
-        prev = deletes.get(int(s))
-        if prev is None:
-            continue
-        keep = prev[~np.isin(prev, np.asarray(ids, np.int64))]
-        if len(keep):
-            deletes[int(s)] = keep
-        else:
-            deletes.pop(int(s))
-    if not deletes:
-        extra = dict(snap.extra or {})
-        extra.pop("soft_deletes", None)
-        extra["num_soft_deleted"] = 0
-        return catalog.commit(snap.segments, snap.field_stats,
-                              snap.term_stats_path, extra=extra)
-    return _write_deletes(catalog, snap, deletes, key="soft_deletes")
+    from the soft tombstones and commit. Docs never soft-deleted are
+    ignored. Returns the new Snapshot."""
+    revive = {int(s): np.asarray(ids, np.int64) for s, ids in doc_ids.items()}
+    return _commit_tombstones(
+        index_dir, "soft_deletes",
+        lambda c, s, t: {seg: v[~np.isin(v, revive.get(seg, v[:0]))]
+                         for seg, v in t.items()})
 
 
 def update_documents(spark, index_dir: str, df,

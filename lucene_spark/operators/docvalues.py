@@ -11,15 +11,15 @@ the updated reader view).
 
 Spark-native shape: updates live in an overlay parquet table
 ``(seg_id, local_doc_id, field, value, gen)`` referenced from
-``Snapshot.extra["dv_updates"]`` — the exact pattern the tombstone table
-already uses (:mod:`.delete`). The resolve step (which docs match the
-update term) decodes the single term's postings ON EXECUTORS; the
-overlay is deduped last-write-wins by generation and written back by
-executors, so updating a docvalue by a common term over a 10^12-doc
-index never routes a row through the driver. Readers apply the overlay
-with one small join (``coalesce(overlay.value, base)``); at 100 TB the
-overlay stays tiny relative to the corpus because merges continuously
-bake it away (same churn bound as tombstones).
+``Snapshot.extra["dv_updates"]``. Unlike the tombstones (:mod:`.delete`),
+which every reader loads on the driver, the overlay never reaches the
+driver: readers apply it with one small Spark join
+(``coalesce(overlay.value, base)``). So it keeps a Spark writer too: the
+docs of the update term come from the same per-segment fan-out
+``delete_by_term`` uses (:func:`.delete._docs_with_term`), and the overlay
+is deduped last-write-wins by generation and written back by executors.
+At 100 TB the overlay stays tiny relative to the corpus because merges
+continuously bake it away.
 """
 
 from __future__ import annotations
@@ -28,9 +28,6 @@ import os
 import shutil
 import uuid
 
-import numpy as np
-
-from ..functions.codec import decode_postings
 from ..sources.catalog import SnapshotCatalog
 
 
@@ -72,35 +69,22 @@ def update_numeric_docvalue(spark, index_dir: str, term: str,
     ``term``; returns the new Snapshot (metadata-only generation — no
     segment file changes, like a ``segments_N`` that only bumps dvGen).
 
-    Fully distributed: the postings scan is filtered to the single term
-    (predicate pushdown, ≤1 row per segment), decoded on executors,
-    unioned with the previous overlay generation and written back by
-    executors with last-write-wins dedup — the driver never materializes
-    a (seg, doc) pair.
+    Fully distributed: each segment's task decodes the term's postings
+    row (:func:`.delete._docs_with_term`); the hits are unioned with the
+    previous overlay generation and written back by executors with
+    last-write-wins dedup, so the driver never materializes a (seg, doc)
+    pair.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
+
+    from .delete import _docs_with_term
 
     catalog = SnapshotCatalog(index_dir)
     snap = catalog.load()
     if snap is None:
         raise ValueError(f"no snapshot in {index_dir}")
     gen = snap.snapshot_id + 1
-    paths = [os.path.join(catalog.segment_dir(s), "postings.parquet")
-             for s in snap.seg_ids]
-
-    def decode_ids(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                dec = decode_postings(row._asdict(), with_positions=False)
-                yield pd.DataFrame({
-                    "seg_id": np.full(len(dec["doc_ids"]), row.seg_id,
-                                      dtype=np.int32),
-                    "local_doc_id": dec["doc_ids"].astype(np.int32)})
-
-    hits = (spark.read.parquet(*paths)
-            .filter(F.col("term") == term)
-            .mapInPandas(decode_ids, "seg_id int, local_doc_id int")
+    hits = (_docs_with_term(spark, catalog, snap, term)
             .withColumn("field", F.lit(field))
             .withColumn("value", F.lit(int(value)).cast("long"))
             .withColumn("gen", F.lit(int(gen)).cast("long")))
@@ -147,8 +131,8 @@ def carry_updates(spark, catalog: SnapshotCatalog, snap, extra: dict,
                   merged_seg_ids: list[int], next_gen: int) -> None:
     """Carry the overlay rows of segments NOT in this merge forward into
     the next generation's table (mutates ``extra`` in place) — the merged
-    segments' rows were baked into the merged doc_meta and drop out, the
-    same distributed filter-and-rewrite the tombstone table gets."""
+    segments' rows were baked into the merged doc_meta and drop out. The
+    filter and rewrite run on executors, like every overlay write."""
     from pyspark.sql import functions as F
 
     path = _overlay_path(catalog, snap)

@@ -98,6 +98,8 @@ def _retained_soft_deletes(spark, catalog, soft_dels: dict,
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    from .delete import ids_by_segment
+
     paths = [os.path.join(catalog.segment_dir(s), "doc_meta.parquet")
              for s in sorted(soft_dels)]
     none = np.empty(0, np.int64)
@@ -120,8 +122,7 @@ def _retained_soft_deletes(spark, catalog, soft_dels: dict,
                     F.col("local_doc_id").cast("int"))
             .mapInPandas(soft_deleted, "seg_id int, local_doc_id int")
             .toPandas())
-    return {int(s): np.unique(g["local_doc_id"].to_numpy(np.int64))
-            for s, g in rows.groupby("seg_id")}
+    return ids_by_segment(rows)
 
 
 def plan_merges(segments: list[dict], segs_per_tier: int = 10,
@@ -327,11 +328,8 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         raise RuntimeError(
             f"norms assembly produced {got['n_docs']} docs, "
             f"stats+tombstones imply {n_docs}")
-    new_soft: pd.DataFrame | None = None
-    if retained:
-        new_soft = pd.DataFrame({
-            "seg_id": np.int32(new_seg_id),
-            "local_doc_id": np.frombuffer(got["soft"], "<i4")})
+    new_soft = ({new_seg_id: np.frombuffer(got["soft"], "<i4")}
+                if retained else {})
 
     # Phase 2 — one fan-out over n term ranges and n merged-id ranges, one
     # part file each: one per _PART_BYTES of input postings, at most P.
@@ -587,10 +585,11 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
 
 
 def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
-                  stats: dict, lock=None,
-                  new_soft: "pd.DataFrame | None" = None):
+                  stats: dict, lock=None, new_soft: dict | None = None):
     """Publish a built merged segment: swap ``seg_ids`` for the new
-    segment in the CURRENT snapshot and commit one generation.
+    segment in the CURRENT snapshot and commit one generation, with
+    ``new_soft`` ({new seg_id: retained soft-deleted ids}) added to the
+    carried soft tombstones.
 
     The snapshot is RE-LOADED here (under ``lock`` when merges run
     concurrently) rather than reusing the one pinned at merge start —
@@ -629,21 +628,16 @@ def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
         field_stats["sum_total_term_freq"] = int(sum(
             s2.get("sum_token_len", s2["sum_doc_len"])
             for s2 in new_segments))
-        # carry the surviving tombstones forward DISTRIBUTED: the driver
-        # never holds the full delete set (it only read the merged
-        # segments' slice). Soft tombstones add the retention-retained
-        # pairs re-tombstoned under the merged segment's id (purged soft
-        # deletes simply drop out of the table here)
+        # the merged segments' tombstones drop out (their docs are purged);
+        # the soft tombstones add the retention-retained docs under the
+        # merged segment's ids
         from .delete import carry_tombstones
-        carry_tombstones(spark, catalog, snap, extra, seg_ids, next_id)
-        carry_tombstones(spark, catalog, snap, extra, seg_ids, next_id,
-                         key="soft_deletes",
-                         add_df=(spark.createDataFrame(new_soft)
-                                 if new_soft is not None and len(new_soft)
-                                 else None))
+        carry_tombstones(catalog, snap, extra, seg_ids, next_id,
+                         new_segments)
+        carry_tombstones(catalog, snap, extra, seg_ids, next_id,
+                         new_segments, key="soft_deletes", add=new_soft)
         # DocValues-update overlay: merged segments' rows were baked into
-        # the merged doc_meta; surviving segments' rows carry forward
-        # (distributed filter-and-rewrite, like the tombstones above).
+        # the merged doc_meta; surviving segments' rows carry forward.
         # A dv update committed between merge start and this commit is
         # carried for surviving segments but lost for the merged ones —
         # updates and merges of the same segments serialize in practice
@@ -723,30 +717,19 @@ def add_indexes(spark, dest_dir: str, src_dir: str):
     # copies segments as-is INCLUDING their .liv files
     # (IndexWriter.copySegmentAsIs), so imported tombstones must survive
     # with seg ids remapped and union into the destination's delete set.
-    from .delete import load_deletes, write_tombstone_file
-    merged_deletes = load_deletes(dest, dsnap)
-    for old_id, ids in load_deletes(src, ssnap).items():
-        if old_id in id_map and len(ids):
-            merged_deletes[id_map[old_id]] = ids
+    # Soft tombstones import identically (they are .liv-equivalent state
+    # for readers; only merge-time retention distinguishes them).
+    from .delete import load_deletes, write_tombstones
     extra = dict(dsnap.extra or {})
     if (dsnap.extra or {}).get("index_sort") != \
             (ssnap.extra or {}).get("index_sort"):
         extra.pop("index_sort", None)   # mixed ordering: no early termination
-    if merged_deletes:
-        rel, count = write_tombstone_file(dest, gen, merged_deletes)
-        extra["deletes"] = rel
-        extra["num_deleted"] = count
-    # soft tombstones import identically (they are .liv-equivalent state
-    # for readers; only merge-time retention distinguishes them)
-    merged_soft = load_deletes(dest, dsnap, key="soft_deletes")
-    for old_id, ids in load_deletes(src, ssnap,
-                                    key="soft_deletes").items():
-        if old_id in id_map and len(ids):
-            merged_soft[id_map[old_id]] = ids
-    if merged_soft:
-        rel, count = write_tombstone_file(dest, gen, merged_soft)
-        extra["soft_deletes"] = rel
-        extra["num_soft_deleted"] = count
+    for key in ("deletes", "soft_deletes"):
+        merged = load_deletes(dest, dsnap, key=key)
+        merged.update({id_map[s]: v for s, v in
+                       load_deletes(src, ssnap, key=key).items()
+                       if s in id_map})
+        write_tombstones(dest, new_segments, gen, merged, extra, key)
     return dest.commit(new_segments, field_stats, ts_path, extra=extra)
 
 
@@ -801,17 +784,11 @@ def split_index(spark, src_dir: str, dest_dir: str,
                       "index_sort", "doc_id_col")}
     extra["num_segments"] = len(want)
     # slice live-docs to the kept segments (IndexSplitter copies .liv)
-    from .delete import load_deletes, write_tombstone_file
-    dels = load_deletes(src, snap, seg_ids=want)
-    if dels:
-        rel, count = write_tombstone_file(dest, 1, dels)
-        extra["deletes"] = rel
-        extra["num_deleted"] = count
-    soft = load_deletes(src, snap, seg_ids=want, key="soft_deletes")
-    if soft:
-        rel, count = write_tombstone_file(dest, 1, soft)
-        extra["soft_deletes"] = rel
-        extra["num_soft_deleted"] = count
+    from .delete import load_deletes, write_tombstones
+    for key in ("deletes", "soft_deletes"):
+        write_tombstones(dest, kept, 1,
+                         load_deletes(src, snap, seg_ids=want, key=key),
+                         extra, key)
     # slice docvalues-update overlays the same way
     from .docvalues import _overlay_path
     opath = _overlay_path(src, snap)
@@ -838,28 +815,23 @@ def _split_tombstoned(spark, src_dir: str, out: str, seg_ids: list[int],
     """Copy ``seg_ids`` of ``src_dir`` into ``out`` (:func:`split_index`)
     and tombstone the doc_meta rows ``unwanted(doc_meta)`` selects, on top
     of the tombstones the copy already carries; commit and return the
-    snapshot. The complement strategy the three splitters share: the rows
-    are computed and written by executors, so no doc id passes through the
+    snapshot. The complement strategy the three splitters share: one job
+    collects the selected rows, at most the copy's doc count (the bound a
+    ``Searcher`` open holds), and they join the copy's tombstones on the
     driver."""
     from pyspark.sql import functions as F
 
-    from .delete import write_tombstone_table
+    from .delete import carry_tombstones, ids_by_segment
     part = split_index(spark, src_dir, out, seg_ids)
     cat = SnapshotCatalog(out)
     meta = spark.read.parquet(
         *[os.path.join(cat.segment_dir(sid), "doc_meta.parquet")
           for sid in part.seg_ids])
-    pair = [F.col("seg_id").cast("int"), F.col("local_doc_id").cast("int")]
-    complement = unwanted(meta).select(*pair)
-    rel_prev = (part.extra or {}).get("deletes")
-    if rel_prev:   # an absolute path joins to itself
-        complement = complement.unionByName(
-            spark.read.parquet(os.path.join(out, rel_prev)).select(*pair))
-    rel, count = write_tombstone_table(spark, cat, part.snapshot_id + 1,
-                                       complement)
+    rows = unwanted(meta).select(F.col("seg_id").cast("int"),
+                                 F.col("local_doc_id").cast("int"))
     extra = dict(part.extra or {})
-    extra["deletes"] = rel
-    extra["num_deleted"] = count
+    carry_tombstones(cat, part, extra, [], part.snapshot_id + 1,
+                     part.segments, add=ids_by_segment(rows.toPandas()))
     return cat.commit(part.segments, part.field_stats,
                       part.term_stats_path, extra=extra)
 
@@ -873,10 +845,8 @@ def multi_pass_split(spark, src_dir: str, out_dirs: list[str]):
     reference's "marks documents as deleted" strategy (no re-indexing;
     stats stay stale until a merge purges, like any tombstone).
 
-    The complement tombstones are computed DISTRIBUTED from each part's
-    doc_meta scan (pushed pmod filter) and written by executors through
-    the shared tombstone-table path — the driver never holds a doc id.
-    Returns the list of committed Snapshots."""
+    The complement tombstones come from one scan of each part's doc_meta
+    (pushed pmod filter). Returns the list of committed Snapshots."""
     from pyspark.sql import functions as F
 
     snap = SnapshotCatalog(src_dir).load()
@@ -904,8 +874,8 @@ def pk_split(spark, src_dir: str, out_match_dir: str, out_rest_dir: str,
 
     The match set is computed ONCE distributed (the engine's own query
     kernel over live docs) and each part's complement tombstones are a
-    doc_meta scan anti/semi-joined against it — the driver never holds a
-    doc id. Returns (matching_snapshot, rest_snapshot)."""
+    doc_meta scan anti/semi-joined against it. Returns
+    (matching_snapshot, rest_snapshot)."""
     from .search import Searcher
 
     snap = SnapshotCatalog(src_dir).load()

@@ -1,4 +1,16 @@
+import tempfile
+
 import pytest
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _tempdir_under_pytest(tmp_path_factory):
+    """Point ``tempfile`` at pytest's base temp dir, so the index dirs the
+    tests make with ``tempfile.mkdtemp`` are pruned with pytest's own."""
+    before = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.getbasetemp())
+    yield
+    tempfile.tempdir = before
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,10 @@ pass a kernel to ``map_segments`` or ``fan_out`` instead.
 A merge streams the term-sorted inputs the same way: its tasks read the
 segment files by term or doc-id range, so it needs neither a range shuffle
 nor a broadcast.
+
+Tombstones are written on the driver, which holds them as every reader
+does; finding a term's docs is one fan-out. So ``delete.py`` neither
+shuffles nor maps partitions by hand.
 """
 
 from __future__ import annotations
@@ -59,4 +63,11 @@ def test_merge_has_no_shuffle_or_broadcast():
     for attr in ("repartitionByRange", "broadcast"):
         sites = [s for s in _call_sites(attr)
                  if s[0] == "operators/merge.py"]
+        assert sites == [], attr
+
+
+def test_delete_has_no_shuffle_or_partition_map():
+    for attr in ("repartitionByRange", "dropDuplicates", "mapInPandas"):
+        sites = [s for s in _call_sites(attr)
+                 if s[0] == "operators/delete.py"]
         assert sites == [], attr

@@ -4,8 +4,8 @@ wall time + driver RSS growth — the evidence that a merge routes NO
 per-doc state through the driver: norms/gid assembly runs as one
 executor task, re-encode tasks rebuild remaps from the sparse tombstone
 broadcast (or the executor-written sort-remap table), doc_meta rewrites
-are range-clustered Spark jobs, and tombstones carry executor-side. The
-driver holds O(segments + tombstones) only.
+are range-clustered Spark jobs, and the tombstones carry forward as one
+driver-written file. The driver holds O(segments + tombstones) only.
 
 Usage: python tools/merge_demo.py [n_docs] [n_segments] [n_merge]
 """
