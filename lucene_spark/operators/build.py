@@ -81,12 +81,6 @@ def write_segment_file(table: pa.Table, path: str) -> None:
                           if not pa.types.is_binary(f.type)])
 
 
-#: Snapshot ``extra`` keys that describe the state of committed segments
-#: (tombstones, docvalues updates) and so carry across an append build
-_SEGMENT_STATE_KEYS = ("deletes", "num_deleted", "soft_deletes",
-                       "num_soft_deleted", "dv_updates", "num_dv_updates")
-
-
 def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
                    doc_id_col: str, stopwords: frozenset,
                    store_positions: bool, *,
@@ -642,7 +636,7 @@ def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
 
 
 def compute_term_stats(spark, catalog: SnapshotCatalog, seg_ids: list[int],
-                       out_dir: str, buckets: int | None = None) -> str:
+                       out_dir: str) -> str:
     """Global term statistics: df/ttf aggregated across ALL segments —
     the reference gathers these once per query across leaves
     (``index/TermStates.java:184-190``); we precompute them as a table.
@@ -652,24 +646,80 @@ def compute_term_stats(spark, catalog: SnapshotCatalog, seg_ids: list[int],
     by the segment count — the map-side combine happened inside the segment
     kernel. No salting needed on this path.
 
-    Layout: the dictionary is written range-bucketed by term (``buckets``
-    sorted files, global term order across them) — every bucket keeps
+    Layout: the dictionary is written range-bucketed by term (one sorted
+    file per segment, global term order across them) — every bucket keeps
     term-sorted row groups, so point/prefix probes (suggest, spell, query
     stats) still prune via parquet min/max, while the write parallelizes:
     a single-reducer write would serialize the entire vocabulary through
-    one task (billions of terms at 10^12-doc scale). ``buckets`` defaults
-    to the segment count — vocabulary grows with corpus, so the file count
-    scales with it."""
+    one task (billions of terms at 10^12-doc scale). Vocabulary grows with
+    the corpus, and so does the segment count, and with it the file
+    count."""
     from pyspark.sql import functions as F
     paths = [os.path.join(catalog.segment_dir(s), "postings.parquet") for s in seg_ids]
     stats = (spark.read.parquet(*paths)
              .groupBy("term")
              .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf")))
-    if buckets is None:
-        buckets = max(1, len(seg_ids))
-    (stats.repartitionByRange(buckets, "term").sortWithinPartitions("term")
+    (stats.repartitionByRange(max(1, len(seg_ids)), "term")
+     .sortWithinPartitions("term")
      .write.mode("overwrite").parquet(out_dir))
     return out_dir
+
+
+def commit_segments(spark, catalog: SnapshotCatalog, base,
+                    segments: list[dict], extra: dict, carry=(),
+                    soft_add: dict | None = None):
+    """Publish ``segments`` as the generation after ``base`` (``None`` for
+    a new index): the one segment-set commit — the ``segments_N`` write —
+    of a build, a merge, ``add_indexes`` and ``split_index``. Returns the
+    committed Snapshot.
+
+    ``extra`` holds the caller's index-level keys. The field stats are
+    summed from the segments' lineage (the invariant ``check_index``
+    checks), and one :func:`compute_term_stats` writes the dictionary.
+    Each segment's per-doc state — hard and soft tombstones and docvalues
+    updates, Lucene's per-segment ``.liv`` and dv-update generations —
+    comes from ``carry``, a list of ``(catalog, snapshot, {old seg_id: new
+    seg_id})``: the state of a segment its map leaves out drops, since its
+    docs were merged, rebuilt or not copied. ``soft_add`` ({seg_id: local
+    ids}) joins the soft tombstones: a merge's retained soft deletes. The
+    state goes through its driver-side writers, which refuse an address
+    outside ``segments``."""
+    from .delete import _FILES, _union, load_deletes, write_tombstones
+    from .docvalues import load_updates, write_updates
+    segments = sorted(segments, key=lambda s: s["seg_id"])
+    gen = base.snapshot_id + 1 if base else 1
+    field_stats = {
+        "doc_count": int(sum(s["num_docs"] for s in segments)),
+        "sum_total_term_freq": int(sum(
+            s.get("sum_token_len", s["sum_doc_len"]) for s in segments)),
+    }
+    ts_path = compute_term_stats(
+        spark, catalog, [s["seg_id"] for s in segments],
+        os.path.join(catalog.root, "term_stats", f"gen-{gen}"))
+    # the state keys and their counts come from the carried snapshots only
+    state = {k for key, (_, count) in _FILES.items() for k in (key, count)}
+    extra = {k: v for k, v in extra.items() if k not in state}
+    for key in _FILES:
+        add = soft_add if key == "soft_deletes" else None
+        held = [(c, snap, m) for c, snap, m in carry
+                if (snap.extra or {}).get(key)]
+        if not held and not add:
+            continue
+        if key == "dv_updates":
+            rows = []
+            for c, snap, m in held:
+                r = load_updates(c, snap)
+                r = r[r["seg_id"].isin(list(m))]
+                rows.append(r.assign(seg_id=r["seg_id"].map(m)))
+            write_updates(catalog, segments, gen,
+                          pd.concat(rows, ignore_index=True), extra)
+            continue
+        kept = {m[s]: ids for c, snap, m in held
+                for s, ids in load_deletes(c, snap, key=key).items()
+                if s in m}
+        write_tombstones(catalog, segments, gen, _union(kept, add or {}),
+                         extra, key)
+    return catalog.commit(segments, field_stats, ts_path, extra=extra)
 
 
 def build_index(spark, df, index_dir: str, *,
@@ -679,7 +729,6 @@ def build_index(spark, df, index_dir: str, *,
                 stopwords: frozenset = frozenset(),
                 store_positions: bool = True,
                 resume: bool = True,
-                compute_stats: bool = True,
                 seg_id_offset: int = 0,
                 sort_field: str | None = None,
                 sort_ascending: bool = True,
@@ -736,43 +785,22 @@ def build_index(spark, df, index_dir: str, *,
                  .applyInPandas(builder, schema=STATS_SCHEMA)
                  .collect())
 
-    # an append keeps the latest snapshot's segments and the tombstones
-    # and docvalues updates that apply to them
+    # an append keeps the latest snapshot's segments with their per-doc
+    # state; a segment rebuilt in place (resume=False) drops the state
+    # that addressed its old docs
     latest = catalog.load()
     live = {s["seg_id"]: s for s in latest.segments} if latest else {}
     seg_stats: dict[int, dict] = {**durable, **live}
     for row in new_stats:
         seg_stats[row["seg_id"]] = {**row.asDict(), "origin": "build"}
-    segments = [seg_stats[s] for s in sorted(seg_stats)]
-
-    field_stats = {
-        "doc_count": int(sum(s["num_docs"] for s in segments)),
-        "sum_total_term_freq": int(sum(
-            s.get("sum_token_len", s["sum_doc_len"]) for s in segments)),
-    }
-    next_id = (latest.snapshot_id + 1) if latest else 1
-    ts_path = None
-    if compute_stats:
-        ts_path = compute_term_stats(
-            spark, catalog, [s["seg_id"] for s in segments],
-            os.path.join(index_dir, "term_stats", f"gen-{next_id}"))
+    rebuilt = {row["seg_id"] for row in new_stats}
+    carry = ([(catalog, latest, {s: s for s in live if s not in rebuilt})]
+             if latest else [])
     from ..functions.codec import CODEC_VERSION
-    extra = {k: v for k, v in (latest.extra if latest else {}).items()
-             if k in _SEGMENT_STATE_KEYS}
-    rebuilt = sorted(set(live) & {row["seg_id"] for row in new_stats})
-    if rebuilt:
-        # a segment rebuilt in place (resume=False) drops the tombstones
-        # and docvalues updates that addressed its old docs
-        from .delete import carry_tombstones
-        from .docvalues import carry_updates
-        carry_tombstones(catalog, latest, extra, rebuilt, next_id, segments)
-        carry_tombstones(catalog, latest, extra, rebuilt, next_id, segments,
-                         key="soft_deletes")
-        carry_updates(spark, catalog, latest, extra, rebuilt, next_id)
-    extra.update({"num_segments": num_segments,
-                  "doc_id_col": doc_id_col,
-                  "store_positions": store_positions,
-                  "codec_version": CODEC_VERSION})
+    extra = {"num_segments": num_segments,
+             "doc_id_col": doc_id_col,
+             "store_positions": store_positions,
+             "codec_version": CODEC_VERSION}
     if sort_field is not None:
         extra["index_sort"] = {"field": sort_field,
                                "ascending": bool(sort_ascending)}
@@ -785,4 +813,5 @@ def build_index(spark, df, index_dir: str, *,
     if store_term_vectors or (latest and
                               (latest.extra or {}).get("term_vectors")):
         extra["term_vectors"] = True
-    return catalog.commit(segments, field_stats, ts_path, extra=extra)
+    return commit_segments(spark, catalog, latest, list(seg_stats.values()),
+                           extra, carry)

@@ -108,7 +108,6 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
     With ``spark``, segments are verified in parallel executor tasks
     (:func:`~.search.fan_out`); only (counts | error) rows return to the
     driver."""
-    from .delete import load_deletes
     catalog = SnapshotCatalog(index_dir)
     snap = catalog.load(snapshot_id)
     if snap is None:
@@ -178,24 +177,28 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
     _check(totals["sum_ttf"]
            == int(snap.field_stats["sum_total_term_freq"]), -1,
            "field_stats sum_total_term_freq != total indexed tokens")
-    # hard and soft tombstones: known segments, ids in range, and (on the
-    # raw table, since load_deletes dedupes) no duplicate rows and a
+    # per-doc state — hard and soft tombstones, docvalues updates — on the
+    # raw table: known segments, ids in range, no duplicate rows and a
     # count that matches the snapshot's
-    for key, count_key in (("deletes", "num_deleted"),
-                           ("soft_deletes", "num_soft_deleted")):
-        deletes = load_deletes(catalog, snap, key=key)
-        for s, ids in deletes.items():
-            _check(s in lineage, s, f"{key} for unknown segment")
-            _check(np.all((ids >= 0) & (ids < lineage[s]["num_docs"])), s,
-                   f"{key} local id out of range")
+    from .delete import _FILES, check_addresses
+    for key, (_, count_key) in _FILES.items():
         rel = (snap.extra or {}).get(key)
-        if rel:
-            path = rel if os.path.isabs(rel) else os.path.join(index_dir, rel)
-            raw = pd.read_parquet(path)
-            _check(int(raw.duplicated(["seg_id", "local_doc_id"]).sum())
-                   == 0, -1, f"duplicate {key} rows")
-            _check(int(snap.extra.get(count_key, -1)) == len(raw), -1,
-                   f"extra.{count_key} != {key} table rows")
-        totals[count_key] = int(sum(len(v) for v in deletes.values()))
+        totals[count_key] = 0
+        if not rel:
+            continue
+        path = rel if os.path.isabs(rel) else os.path.join(index_dir, rel)
+        raw = pd.read_parquet(path)
+        try:
+            check_addresses(snap.segments, raw["seg_id"],
+                            raw["local_doc_id"], key)
+        except ValueError as e:
+            raise CheckIndexError(str(e)) from None
+        address = [c for c in ("seg_id", "local_doc_id", "field")
+                   if c in raw.columns]
+        _check(int(raw.duplicated(address).sum()) == 0, -1,
+               f"duplicate {key} rows")
+        _check(int(snap.extra.get(count_key, -1)) == len(raw), -1,
+               f"extra.{count_key} != {key} table rows")
+        totals[count_key] = len(raw)
     totals["snapshot_id"] = snap.snapshot_id
     return totals

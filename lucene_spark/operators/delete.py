@@ -35,7 +35,11 @@ import pandas as pd
 from ..functions.codec import decode_postings
 from ..sources.catalog import SnapshotCatalog
 
-_COUNT_KEYS = {"deletes": "num_deleted", "soft_deletes": "num_soft_deleted"}
+#: {extra key: (directory under the index root, extra count key)} of the
+#: per-doc state files each generation writes
+_FILES = {"deletes": ("deletes", "num_deleted"),
+          "soft_deletes": ("deletes", "num_soft_deleted"),
+          "dv_updates": ("dv_updates", "num_dv_updates")}
 
 
 def ids_by_segment(pdf: pd.DataFrame) -> dict[int, np.ndarray]:
@@ -63,50 +67,71 @@ def load_deletes(catalog: SnapshotCatalog, snap,
     return ids_by_segment(pd.read_parquet(path, filters=filters))
 
 
+def check_addresses(segments: list[dict], seg_ids, local_ids,
+                    what: str) -> None:
+    """Raise ``ValueError`` unless every ``(seg_ids[i], local_ids[i])``
+    addresses a doc of ``segments``: a segment not among them, or an id
+    outside ``[0, num_docs)``, would make a reader hide, count or update
+    another doc. ``what`` names the rows in the message."""
+    num_docs = {int(s["seg_id"]): int(s["num_docs"]) for s in segments}
+    segs, at = np.unique(np.asarray(seg_ids, np.int64), return_inverse=True)
+    n = np.array([num_docs.get(int(s), -1) for s in segs], np.int64)
+    if (n < 0).any():
+        raise ValueError(f"{what} for segment {int(segs[n < 0][0])}, which "
+                         f"is not in the snapshot")
+    ids = np.asarray(local_ids, np.int64)
+    bad = (ids < 0) | (ids >= n[at])
+    if bad.any():
+        s = int(segs[at[bad][0]])
+        raise ValueError(f"segment {s}: {what} ids must lie in "
+                         f"[0, {num_docs[s]})")
+
+
+def write_generation(catalog: SnapshotCatalog, key: str, gen: int,
+                     table, extra: dict) -> None:
+    """Write ``table`` atomically as generation ``gen``'s ``key`` file
+    (tombstones or docvalues updates) and point ``extra`` at it with its
+    row count; an empty table drops ``key`` and counts 0."""
+    import pyarrow.parquet as pq
+
+    subdir, count_key = _FILES[key]
+    if not table.num_rows:
+        extra.pop(key, None)
+        extra[count_key] = 0
+        return
+    out_dir = os.path.join(catalog.root, subdir)
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
+    pq.write_table(table, tmp)
+    final = os.path.join(out_dir,
+                         f"gen-{gen}-{uuid.uuid4().hex[:8]}.parquet")
+    os.rename(tmp, final)
+    extra[key] = os.path.relpath(final, catalog.root)
+    extra[count_key] = int(table.num_rows)
+
+
 def write_tombstones(catalog: SnapshotCatalog, segments: list[dict],
                      gen: int, deletes: dict, extra: dict,
                      key: str = "deletes") -> None:
     """The one tombstone writer: ``deletes`` ({seg_id: local ids}) become
-    generation ``gen``'s ``key`` file, sorted and unique, written
-    atomically, and ``extra`` points at it with its count (an empty set
-    drops ``key`` and counts 0). ``segments`` are the segments the
-    generation commits: a segment not among them, or an id outside
-    ``[0, num_docs)``, raises ``ValueError``, since ``_live_mask`` would
-    otherwise hide another doc or count a doc that is not there."""
+    generation ``gen``'s ``key`` file, sorted and unique, and ``extra``
+    points at it with its count (:func:`write_generation`). ``segments``
+    are the segments the generation commits; an id that addresses no doc
+    of them raises ``ValueError`` (:func:`check_addresses`), since
+    ``_live_mask`` would otherwise hide another doc or count a doc that is
+    not there."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    num_docs = {int(s["seg_id"]): int(s["num_docs"]) for s in segments}
-    sets = {}
-    for s, ids in deletes.items():
-        s, ids = int(s), np.unique(np.asarray(ids, np.int64))
-        if not len(ids):
-            continue
-        if s not in num_docs:
-            raise ValueError(f"tombstones for segment {s}, which is not "
-                             f"in the snapshot")
-        if ids[0] < 0 or ids[-1] >= num_docs[s]:
-            raise ValueError(f"segment {s}: tombstone ids must lie in "
-                             f"[0, {num_docs[s]})")
-        sets[s] = ids
-    if not sets:
-        extra.pop(key, None)
-        extra[_COUNT_KEYS[key]] = 0
-        return
-    order = sorted(sets)
-    segs = np.concatenate([np.full(len(sets[s]), s, np.int32) for s in order])
-    locs = np.concatenate([sets[s] for s in order]).astype(np.int32)
-    del_dir = os.path.join(catalog.root, "deletes")
-    os.makedirs(del_dir, exist_ok=True)
-    tmp = os.path.join(del_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
-    pq.write_table(pa.table({"seg_id": pa.array(segs, pa.int32()),
-                             "local_doc_id": pa.array(locs, pa.int32())}),
-                   tmp)
-    final = os.path.join(del_dir,
-                         f"gen-{gen}-{uuid.uuid4().hex[:8]}.parquet")
-    os.rename(tmp, final)
-    extra[key] = os.path.relpath(final, catalog.root)
-    extra[_COUNT_KEYS[key]] = int(len(locs))
+    sets = {int(s): np.unique(np.asarray(deletes[s], np.int64))
+            for s in sorted(deletes)}
+    segs = np.repeat(np.fromiter(sets, np.int64, len(sets)),
+                     [len(v) for v in sets.values()])
+    locs = np.concatenate([np.empty(0, np.int64), *sets.values()])
+    check_addresses(segments, segs, locs, "tombstone")
+    write_generation(catalog, key, gen, pa.table({
+        "seg_id": pa.array(segs.astype(np.int32), pa.int32()),
+        "local_doc_id": pa.array(locs.astype(np.int32), pa.int32())}),
+        extra)
 
 
 def _union(deletes: dict, more: dict) -> dict:
@@ -115,21 +140,6 @@ def _union(deletes: dict, more: dict) -> dict:
         out[int(s)] = np.concatenate((out.get(int(s), np.empty(0, np.int64)),
                                       np.asarray(ids, np.int64)))
     return out
-
-
-def carry_tombstones(catalog: SnapshotCatalog, snap, extra: dict,
-                     drop_seg_ids, next_gen: int, segments: list[dict],
-                     key: str = "deletes", add: dict | None = None) -> None:
-    """Carry ``snap``'s ``key`` tombstones into generation ``next_gen``,
-    whose segments are ``segments``, without the rows of ``drop_seg_ids``
-    and with ``add``'s ({seg_id: ids}); mutates ``extra`` in place."""
-    if not (snap.extra or {}).get(key) and not add:
-        return
-    drop = {int(s) for s in drop_seg_ids}
-    kept = {s: v for s, v in load_deletes(catalog, snap, key=key).items()
-            if s not in drop}
-    write_tombstones(catalog, segments, next_gen, _union(kept, add or {}),
-                     extra, key)
 
 
 def _commit_tombstones(index_dir: str, key: str, edit):

@@ -9,26 +9,32 @@ merges BAKE the updated values into the merged segment's docvalues so
 the overlay generation disappears (``index/SegmentMerger`` reads through
 the updated reader view).
 
-Spark-native shape: updates live in an overlay parquet table
+Spark-native shape: updates live in an overlay parquet file
 ``(seg_id, local_doc_id, field, value, gen)`` referenced from
-``Snapshot.extra["dv_updates"]``. Unlike the tombstones (:mod:`.delete`),
-which every reader loads on the driver, the overlay never reaches the
-driver: readers apply it with one small Spark join
-(``coalesce(overlay.value, base)``). So it keeps a Spark writer too: the
-docs of the update term come from the same per-segment fan-out
-``delete_by_term`` uses (:func:`.delete._docs_with_term`), and the overlay
-is deduped last-write-wins by generation and written back by executors.
-At 100 TB the overlay stays tiny relative to the corpus because merges
-continuously bake it away.
+``Snapshot.extra["dv_updates"]``, one per generation, sorted and kept
+last-write-wins per (seg, doc, field). It is per-doc state like the
+tombstones (:mod:`.delete`) and is written the same way, on the driver:
+an update collects the docs of its term from one shuffle-free fan-out
+(:func:`.delete._docs_with_term`), unions them with the previous
+generation's rows and writes the result with :func:`write_updates`, the
+one overlay writer. Merges, builds, ``add_indexes`` and ``split_index``
+carry it through the same writer (:func:`.build.commit_segments`). The
+driver holds the overlay rows written since the last merge bake of their
+segments: a merge bakes the merged segments' rows into their doc_meta and
+drops them. Readers apply the overlay with one small Spark join
+(``coalesce(overlay.value, base)``); earlier generations wrote it as a
+parquet directory, which every reader here also opens.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+
+import pandas as pd
 
 from ..sources.catalog import SnapshotCatalog
+
+_COLUMNS = ["seg_id", "local_doc_id", "field", "value", "gen"]
 
 
 def _overlay_path(catalog: SnapshotCatalog, snap) -> str | None:
@@ -38,45 +44,48 @@ def _overlay_path(catalog: SnapshotCatalog, snap) -> str | None:
     return rel if os.path.isabs(rel) else os.path.join(catalog.root, rel)
 
 
-def write_dv_table(spark, catalog: SnapshotCatalog, gen: int,
-                   updates_df) -> tuple[str, int]:
-    """Write an overlay DataFrame ``(seg_id, local_doc_id, field, value,
-    gen)`` as the snapshot's docvalues-update table — an executor-written
-    parquet directory, deduped last-write-wins per (seg, doc, field) and
-    range-clustered by segment so a reader's or merge's per-segment slice
-    is a contiguous pushed-predicate scan. Returns (relpath, rows)."""
-    from pyspark.sql import functions as F
+def load_updates(catalog: SnapshotCatalog, snap) -> pd.DataFrame:
+    """The snapshot's overlay rows ``(seg_id, local_doc_id, field, value,
+    gen)``, read from its parquet file or directory (empty if none)."""
+    path = _overlay_path(catalog, snap)
+    if not path:
+        return pd.DataFrame(columns=_COLUMNS)
+    return pd.read_parquet(path, columns=_COLUMNS)
 
-    dv_dir = os.path.join(catalog.root, "dv_updates")
-    os.makedirs(dv_dir, exist_ok=True)
-    tmp = os.path.join(dv_dir, f"_tmp-{uuid.uuid4().hex}")
-    final = os.path.join(dv_dir, f"gen-{gen}-{uuid.uuid4().hex[:8]}")
-    (updates_df
-     .groupBy("seg_id", "local_doc_id", "field")
-     .agg(F.max_by("value", "gen").alias("value"),
-          F.max("gen").alias("gen"))
-     .repartitionByRange(F.col("seg_id"), F.col("local_doc_id"))
-     .sortWithinPartitions("seg_id", "local_doc_id", "field")
-     .write.mode("overwrite").parquet(tmp))
-    count = int(spark.read.parquet(tmp).count())
-    os.rename(tmp, final)
-    return os.path.relpath(final, catalog.root), count
+
+def write_updates(catalog: SnapshotCatalog, segments: list[dict], gen: int,
+                  rows: pd.DataFrame, extra: dict) -> None:
+    """The one overlay writer: ``rows`` become generation ``gen``'s
+    overlay file, the latest ``gen`` of each (seg, doc, field) only,
+    sorted by it, in the order of ``_COLUMNS``. An address outside
+    ``segments`` raises ``ValueError``, as a tombstone's does."""
+    import pyarrow as pa
+
+    from .delete import check_addresses, write_generation
+    check_addresses(segments, rows["seg_id"], rows["local_doc_id"],
+                    "docvalues update")
+    rows = (rows.sort_values(["seg_id", "local_doc_id", "field", "gen"],
+                             kind="stable")
+            .drop_duplicates(["seg_id", "local_doc_id", "field"],
+                             keep="last"))
+    write_generation(catalog, "dv_updates", gen, pa.table({
+        "seg_id": pa.array(rows["seg_id"], pa.int32()),
+        "local_doc_id": pa.array(rows["local_doc_id"], pa.int32()),
+        "field": pa.array(rows["field"], pa.string()),
+        "value": pa.array(rows["value"], pa.int64()),
+        "gen": pa.array(rows["gen"], pa.int64())}), extra)
 
 
 def update_numeric_docvalue(spark, index_dir: str, term: str,
                             field: str, value: int):
-    """Set docvalues ``field`` to ``value`` for every live doc containing
+    """Set docvalues ``field`` to ``value`` for every doc containing
     ``term``; returns the new Snapshot (metadata-only generation — no
     segment file changes, like a ``segments_N`` that only bumps dvGen).
 
-    Fully distributed: each segment's task decodes the term's postings
-    row (:func:`.delete._docs_with_term`); the hits are unioned with the
-    previous overlay generation and written back by executors with
-    last-write-wins dedup, so the driver never materializes a (seg, doc)
-    pair.
-    """
-    from pyspark.sql import functions as F
-
+    One Spark job finds and collects the term's docs
+    (:func:`.delete._docs_with_term`), at most the snapshot's doc count;
+    they join the previous overlay rows on the driver and
+    :func:`write_updates` writes the next generation's file."""
     from .delete import _docs_with_term
 
     catalog = SnapshotCatalog(index_dir)
@@ -84,17 +93,13 @@ def update_numeric_docvalue(spark, index_dir: str, term: str,
     if snap is None:
         raise ValueError(f"no snapshot in {index_dir}")
     gen = snap.snapshot_id + 1
-    hits = (_docs_with_term(spark, catalog, snap, term)
-            .withColumn("field", F.lit(field))
-            .withColumn("value", F.lit(int(value)).cast("long"))
-            .withColumn("gen", F.lit(int(gen)).cast("long")))
-    prev = _overlay_path(catalog, snap)
-    if prev:
-        hits = hits.unionByName(spark.read.parquet(prev))
-    rel, count = write_dv_table(spark, catalog, gen, hits)
+    hits = _docs_with_term(spark, catalog, snap, term).toPandas().assign(
+        field=field, value=int(value), gen=gen)
+    prev = load_updates(catalog, snap)
     extra = dict(snap.extra or {})
-    extra["dv_updates"] = rel
-    extra["num_dv_updates"] = count
+    write_updates(catalog, snap.segments, gen,
+                  pd.concat([prev, hits], ignore_index=True)
+                  if len(prev) else hits, extra)
     return catalog.commit(snap.segments, snap.field_stats,
                           snap.term_stats_path, extra=extra)
 
@@ -125,26 +130,3 @@ def read_docvalues(spark, catalog: SnapshotCatalog, snap, doc_meta,
                       & (F.col("local_doc_id") == F.col("_ol")), "left")
             .select("seg_id", "local_doc_id", "doc_id",
                     F.coalesce(F.col("_ov"), F.col("_base")).alias("value")))
-
-
-def carry_updates(spark, catalog: SnapshotCatalog, snap, extra: dict,
-                  merged_seg_ids: list[int], next_gen: int) -> None:
-    """Carry the overlay rows of segments NOT in this merge forward into
-    the next generation's table (mutates ``extra`` in place) — the merged
-    segments' rows were baked into the merged doc_meta and drop out. The
-    filter and rewrite run on executors, like every overlay write."""
-    from pyspark.sql import functions as F
-
-    path = _overlay_path(catalog, snap)
-    if not path:
-        return
-    rem = (spark.read.parquet(path)
-           .filter(~F.col("seg_id").isin([int(s) for s in merged_seg_ids])))
-    rel, count = write_dv_table(spark, catalog, next_gen, rem)
-    if count:
-        extra["dv_updates"] = rel
-        extra["num_dv_updates"] = count
-    else:
-        shutil.rmtree(os.path.join(catalog.root, rel), ignore_errors=True)
-        extra.pop("dv_updates", None)
-        extra["num_dv_updates"] = 0

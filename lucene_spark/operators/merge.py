@@ -36,7 +36,7 @@ import pandas as pd
 
 from ..functions.codec import decode_postings, encode_postings_batch
 from ..sources.catalog import SnapshotCatalog
-from .build import (POSTINGS_COLUMNS, compute_term_stats, postings_schema,
+from .build import (POSTINGS_COLUMNS, commit_segments, postings_schema,
                     write_segment_file)
 
 #: the fan-out result row of one merge task: a term range's postings
@@ -580,12 +580,12 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         shutil.rmtree(tmp, ignore_errors=True)
         raise
 
-    return _commit_merge(spark, catalog, index_dir, seg_ids, stats,
+    return _commit_merge(spark, catalog, seg_ids, stats,
                          lock=_commit_lock, new_soft=new_soft)
 
 
-def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
-                  stats: dict, lock=None, new_soft: dict | None = None):
+def _commit_merge(spark, catalog, seg_ids: list[int], stats: dict,
+                  lock=None, new_soft: dict | None = None):
     """Publish a built merged segment: swap ``seg_ids`` for the new
     segment in the CURRENT snapshot and commit one generation, with
     ``new_soft`` ({new seg_id: retained soft-deleted ids}) added to the
@@ -604,49 +604,23 @@ def _commit_merge(spark, catalog, index_dir: str, seg_ids: list[int],
 
     with (lock if lock is not None else contextlib.nullcontext()):
         snap = catalog.load()
-        new_segments = [s for s in snap.segments
-                        if s["seg_id"] not in set(seg_ids)]
-        new_segments.append(stats)
-        new_segments.sort(key=lambda s: s["seg_id"])
-        next_id = snap.snapshot_id + 1
-        ts_path = compute_term_stats(
-            spark, catalog, [s["seg_id"] for s in new_segments],
-            os.path.join(index_dir, "term_stats", f"gen-{next_id}"))
-        # purged deletes leave the tombstone set and the collection stats
-        # recompute EXACTLY from the surviving segments' lineage (Lucene
-        # rebuilds docCount/sumTotalTermFreq from segment metadata once
-        # merges drop docs) — the merged segment's token count comes from
-        # its own postings (Σ ttf), so synonym-overlap indexes stay exact
-        field_stats = dict(snap.field_stats)
-        extra = dict(snap.extra or {})
-        # index_sort SURVIVES the merge: the permutation above ordered
-        # the merged segment by the key (sorting merge, MergeState/
-        # IndexSorter), so sorted_top_k keeps early-terminating across
-        # generations
-        field_stats["doc_count"] = int(sum(s2["num_docs"]
-                                           for s2 in new_segments))
-        field_stats["sum_total_term_freq"] = int(sum(
-            s2.get("sum_token_len", s2["sum_doc_len"])
-            for s2 in new_segments))
-        # the merged segments' tombstones drop out (their docs are purged);
-        # the soft tombstones add the retention-retained docs under the
-        # merged segment's ids
-        from .delete import carry_tombstones
-        carry_tombstones(catalog, snap, extra, seg_ids, next_id,
-                         new_segments)
-        carry_tombstones(catalog, snap, extra, seg_ids, next_id,
-                         new_segments, key="soft_deletes", add=new_soft)
-        # DocValues-update overlay: merged segments' rows were baked into
-        # the merged doc_meta; surviving segments' rows carry forward.
-        # A dv update committed between merge start and this commit is
-        # carried for surviving segments but lost for the merged ones —
-        # updates and merges of the same segments serialize in practice
-        # (same commit lock); documented limitation of the async path.
-        if (snap.extra or {}).get("dv_updates"):
-            from .docvalues import carry_updates
-            carry_updates(spark, catalog, snap, extra, seg_ids, next_id)
-        return catalog.commit(new_segments, field_stats, ts_path,
-                              extra=extra)
+        merged = set(seg_ids)
+        # the merged segments' tombstones drop out (their docs are purged)
+        # and their docvalues updates were baked into the merged doc_meta;
+        # the survivors' carry forward, and the retained soft deletes join
+        # under the merged segment's ids. index_sort SURVIVES the merge:
+        # the merged segment is ordered by the key (sorting merge,
+        # MergeState/IndexSorter). A dv update committed between merge
+        # start and this commit is carried for surviving segments but lost
+        # for the merged ones — updates and merges of the same segments
+        # serialize in practice (same commit lock); documented limitation
+        # of the async path.
+        return commit_segments(
+            spark, catalog, snap,
+            [s for s in snap.segments if s["seg_id"] not in merged]
+            + [stats], snap.extra or {},
+            [(catalog, snap, {s: s for s in snap.seg_ids
+                              if s not in merged})], soft_add=new_soft)
 
 
 def add_indexes(spark, dest_dir: str, src_dir: str):
@@ -702,35 +676,18 @@ def add_indexes(spark, dest_dir: str, src_dir: str):
             json.dump(stats, f)
         os.rename(tmp, dest.segment_dir(new_id))
         new_segments.append(stats)
-    new_segments.sort(key=lambda s: s["seg_id"])
-    gen = dsnap.snapshot_id + 1
-    ts_path = compute_term_stats(
-        spark, dest, [s["seg_id"] for s in new_segments],
-        os.path.join(dest_dir, "term_stats", f"gen-{gen}"))
-    field_stats = {
-        "doc_count": int(dsnap.field_stats["doc_count"])
-        + int(ssnap.field_stats["doc_count"]),
-        "sum_total_term_freq": int(dsnap.field_stats["sum_total_term_freq"])
-        + int(ssnap.field_stats["sum_total_term_freq"]),
-    }
-    # preserve the source's live-docs: the reference's addIndexes(Directory)
-    # copies segments as-is INCLUDING their .liv files
-    # (IndexWriter.copySegmentAsIs), so imported tombstones must survive
-    # with seg ids remapped and union into the destination's delete set.
-    # Soft tombstones import identically (they are .liv-equivalent state
-    # for readers; only merge-time retention distinguishes them).
-    from .delete import load_deletes, write_tombstones
+    # the imported segments keep their per-doc state: the reference's
+    # addIndexes(Directory) copies segments as-is INCLUDING their .liv and
+    # dv-update files (IndexWriter.copySegmentAsIs), so the source's
+    # tombstones, soft tombstones and docvalues updates carry with seg ids
+    # remapped, next to the destination's own
     extra = dict(dsnap.extra or {})
     if (dsnap.extra or {}).get("index_sort") != \
             (ssnap.extra or {}).get("index_sort"):
         extra.pop("index_sort", None)   # mixed ordering: no early termination
-    for key in ("deletes", "soft_deletes"):
-        merged = load_deletes(dest, dsnap, key=key)
-        merged.update({id_map[s]: v for s, v in
-                       load_deletes(src, ssnap, key=key).items()
-                       if s in id_map})
-        write_tombstones(dest, new_segments, gen, merged, extra, key)
-    return dest.commit(new_segments, field_stats, ts_path, extra=extra)
+    return commit_segments(spark, dest, dsnap, new_segments, extra,
+                           [(dest, dsnap, {s: s for s in dsnap.seg_ids}),
+                            (src, ssnap, id_map)])
 
 
 def split_index(spark, src_dir: str, dest_dir: str,
@@ -772,42 +729,14 @@ def split_index(spark, src_dir: str, dest_dir: str,
         stats["origin"] = "split"
         stats["split_from"] = os.path.abspath(src_dir)
         kept.append(stats)
-    field_stats = {
-        "doc_count": int(sum(s["num_docs"] for s in kept)),
-        "sum_total_term_freq": int(sum(
-            s.get("sum_token_len", s["sum_doc_len"]) for s in kept)),
-    }
-    ts_path = compute_term_stats(
-        spark, dest, want, os.path.join(dest_dir, "term_stats", "gen-1"))
     extra = {k: v for k, v in (snap.extra or {}).items()
              if k in ("store_positions", "codec_version", "payloads",
                       "index_sort", "doc_id_col")}
     extra["num_segments"] = len(want)
-    # slice live-docs to the kept segments (IndexSplitter copies .liv)
-    from .delete import load_deletes, write_tombstones
-    for key in ("deletes", "soft_deletes"):
-        write_tombstones(dest, kept, 1,
-                         load_deletes(src, snap, seg_ids=want, key=key),
-                         extra, key)
-    # slice docvalues-update overlays the same way
-    from .docvalues import _overlay_path
-    opath = _overlay_path(src, snap)
-    if opath is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        opdf = pd.read_parquet(
-            opath, filters=[("seg_id", "in", want)])
-        if len(opdf):
-            dv_dir = os.path.join(dest_dir, "dv_updates")
-            os.makedirs(dv_dir, exist_ok=True)
-            out = os.path.join(dv_dir, f"gen-1-{uuid.uuid4().hex[:8]}")
-            os.makedirs(out, exist_ok=True)
-            pq.write_table(pa.Table.from_pandas(opdf,
-                                                preserve_index=False),
-                           os.path.join(out, "part-0.parquet"))
-            extra["dv_updates"] = os.path.relpath(out, dest_dir)
-            extra["num_dv_updates"] = int(len(opdf))
-    return dest.commit(kept, field_stats, ts_path, extra=extra)
+    # the kept segments' tombstones and docvalues updates come along
+    # (IndexSplitter copies .liv)
+    return commit_segments(spark, dest, None, kept, extra,
+                           [(src, snap, {s: s for s in want})])
 
 
 def _split_tombstoned(spark, src_dir: str, out: str, seg_ids: list[int],
@@ -821,7 +750,7 @@ def _split_tombstoned(spark, src_dir: str, out: str, seg_ids: list[int],
     driver."""
     from pyspark.sql import functions as F
 
-    from .delete import carry_tombstones, ids_by_segment
+    from .delete import _commit_tombstones, _union, ids_by_segment
     part = split_index(spark, src_dir, out, seg_ids)
     cat = SnapshotCatalog(out)
     meta = spark.read.parquet(
@@ -829,11 +758,9 @@ def _split_tombstoned(spark, src_dir: str, out: str, seg_ids: list[int],
           for sid in part.seg_ids])
     rows = unwanted(meta).select(F.col("seg_id").cast("int"),
                                  F.col("local_doc_id").cast("int"))
-    extra = dict(part.extra or {})
-    carry_tombstones(cat, part, extra, [], part.snapshot_id + 1,
-                     part.segments, add=ids_by_segment(rows.toPandas()))
-    return cat.commit(part.segments, part.field_stats,
-                      part.term_stats_path, extra=extra)
+    add = ids_by_segment(rows.toPandas())
+    return _commit_tombstones(out, "deletes",
+                              lambda c, s, t: _union(t, add))
 
 
 def multi_pass_split(spark, src_dir: str, out_dirs: list[str]):

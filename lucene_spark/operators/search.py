@@ -2630,15 +2630,12 @@ class Searcher:
         cluster actually runs: a single postings scan fetches the union of
         all queries' terms (one pushed-down ``In`` filter), each segment is
         decoded ONCE into a shared block cache and every query is scored
-        against it, and one window rank yields per-query top-k. Job
-        overhead and segment decode amortize over the workload instead of
-        per query.
+        against it. Job overhead and segment decode amortize over the
+        workload instead of per query. Each query's ≤ k·S per-segment
+        candidates are merged on the driver, as :meth:`search` merges.
 
         Returns DataFrame (query_id string, doc_id long, score float,
         rank int)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         resolved: dict[str, object] = {}
         for qid, q in queries.items():
             if isinstance(q, str):
@@ -2669,12 +2666,19 @@ class Searcher:
                         "score": s.astype(np.float32)}))
             return pd.concat(parts, ignore_index=True) if parts else None
 
-        res = self.map_segments(union_terms, seg_many, out_schema, cache)
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                   F.asc("doc_id"))
-        return (res.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("query_id", "doc_id", "score", "rank"))
+        cand = self.map_segments(union_terms, seg_many, out_schema,
+                                 cache).toPandas()
+        tops = []
+        for qid, c in cand.groupby("query_id"):
+            g, s = _topk_merge(c["doc_id"].to_numpy(np.int64),
+                               c["score"].to_numpy(np.float32), k)
+            tops.append(pd.DataFrame({
+                "query_id": qid, "doc_id": g, "score": s,
+                "rank": np.arange(1, len(g) + 1, dtype=np.int32)}))
+        if not tops:
+            return empty_frame(self.spark, out_schema + ", rank int")
+        return local_frame(self.spark, pd.concat(tops, ignore_index=True),
+                           out_schema + ", rank int")
 
     def explain(self, query, doc_id: int) -> dict:
         """Score breakdown for one document (Weight.explain role:

@@ -11,9 +11,10 @@ A merge streams the term-sorted inputs the same way: its tasks read the
 segment files by term or doc-id range, so it needs neither a range shuffle
 nor a broadcast.
 
-Tombstones are written on the driver, which holds them as every reader
-does; finding a term's docs is one fan-out. So ``delete.py`` neither
-shuffles nor maps partitions by hand.
+Tombstones and docvalues updates are written on the driver, which holds
+them as every reader does; finding a term's docs is one fan-out. So
+neither ``delete.py`` nor ``docvalues.py`` shuffles or maps partitions by
+hand, and only the one segment-set commit builds the term dictionary.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ PACKAGE = Path(lucene_spark.__file__).parent
 
 def _call_sites(attr: str) -> list[tuple[str, str]]:
     """``(path relative to the package, enclosing qualified name)`` of
-    every ``.<attr>(...)`` call in the package."""
+    every ``.<attr>(...)`` or ``<attr>(...)`` call in the package."""
     sites = []
 
     def visit(node, scope):
@@ -38,8 +39,8 @@ def _call_sites(attr: str) -> list[tuple[str, str]]:
                                   ast.ClassDef)):
                 inner = scope + (child.name,)
             if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == attr):
+                    and attr in (getattr(child.func, "attr", None),
+                                 getattr(child.func, "id", None))):
                 sites.append((rel, ".".join(scope)))
             visit(child, inner)
 
@@ -71,3 +72,15 @@ def test_delete_has_no_shuffle_or_partition_map():
         sites = [s for s in _call_sites(attr)
                  if s[0] == "operators/delete.py"]
         assert sites == [], attr
+
+
+def test_docvalues_has_no_shuffle_or_partition_map():
+    for attr in ("groupBy", "repartitionByRange", "mapInPandas"):
+        sites = [s for s in _call_sites(attr)
+                 if s[0] == "operators/docvalues.py"]
+        assert sites == [], attr
+
+
+def test_one_term_stats_call_site():
+    assert _call_sites("compute_term_stats") == [
+        ("operators/build.py", "commit_segments")]

@@ -60,7 +60,7 @@ def main() -> None:
                 F.concat(F.lit("x"), (F.col("doc_id") % 401).cast("string")))))
 
     t0 = time.time()
-    build_index(spark, docs, idx, num_segments=n_segs, compute_stats=False)
+    build_index(spark, docs, idx, num_segments=n_segs)
     t_build = time.time() - t0
     print(f"build: {n_docs} docs, {n_segs} segments, {t_build:.1f}s "
           f"({n_docs / t_build:,.0f} docs/s), driver RSS {rss_mb():.0f} MB")
