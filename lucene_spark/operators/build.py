@@ -683,7 +683,9 @@ def commit_segments(spark, catalog: SnapshotCatalog, base,
     docs were merged, rebuilt or not copied. ``soft_add`` ({seg_id: local
     ids}) joins the soft tombstones: a merge's retained soft deletes. The
     state goes through its driver-side writers, which refuse an address
-    outside ``segments``."""
+    outside ``segments``. A file whose one carry is this index's own base
+    snapshot with every segment kept under its id is reused as it is: an
+    append that rebuilds no segment writes no state."""
     from .delete import _FILES, _union, load_deletes, write_tombstones
     from .docvalues import load_updates, write_updates
     segments = sorted(segments, key=lambda s: s["seg_id"])
@@ -697,28 +699,43 @@ def commit_segments(spark, catalog: SnapshotCatalog, base,
         spark, catalog, [s["seg_id"] for s in segments],
         os.path.join(catalog.root, "term_stats", f"gen-{gen}"))
     # the state keys and their counts come from the carried snapshots only
-    state = {k for key, (_, count) in _FILES.items() for k in (key, count)}
+    state = {k for key, (_, count, _) in _FILES.items() for k in (key, count)}
     extra = {k: v for k, v in extra.items() if k not in state}
-    for key in _FILES:
-        add = soft_add if key == "soft_deletes" else None
-        held = [(c, snap, m) for c, snap, m in carry
-                if (snap.extra or {}).get(key)]
-        if not held and not add:
+
+    def held(key: str, add=None):
+        """The carries that hold a ``key`` file; ``None`` when that is the
+        base's file alone, kept whole under its seg ids with nothing to
+        ``add``: ``extra`` then points at it as it is."""
+        out = [(c, snap, m) for c, snap, m in carry
+               if (snap.extra or {}).get(key)]
+        if (not add and len(out) == 1 and out[0][1] is base
+                and out[0][0].root == catalog.root
+                and all(out[0][2].get(s) == s for s in base.seg_ids)):
+            extra.update({k: base.extra[k] for k in (key, _FILES[key][1])
+                          if k in base.extra})
+            return None
+        return out
+
+    # hard and soft tombstones
+    for key, add in (("deletes", {}), ("soft_deletes", soft_add or {})):
+        carried = held(key, add)
+        if carried is None or not (carried or add):
             continue
-        if key == "dv_updates":
-            rows = []
-            for c, snap, m in held:
-                r = load_updates(c, snap)
-                r = r[r["seg_id"].isin(list(m))]
-                rows.append(r.assign(seg_id=r["seg_id"].map(m)))
-            write_updates(catalog, segments, gen,
-                          pd.concat(rows, ignore_index=True), extra)
-            continue
-        kept = {m[s]: ids for c, snap, m in held
+        kept = {m[s]: ids for c, snap, m in carried
                 for s, ids in load_deletes(c, snap, key=key).items()
                 if s in m}
-        write_tombstones(catalog, segments, gen, _union(kept, add or {}),
-                         extra, key)
+        write_tombstones(catalog, segments, gen, _union(kept, add), extra,
+                         key)
+    # docvalues updates
+    carried = held("dv_updates")
+    if carried:
+        rows = []
+        for c, snap, m in carried:
+            r = load_updates(c, snap)
+            r = r[r["seg_id"].isin(list(m))]
+            rows.append(r.assign(seg_id=r["seg_id"].map(m)))
+        write_updates(catalog, segments, gen,
+                      pd.concat(rows, ignore_index=True), extra)
     return catalog.commit(segments, field_stats, ts_path, extra=extra)
 
 

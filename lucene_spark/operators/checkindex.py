@@ -181,7 +181,7 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
     # raw table: known segments, ids in range, no duplicate rows and a
     # count that matches the snapshot's
     from .delete import _FILES, check_addresses
-    for key, (_, count_key) in _FILES.items():
+    for key, (_, count_key, address) in _FILES.items():
         rel = (snap.extra or {}).get(key)
         totals[count_key] = 0
         if not rel:
@@ -193,9 +193,7 @@ def check_index(index_dir: str, snapshot_id: int | None = None,
                             raw["local_doc_id"], key)
         except ValueError as e:
             raise CheckIndexError(str(e)) from None
-        address = [c for c in ("seg_id", "local_doc_id", "field")
-                   if c in raw.columns]
-        _check(int(raw.duplicated(address).sum()) == 0, -1,
+        _check(int(raw.duplicated(list(address)).sum()) == 0, -1,
                f"duplicate {key} rows")
         _check(int(snap.extra.get(count_key, -1)) == len(raw), -1,
                f"extra.{count_key} != {key} table rows")

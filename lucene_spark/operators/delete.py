@@ -35,11 +35,15 @@ import pandas as pd
 from ..functions.codec import decode_postings
 from ..sources.catalog import SnapshotCatalog
 
-#: {extra key: (directory under the index root, extra count key)} of the
-#: per-doc state files each generation writes
-_FILES = {"deletes": ("deletes", "num_deleted"),
-          "soft_deletes": ("deletes", "num_soft_deleted"),
-          "dv_updates": ("dv_updates", "num_dv_updates")}
+#: {extra key: (directory under the index root, extra count key, the
+#: columns that address a row)} of the per-doc state files each
+#: generation writes; a file holds each address at most once
+_FILES = {"deletes": ("deletes", "num_deleted",
+                      ("seg_id", "local_doc_id")),
+          "soft_deletes": ("deletes", "num_soft_deleted",
+                           ("seg_id", "local_doc_id")),
+          "dv_updates": ("dv_updates", "num_dv_updates",
+                         ("seg_id", "local_doc_id", "field"))}
 
 
 def ids_by_segment(pdf: pd.DataFrame) -> dict[int, np.ndarray]:
@@ -94,7 +98,7 @@ def write_generation(catalog: SnapshotCatalog, key: str, gen: int,
     row count; an empty table drops ``key`` and counts 0."""
     import pyarrow.parquet as pq
 
-    subdir, count_key = _FILES[key]
+    subdir, count_key, _ = _FILES[key]
     if not table.num_rows:
         extra.pop(key, None)
         extra[count_key] = 0

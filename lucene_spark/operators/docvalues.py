@@ -56,18 +56,20 @@ def load_updates(catalog: SnapshotCatalog, snap) -> pd.DataFrame:
 def write_updates(catalog: SnapshotCatalog, segments: list[dict], gen: int,
                   rows: pd.DataFrame, extra: dict) -> None:
     """The one overlay writer: ``rows`` become generation ``gen``'s
-    overlay file, the latest ``gen`` of each (seg, doc, field) only,
-    sorted by it, in the order of ``_COLUMNS``. An address outside
+    overlay file, the last row of each (seg, doc, field) only, sorted by
+    it, in the order of ``_COLUMNS``. Last-write-wins follows row order,
+    not ``gen``: callers put the previous rows first and the new ones
+    last, and a carried overlay keeps the ``gen`` its own index gave it,
+    which another index's generations need not exceed. An address outside
     ``segments`` raises ``ValueError``, as a tombstone's does."""
     import pyarrow as pa
 
-    from .delete import check_addresses, write_generation
+    from .delete import _FILES, check_addresses, write_generation
     check_addresses(segments, rows["seg_id"], rows["local_doc_id"],
                     "docvalues update")
-    rows = (rows.sort_values(["seg_id", "local_doc_id", "field", "gen"],
-                             kind="stable")
-            .drop_duplicates(["seg_id", "local_doc_id", "field"],
-                             keep="last"))
+    address = list(_FILES["dv_updates"][2])
+    rows = (rows.drop_duplicates(address, keep="last")
+            .sort_values(address, kind="stable"))
     write_generation(catalog, "dv_updates", gen, pa.table({
         "seg_id": pa.array(rows["seg_id"], pa.int32()),
         "local_doc_id": pa.array(rows["local_doc_id"], pa.int32()),

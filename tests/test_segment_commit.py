@@ -91,6 +91,30 @@ def test_add_indexes_carries_both_overlays(spark, tmp_path):
     assert totals["num_dv_updates"] == len(updated_src) + len(updated_dst)
 
 
+def test_update_after_import_wins_over_the_carried_overlay(spark, tmp_path):
+    """The source's overlay rows keep the ``gen`` of the source's
+    generations, which may exceed the destination's: an update after the
+    import must still replace them."""
+    src_corpus = generate_corpus(200, seed=31)
+    dst_corpus = generate_corpus(60, seed=5)
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    build_index(spark, _frame(spark, src_corpus, 1000), src, num_segments=3)
+    for i in range(4):
+        update_numeric_docvalue(spark, src, "else", FIELD, 100 + i)
+    build_index(spark, _frame(spark, dst_corpus), dst, num_segments=2)
+    add_indexes(spark, dst, src)
+    cat = SnapshotCatalog(dst)
+    assert load_updates(cat, cat.load())["gen"].max() > \
+        cat.load().snapshot_id
+    update_numeric_docvalue(spark, dst, "else", FIELD, 500)
+    want = {d: d % 7 for d in
+            [*(src_corpus.doc_id + 1000), *dst_corpus.doc_id]}
+    want.update({d: 500 for d in _docs(src_corpus, "else", 1000)})
+    want.update({d: 500 for d in _docs(dst_corpus, "else")})
+    assert _resolved(spark, dst) == want
+    check_index(dst)
+
+
 def _spark_written_overlay(spark, d: str, rows) -> None:
     """Commit ``rows`` as an overlay parquet directory of part files
     written by Spark, the layout earlier generations left in
@@ -298,7 +322,8 @@ def test_search_many_ranks_like_search_in_one_job(spark, small_index):
 
 def test_tombstones_and_overlay_survive_an_append(spark, tmp_path):
     """An append build keeps the existing segments' tombstones and overlay
-    rows, rewritten into the new generation unchanged."""
+    rows: it rebuilds no segment, so the new generation points at the same
+    files."""
     corpus = generate_corpus(200, seed=31)
     d = str(tmp_path / "idx")
     build_index(spark, _frame(spark, corpus[corpus.doc_id < 150]), d,
@@ -315,4 +340,6 @@ def test_tombstones_and_overlay_survive_an_append(spark, tmp_path):
         {s: v.tolist() for s, v in load_deletes(cat, before).items()}
     assert load_updates(cat, after).to_dict("list") == \
         load_updates(cat, before).to_dict("list")
+    for key in ("deletes", "num_deleted", "dv_updates", "num_dv_updates"):
+        assert after.extra[key] == before.extra[key], key
     check_index(d)
