@@ -637,31 +637,46 @@ def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
 
 def compute_term_stats(spark, catalog: SnapshotCatalog, seg_ids: list[int],
                        out_dir: str) -> str:
-    """Global term statistics: df/ttf aggregated across ALL segments —
-    the reference gathers these once per query across leaves
-    (``index/TermStates.java:184-190``); we precompute them as a table.
+    """Global term statistics: df/ttf summed per term across the segments
+    ``seg_ids`` — the reference gathers these once per query across leaves
+    (``index/TermStates.java:184-190``); we precompute them as a table,
+    ``out_dir``, of columns ``term string, df long, ttf long``.
 
-    Skew note: inputs are already per-segment pre-aggregated rows (at most
-    one row per (term, segment)), so a term's reduce-side group is bounded
-    by the segment count — the map-side combine happened inside the segment
-    kernel. No salting needed on this path.
+    One shuffle-free fan-out over the term ranges a merge cuts
+    (:func:`.merge.term_ranges`): each task reads its range of every
+    segment's ``(term, df, ttf)`` with a pushed filter, sums per term with
+    pyarrow and writes one term-sorted part file, numbered in range order,
+    so the directory reads back in global term order and point/prefix
+    probes (suggest, spell, query stats) prune row groups via parquet
+    min/max. A task's work is bounded by its range's rows: at most one row
+    per (term, segment), since each segment's kernel already summed its
+    own. The parts land in a fresh directory renamed to ``out_dir``, which
+    replaces any leftover of a crashed commit."""
+    import pyarrow.parquet as pq
 
-    Layout: the dictionary is written range-bucketed by term (one sorted
-    file per segment, global term order across them) — every bucket keeps
-    term-sorted row groups, so point/prefix probes (suggest, spell, query
-    stats) still prune via parquet min/max, while the write parallelizes:
-    a single-reducer write would serialize the entire vocabulary through
-    one task (billions of terms at 10^12-doc scale). Vocabulary grows with
-    the corpus, and so does the segment count, and with it the file
-    count."""
-    from pyspark.sql import functions as F
-    paths = [os.path.join(catalog.segment_dir(s), "postings.parquet") for s in seg_ids]
-    stats = (spark.read.parquet(*paths)
-             .groupBy("term")
-             .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf")))
-    (stats.repartitionByRange(max(1, len(seg_ids)), "term")
-     .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(out_dir))
+    from ..session import ensure_shipped
+    from .merge import term_ranges
+    from .search import fan_out
+    ensure_shipped(spark)
+    seg_dirs = {s: catalog.segment_dir(s) for s in seg_ids}
+    tmp = os.path.join(os.path.dirname(out_dir), f"_tmp-{uuid.uuid4().hex}")
+    os.makedirs(tmp)
+
+    def aggregate(item):
+        i, filters = item
+        t = pa.concat_tables([pq.read_table(
+            os.path.join(d, "postings.parquet"),
+            columns=["term", "df", "ttf"], filters=filters)
+            for d in seg_dirs.values()])
+        t = t.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")])
+        write_segment_file(pa.table({
+            "term": t["term"], "df": t["df_sum"], "ttf": t["ttf_sum"],
+        }).sort_by("term"), os.path.join(tmp, f"part-{i:05d}.parquet"))
+
+    fan_out(spark, list(enumerate(term_ranges(spark, seg_dirs))), aggregate,
+            "part int").collect()
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.rename(tmp, out_dir)
     return out_dir
 
 

@@ -101,82 +101,91 @@ def check_segment(seg_dir: str, seg_id: int,
             "sum_doc_len": int(meta["doc_len"].sum())}
 
 
+def check_dictionary(path: str, num_postings: int, sum_ttf: int) -> None:
+    """Verify a committed term dictionary against its segments' totals:
+    its part files, in the order readers take them, hold strictly
+    increasing terms (so the parts are in term order and disjoint, one
+    row per term), and Σdf and Σttf equal the segments' posting count and
+    token count. Streamed one row group at a time, so the driver holds at
+    most one row group of the dictionary."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    prev, df, ttf = None, 0, 0
+    for part in sorted(ds.dataset(path, format="parquet").files):
+        f = pq.ParquetFile(part)
+        for i in range(f.num_row_groups):
+            t = f.read_row_group(i, columns=["term", "df", "ttf"])
+            terms = t.column("term").to_numpy(zero_copy_only=False)
+            if prev is not None:
+                terms = np.concatenate(([prev], terms))
+            _check(bool(np.all(terms[:-1] < terms[1:])), -1,
+                   f"term dictionary not strictly increasing in {part}")
+            prev = terms[-1] if len(terms) else prev
+            df += int(t.column("df").to_numpy().sum())
+            ttf += int(t.column("ttf").to_numpy().sum())
+    _check(df == num_postings, -1,
+           "term dictionary sum(df) != total postings")
+    _check(ttf == sum_ttf, -1,
+           "term dictionary sum(ttf) != total indexed tokens")
+
+
 def check_index(index_dir: str, snapshot_id: int | None = None,
                 spark=None) -> dict:
-    """Verify every segment of a snapshot + the snapshot-level stats.
-    Returns totals; raises :class:`CheckIndexError` on any violation.
-    With ``spark``, segments are verified in parallel executor tasks
-    (:func:`~.search.fan_out`); only (counts | error) rows return to the
-    driver."""
+    """Verify every segment of a snapshot, the snapshot-level stats and
+    the term dictionary. Returns totals; raises :class:`CheckIndexError`
+    on any violation. With ``spark``, segments are verified in parallel
+    executor tasks (:func:`~.search.fan_out`); only (counts | error) rows
+    return to the driver."""
     catalog = SnapshotCatalog(index_dir)
     snap = catalog.load(snapshot_id)
     if snap is None:
         raise CheckIndexError(f"no snapshot in {index_dir}")
     store_positions = bool(snap.extra.get("store_positions", True))
-    totals = {"segments": 0, "num_docs": 0, "num_terms": 0,
-              "num_postings": 0, "sum_doc_len": 0, "sum_ttf": 0}
+    counts = ("num_docs", "num_terms", "num_postings", "sum_ttf",
+              "sum_doc_len")      # what check_segment returns
+    totals = {"segments": 0, **dict.fromkeys(counts, 0)}
     lineage = {s["seg_id"]: s for s in snap.segments}
+
+    def row(seg_id):
+        """One segment's counts, or the error its check raised."""
+        try:
+            return {**check_segment(catalog.segment_dir(seg_id), seg_id,
+                                    store_positions),
+                    "seg_id": seg_id, "error": ""}
+        except CheckIndexError as e:
+            return {**dict.fromkeys(counts, 0), "seg_id": seg_id,
+                    "error": str(e)}
 
     if spark is not None and snap.seg_ids:
         from .search import fan_out
-
-        def run(seg):
-            seg_id, seg_dir = seg
-            try:
-                res = {**check_segment(seg_dir, seg_id, store_positions),
-                       "error": ""}
-            except CheckIndexError as e:
-                res = {"num_docs": 0, "num_terms": 0, "num_postings": 0,
-                       "sum_ttf": 0, "sum_doc_len": 0, "error": str(e)}
-            return pd.DataFrame([{**res, "seg_id": seg_id}])
-
-        rows = fan_out(spark, [(int(s), catalog.segment_dir(s))
-                               for s in snap.seg_ids], run,
-                       "num_docs long, num_terms long, num_postings long, "
-                       "sum_ttf long, sum_doc_len long, seg_id int, "
-                       "error string").collect()
-        per_seg = {int(r["seg_id"]): r for r in rows}
-        for s in snap.seg_ids:
-            r = per_seg[int(s)]
-            if r["error"]:
-                raise CheckIndexError(r["error"])
-            results = {k: int(r[k]) for k in
-                       ("num_docs", "num_terms", "num_postings",
-                        "sum_doc_len")}
-            _check(results["num_docs"] == lineage[s]["num_docs"], s,
-                   "lineage num_docs mismatch")
-            _check(results["sum_doc_len"] == lineage[s]["sum_doc_len"], s,
-                   "lineage sum_doc_len mismatch")
-            _check(int(r["sum_ttf"])
-                   == lineage[s].get("sum_token_len",
-                                     lineage[s]["sum_doc_len"]), s,
-                   "lineage sum_token_len != postings token count")
-            totals["segments"] += 1
-            totals["sum_ttf"] += int(r["sum_ttf"])
-            for k in ("num_docs", "num_terms", "num_postings",
-                      "sum_doc_len"):
-                totals[k] += results[k]
+        per_seg = {int(r["seg_id"]): r.asDict() for r in fan_out(
+            spark, snap.seg_ids, lambda s: pd.DataFrame([row(s)]),
+            ", ".join(f"{k} long" for k in counts)
+            + ", seg_id int, error string").collect()}
     else:
-        for s in snap.seg_ids:
-            res = check_segment(catalog.segment_dir(s), s, store_positions)
-            _check(res["num_docs"] == lineage[s]["num_docs"], s,
-                   "lineage num_docs mismatch")
-            _check(res["sum_doc_len"] == lineage[s]["sum_doc_len"], s,
-                   "lineage sum_doc_len mismatch")
-            _check(res["sum_ttf"]
-                   == lineage[s].get("sum_token_len",
-                                     lineage[s]["sum_doc_len"]), s,
-                   "lineage sum_token_len != postings token count")
-            totals["segments"] += 1
-            totals["sum_ttf"] += res["sum_ttf"]
-            for k in ("num_docs", "num_terms", "num_postings",
-                      "sum_doc_len"):
-                totals[k] += res[k]
+        per_seg = {s: row(s) for s in snap.seg_ids}
+    for s in snap.seg_ids:
+        res = per_seg[s]
+        if res["error"]:
+            raise CheckIndexError(res["error"])
+        _check(res["num_docs"] == lineage[s]["num_docs"], s,
+               "lineage num_docs mismatch")
+        _check(res["sum_doc_len"] == lineage[s]["sum_doc_len"], s,
+               "lineage sum_doc_len mismatch")
+        _check(res["sum_ttf"]
+               == lineage[s].get("sum_token_len", lineage[s]["sum_doc_len"]),
+               s, "lineage sum_token_len != postings token count")
+        totals["segments"] += 1
+        for k in counts:
+            totals[k] += int(res[k])
     _check(totals["num_docs"] == int(snap.field_stats["doc_count"]), -1,
            "field_stats doc_count != sum of segments")
     _check(totals["sum_ttf"]
            == int(snap.field_stats["sum_total_term_freq"]), -1,
            "field_stats sum_total_term_freq != total indexed tokens")
+    if snap.term_stats_path:
+        check_dictionary(snap.term_stats_path, totals["num_postings"],
+                         totals["sum_ttf"])
     # per-doc state — hard and soft tombstones, docvalues updates — on the
     # raw table: known segments, ids in range, no duplicate rows and a
     # count that matches the snapshot's

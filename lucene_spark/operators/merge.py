@@ -30,6 +30,7 @@ import json
 import os
 import shutil
 import uuid
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -47,6 +48,34 @@ _PART_STATS = ("num_terms long, num_postings long, sum_ttf long, "
 #: the input postings bytes per part file: AQE's default advisory
 #: partition size, which sized the part files when a merge shuffled by term
 _PART_BYTES = 64 << 20
+
+
+def term_ranges(spark, seg_dirs: dict[int, str]) -> list:
+    """The term ranges a rewrite of the segments ``seg_dirs`` ({seg_id:
+    dir}) splits their postings into, in term order, as pushed parquet
+    filters (``None`` for the one range of all terms): one range per
+    _PART_BYTES of input postings (``bytes_compressed`` in each input's
+    ``stats.json``), at most the default parallelism. The
+    cut points are the quantiles of the largest input's dictionary; this
+    driver read is bounded by that one segment's ``term`` column, and no
+    sampling job runs."""
+    import pyarrow.parquet as pq
+    lineage = {s: json.loads(Path(d, "stats.json").read_text())
+               for s, d in seg_dirs.items()}
+    size = sum(int(st["bytes_compressed"]) for st in lineage.values())
+    n = max(1, min(spark.sparkContext.defaultParallelism,
+                   -(-size // _PART_BYTES)))
+    cuts = []
+    if n > 1:
+        largest = max(seg_dirs, key=lambda s: (lineage[s]["num_terms"], s))
+        terms = np.sort(pq.read_table(
+            os.path.join(seg_dirs[largest], "postings.parquet"),
+            columns=["term"]).column("term").to_numpy(zero_copy_only=False))
+        cuts = sorted({terms[len(terms) * i // n] for i in range(1, n)}) \
+            if len(terms) else []
+    bounds = [None, *cuts, None]
+    return [[("term", op, v) for op, v in ((">=", lo), ("<", hi))
+             if v is not None] or None for lo, hi in zip(bounds, bounds[1:])]
 
 
 def _doc_map(doc_bases: dict, deletes: dict, table: dict | None = None):
@@ -331,34 +360,20 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     new_soft = ({new_seg_id: np.frombuffer(got["soft"], "<i4")}
                 if retained else {})
 
-    # Phase 2 — one fan-out over n term ranges and n merged-id ranges, one
-    # part file each: one per _PART_BYTES of input postings, at most P.
-    # Term cut points: the quantiles of the largest input's dictionary.
-    # This driver read is bounded by that one segment's `term` column; no
-    # sampling job runs. Every task's closure carries the merged segments'
-    # tombstones (8 bytes each, at most their num_docs), shipped once per
-    # task, 2n ≤ 2P times. Under an index sort a doc-id range's old ids
-    # scatter, so each doc-id item reads every input's doc_meta whole:
-    # doc_meta is read n times (once below _PART_BYTES).
-    P = spark.sparkContext.defaultParallelism
-    size = sum(int(stats_by_seg[s]["bytes_compressed"]) for s in seg_ids)
-    n = max(1, min(P, -(-size // _PART_BYTES)))
-    cuts = []
-    if n > 1:
-        largest = max(seg_ids,
-                      key=lambda s: (stats_by_seg[s]["num_terms"], s))
-        terms = np.sort(pq.read_table(
-            os.path.join(seg_dirs[largest], "postings.parquet"),
-            columns=["term"]).column("term").to_numpy(zero_copy_only=False))
-        cuts = sorted({terms[len(terms) * i // n] for i in range(1, n)}) \
-            if len(terms) else []
-    term_bounds = [None, *cuts, None]
+    # Phase 2 — one fan-out over n term ranges (term_ranges) and n
+    # merged-id ranges, one part file each. Every task's closure carries
+    # the merged segments' tombstones (8 bytes each, at most their
+    # num_docs), shipped once per task, 2n ≤ 2P times. Under an index sort
+    # a doc-id range's old ids scatter, so each doc-id item reads every
+    # input's doc_meta whole: doc_meta is read n times (once below
+    # _PART_BYTES).
+    term_filters = term_ranges(spark, seg_dirs)
+    n = len(term_filters)
     doc_bounds = sorted({n_docs * i // n for i in range(n + 1)})
     if len(doc_bounds) == 1:
         doc_bounds *= 2          # an empty merge still writes doc_meta
-    items = [("postings", i, lo, hi)
-             for i, (lo, hi) in enumerate(zip(term_bounds, term_bounds[1:]))]
-    items += [("doc_meta", i, lo, hi)
+    items = [("postings", i, f) for i, f in enumerate(term_filters)]
+    items += [("doc_meta", i, (lo, hi))
               for i, (lo, hi) in enumerate(zip(doc_bounds, doc_bounds[1:]))]
     # interleave the kinds, so each task gets a share of both
     items.sort(key=lambda it: (it[1], it[0] == "doc_meta"))
@@ -382,9 +397,9 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         return os.path.join(tmp, f"{name}.parquet", f"part-{i:05d}.parquet")
 
     def rewrite(item):
-        kind, i, lo, hi = item
+        kind, i, rng = item
         if kind == "postings":
-            out = reencode(lo, hi)
+            out = reencode(rng)
             write_segment_file(pa.Table.from_pandas(
                 out, schema=out_schema, preserve_index=False),
                 part_path(kind, i))
@@ -396,7 +411,7 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                                   ("doc_bytes", "tf_bytes", "pos_bytes",
                                    "block_last", "impact_bytes")))],
                 "num_docs": [0], "sum_doc_len": [0]})
-        meta = remap_meta(lo, hi)
+        meta = remap_meta(*rng)
         write_segment_file(meta, part_path(kind, i))
         return pd.DataFrame({
             "num_terms": [0], "num_postings": [0], "sum_ttf": [0],
@@ -436,18 +451,16 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         return pa.concat_tables(parts, promote_options="permissive") \
             .sort_by("local_doc_id")
 
-    def reencode(lo, hi):
+    def reencode(filters):
         """One term range: decode every (term, segment) row, concatenate
         per term in segment order at the merged ids, then re-encode ALL
         the range's terms in one batched pass (``encode_postings_batch``)
         — per-term Python/Arrow overhead would dominate a merge otherwise."""
         out_cols = POSTINGS_COLUMNS + (["pay_bytes"] if has_payloads
                                        else [])
-        filters = ([("term", ">=", lo)] if lo is not None else []) \
-            + ([("term", "<", hi)] if hi is not None else [])
         pdf = pd.concat(
             [pd.read_parquet(os.path.join(seg_dirs[s], "postings.parquet"),
-                             filters=filters or None) for s in seg_ids],
+                             filters=filters) for s in seg_ids],
             ignore_index=True)
         if len(pdf) == 0:
             return pd.DataFrame(columns=out_cols)
@@ -703,8 +716,8 @@ def split_index(spark, src_dir: str, dest_dir: str,
     :func:`add_indexes`; the source index is left untouched.
 
     Scale note: segment payloads are copied file-by-file (no decode);
-    only term_stats is recomputed, as one Spark aggregation over the
-    kept segments' postings."""
+    only term_stats is recomputed, by the commit's one fan-out over the
+    kept segments' postings (:func:`.build.compute_term_stats`)."""
     src = SnapshotCatalog(src_dir)
     snap = src.load()
     if snap is None:

@@ -3,9 +3,11 @@ aggregation path for skewed high-df terms.
 
 Two ways to obtain ``term_stats(term, df, ttf)``:
 
-* :func:`lucene_spark.operators.build.compute_term_stats` — the fast path:
-  aggregates the per-segment postings rows, which are already map-side
-  pre-aggregated (≤ 1 row per (term, segment)), so no key can be hot.
+* :func:`lucene_spark.operators.build.compute_term_stats` — the fast path,
+  every commit's dictionary: one shuffle-free fan-out over term ranges
+  sums the per-segment postings rows with pyarrow. Those rows are already
+  pre-aggregated (≤ 1 row per (term, segment)), so no range task holds
+  more than its range's rows times the segment count.
 * :func:`term_stats_from_tokens` (here) — the direct token-level job used
   for verification and for corpora indexed by other writers. Its input is
   one row PER TOKEN, so a source-code corpus makes near-universal terms

@@ -26,3 +26,24 @@ def spark():
          .getOrCreate())
     yield s
     s.stop()
+
+
+def _many_parts(monkeypatch):
+    """Every input byte fills a part: each merge and each term dictionary
+    writes as many term-range (and doc-id range) parts as the default
+    parallelism allows."""
+    from lucene_spark.operators import merge as merge_mod
+    monkeypatch.setattr(merge_mod, "_PART_BYTES", 1)
+
+
+@pytest.fixture()
+def many_parts(monkeypatch):
+    _many_parts(monkeypatch)
+
+
+@pytest.fixture(params=["one_part", "many_parts"])
+def part_layout(request, monkeypatch):
+    """Both layouts must write the same rows: one part file per directory
+    (every rewrite below 64 MB of input postings) and many."""
+    if request.param == "many_parts":
+        _many_parts(monkeypatch)

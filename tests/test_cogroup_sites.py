@@ -14,7 +14,8 @@ nor a broadcast.
 Tombstones and docvalues updates are written on the driver, which holds
 them as every reader does; finding a term's docs is one fan-out. So
 neither ``delete.py`` nor ``docvalues.py`` shuffles or maps partitions by
-hand, and only the one segment-set commit builds the term dictionary.
+hand, and only the one segment-set commit builds the term dictionary, with
+one fan-out over term ranges and no Spark writer.
 """
 
 from __future__ import annotations
@@ -27,9 +28,10 @@ import lucene_spark
 PACKAGE = Path(lucene_spark.__file__).parent
 
 
-def _call_sites(attr: str) -> list[tuple[str, str]]:
+def _call_sites(attr: str, calls: bool = True) -> list[tuple[str, str]]:
     """``(path relative to the package, enclosing qualified name)`` of
-    every ``.<attr>(...)`` or ``<attr>(...)`` call in the package."""
+    every ``.<attr>(...)`` or ``<attr>(...)`` call in the package, or with
+    ``calls=False`` of every ``.<attr>`` attribute read."""
     sites = []
 
     def visit(node, scope):
@@ -40,7 +42,9 @@ def _call_sites(attr: str) -> list[tuple[str, str]]:
                 inner = scope + (child.name,)
             if (isinstance(child, ast.Call)
                     and attr in (getattr(child.func, "attr", None),
-                                 getattr(child.func, "id", None))):
+                                 getattr(child.func, "id", None))) or (
+                    not calls and isinstance(child, ast.Attribute)
+                    and child.attr == attr):
                 sites.append((rel, ".".join(scope)))
             visit(child, inner)
 
@@ -84,3 +88,15 @@ def test_docvalues_has_no_shuffle_or_partition_map():
 def test_one_term_stats_call_site():
     assert _call_sites("compute_term_stats") == [
         ("operators/build.py", "commit_segments")]
+
+
+def test_commit_has_no_shuffle_or_spark_writer():
+    """The dictionary is written by one fan-out over term ranges with
+    pyarrow, like the segment files; nothing on the commit path groups,
+    range-partitions, sorts or writes through Spark."""
+    for attr in ("groupBy", "repartitionByRange", "sortWithinPartitions",
+                 "write"):
+        sites = [s for s in _call_sites(attr, calls=False)
+                 if s[0] == "operators/build.py" and s[1].split(".")[0]
+                 in ("compute_term_stats", "commit_segments")]
+        assert sites == [], attr

@@ -180,26 +180,6 @@ def goldens():
         return json.load(f)
 
 
-def _many_parts(monkeypatch):
-    """Every input byte fills a part: each merge writes as many term and
-    doc-id range parts as the default parallelism allows."""
-    from lucene_spark.operators import merge as merge_mod
-    monkeypatch.setattr(merge_mod, "_PART_BYTES", 1)
-
-
-@pytest.fixture()
-def many_parts(monkeypatch):
-    _many_parts(monkeypatch)
-
-
-@pytest.fixture(params=["one_part", "many_parts"])
-def part_layout(request, monkeypatch):
-    """Both layouts must write the same rows: one part file per directory
-    (every merge below 64 MB of input postings) and many."""
-    if request.param == "many_parts":
-        _many_parts(monkeypatch)
-
-
 @pytest.mark.parametrize("case", GOLDEN_CASES)
 def test_merged_segment_matches_golden(spark, goldens, part_layout, case,
                                        tmp_path):
