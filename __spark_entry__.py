@@ -414,7 +414,7 @@ def _q_leading_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WildcardQuery('*er') accelerated as PrefixQuery('re') over the
     reversed dictionary — matches docs containing customer/filter/order."""
     s = _searcher_reversed(spark, sf_dir)
-    return s.docs_matching_any(s.expand_terms(like="re%"))
+    return s.docs_matching_any(s.expand_terms("prefix", "re"))
 
 
 def _q_reverse_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4939,12 +4939,12 @@ def _q_total_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _searcher(spark, sf_dir)
-    return s.docs_matching_any(s.expand_terms(like="du%"))
+    return s.docs_matching_any(s.expand_terms("prefix", "du"))
 
 
 def _q_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _searcher(spark, sf_dir)
-    return s.docs_matching_any(s.expand_terms(rlike="^qu.*y$"))
+    return s.docs_matching_any(s.expand_terms("wildcard", "qu*y"))
 
 
 def _q_high_freq_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4966,7 +4966,7 @@ def _q_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _searcher(spark, sf_dir)
-    return s.docs_matching_any(s.expand_terms(fuzzy=("dta", 1)))
+    return s.docs_matching_any(s.expand_terms("fuzzy", ("dta", 1)))
 
 
 def _q_term_in_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5123,7 +5123,8 @@ def _q_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_term_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _searcher(spark, sf_dir)
-    return s.docs_matching_any(s.expand_terms(between=("batch", "data")))
+    return s.docs_matching_any(
+        s.expand_terms("range", ("batch", "data", True, True)))
 
 
 def _q_term_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -224,15 +224,6 @@ def unordered_near_spans_over(streams, slop: int) -> list:
         pq.update_top()
 
 
-def spans_freq_f32(spans) -> float:
-    """SpanScorer freq over emitted spans: float32 += double
-    1/(1+width) per step (SpanScorer.java:106)."""
-    acc = np.float32(0.0)
-    for _, _, w in spans:
-        acc = np.float32(np.float64(acc) + 1.0 / (1.0 + w))
-    return float(acc)
-
-
 # ---------------------------------------------------------------------------
 # Batched (cross-document vectorized) exact kernels over TERM clauses
 #

@@ -29,7 +29,7 @@ Two execution strategies, mirroring Boolean scorer selection
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import cached_property, reduce
 
 import numpy as np
@@ -1788,78 +1788,48 @@ class Searcher:
         """Expand MultiTerm nodes against the term dictionary (the
         reference's rewrite(reader) step for MultiTermQuery:
         ``search/MultiTermQuery.java:55``)."""
-        import re as _re
         if isinstance(q, Q.MultiPhrase) and \
                 any(not isinstance(e, str) for s in q.slots for e in s):
             # "app* as a multi-phrase": multiterm slot entries expand
             # against the dictionary into the slot's alternative set
             # (the reference builds this with a TermsEnum walk —
-            # MultiPhraseQuery javadoc's prefixed-phrase example)
-            slots = []
-            for slot in q.slots:
-                flat: list[str] = []
-                for e in slot:
-                    if isinstance(e, str):
-                        flat.append(e)
-                    elif e[0] == "prefix":
-                        flat.extend(self.expand_terms(like=f"{e[1]}%"))
-                    elif e[0] == "wildcard":
-                        pat = "^" + "".join(
-                            ".*" if ch == "*" else "." if ch == "?"
-                            else _re.escape(ch) for ch in str(e[1])) + "$"
-                        flat.extend(self.expand_terms(rlike=pat))
-                    else:
-                        raise ValueError(
-                            f"multiphrase slot entry kind {e[0]!r}")
-                slots.append(tuple(dict.fromkeys(flat)))
-            return Q.MultiPhrase(tuple(slots))
+            # MultiPhraseQuery javadoc's prefixed-phrase example); slop
+            # and positions carry over
+            for e in (e for s in q.slots for e in s):
+                if not isinstance(e, str) and e[0] not in ("prefix",
+                                                           "wildcard"):
+                    raise ValueError(f"multiphrase slot entry kind {e[0]!r}")
+            return replace(q, slots=tuple(
+                tuple(dict.fromkeys(t for e in slot for t in (
+                    [e] if isinstance(e, str) else self.expand_terms(*e))))
+                for slot in q.slots))
         if isinstance(q, Q.FuzzyLikeThis):
             # FuzzyLikeThisQuery.rewrite (sandbox/queries/
             # FuzzyLikeThisQuery.java:118-255): per-source-term fuzzy
             # variant queues → boost²·idf rescoring → global top queue →
             # SHOULD sum over artificial-df=1 term queries
-            from pyspark.sql import functions as F
-
             from ..functions.analysis import analyze_text
             toks, _, _ = analyze_text(q.text)
-            src_terms = list(dict.fromkeys(toks))
-            src_dfs = self._global_dfs(src_terms)
+            variants = {t: self._fuzzy_boosts(t, q.max_edits,
+                                              q.max_variants_per_term,
+                                              t[:q.prefix_len])
+                        for t in dict.fromkeys(toks)}
+            dfs = self._global_dfs(list(variants) + [
+                v for vs in variants.values() for v, _ in vs])
             num_docs = self.doc_count
             if self.deletes:
                 num_docs -= sum(len(v) for v in self.deletes.values())
             scored: list[tuple[float, str]] = []
-            for t in src_terms:
-                cand = self._fuzzy_candidates(t, q.max_edits)
-                if q.prefix_len > 0:
-                    cand = cand.filter(
-                        F.col("term").startswith(t[:q.prefix_len]))
-                rows = (cand.withColumn(
-                            "_ml", F.least(F.length("term"),
-                                           F.lit(len(t))))
-                        .withColumn(
-                            "_boost",
-                            F.when(F.col("_d") == 0, F.lit(1.0))
-                             .otherwise(F.lit(1.0) - F.col("_d")
-                                        / F.col("_ml")))
-                        .orderBy(F.desc("_boost"), F.asc("term"))
-                        .limit(q.max_variants_per_term)
-                        .select("term", "_d", "df").collect())
-                if not rows:
+            for t, vs in variants.items():
+                if not vs:
                     continue
-                df_src = src_dfs.get(t, 0)
-                if df_src == 0:
-                    # integer-mean of the variants' dfs (:162-166)
-                    df_src = sum(int(r["df"]) for r in rows) // len(rows)
+                # else the integer-mean of the variants' dfs (:162-166)
+                df_src = dfs.get(t, 0) or \
+                    sum(dfs[v] for v, _ in vs) // len(vs)
                 idf = np.float32(
                     np.log((num_docs + 1) / (df_src + 1.0)) + 1.0)
-                for r in rows:
-                    d = int(r["_d"])
-                    b = (np.float32(1.0) if d == 0 else
-                         np.float32(1.0) - np.float32(d)
-                         / np.float32(min(len(r["term"]), len(t))))
-                    scored.append(
-                        (float(np.float32(np.float32(b * b) * idf)),
-                         r["term"]))
+                scored.extend((float(np.float32(np.float32(b * b) * idf)), v)
+                              for v, b in vs)
             # global ScoreTermQueue order: score desc, term asc (:362-365)
             scored.sort(key=lambda p: (-p[0], p[1]))
             top = scored[:q.max_num_terms]
@@ -1868,34 +1838,12 @@ class Searcher:
             return _FixedStatsTerms(tuple(t for _, t in top),
                                     tuple(s for s, _ in top))
         if isinstance(q, Q.MultiTerm):
-            if q.kind == "prefix":
-                terms = self.expand_terms(like=f"{q.value}%")
-            elif q.kind == "wildcard":
-                pat = "^" + "".join(
-                    ".*" if ch == "*" else "." if ch == "?"
-                    else _re.escape(ch) for ch in str(q.value)) + "$"
-                terms = self.expand_terms(rlike=pat)
-            elif q.kind == "fuzzy":
-                if getattr(q, "scored", False):
-                    base = str(q.value)
-                    pairs = self.fuzzy_terms_with_boosts(base, q.edits)
-                    return _BlendedTerms(tuple(t for t, _ in pairs),
-                                         tuple(b for _, b in pairs),
-                                         q.boost)
-                terms = self.expand_terms(fuzzy=(str(q.value), q.edits))
-            elif q.kind == "regexp":
-                # RegexpQuery (search/RegexpQuery.java): Lucene regexps
-                # are implicitly anchored — full-term match only
-                terms = self.expand_terms(
-                    rlike="^(?:" + str(q.value) + ")$")
-            elif q.kind == "range":
-                lo, hi, lo_inc, hi_inc = q.value
-                terms = self.expand_terms(between=(lo, hi))
-                terms = [t for t in terms
-                         if (lo_inc or t != lo) and (hi_inc or t != hi)]
-            else:
-                raise ValueError(f"unknown MultiTerm kind {q.kind!r}")
-            return _ResolvedMultiTerm(tuple(terms), q.boost)
+            if q.kind == "fuzzy" and q.scored:
+                pairs = self.fuzzy_terms_with_boosts(str(q.value), q.edits)
+                return _BlendedTerms(tuple(t for t, _ in pairs),
+                                     tuple(b for _, b in pairs), q.boost)
+            return _ResolvedMultiTerm(tuple(self.expand_terms(*q.expansion)),
+                                      q.boost)
         if isinstance(q, Q.Or):
             return Q.Or(tuple(self._resolve(c) for c in q.clauses),
                         q.min_should_match)
@@ -1911,19 +1859,8 @@ class Searcher:
                                self._resolve(q.filter))
         if isinstance(q, Q.Interval):
             from ..functions.intervals import resolve_multi_term_sources
-
-            def _expander(kind, value):
-                if kind == "prefix":
-                    return self.expand_terms(like=f"{value}%")
-                if kind == "fuzzy":
-                    base, edits = value
-                    return self.expand_terms(fuzzy=(str(base), int(edits)))
-                pat = "^" + "".join(
-                    ".*" if ch == "*" else "." if ch == "?"
-                    else _re.escape(ch) for ch in str(value)) + "$"
-                return self.expand_terms(rlike=pat)
-
-            return Q.Interval(resolve_multi_term_sources(q.tree, _expander),
+            return Q.Interval(resolve_multi_term_sources(q.tree,
+                                                         self.expand_terms),
                               q.pivot, q.boost)
         if isinstance(q, Q.SpanMultiTermWrapper):
             # SpanMultiTermQueryWrapper: dictionary expansion → SpanOr of
@@ -2154,48 +2091,42 @@ class Searcher:
             {"doc_id": g, "score": s,
              "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)
 
-    def expand_terms(self, like: str | None = None, rlike: str | None = None,
-                     fuzzy: tuple[str, int] | None = None,
-                     between: tuple[str, str] | None = None,
-                     max_terms: int = 512) -> list[str]:
+    def expand_terms(self, kind: str, value, max_terms: int = 512
+                     ) -> list[str]:
         """MultiTermQuery expansion against the term dictionary (the
-        reference expands prefix/wildcard/fuzzy queries via a term automaton:
-        ``search/MultiTermQuery.java:55``; here the term_stats table IS the
-        dictionary and Catalyst pushes the predicate into its scan).
+        reference's rewrite walks the sorted terms against the query's
+        automaton: ``search/MultiTermQuery.java:55``): the dictionary's
+        terms that ``plans.query.term_matcher(kind, value)`` accepts.
 
-        ``like`` = SQL LIKE (PrefixQuery: ``'abc%'``), ``rlike`` = regex
-        (WildcardQuery/RegexpQuery), ``fuzzy`` = (term, max_edits)
-        (FuzzyQuery via Levenshtein). Expansion is capped at ``max_terms``
-        (the reference's maxClauseCount guard), deterministically: the
-        first ``max_terms`` in term order."""
-        from pyspark.sql import functions as F
-        tf = self.term_stats
-        if like is not None:
-            tf = tf.filter(F.col("term").like(like))
-        if rlike is not None:
-            tf = tf.filter(F.col("term").rlike(rlike))
-        if fuzzy is not None:
-            tf = self._fuzzy_candidates(*fuzzy)
-        if between is not None:  # TermRangeQuery (inclusive bounds)
-            tf = tf.filter(F.col("term").between(*between))
-        return sorted(r["term"] for r in
-                      tf.select("term").orderBy("term")
-                        .limit(max_terms).collect())
+        ``kind``/``value`` are a :class:`~lucene_spark.plans.query.
+        MultiTerm`'s: ``("prefix", p)``, ``("wildcard", pattern)`` with
+        ``*``/``?``/``\\`` escape, ``("regexp", python_regex)`` matched
+        against the whole term, ``("fuzzy", (term, max_edits))`` and
+        ``("range", (lo, hi, lo_inclusive, hi_inclusive))`` with ``None``
+        for an open end. Expansion is capped at ``max_terms`` (the
+        reference's maxClauseCount guard), deterministically: the first
+        ``max_terms`` in UTF-8 byte order. Read on the driver with no
+        Spark job; several dictionaries (MultiSearcher) merge."""
+        return self._dictionary_terms(kind, value)[:max_terms]
 
-    def suffix_terms(self, suffix: str, max_terms: int = 512) -> list[str]:
-        """Leading-wildcard (``*suffix``) expansion against an index
-        built with ``reverse_tokens=True``: the dictionary holds reversed
-        tokens, so the suffix match is ``LIKE reverse(suffix)%`` — a
-        sargable prefix predicate the scan can range-prune — instead of
-        an unprunable ``LIKE %suffix`` full-dictionary pass (the Solr
-        ReversedWildcardFilter deployment of the reference's
-        ``reverse/ReverseStringFilter.java``). Returns the matching
-        terms in ORIGINAL orientation (for feeding a query against a
-        normally-oriented twin index); ``docs_matching_any`` can consume
-        the REVERSED forms directly against this index."""
-        rev = self.expand_terms(like=suffix[::-1] + "%",
-                                max_terms=max_terms)
-        return sorted(t[::-1] for t in rev)
+    def _dictionary_terms(self, kind: str, value) -> list[str]:
+        """Every dictionary term the matcher accepts, sorted."""
+        bounds, select = Q.term_matcher(kind, value)
+        return sorted({t for col in self._term_columns(bounds)
+                       for t in select(col)})
+
+    def _term_columns(self, bounds):
+        """Each dictionary's ``term`` column, read on the driver with
+        ``bounds`` pushed into the read: a prefix, a range or a wildcard
+        with a literal prefix reads only its byte range, while regexp,
+        fuzzy and a leading wildcard read the whole column, a read
+        bounded by the vocabulary."""
+        import pyarrow.parquet as pq
+        for path in self.term_stats_paths:
+            yield pq.read_table(
+                path, columns=["term"],
+                filters=[("term", op, b) for op, b in bounds] or None
+            ).column("term").to_numpy()
 
     def auto_stop_words(self, max_percent_docs: float | None = None,
                         max_doc_freq: int | None = None,
@@ -2222,53 +2153,38 @@ class Searcher:
                 .limit(max_terms).select("term").collect())
         return frozenset(r["term"] for r in rows)
 
-    def _fuzzy_candidates(self, base: str, max_edits: int):
-        """Dictionary slice within ``max_edits`` of ``base`` — the
-        FuzzyTermsEnum role (``FuzzyTermsEnum.java``: the Levenshtein
-        automaton intersects only a slice of the term dict, never scanning
-        it all). Here the sargable length band
-        ``len(base)±max_edits`` prunes the scan before any edit-distance
-        work, and ``levenshtein(..., threshold)`` early-exits the DP.
-        Adds column ``_d`` (edit distance)."""
-        from pyspark.sql import functions as F
-        tf = self.term_stats.filter(
-            F.length("term").between(len(base) - max_edits,
-                                     len(base) + max_edits))
-        # threshold form returns -1 when the distance exceeds it
-        d = F.levenshtein(F.col("term"), F.lit(base), max_edits)
-        return tf.withColumn("_d", d).filter(F.col("_d") >= 0)
+    def _fuzzy_boosts(self, base: str, max_edits: int, limit: int,
+                      prefix: str = "") -> list[tuple[str, np.float32]]:
+        """The ``limit`` best fuzzy variants of ``base`` that start with
+        ``prefix``, as ``(term, float32 boost)``: FuzzyTermsEnum's boost
+        ``1 - ed/min(len(term), len(base))``, 1.0 for an exact match
+        (``FuzzyTermsEnum.java:248-255``). Ranked by that boost in double
+        precision, then by term, the top-terms queue's order."""
+        bounds, select = Q.term_matcher("prefix", prefix)
+        dist = {}
+        for col in self._term_columns(bounds):
+            col = select(col)
+            dist.update((t, int(d)) for t, d in zip(
+                col, Q.edit_distances(col, base, max_edits))
+                if d <= max_edits)
+        ranked = []
+        for t, d in dist.items():
+            ml = min(len(t), len(base))
+            b = np.float32(1.0) - np.float32(d) / np.float32(ml)
+            ranked.append((-(1.0 - d / ml) if d else -1.0, t,
+                           np.float32(1.0) if d == 0 else b))
+        ranked.sort(key=lambda r: r[:2])
+        return [(t, b) for _, t, b in ranked[:limit]]
 
     def fuzzy_terms_with_boosts(self, base: str, max_edits: int = 2,
                                 max_expansions: int = 50
                                 ) -> list[tuple[str, float]]:
-        """Fuzzy expansion with FuzzyTermsEnum boosts: exact match → 1.0,
-        else float32 ``1 - ed/min(len(term), len(base))``
-        (``FuzzyTermsEnum.java:248-255``). Capped at ``max_expansions``
-        best-boost terms (TopTermsBlendedFreqScoringRewrite's
-        maxExpansions=50, ``FuzzyQuery.java:57``), returned sorted by term.
-        """
-        from pyspark.sql import functions as F
-        rows = (self._fuzzy_candidates(base, max_edits)
-                .withColumn("_ml", F.least(F.length("term"),
-                                           F.lit(len(base))))
-                .withColumn("_boost",
-                            F.when(F.col("_d") == 0, F.lit(1.0))
-                             .otherwise(F.lit(1.0) - F.col("_d")
-                                        / F.col("_ml")))
-                .orderBy(F.desc("_boost"), F.asc("term"))
-                .limit(max_expansions)
-                .select("term", "_d").collect())
-        out = []
-        for r in sorted(rows, key=lambda r: r["term"]):
-            d = int(r["_d"])
-            if d == 0:
-                out.append((r["term"], 1.0))
-            else:
-                ml = min(len(r["term"]), len(base))
-                out.append((r["term"],
-                            float(np.float32(1.0)
-                                  - np.float32(d) / np.float32(ml))))
-        return out
+        """Fuzzy expansion with FuzzyTermsEnum boosts (see
+        ``_fuzzy_boosts``), capped at the ``max_expansions`` best-boost
+        terms (TopTermsBlendedFreqScoringRewrite's maxExpansions=50,
+        ``FuzzyQuery.java:57``), returned sorted by term."""
+        return sorted((t, float(b)) for t, b in
+                      self._fuzzy_boosts(base, max_edits, max_expansions))
 
     def docs_matching_any(self, terms: list[str]):
         """Constant-score union of exact terms (TermInSetQuery / the

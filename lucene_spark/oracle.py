@@ -42,6 +42,48 @@ def _levenshtein(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _wildcard_match(pattern: str, term: str) -> bool:
+    """WildcardQuery's language, kept apart from the engine's matcher:
+    ``*`` matches any run of chars, ``?`` any one char, ``\\`` makes the
+    next char literal (a trailing ``\\`` is itself literal), and every
+    other char is literal. Run as a set-of-positions NFA over the term."""
+    toks, i = [], 0  # (char, is_operator)
+    while i < len(pattern):
+        if pattern[i] == "\\" and i + 1 < len(pattern):
+            i += 1
+            toks.append((pattern[i], False))
+        else:
+            toks.append((pattern[i], pattern[i] in "*?"))
+        i += 1
+
+    def close(states):
+        out = set(states)
+        for j in sorted(states):
+            while j < len(toks) and toks[j] == ("*", True):
+                j += 1
+                out.add(j)
+        return out
+
+    states = close({0})
+    for ch in term:
+        nxt = set()
+        for j in states:
+            if j < len(toks):
+                c, op = toks[j]
+                if op and c == "*":
+                    nxt.add(j)
+                elif op or c == ch:
+                    nxt.add(j + 1)
+        states = close(nxt)
+    return len(toks) in states
+
+
+def _in_range(t: str, lo, hi, lo_inc: bool, hi_inc: bool) -> bool:
+    """TermRangeQuery membership; a ``None`` bound is open."""
+    return ((lo is None or lo < t or (lo_inc and t == lo))
+            and (hi is None or t < hi or (hi_inc and t == hi)))
+
+
 @dataclass
 class OracleIndex:
     """In-memory inverted index over a small corpus."""
@@ -280,8 +322,6 @@ class OracleIndex:
                                           eval_intervals,
                                           interval_tree_terms, min_extent,
                                           saturation_scores)
-        import fnmatch
-
         from .functions.intervals import resolve_multi_term_sources
 
         def _expander(kind, value):
@@ -292,8 +332,7 @@ class OracleIndex:
                 base, edits = str(value[0]), int(value[1])
                 return [t for t in keys
                         if _levenshtein(t, base) <= edits]
-            return [t for t in keys
-                    if fnmatch.fnmatchcase(t, str(value))]
+            return [t for t in keys if _wildcard_match(str(value), t)]
 
         tree = resolve_multi_term_sources(query.tree, _expander)
         query = type(query)(tree, query.pivot, query.boost)
@@ -317,22 +356,17 @@ class OracleIndex:
         """Expand SpanMultiTermWrapper leaves against this oracle's own
         dictionary (SpanMultiTermQueryWrapper rewrite role)."""
         if isinstance(q, SpanMultiTermWrapper):
-            import fnmatch
             terms = sorted(self.postings)
             mt = q.query
             if mt.kind == "prefix":
                 hit = [t for t in terms if t.startswith(str(mt.value))]
             elif mt.kind == "wildcard":
-                hit = [t for t in terms
-                       if fnmatch.fnmatchcase(t, str(mt.value))]
+                hit = [t for t in terms if _wildcard_match(str(mt.value), t)]
             elif mt.kind == "fuzzy":
                 hit = [t for t in terms
                        if _levenshtein(t, str(mt.value)) <= mt.edits]
             elif mt.kind == "range":
-                lo, hi, lo_inc, hi_inc = mt.value
-                hit = [t for t in terms
-                       if (lo < t or (lo_inc and t == lo))
-                       and (t < hi or (hi_inc and t == hi))]
+                hit = [t for t in terms if _in_range(t, *mt.value)]
             else:
                 raise ValueError(mt.kind)
             return SpanOr(tuple(Term(t) for t in hit))
@@ -504,15 +538,13 @@ class OracleIndex:
                         # multiterm slot entry: expand against this
                         # oracle's own dictionary (same sorted order as
                         # the engine's term_stats expansion)
-                        import fnmatch
                         keys = sorted(self.postings)
                         if e[0] == "prefix":
                             flat.extend(t for t in keys
                                         if t.startswith(str(e[1])))
                         elif e[0] == "wildcard":
-                            flat.extend(
-                                t for t in keys
-                                if fnmatch.fnmatchcase(t, str(e[1])))
+                            flat.extend(t for t in keys
+                                        if _wildcard_match(str(e[1]), t))
                         else:
                             raise ValueError(e[0])
                 slots.append(tuple(dict.fromkeys(flat)))
@@ -590,13 +622,12 @@ class OracleIndex:
                     out[d] = np.float32(w - w / (one + np.float32(f) * inv))
             return out
         if isinstance(query, MultiTerm):
-            import fnmatch
             terms = sorted(self.postings)
             if query.kind == "prefix":
                 hit = [t for t in terms if t.startswith(str(query.value))]
             elif query.kind == "wildcard":
                 hit = [t for t in terms
-                       if fnmatch.fnmatchcase(t, str(query.value))]
+                       if _wildcard_match(str(query.value), t)]
             elif query.kind == "fuzzy":
                 hit = [t for t in terms
                        if _levenshtein(t, str(query.value)) <= query.edits]
@@ -605,10 +636,7 @@ class OracleIndex:
                 pat = _re.compile(str(query.value))
                 hit = [t for t in terms if pat.fullmatch(t)]
             elif query.kind == "range":
-                lo, hi, lo_inc, hi_inc = query.value
-                hit = [t for t in terms
-                       if (lo < t or (lo_inc and t == lo))
-                       and (t < hi or (hi_inc and t == hi))]
+                hit = [t for t in terms if _in_range(t, *query.value)]
             else:
                 raise ValueError(query.kind)
             if query.kind == "fuzzy" and getattr(query, "scored", False):

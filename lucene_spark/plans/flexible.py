@@ -251,8 +251,10 @@ def parse_standard(text: str, default_operator: str = "OR",
                     range_field,
                     _point_bound(lo, typ, True, t == "["),
                     _point_bound(hi, typ, False, close == "]"))
-            return Q.MultiTerm("range", (lo.lower(), hi.lower(),
-                                         t == "[", close == "]"))
+            # a bare * bound is open (OpenRangeQueryNodeProcessor)
+            return Q.MultiTerm("range", tuple(
+                None if b == "*" else b.lower() for b in (lo, hi)) + (
+                t == "[", close == "]"))
         return _atom(t)
 
     def _atom(t: str) -> Q.Query:

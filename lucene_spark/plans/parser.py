@@ -144,8 +144,10 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
             m = re.match(r"^([\[{])\s*(\S+)\s+TO\s+(\S+?)\s*([\]}])$", joined)
             if not m:
                 raise QueryParseError(f"bad range: {joined!r}")
-            return MultiTerm("range", (m.group(2).lower(), m.group(3).lower(),
-                                       m.group(1) == "[", m.group(4) == "]"))
+            # a bare * bound is open, as in the classic QueryParser
+            lo, hi = (None if b == "*" else b.lower() for b in m.group(2, 3))
+            return MultiTerm("range", (lo, hi, m.group(1) == "[",
+                                       m.group(4) == "]"))
         atom = _atom(t)
         nxt = peek()
         if atom is _DROPPED and nxt and re.match(r"^~\d+$", nxt):

@@ -9,6 +9,7 @@ single-clause collapse / flattening / dedup (``BooleanQuery.java:242+``).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import lru_cache
 
 
 class Query:
@@ -264,9 +265,22 @@ class MultiTerm(Query):
     CONSTANT_SCORE rewrite: every matching doc scores ``boost``
     (``MultiTermQuery.java:83`` CONSTANT_SCORE_REWRITE).
 
-    kind: 'prefix' (value = prefix), 'wildcard' (value = glob with *?),
-    'regexp' (value = anchored regular expression, RegexpQuery role),
-    'fuzzy' (value = term, ``edits``), 'range' (value = (lo, hi) incl.).
+    What each kind matches is :func:`term_matcher`'s definition, shared
+    by the Searcher's dictionary expansion and Monitor's percolation:
+
+    - 'prefix': value = the prefix, compared as plain text (PrefixQuery);
+    - 'wildcard': value = a WildcardQuery pattern — ``*`` any run, ``?``
+      any one char, ``\\`` escapes the next char, every other char is
+      literal;
+    - 'regexp': value = a Python regular expression matched against the
+      whole term (``re.fullmatch``), the RegexpQuery role. The dialect is
+      Python's, not Lucene's ``RegExp``: ``<1-10>``, ``@``, ``#``, ``&``
+      and ``~`` are not operators here;
+    - 'fuzzy': value = the term, with ``edits`` the max Levenshtein
+      distance (no transpositions, which FuzzyQuery counts as one edit
+      by default);
+    - 'range': value = ``(lo, hi, lo_inclusive, hi_inclusive)``
+      (TermRangeQuery); a ``None`` bound is open.
     """
     kind: str
     value: object
@@ -281,6 +295,107 @@ class MultiTerm(Query):
 
     def all_terms(self):
         return []  # terms known only after expansion
+
+    @property
+    def expansion(self) -> tuple[str, object]:
+        """The ``(kind, value)`` pair :func:`term_matcher` and
+        ``Searcher.expand_terms`` take: a fuzzy value is ``(term, edits)``."""
+        if self.kind == "fuzzy":
+            return self.kind, (str(self.value), self.edits)
+        return self.kind, self.value
+
+
+def edit_distances(terms, base: str, max_edits: int):
+    """Levenshtein distance in code points of each of ``terms`` to
+    ``base``, as an int array where every distance above ``max_edits``
+    reads ``max_edits + 1``. Terms outside the length band never enter
+    the DP, and a term leaves it at the first row whose minimum is above
+    the bound. The DP runs over all terms at once: rows walk ``base``,
+    columns the terms' code points."""
+    import numpy as np
+    cap = max_edits + 1
+    lens = np.fromiter(map(len, terms), dtype=np.int64, count=len(terms))
+    out = np.full(len(terms), cap, dtype=np.int64)
+    idx = np.flatnonzero(np.abs(lens - len(base)) <= max_edits)
+    width = max(len(base) + max_edits, 1)  # the longest term in the band
+    codes = np.array([terms[i] for i in idx], dtype=f"<U{width}") \
+        .view(np.uint32).reshape(len(idx), width)
+    cols = np.arange(width + 1, dtype=np.int32)
+    row = np.broadcast_to(cols, (len(idx), width + 1))
+    for i, c in enumerate(base, 1):
+        # substitution or deletion, then insertions as a running minimum
+        # along the row: cur[j] = min over m <= j of x[m] + (j - m)
+        x = np.empty_like(row)
+        x[:, 0] = i
+        np.add(row[:, :-1], codes != ord(c), out=x[:, 1:])
+        np.minimum(x[:, 1:], row[:, 1:] + 1, out=x[:, 1:])
+        x -= cols
+        np.minimum.accumulate(x, axis=1, out=x)
+        row = x + cols
+        live = row.min(axis=1) <= max_edits
+        if not live.all():
+            idx, codes, row = idx[live], codes[live], row[live]
+    out[idx] = np.minimum(row[np.arange(len(idx)), lens[idx]], cap)
+    return out
+
+
+def _prefix_end(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix``
+    (None: there is none), skipping the surrogates UTF-8 cannot hold."""
+    prefix = prefix.rstrip("\U0010ffff")
+    if not prefix:
+        return None
+    c = ord(prefix[-1]) + 1
+    return prefix[:-1] + chr(0xE000 if c == 0xD800 else c)
+
+
+@lru_cache(maxsize=1024)  # Monitor asks again for every document
+def term_matcher(kind: str, value) -> tuple[tuple, object]:
+    """What a multi-term query of ``kind`` matches (see :class:`MultiTerm`
+    for each value's shape): ``(bounds, select)``. ``bounds`` is a tuple
+    of ``(op, term)`` comparisons that every accepted term satisfies, in
+    UTF-8 byte order — the dictionary range a reader can push down —
+    and ``select(terms)`` is the exact test: the accepted terms of an
+    iterable, in its order. Regexp, fuzzy and a wildcard that starts with
+    ``*`` or ``?`` have no bounds."""
+    import re
+
+    def select(accepts):
+        return lambda terms: [t for t in terms if accepts(t)]
+
+    if kind == "prefix":
+        p = str(value)
+        return (tuple(b for b in ((">=", p), ("<", _prefix_end(p))) if b[1]),
+                select(lambda t: t.startswith(p)))
+    if kind == "wildcard":
+        # (escaped char, operator, plain char); a trailing \ is plain
+        toks = re.findall(r"\\(.)|([*?])|(.)", str(value), re.DOTALL)
+        n = next((i for i, (_, op, _) in enumerate(toks) if op), len(toks))
+        pat = re.compile("".join(
+            ".*" if op == "*" else "." if op else re.escape(e + c)
+            for e, op, c in toks), re.DOTALL)
+        return (term_matcher("prefix", "".join(e + c for e, _, c in
+                                               toks[:n]))[0],
+                select(lambda t: pat.fullmatch(t) is not None))
+    if kind == "regexp":
+        pat = re.compile(str(value))
+        return (), select(lambda t: pat.fullmatch(t) is not None)
+    if kind == "fuzzy":
+        base, edits = str(value[0]), int(value[1])
+
+        def fuzzy(terms):
+            terms = list(terms)
+            return [t for t, d in zip(terms, edit_distances(terms, base,
+                                                            edits))
+                    if d <= edits]
+        return (), fuzzy
+    if kind == "range":
+        lo, hi, lo_inc, hi_inc = value
+        bounds = tuple(b for b in ((">=", lo), ("<=", hi)) if b[1])
+        return bounds, select(lambda t: (
+            (lo is None or lo < t or (lo_inc and t == lo))
+            and (hi is None or t < hi or (hi_inc and t == hi))))
+    raise ValueError(f"unknown MultiTerm kind {kind!r}")
 
 
 def ngram_phrase_rewrite(n: int, phrase: "Phrase") -> "Phrase":

@@ -22,8 +22,6 @@ scoring matchers are index-backed and out of scope here.
 
 from __future__ import annotations
 
-import fnmatch
-
 import numpy as np
 import pandas as pd
 
@@ -112,48 +110,16 @@ def _matches(node, terms: set, positions: dict[str, list[int]]) -> bool:
                                            resolve_multi_term_sources)
 
         def _doc_expander(kind, value):
-            if kind == "prefix":
-                return [t for t in terms if t.startswith(str(value))]
-            if kind == "fuzzy":
-                from ..oracle import _levenshtein
-                base, edits = str(value[0]), int(value[1])
-                return [t for t in terms
-                        if abs(len(t) - len(base)) <= edits
-                        and _levenshtein(t, base) <= edits]
-            return [t for t in terms
-                    if fnmatch.fnmatchcase(t, str(value))]
+            return Q.term_matcher(kind, value)[1](terms)
 
         tree = resolve_multi_term_sources(node.tree, _doc_expander)
         pmap = {t: np.asarray(positions.get(t, ()), dtype=np.int64)
                 for t in set(interval_tree_terms(tree))}
         return len(eval_intervals(tree, pmap)) > 0
     if isinstance(node, Q.MultiTerm):
-        if node.kind == "prefix":
-            return any(t.startswith(str(node.value)) for t in terms)
-        if node.kind == "wildcard":
-            return any(fnmatch.fnmatchcase(t, str(node.value))
-                       for t in terms)
-        if node.kind == "range":
-            lo, hi, lo_inc, hi_inc = node.value
-            return any((lo < t or (lo_inc and t == lo))
-                       and (t < hi or (hi_inc and t == hi)) for t in terms)
-        if node.kind == "fuzzy":
-            # fuzzy percolation needs no dictionary: a doc matches iff one
-            # of ITS OWN terms is within max_edits of the query term (the
-            # reference's Monitor runs the same automaton against the
-            # single-doc index). Length band prunes before the DP.
-            from ..oracle import _levenshtein
-            base = str(node.value)
-            return any(abs(len(t) - len(base)) <= node.edits
-                       and _levenshtein(t, base) <= node.edits
-                       for t in terms)
-        if node.kind == "regexp":
-            # RegexpQuery percolation: anchored full-term match against
-            # the doc's own terms (Lucene regexps are always anchored)
-            import re as _re
-            pat = _re.compile(str(node.value))
-            return any(pat.fullmatch(t) for t in terms)
-        raise NotImplementedError(f"monitor: multiterm {node.kind}")
+        # the doc matches iff one of ITS OWN terms does (the reference's
+        # Monitor runs the query against the single-doc index)
+        return bool(Q.term_matcher(*node.expansion)[1](terms))
     if isinstance(node, (Q.SpanNear, Q.SpanOr, Q.SpanNot, Q.SpanFirst,
                          Q.SpanPositionRange,
                          Q.SpanContaining, Q.SpanWithin)):
@@ -183,7 +149,6 @@ def _positive_terms(node, doc_terms: set) -> set:
     """Positive term leaves of a query for highlight reporting, with
     multiterm leaves expanded against the DOC'S OWN term set (like the
     percolator's evaluation)."""
-    import fnmatch as _fn
     if isinstance(node, Q.Term):
         return {node.term}
     if isinstance(node, (Q.Synonym, Q.CommonTerms)):
@@ -193,28 +158,7 @@ def _positive_terms(node, doc_terms: set) -> set:
     if isinstance(node, Q.MultiPhrase):
         return {t for slot in node.slots for t in slot}
     if isinstance(node, Q.MultiTerm):
-        if node.kind == "prefix":
-            return {t for t in doc_terms
-                    if t.startswith(str(node.value))}
-        if node.kind == "wildcard":
-            return {t for t in doc_terms
-                    if _fn.fnmatchcase(t, str(node.value))}
-        if node.kind == "fuzzy":
-            from ..oracle import _levenshtein
-            base = str(node.value)
-            return {t for t in doc_terms
-                    if abs(len(t) - len(base)) <= node.edits
-                    and _levenshtein(t, base) <= node.edits}
-        if node.kind == "regexp":
-            import re as _re
-            pat = _re.compile(str(node.value))
-            return {t for t in doc_terms if pat.fullmatch(t)}
-        if node.kind == "range":
-            lo, hi, lo_inc, hi_inc = node.value
-            return {t for t in doc_terms
-                    if (lo < t or (lo_inc and t == lo))
-                    and (t < hi or (hi_inc and t == hi))}
-        return set()
+        return set(Q.term_matcher(*node.expansion)[1](doc_terms))
     if isinstance(node, (Q.Or, Q.And, Q.DisMax)):
         out: set = set()
         for c in node.clauses:

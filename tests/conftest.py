@@ -47,3 +47,23 @@ def part_layout(request, monkeypatch):
     (every rewrite below 64 MB of input postings) and many."""
     if request.param == "many_parts":
         _many_parts(monkeypatch)
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``run(group, action)`` → ``action()``'s result and the ids of the
+    Spark jobs it ran under job group ``group``. The status tracker learns
+    of a job from Spark's asynchronous listener bus, so the bus is drained
+    before the tracker is read: a job that just ended is never missed."""
+    sc = spark.sparkContext
+
+    def run(group: str, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -334,22 +334,19 @@ RULES = [
 ]
 
 
-def test_build_index_rejects_bad_chains_before_any_job(spark, tmp_path):
+def test_build_index_rejects_bad_chains_before_any_job(spark_jobs, spark,
+                                                      tmp_path):
     from lucene_spark.operators.build import build_index
     assert len(RULES) == 19
     df = spark.createDataFrame(_small_frame())
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     for i, (kw, message) in enumerate(RULES):
-        group = f"analyzer-spec-rule-{i}"
-        sc.setJobGroup(group, group)
-        try:
+        def bad():
             with pytest.raises(ValueError, match=message):
                 build_index(spark, df, str(tmp_path / f"bad{i}"),
                             num_segments=2, **kw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert tracker.getJobIdsForGroup(group) == [], kw
+
+        _, jobs = spark_jobs(f"analyzer-spec-rule-{i}", bad)
+        assert jobs == [], kw
 
 
 def test_unknown_chain_keyword_is_a_type_error(spark, tmp_path):

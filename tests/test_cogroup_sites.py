@@ -16,6 +16,9 @@ them as every reader does; finding a term's docs is one fan-out. So
 neither ``delete.py`` nor ``docvalues.py`` shuffles or maps partitions by
 hand, and only the one segment-set commit builds the term dictionary, with
 one fan-out over term ranges and no Spark writer.
+
+Multi-term queries expand on the driver, and search and percolation
+share one matcher.
 """
 
 from __future__ import annotations
@@ -100,3 +103,90 @@ def test_commit_has_no_shuffle_or_spark_writer():
                  if s[0] == "operators/build.py" and s[1].split(".")[0]
                  in ("compute_term_stats", "commit_segments")]
         assert sites == [], attr
+
+
+def test_search_expands_without_sql_patterns():
+    """Multi-term expansion reads the dictionary on the driver through
+    ``plans.query.term_matcher``; no SQL pattern language or Spark
+    edit distance stands behind it."""
+    for attr in ("like", "rlike", "levenshtein"):
+        sites = [s for s in _call_sites(attr)
+                 if s[0] == "operators/search.py"]
+        assert sites == [], attr
+
+
+def _imports(rel: str) -> list[tuple[str | None, str, str]]:
+    """``(module, name, enclosing qualified name)`` of every import in the
+    package module ``rel``. ``module`` is the imported module's path
+    relative to the package (None outside it); ``name`` is the imported
+    name, or the module itself for ``import x``."""
+    out = []
+
+    def resolve(parts: list[str], level: int) -> str | None:
+        if level:
+            where = Path(rel).parents[level - 1]
+        elif parts[:1] == ["lucene_spark"]:
+            parts, where = parts[1:], Path()
+        else:
+            return None
+        stem = where.joinpath(*parts)
+        for cand in ((stem.with_suffix(".py"),) if parts else ()) + (
+                stem / "__init__.py",):
+            if (PACKAGE / cand).is_file():
+                return cand.as_posix()
+        return None
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = scope + (child.name,)
+            if isinstance(child, ast.Import):
+                out.extend((resolve(a.name.split("."), 0), a.name,
+                            ".".join(scope)) for a in child.names)
+            elif isinstance(child, ast.ImportFrom):
+                parts = child.module.split(".") if child.module else []
+                # ``from . import x`` may name a submodule
+                out.extend((resolve(parts + [a.name], child.level)
+                            or resolve(parts, child.level), a.name,
+                            ".".join(scope)) for a in child.names)
+            visit(child, inner)
+
+    visit(ast.parse((PACKAGE / rel).read_text(encoding="utf-8")), ())
+    return out
+
+
+def test_monitor_uses_the_engine_matcher():
+    """Percolation matches with the engine's own matcher. Following its
+    imports through the package, Monitor reaches no glob module. The one
+    oracle name it reaches is ``OracleIndex``, imported in
+    ``match_batch``: ScoringMatch scores a matched document over a one-doc
+    oracle index, so a scored multi-term query is scored by the oracle's
+    own expansion."""
+    seen, todo, oracle = set(), ["streaming/monitor.py"], []
+    while todo:
+        rel = todo.pop()
+        if rel in seen or not (PACKAGE / rel).is_file():
+            continue
+        seen.add(rel)
+        for mod, name, scope in _imports(rel):
+            assert "fnmatch" not in name, rel
+            if mod == "oracle.py":
+                oracle.append((rel, name, scope))
+            elif mod:
+                # importing a module runs its packages' __init__ too
+                todo.append(mod)
+                todo.extend((p / "__init__.py").as_posix()
+                            for p in Path(mod).parents)
+    assert oracle == [("streaming/monitor.py", "OracleIndex",
+                       "Monitor.match_batch.run")]
+
+
+def test_oracle_matcher_stays_in_the_oracle():
+    """The oracle's edit distance and wildcard matcher are its own: no
+    package module imports them."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        assert not [n for m, n, _ in _imports(rel)
+                    if m == "oracle.py" and n.startswith("_")], rel

@@ -139,18 +139,13 @@ def test_deletes_mask_combined(spark, two_field_indexes):
     assert after[0]["score"] == base[1]["score"]
 
 
-def test_combined_runs_one_job(spark, two_field_indexes):
+def test_combined_runs_one_job(spark_jobs, spark, two_field_indexes):
     """The pseudo stats are driver reads and the top-k merges on the
     driver, so one call runs exactly one Spark job: the segment fan-out."""
     _, dirs = two_field_indexes
     s_title = Searcher(spark, dirs["title"])
     s_body = Searcher(spark, dirs["body"])
-    sc = spark.sparkContext
-    sc.setJobGroup("cfq-one-job", "cfq-one-job")
-    try:
-        rows = combined_field_topk(
-            spark, [(s_title, 2.0), (s_body, 1.0)], "parse", k=10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = spark_jobs("cfq-one-job", lambda: combined_field_topk(
+        spark, [(s_title, 2.0), (s_body, 1.0)], "parse", k=10).collect())
     assert len(rows) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup("cfq-one-job")) == 1
+    assert len(jobs) == 1

@@ -177,19 +177,6 @@ def test_update_documents(spark):
     assert snap.field_stats["doc_count"] == len(updated)
 
 
-def _jobs_of(spark, group: str, action):
-    """``action()``'s result and the Spark jobs it ran under ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    return out, [tracker.getJobInfo(j)
-                 for j in tracker.getJobIdsForGroup(group)]
-
-
 def _dictionary_stats(spark, paths, terms):
     """{term: (df, ttf)} summed over the dictionaries by Spark."""
     from pyspark.sql import functions as F
@@ -200,7 +187,8 @@ def _dictionary_stats(spark, paths, terms):
     return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
 
 
-def test_search_is_one_shuffle_free_job(spark, deleted_index, oracle_full):
+def test_search_is_one_shuffle_free_job(spark_jobs, spark, deleted_index,
+                                        oracle_full):
     """``Searcher.search`` runs one Spark job of one stage (the stats probe
     and the top-k merge run on the driver), its segment fan-out plans no
     Exchange, and its hits equal the oracle's in ids and float32 bits
@@ -210,16 +198,17 @@ def test_search_is_one_shuffle_free_job(spark, deleted_index, oracle_full):
     from lucene_spark.operators.search import MultiSearcher
 
     s = Searcher(spark, deleted_index)
+    tracker = spark.sparkContext.statusTracker()
     gone = _deleted_doc_ids(oracle_full)
     queries = (Q.Term(QUERY_TERM),
                Q.Or((Q.Term(QUERY_TERM), Q.Term(DEL_TERM))),
                Q.And((Q.Term("codec"), Q.Term("util"))),
                Q.Phrase(("mixed", "case")))
     for i, q in enumerate(queries):
-        rows, jobs = _jobs_of(spark, f"search-{i}",
-                              lambda: s.search(q, k=10).collect())
+        rows, jobs = spark_jobs(f"search-{i}",
+                                lambda: s.search(q, k=10).collect())
         assert len(jobs) == 1, q
-        assert len(jobs[0].stageIds) == 1, q
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1, q
         got = [(int(r["doc_id"]), _bits(r["score"])) for r in rows]
         want = [(d, _bits(sc)) for d, sc in
                 oracle_full.top_k(q, k=10 + len(gone)) if d not in gone][:10]
@@ -244,9 +233,9 @@ def test_search_is_one_shuffle_free_job(spark, deleted_index, oracle_full):
         assert {t: (dfs[t], ttfs[t]) for t in dfs} == want
         assert searcher._global_dfs(terms) == dfs
     assert len(ms.term_stats_paths) == 2
-    _, jobs = _jobs_of(spark, "multi-search",
-                       lambda: ms.search(Q.Term(QUERY_TERM), k=10).collect())
-    assert len(jobs) == 1 and len(jobs[0].stageIds) == 1
+    _, jobs = spark_jobs("multi-search",
+                         lambda: ms.search(Q.Term(QUERY_TERM), k=10).collect())
+    assert len(jobs) == 1 and len(tracker.getJobInfo(jobs[0]).stageIds) == 1
 
 
 def test_merge_purges_deletes(spark, corpus, deleted_index, oracle_full):

@@ -216,7 +216,7 @@ def test_merge_keeps_every_live_doc(spark, case, tmp_path):
     assert live_docs() == before
 
 
-def _merge_body_jobs(spark, monkeypatch, d, case) -> int:
+def _merge_body_jobs(spark_jobs, spark, monkeypatch, d, case) -> int:
     """Spark jobs the merge runs before its commit."""
     from lucene_spark.operators import merge as merge_mod
     sc = spark.sparkContext
@@ -227,22 +227,17 @@ def _merge_body_jobs(spark, monkeypatch, d, case) -> int:
         return commit(*a, **kw)
 
     monkeypatch.setattr(merge_mod, "_commit_merge", own_group)
-    group = f"merge-body-{case}"
-    sc.setJobGroup(group, group)
-    try:
-        _merge(spark, d, case)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    _, jobs = spark_jobs(f"merge-body-{case}", lambda: _merge(spark, d, case))
+    return len(jobs)
 
 
 @pytest.mark.parametrize("case,bound", [
     ("tombstones", 2), ("sort_asc_tombstones", 2), ("dv_updates", 2),
     ("soft_retention", 3)])
-def test_merge_body_is_two_fan_outs(spark, monkeypatch, case, bound,
-                                    tmp_path):
+def test_merge_body_is_two_fan_outs(spark_jobs, spark, monkeypatch, case,
+                                    bound, tmp_path):
     d = _prepare(spark, case, tmp_path)
-    assert _merge_body_jobs(spark, monkeypatch, d, case) <= bound
+    assert _merge_body_jobs(spark_jobs, spark, monkeypatch, d, case) <= bound
 
 
 def test_merged_parts_read_back_sorted(spark, many_parts, tmp_path):

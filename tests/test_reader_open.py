@@ -29,17 +29,6 @@ FIELD = "price"
 DEL_TERM = "flush"
 
 
-def _jobs(spark, group: str, action):
-    """``action()``'s result and the ids of the Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
 def _corpus(n: int, seed: int, base: int):
     pdf = generate_corpus(n, seed=seed)
     pdf["doc_id"] += base
@@ -76,13 +65,13 @@ def deleted(corpora):
     return gone
 
 
-def test_open_runs_no_job(spark, indexes):
+def test_open_runs_no_job(spark_jobs, spark, indexes):
     """Open runs 0 jobs, the first top-10 query 1, and explaining a term
     or OR query 0: every read is a driver pyarrow read."""
-    s, jobs = _jobs(spark, "reader-open", lambda: Searcher(spark, indexes[0]))
+    s, jobs = spark_jobs("reader-open", lambda: Searcher(spark, indexes[0]))
     assert jobs == []
-    ms, jobs = _jobs(spark, "reader-open-multi",
-                     lambda: MultiSearcher(spark, indexes[:2]))
+    ms, jobs = spark_jobs("reader-open-multi",
+                          lambda: MultiSearcher(spark, indexes[:2]))
     assert jobs == []
     for reader in (s, ms):
         assert not hasattr(reader, "postings")
@@ -90,11 +79,11 @@ def test_open_runs_no_job(spark, indexes):
     queries = (Q.Term("parse"), Q.Or((Q.Term("parse"), Q.Term("scan"))))
     for i, reader in enumerate((s, ms)):
         for j, q in enumerate(queries):
-            rows, jobs = _jobs(spark, f"reader-query-{i}-{j}",
-                               lambda: reader.search(q, k=10).collect())
+            rows, jobs = spark_jobs(f"reader-query-{i}-{j}",
+                                    lambda: reader.search(q, k=10).collect())
             assert rows and len(jobs) == 1
-            ex, jobs = _jobs(spark, f"reader-explain-{i}-{j}",
-                             lambda: reader.explain(q, rows[0]["doc_id"]))
+            ex, jobs = spark_jobs(f"reader-explain-{i}-{j}",
+                                  lambda: reader.explain(q, rows[0]["doc_id"]))
             assert jobs == []
             assert ex["match"] and ex["value"] == rows[0]["score"]
 
@@ -188,7 +177,8 @@ def _stages(spark, jobs) -> int:
     return sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
 
 
-def test_top_k_tails_rank_on_the_driver(spark, indexes, monkeypatch):
+def test_top_k_tails_rank_on_the_driver(spark_jobs, spark, indexes,
+                                        monkeypatch):
     """rescore, point-range search and sorted_top_k collect their ≤ k rows
     and number the ranks on the driver: the same rows, types and float32
     bits as the Window tail, in fewer Spark stages, and for rescore
@@ -210,11 +200,11 @@ def test_top_k_tails_rank_on_the_driver(spark, indexes, monkeypatch):
 
     for name, call in calls.items():
         run(call)   # warm: the first doc_meta read infers its schema
-        new, new_jobs = _jobs(spark, f"topk-new-{name}", lambda: run(call))
+        new, new_jobs = spark_jobs(f"topk-new-{name}", lambda: run(call))
         with monkeypatch.context() as m:
             m.setattr(search_mod, "ranked_top_k", _window_top_k)
-            old, old_jobs = _jobs(spark, f"topk-old-{name}",
-                                  lambda: run(call))
+            old, old_jobs = spark_jobs(f"topk-old-{name}",
+                                       lambda: run(call))
         assert new[1] and new == old, name
         assert len(new_jobs) <= len(old_jobs), name
         assert _stages(spark, new_jobs) < _stages(spark, old_jobs), name

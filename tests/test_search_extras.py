@@ -62,14 +62,14 @@ def test_matching_docs_is_constant_score_match_set(searcher, oracle):
 
 
 def test_expand_terms_prefix_wildcard_fuzzy(searcher, oracle):
-    pref = searcher.expand_terms(like="parse%")
+    pref = searcher.expand_terms("prefix", "parse")
     assert "parse" in pref
     assert all(t.startswith("parse") for t in pref)
 
-    wild = searcher.expand_terms(rlike="^fl.sh$")
+    wild = searcher.expand_terms("wildcard", "fl?sh")
     assert wild == ["flush"]
 
-    fz = searcher.expand_terms(fuzzy=("parze", 1))
+    fz = searcher.expand_terms("fuzzy", ("parze", 1))
     assert "parse" in fz
 
     # constant-score union equals the union of per-term match sets
@@ -81,7 +81,7 @@ def test_expand_terms_prefix_wildcard_fuzzy(searcher, oracle):
 
 
 def test_expand_terms_cap(searcher):
-    assert len(searcher.expand_terms(like="%", max_terms=10)) == 10
+    assert len(searcher.expand_terms("prefix", "", max_terms=10)) == 10
 
 
 MULTITERM_QUERIES = [

@@ -56,17 +56,6 @@ def _resolved(spark, d: str) -> dict[int, int]:
     return dict(zip(pdf.doc_id.astype(int), pdf.value.astype(int)))
 
 
-def _jobs(spark, group: str, action):
-    """``action()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_add_indexes_carries_both_overlays(spark, tmp_path):
     """The imported docs keep the source's docvalues updates (under their
     new seg ids) and the destination keeps its own."""
@@ -257,16 +246,17 @@ def test_check_index_checks_the_overlay(spark, tmp_path, bad):
         check_index(d)
 
 
-def test_update_runs_at_most_one_job(spark, small_index):
+def test_update_runs_at_most_one_job(spark_jobs, spark, small_index):
     """An update runs the one fan-out that finds its term's docs."""
     for i, term in enumerate(("else", "while")):
-        _, jobs = _jobs(spark, f"dv-update-{i}",
-                        lambda: update_numeric_docvalue(
-                            spark, small_index, term, FIELD, 100 + i))
-        assert jobs <= 1, term
+        _, jobs = spark_jobs(f"dv-update-{i}",
+                             lambda: update_numeric_docvalue(
+                                 spark, small_index, term, FIELD, 100 + i))
+        assert len(jobs) <= 1, term
 
 
-def test_merge_under_an_overlay_runs_at_most_seven_jobs(spark, tmp_path):
+def test_merge_under_an_overlay_runs_at_most_seven_jobs(spark_jobs, spark,
+                                                        tmp_path):
     """Merging 4 of 8 segments under an overlay runs the two body fan-outs
     and the commit's term-stats jobs; carrying the overlay runs none."""
     d = str(tmp_path / "idx")
@@ -276,9 +266,9 @@ def test_merge_under_an_overlay_runs_at_most_seven_jobs(spark, tmp_path):
     update_numeric_docvalue(spark, d, "while", FIELD, 200)
     snap = SnapshotCatalog(d).load()
     assert snap.extra["num_dv_updates"]
-    _, jobs = _jobs(spark, "overlay-merge",
-                    lambda: merge_segments(spark, d, sorted(snap.seg_ids)[:4]))
-    assert jobs <= 7
+    _, jobs = spark_jobs("overlay-merge", lambda: merge_segments(
+        spark, d, sorted(snap.seg_ids)[:4]))
+    assert len(jobs) <= 7
 
 
 def test_build_has_no_compute_stats_switch(spark, tmp_path):
@@ -290,7 +280,8 @@ def test_build_has_no_compute_stats_switch(spark, tmp_path):
                     compute_stats=False)
 
 
-def test_search_many_ranks_like_search_in_one_job(spark, small_index):
+def test_search_many_ranks_like_search_in_one_job(spark_jobs, spark,
+                                                  small_index):
     """Rows, ranks and float32 score bits equal each query's ``search``;
     the batch runs one Spark job."""
     s = Searcher(spark, small_index)
@@ -298,9 +289,9 @@ def test_search_many_ranks_like_search_in_one_job(spark, small_index):
                 "q_and": "codec AND util", "q_not": "scan -flush",
                 "q_phrase": Q.Phrase(("parse", "emit"), slop=4),
                 "q_absent": "nosuchterm"}
-    batch, jobs = _jobs(spark, "search-many",
-                        lambda: s.search_many(workload, k=5).collect())
-    assert jobs == 1
+    batch, jobs = spark_jobs("search-many",
+                             lambda: s.search_many(workload, k=5).collect())
+    assert len(jobs) == 1
     assert [f.simpleString() for f in
             s.search_many(workload, k=5).schema.fields] == \
         ["query_id:string", "doc_id:bigint", "score:float", "rank:int"]

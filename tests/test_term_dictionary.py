@@ -200,42 +200,29 @@ def test_check_index_checks_the_dictionary(spark, many_parts, tmp_path, bad):
         check_index(d, spark=spark)
 
 
-def _jobs(spark, group: str, action):
-    """``action()``'s result and the number of Spark jobs it ran. The
-    status tracker learns of a job from the asynchronous listener bus, so
-    the bus is drained first: a job that just ended would be missed."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_term_stats_is_one_job(spark, tmp_path):
+def test_term_stats_is_one_job(spark_jobs, spark, tmp_path):
     d = str(tmp_path / "idx")
     snap = build_index(spark, _frame(spark, generate_corpus(120, seed=29)),
                        d, num_segments=4)
     out = os.path.join(d, "term_stats", "again")
-    _, jobs = _jobs(spark, "term-stats", lambda: build_mod.compute_term_stats(
+    _, jobs = spark_jobs("term-stats", lambda: build_mod.compute_term_stats(
         spark, SnapshotCatalog(d), snap.seg_ids, out))
-    assert jobs == 1
+    assert len(jobs) == 1
     assert pq.read_table(out).equals(pq.read_table(snap.term_stats_path))
 
 
-def test_warm_build_runs_at_most_three_jobs(spark, tmp_path):
+def test_warm_build_runs_at_most_three_jobs(spark_jobs, spark, tmp_path):
     """A 16-segment build: the invert (a shuffle-map job and the segment
     kernels' job, under AQE) and the dictionary fan-out."""
     frame = _frame(spark, generate_corpus(400, seed=7))
     build_index(spark, frame, str(tmp_path / "warm"), num_segments=16)
-    _, jobs = _jobs(spark, "warm-build", lambda: build_index(
+    _, jobs = spark_jobs("warm-build", lambda: build_index(
         spark, frame, str(tmp_path / "idx"), num_segments=16))
-    assert jobs <= 3
+    assert len(jobs) <= 3
 
 
-def test_merge_under_an_overlay_runs_at_most_three_jobs(spark, tmp_path):
+def test_merge_under_an_overlay_runs_at_most_three_jobs(spark_jobs, spark,
+                                                        tmp_path):
     """Merging 4 of 8 segments under an overlay: the two body fan-outs and
     the dictionary fan-out."""
     d = str(tmp_path / "idx")
@@ -245,6 +232,6 @@ def test_merge_under_an_overlay_runs_at_most_three_jobs(spark, tmp_path):
     update_numeric_docvalue(spark, d, "else", "popularity", 100)
     snap = SnapshotCatalog(d).load()
     assert snap.extra["num_dv_updates"]
-    _, jobs = _jobs(spark, "overlay-merge-3",
-                    lambda: merge_segments(spark, d, sorted(snap.seg_ids)[:4]))
-    assert jobs <= 3
+    _, jobs = spark_jobs("overlay-merge-3", lambda: merge_segments(
+        spark, d, sorted(snap.seg_ids)[:4]))
+    assert len(jobs) <= 3

@@ -79,17 +79,6 @@ def _assert_store(d: str, hard: dict, soft: dict) -> None:
     check_index(d)
 
 
-def _jobs(spark, group: str, action):
-    """``action()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_every_step_matches_the_decoded_postings(spark, tmp_path):
     """delete by term, soft delete by an overlapping term, delete by ids
     overlapping both, a merge with soft retention, a resume=False rebuild
@@ -274,21 +263,22 @@ def test_check_index_checks_soft_tombstones(spark, tmp_path, bad):
         check_index(d)
 
 
-def test_write_paths_run_at_most_one_job(spark, small_index):
+def test_write_paths_run_at_most_one_job(spark_jobs, spark, small_index):
     """A term delete, hard or soft, runs one job (it finds the docs);
     deleting explicit ids runs none."""
     for i, (fn, term) in enumerate(((delete_by_term, "parse"),
                                     (soft_delete_by_term, "flush"))):
-        _, jobs = _jobs(spark, f"tombstone-term-{i}",
-                        lambda: fn(spark, small_index, term))
-        assert jobs <= 1, fn.__name__
+        _, jobs = spark_jobs(f"tombstone-term-{i}",
+                             lambda: fn(spark, small_index, term))
+        assert len(jobs) <= 1, fn.__name__
     s = SnapshotCatalog(small_index).load().seg_ids[0]
-    _, jobs = _jobs(spark, "tombstone-ids",
-                    lambda: delete_by_ids(spark, small_index, {s: [0, 1]}))
-    assert jobs == 0
+    _, jobs = spark_jobs("tombstone-ids", lambda: delete_by_ids(
+        spark, small_index, {s: [0, 1]}))
+    assert jobs == []
 
 
-def test_tombstoned_merge_runs_at_most_seven_jobs(spark, tmp_path):
+def test_tombstoned_merge_runs_at_most_seven_jobs(spark_jobs, spark,
+                                                  tmp_path):
     """Merging the 10 smallest of 16 segments with hard and soft
     tombstones runs the two body fan-outs and the commit's term-stats
     jobs; carrying the tombstones runs none."""
@@ -301,6 +291,6 @@ def test_tombstoned_merge_runs_at_most_seven_jobs(spark, tmp_path):
     assert snap.extra["num_deleted"] and snap.extra["num_soft_deleted"]
     smallest = [s["seg_id"] for s in sorted(
         snap.segments, key=lambda s: (s["num_docs"], s["seg_id"]))[:10]]
-    _, jobs = _jobs(spark, "tombstoned-merge",
-                    lambda: merge_segments(spark, d, smallest))
-    assert jobs <= 7
+    _, jobs = spark_jobs("tombstoned-merge",
+                         lambda: merge_segments(spark, d, smallest))
+    assert len(jobs) <= 7
