@@ -5029,13 +5029,11 @@ def _q_drill_down_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from lucene_spark.operators.facets import grouped_top_k
     s = _searcher(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    scored = s.score_all(Q.Term(T_COMMON)).join(docs, "doc_id")
-    w = Window.partitionBy("lang").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 2)
-            .select("lang", "doc_id", F.col("rank").cast("int").alias("rank"),
+    return (grouped_top_k(s, Q.Term(T_COMMON), docs, "lang", 2)
+            .select("lang", "doc_id", "rank",
                     _q4(F.col("score")).alias("score_q4")))
 
 

@@ -64,6 +64,7 @@ __all__ = [
     "for_unpack",
     "encode_postings",
     "decode_postings",
+    "decode_positions",
     "decode_block_ranges",
     "impacts_frontier",
     "decode_impacts",
@@ -618,14 +619,21 @@ def decode_postings(row: dict, with_positions: bool = False) -> dict:
     tfs = _decode_blocked(row["tf_bytes"], df)
     out = {"doc_ids": doc_ids, "tfs": tfs}
     if with_positions and row.get("pos_bytes"):
-        pd_ = vbyte_decode(row["pos_bytes"])
-        bounds = np.concatenate(([0], np.cumsum(tfs)[:-1]))  # start idx per doc
-        cum = np.cumsum(pd_)
-        # position[i] = cum[i] - cum[last idx of previous doc] (segmented cumsum)
-        prev_end = np.concatenate(([0], cum[bounds[1:] - 1])) if len(bounds) > 1 \
-            else np.zeros(1, dtype=np.int64)
-        out["positions"] = cum - np.repeat(prev_end, tfs)
+        out["positions"] = decode_positions(row["pos_bytes"], tfs)
     return out
+
+
+def decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Positions aligned with ``repeat(doc_ids, tfs)``: the per-doc
+    position deltas of ``pos_bytes`` summed within each doc."""
+    if not pos_bytes:
+        return np.empty(0, np.int64)
+    cum = np.cumsum(vbyte_decode(pos_bytes))
+    bounds = np.concatenate(([0], np.cumsum(tfs)[:-1]))  # start idx per doc
+    # position[i] = cum[i] - cum[last idx of previous doc] (segmented cumsum)
+    prev_end = np.concatenate(([0], cum[bounds[1:] - 1])) if len(bounds) > 1 \
+        else np.zeros(1, dtype=np.int64)
+    return cum - np.repeat(prev_end, tfs)
 
 
 def decode_block_ranges(block_last: bytes) -> np.ndarray:

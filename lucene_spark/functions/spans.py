@@ -1,24 +1,25 @@
-"""Span proximity matching (SpanNearQuery role).
+"""Span algebra (SpanNearQuery and the span query family) over
+positions.
 
-Reference: ``lucene/queries/src/java/org/apache/lucene/queries/spans/``
-— ``SpanNearQuery`` matches documents where all clause terms occur
-within ``slop`` positions, ordered (``NearSpansOrdered``) or unordered
-(``NearSpansUnordered``), scored through the phrase machinery with
-``sloppyFreq = 1/(1 + matchLength)`` per match.
+Reference: ``lucene/queries/src/java/org/apache/lucene/queries/spans/``.
+A span is a ``(start, end, width)`` triple; ``end`` is exclusive and
+``width`` is the reference's ``width()``, the SpanScorer weight input
+``1/(1 + width)`` accumulated as ``float += double``
+(``SpanScorer.java:106``).
 
-Documented simplification (shared verbatim by the engine kernel and the
-python oracle, so differential tests are exact):
+* near — the exact NearSpansOrdered/NearSpansUnordered ports of
+  ``functions/nearspans.py``, golden-pinned span-for-span against the
+  compiled reference; duplicate clause terms follow the reference's
+  iterators.
+* or / not / first / position range / containing / within — the span
+  tree of :func:`eval_span_tree`, per document, and
+  :func:`eval_span_tree_batch`, over doc-major global keys
+  ``doc << 32 | pos`` for every document at once.
 
-* ordered   — greedy leftmost chains: take the current first-clause
-  occurrence, chain each later clause to its first position AFTER the
-  previous link, tighten the start forward, emit, then advance the
-  first-clause pointer past the used start (non-overlapping starts).
-* unordered — classic minimal-window sweep over the merged position
-  list: every left-minimal complete window is counted once.
-* matchLength = (window width) − (number of clauses); a window
-  contributes ``1/(1 + matchLength)`` when matchLength <= slop.
-* duplicate clause terms are not supported (the reference's repeat
-  handling in spans is out of scope).
+Phrase scoring lives in ``functions/sloppy.py`` (the exact
+SloppyPhraseMatcher walk); this module keeps its float32
+``sloppyWeight`` (:func:`sloppy_weights`) and the double-minimal window
+kernel that ``functions/intervals.py`` builds on.
 """
 
 from __future__ import annotations
@@ -26,75 +27,11 @@ from __future__ import annotations
 import numpy as np
 
 
-def sloppy_phrase_freq(pos_lists: list[np.ndarray], slop: int,
-                       offsets: list[int] | None = None) -> float:
-    """Accumulated sloppy frequency of an n-term sloppy phrase in one doc
-    (``SloppyPhraseMatcher.java:53`` role — minimal-interval semantics).
-
-    Clause ``j``'s positions are offset-adjusted by ``-offsets[j]``
-    (default ``-j``; explicit builder positions pass their own — the
-    reference's ``PhrasePositions.position = pos - offset``), then every minimal
-    complete window over the adjusted lists is counted once:
-    a window [L, R] is minimal iff it is complete (every clause present)
-    and shrinking from EITHER side breaks completeness —
-    ``L = min_j max{a_j <= R}`` and ``R = max_j min{a_j >= L}``
-    (equivalently: it contains no proper complete sub-window).
-    matchLength = R - L; a window contributes ``1/(1 + matchLength)``
-    when matchLength <= slop. Duplicate clause terms (the reference's
-    repeats machinery) are not supported.
-    """
-    n = len(pos_lists)
-    if n == 0 or any(len(p) == 0 for p in pos_lists):
-        return 0.0
-    offs = list(offsets) if offsets else list(range(n))
-    adj = [np.asarray(p, dtype=np.int64) - offs[j]
-           for j, p in enumerate(pos_lists)]
-    if n == 1:
-        return float(len(adj[0]))
-    rs = np.unique(np.concatenate(adj))
-    # L(R) = min over clauses of the largest adjusted pos <= R
-    ok = np.ones(len(rs), dtype=bool)
-    lmat = np.empty((n, len(rs)), dtype=np.int64)
-    for j, a in enumerate(adj):
-        idx = np.searchsorted(a, rs, side="right") - 1
-        ok &= idx >= 0
-        lmat[j] = a[np.clip(idx, 0, len(a) - 1)]
-    rs_v, l_v = rs[ok], lmat.min(axis=0)[ok]
-    if len(rs_v) == 0:
-        return 0.0
-    # right-minimal check: R == max over clauses of smallest pos >= L
-    good = np.ones(len(rs_v), dtype=bool)
-    rmat = np.empty((n, len(rs_v)), dtype=np.int64)
-    for j, a in enumerate(adj):
-        idx = np.searchsorted(a, l_v, side="left")
-        good &= idx < len(a)
-        rmat[j] = a[np.clip(idx, 0, len(a) - 1)]
-    valid = good & (rmat.max(axis=0) == rs_v)
-    if not valid.any():
-        return 0.0
-    pairs = np.unique(np.stack([l_v[valid], rs_v[valid]], axis=1), axis=0)
-    ml = pairs[:, 1] - pairs[:, 0]
-    ml = ml[ml <= slop]
-    return _f32_sum_f32(sloppy_weights(ml))
-
-
-
 def sloppy_weights(ml) -> np.ndarray:
     """SloppyPhraseMatcher.sloppyWeight (:169): ``1f/(1f+matchLength)``
     computed in float32 — the PHRASE freq weight."""
     return np.float32(1.0) / (np.float32(1.0)
                               + np.asarray(ml).astype(np.float32))
-
-
-def _f32_sum_f32(w) -> float:
-    """PhraseScorer freq accumulation (PhraseScorer.java:78):
-    ``float freq += float sloppyWeight()`` — a strict left-to-right
-    float32 chain (cumsum with a float32 accumulator), in window order
-    (minimal windows are non-nested, so (L, R) order == match order).
-    Bit-identical to the real Lucene accumulation — pinned by the
-    lucene_diff goldens."""
-    w = np.asarray(w, dtype=np.float32)
-    return float(np.cumsum(w, dtype=np.float32)[-1]) if len(w) else 0.0
 
 
 def _f32_sum_f64(w) -> float:
@@ -376,7 +313,8 @@ def _batch_double_minimal(key_lists: list[np.ndarray]
     key arrays, across every document at once. Returns unique (L, R) key
     pairs with both edges in the same document.
 
-    Same characterization as :func:`sloppy_phrase_freq`:
+    A window [L, R] is complete when every clause has a key in it and
+    minimal when shrinking it from either side breaks completeness:
     ``L = min_j max{a_j <= R}``, ``R = max_j min{a_j >= L}``; cross-doc
     candidates self-reject — a clause with no key <= R inside R's doc
     contributes an earlier-doc key to the min, tripping the same-doc
@@ -409,37 +347,6 @@ def _batch_double_minimal(key_lists: list[np.ndarray]
         return np.empty(0, np.int64), np.empty(0, np.int64)
     pairs = np.unique(np.stack([l_v[valid], rs_v[valid]], axis=1), axis=0)
     return pairs[:, 0], pairs[:, 1]
-
-
-def _accumulate_by_doc(doc_idx: np.ndarray, contrib: np.ndarray,
-                       n_docs: int) -> np.ndarray:
-    """Per-doc float32 freq accumulation (np.add.at is sequential and
-    per-element computes in the COMMON dtype then narrows to the out
-    dtype): float32 contrib reproduces PhraseScorer's float += float;
-    float64 contrib reproduces SpanScorer's float += double."""
-    out = np.zeros(n_docs, dtype=np.float32)
-    if len(doc_idx):
-        np.add.at(out, doc_idx, contrib)
-    return out.astype(np.float64)
-
-
-def batch_sloppy_phrase_freqs(pos_key_lists: list[np.ndarray], slop: int,
-                              n_docs: int) -> np.ndarray:
-    """Per-doc accumulated sloppy-phrase frequency over ALL documents in
-    one pass (vectorized :func:`sloppy_phrase_freq`).
-
-    ``pos_key_lists[j]`` = sorted ``doc_idx * 2^32 + (pos - j) + pad``
-    keys of clause j (pad >= number of clauses keeps adjusted positions
-    non-negative; the CALLER applies identical pad to every clause so
-    widths are unaffected). Returns a float64 array of length n_docs.
-    """
-    L, R = _batch_double_minimal(pos_key_lists)
-    if len(L) == 0:
-        return np.zeros(n_docs, dtype=np.float64)
-    ml = R - L                                # same doc: offsets cancel
-    keep = ml <= slop
-    return _accumulate_by_doc((R[keep] >> 32).astype(np.int64),
-                              sloppy_weights(ml[keep]), n_docs)
 
 
 def batch_unordered_near_freqs(pos_key_lists: list[np.ndarray], slop: int,
@@ -578,220 +485,3 @@ def batch_spans_freqs(spans: np.ndarray, n_docs: int) -> np.ndarray:
         np.add.at(out, (spans[:, 0] >> 32).astype(np.int64),
                   1.0 / (1.0 + spans[:, 2].astype(np.float64)))
     return out.astype(np.float64)
-
-
-def multiset_sloppy_freq(terms: list[str], pos_by_term: dict,
-                         slop: int, offsets: list[int] | None = None,
-                         ml_n: int | None = None) -> float:
-    """Sloppy phrase frequency WITH duplicate clause terms for one doc.
-
-    Clauses naming the same term share one occurrence stream; a window
-    [L, R] (adjusted space: clause j covers it iff
-    ``L + off_j <= orig <= R + off_j``) is complete only under an
-    INJECTIVE assignment of stream occurrences to that term's clauses.
-    freq = Σ 1/(1 + (R - L)) over the containment-minimal complete
-    windows with R - L <= slop — the same declarative minimal-interval
-    semantics as :func:`sloppy_phrase_freq`, generalized to multisets.
-    ``ml_n`` switches the matchLength convention to the unordered
-    SpanNear one, ``(R - L + 1) - n`` (NearSpansUnordered role), for
-    duplicate-clause span queries.
-    Divergence note: the reference's repeats machinery
-    (``SloppyPhraseMatcher.java:53`` advanceRpts/collision handling) is
-    an order-dependent iterative matcher; this is its declarative
-    counterpart, differential-tested against explicit assignment
-    enumeration.
-
-    Feasibility of a window is checked per term group by greedy interval
-    matching: clause intervals ``[L+o, R+o]`` are nested-ordered in o,
-    so assigning each (in o order) the smallest unused occurrence that
-    fits is exchange-argument optimal.
-    """
-    n = len(terms)
-    offs = list(offsets) if offsets else list(range(n))
-    groups = []
-    by_term: dict[str, list[int]] = {}
-    for j, t in enumerate(terms):
-        by_term.setdefault(t, []).append(j)
-    for t, idxs in by_term.items():
-        P = np.asarray(pos_by_term.get(t, ()), dtype=np.int64)
-        if len(P) < len(idxs):
-            return 0.0
-        groups.append((P, sorted(offs[j] for j in idxs)))
-
-    def feasible(L: int, R: int) -> bool:
-        for P, golds in groups:
-            k = 0
-            for o in golds:
-                k = max(k, int(np.searchsorted(P, L + o, side="left")))
-                if k >= len(P) or P[k] > R + o:
-                    return False
-                k += 1
-        return True
-
-    events = np.unique(np.concatenate(
-        [P - o for P, golds in groups for o in golds]))
-    freq = 0.0
-    last_l = None
-    for ri in range(len(events)):
-        R = int(events[ri])
-        # max feasible L <= R (feasibility anti-monotone in L)
-        lo_i, hi_i = 0, ri
-        if not feasible(int(events[0]), R):
-            continue
-        while lo_i < hi_i:                     # invariant: lo_i feasible
-            mid = (lo_i + hi_i + 1) // 2
-            if feasible(int(events[mid]), R):
-                lo_i = mid
-            else:
-                hi_i = mid - 1
-        L = int(events[lo_i])
-        if last_l is not None and L <= last_l:
-            continue                            # contained in a kept one
-        last_l = L
-        ml = (R - L) if ml_n is None else max(R - L + 1 - ml_n, 0)
-        if ml <= slop:
-            if ml_n is None:  # phrase: float += float (sloppyWeight)
-                freq = float(np.float32(np.float32(freq)
-                                        + sloppy_weights(ml)))
-            else:             # span: float += double
-                freq = float(np.float32(freq + 1.0 / (1 + ml)))
-    return freq
-
-
-def brute_multiset_sloppy_freq(terms: list[str], pos_by_term: dict,
-                               slop: int,
-                               offsets: list[int] | None = None,
-                               ml_n: int | None = None) -> float:
-    """Test twin: enumerate every injective assignment explicitly, take
-    the containment antichain of the tight windows, sum sloppy weights.
-    Exponential — tiny inputs only."""
-    from itertools import permutations
-    n = len(terms)
-    offs = list(offsets) if offsets else list(range(n))
-    by_term: dict[str, list[int]] = {}
-    for j, t in enumerate(terms):
-        by_term.setdefault(t, []).append(j)
-    group_choices = []
-    for t, idxs in by_term.items():
-        P = list(pos_by_term.get(t, ()))
-        if len(P) < len(idxs):
-            return 0.0
-        group_choices.append((idxs, [list(pm) for pm in
-                                     permutations(P, len(idxs))]))
-    windows = set()
-
-    def rec(gi, assign):
-        if gi == len(group_choices):
-            adj = [assign[j] - offs[j] for j in range(n)]
-            windows.add((min(adj), max(adj)))
-            return
-        idxs, perms = group_choices[gi]
-        for pm in perms:
-            for j, p in zip(idxs, pm):
-                assign[j] = p
-            rec(gi + 1, assign)
-
-    rec(0, [0] * n)
-    minimal = [w for w in windows
-               if not any(v != w and v[0] >= w[0] and v[1] <= w[1]
-                          for v in windows)]
-    def _ml(l, r):
-        return (r - l) if ml_n is None else max(r - l + 1 - ml_n, 0)
-    kept = sorted((l, r) for l, r in minimal if _ml(l, r) <= slop)
-    freq = np.float32(0.0)
-    for l, r in kept:
-        if ml_n is None:  # phrase: float += float sloppyWeight
-            freq = np.float32(freq + sloppy_weights(_ml(l, r)))
-        else:             # span: float += double
-            freq = np.float32(np.float64(freq) + 1.0 / (1 + _ml(l, r)))
-    return float(freq)
-
-
-def _group_envelopes(keys: np.ndarray, offs: list[int]) -> np.ndarray:
-    """Pareto envelope stream of one duplicate-term group.
-
-    ``keys``: the term's sorted global position keys (doc-major,
-    positions pre-padded so ``key - off`` never borrows doc bits);
-    ``offs``: the group's sorted clause offsets. An injective
-    assignment p_1 < … < p_k (clause j takes p_j, in offset order —
-    exchange-argument WLOG) fits a window [L, R] in adjusted space iff
-    L <= min_j(p_j - o_j) and R >= max_j(p_j - o_j), so the group is
-    EXACTLY an interval stream of (m, M) envelopes; only the Pareto
-    frontier (max m, min M) matters. For every candidate lower bound
-    L (all values p - o_j — the only points where a constraint can be
-    tight), the M-minimal assignment is the greedy chain
-    p_j = smallest occurrence >= max(p_{j-1} + 1, L + o_j), computed
-    for ALL candidates at once with one searchsorted per clause.
-    Returns the antichain-normalized (m, 3) [start, end, 0] stream.
-    """
-    from .intervals import _norm_antichain
-    k = len(offs)
-    if k == 1:
-        p = keys - np.int64(offs[0])
-        return np.stack([p, p, np.zeros(len(p), np.int64)], axis=1)
-    cands = np.unique(np.concatenate(
-        [keys - np.int64(o) for o in offs]))
-    doc = cands >> np.int64(32)
-    prev = np.full(len(cands), np.iinfo(np.int64).min, np.int64)
-    mval = np.full(len(cands), np.iinfo(np.int64).min, np.int64)
-    valid = np.ones(len(cands), dtype=bool)
-    for o in offs:
-        need = np.maximum(prev + 1, cands + np.int64(o))
-        idx = np.searchsorted(keys, need, side="left")
-        valid &= idx < len(keys)
-        p = keys[np.clip(idx, 0, len(keys) - 1)]
-        valid &= (p >> np.int64(32)) == doc
-        prev = p
-        mval = np.maximum(mval, p - np.int64(o))
-    if not valid.any():
-        return np.empty((0, 3), dtype=np.int64)
-    # cands are unique-sorted, so rows are start-sorted already;
-    # _norm_antichain (minimize_or) does its own canonical sort
-    env = np.stack([cands[valid], mval[valid],
-                    np.zeros(int(valid.sum()), np.int64)], axis=1)
-    return _norm_antichain(env)
-
-
-def batch_multiset_sloppy_freqs(keys_by_term: dict, offs_by_term: dict,
-                                slop: int, n_docs: int,
-                                ml_n: int | None = None) -> np.ndarray:
-    """Duplicate-clause sloppy frequency for ALL docs in one vectorized
-    pass — the batched exact twin of :func:`multiset_sloppy_freq`.
-
-    Each duplicate-term group becomes its Pareto envelope interval
-    stream (:func:`_group_envelopes`); the complete minimal windows are
-    then the unordered containment-minimal windows over those streams
-    (``intervals.unordered_over`` — one whole envelope per group inside
-    the window), which is precisely the injective-multiset window
-    antichain. freq = Σ 1/(1+ml) per window, ml = width (phrase
-    convention) or max(width+1-ml_n, 0) (NearSpansUnordered
-    matchLength). Differential-tested against the per-doc matcher.
-
-    100 TB shape: every step is a searchsorted / antichain scan over
-    doc-major key arrays — no per-candidate-doc Python loop, so a
-    repeated COMMON term costs the same class of work as the plain
-    sloppy kernel.
-    """
-    from .intervals import unordered_over
-    freqs = np.zeros(n_docs, dtype=np.float64)
-    out32 = np.zeros(n_docs, dtype=np.float32)
-    streams = []
-    for t, keys in keys_by_term.items():
-        if len(keys) == 0:
-            return freqs
-        env = _group_envelopes(keys, sorted(offs_by_term[t]))
-        if len(env) == 0:
-            return freqs
-        streams.append(env)
-    wins = unordered_over(streams)
-    if len(wins) == 0:
-        return freqs
-    width = wins[:, 1] - wins[:, 0]
-    ml = width if ml_n is None else np.maximum(width + 1 - ml_n, 0)
-    keep = ml <= slop
-    if not keep.any():
-        return freqs
-    w = (sloppy_weights(ml[keep]) if ml_n is None
-         else 1.0 / (1.0 + ml[keep]))
-    np.add.at(out32, (wins[keep, 0] >> np.int64(32)).astype(np.int64), w)
-    return out32.astype(np.float64)

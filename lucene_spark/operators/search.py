@@ -63,17 +63,10 @@ class CSynonym:
 
 
 @dataclass(frozen=True)
-class CPhrase:
-    """positions is None for the consecutive default, else the builder's
-    explicit strictly-increasing clause positions (PhraseQuery.java:103)."""
-    terms: tuple[str, ...]
-    weight: np.float32
-    slop: int = 0
-    positions: tuple[int, ...] | None = None
-
-
-@dataclass(frozen=True)
 class CMultiPhrase:
+    """Phrase and MultiPhrase: a Phrase compiles to one-term slots.
+    positions is None for the consecutive default, else the builder's
+    explicit strictly-increasing slot positions (PhraseQuery.java:103)."""
     slots: tuple[tuple[str, ...], ...]   # df>0 terms only, per position
     weight: np.float32
     slop: int = 0
@@ -324,7 +317,8 @@ def compile_query(q: Q.Query, term_dfs: dict[str, int], doc_count: int,
                         "one per term")
                 pos = tuple(int(p) for p in pos)
             w = multi_weight([df_of(t) for t in node.terms])
-            return CPhrase(tuple(node.terms), w, node.slop, pos)
+            return CMultiPhrase(tuple((t,) for t in node.terms), w,
+                                node.slop, pos)
         if isinstance(node, Q.MultiPhrase):
             # reference MultiPhraseWeight: terms with df == 0 are
             # skipped from stats AND matching; an all-absent position
@@ -560,9 +554,8 @@ def _compiled_terms(c) -> list[str]:
         return []
     if isinstance(c, CTerm):
         return [c.term]
-    if isinstance(c, (CSynonym, CPhrase, CConstTerms, CSpanNear,
-                      CMultiPhrase, CTermAutomaton, CPayloadCheck,
-                      CIndriAnd)):
+    if isinstance(c, (CSynonym, CConstTerms, CSpanNear, CMultiPhrase,
+                      CTermAutomaton, CPayloadCheck, CIndriAnd)):
         return list(c.terms)
     if isinstance(c, CSpanTree):
         from ..functions.spans import span_tree_terms
@@ -624,6 +617,7 @@ class TermSegPostings:
         self._block_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._offsets: tuple[np.ndarray, np.ndarray] | None = None
         self._all: tuple[np.ndarray, np.ndarray] | None = None
+        self._positions: np.ndarray | None = None
 
     # -- offsets of each FOR block inside doc/tf streams --------------------
     def _block_offsets(self):
@@ -696,11 +690,10 @@ class TermSegPostings:
 
     def positions(self):
         """Decoded positions aligned with repeat(doc_ids, tfs)."""
-        ids, tfs = self.decode_all()
-        row = {"df": self.df, "doc_bytes": self.doc_buf, "tf_bytes": self.tf_buf,
-               "pos_bytes": self.pos_buf}
-        dec = codec.decode_postings(row, with_positions=True)
-        return dec.get("positions", np.empty(0, np.int64))
+        if self._positions is None:
+            self._positions = codec.decode_positions(self.pos_buf,
+                                                     self.decode_all()[1])
+        return self._positions
 
     def payloads(self) -> np.ndarray | None:
         """Decoded payload floats aligned with repeat(doc_ids, tfs);
@@ -833,26 +826,15 @@ def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
                               node.weight, ctx.cache)
             scores[mask] = s.astype(np.float64)
         return mask, scores
-    if isinstance(node, CPhrase):
-        if node.slop > 0:
-            freqs = _sloppy_phrase_freqs(node.terms, ctx, lo, hi, node.slop,
-                                         node.positions)
-        else:
-            freqs = _phrase_freqs(node.terms, ctx, lo, hi, node.positions)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
     if isinstance(node, CMultiPhrase):
+        offs = list(node.positions or range(len(node.slots)))
         if node.slop > 0:
             freqs = _sloppy_multiphrase_freqs(node.slots, ctx, lo, hi,
-                                              node.slop, node.positions)
+                                              node.slop, offs)
         else:
-            freqs = _multi_phrase_freqs(node.slots, ctx, lo, hi,
-                                        node.positions)
+            freqs = _multi_phrase_freqs(
+                _slot_keys(node.slots, ctx, lo, hi, offs, np.unique),
+                hi - lo)
         mask = freqs > 0
         if mask.any():
             s = ctx.sim.score(freqs[mask].astype(np.float32),
@@ -1025,129 +1007,88 @@ def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
     raise TypeError(type(node))
 
 
-def _phrase_freqs(terms: tuple[str, ...], ctx: _SegContext,
-                  lo: int, hi: int,
-                  positions: tuple[int, ...] | None = None) -> np.ndarray:
-    """Exact-phrase frequency per doc in [lo, hi): clause i at
-    ``start + delta_i`` where delta is consecutive (default) or the
-    builder's explicit positions relative to the first
-    (ExactPhraseMatcher semantics, PhraseQuery.java:103 builder
-    positions). Vectorized via (doc<<32|pos) key-set membership."""
-    n = hi - lo
-    freqs = np.zeros(n, dtype=np.int64)
-    tps = [ctx.tp(t) for t in terms]
-    if any(tp is None for tp in tps):
-        return freqs
-    BIG = np.int64(1) << np.int64(32)
-    keysets = []
-    first_keys = None
-    first_docs = None
-    for i, tp in enumerate(tps):
-        ids, tfs = tp.decode_all()
-        pos = tp.positions()
-        docs_rep = np.repeat(ids, tfs)
-        keys = docs_rep * BIG + pos
-        if i == 0:
-            sel = (docs_rep >= lo) & (docs_rep < hi)
-            first_keys = keys[sel]
-            first_docs = docs_rep[sel]
-        keysets.append(np.sort(keys))
-    if first_keys is None or len(first_keys) == 0:
-        return freqs
-    match = np.ones(len(first_keys), dtype=bool)
-    deltas = ([p - positions[0] for p in positions] if positions
-              else list(range(len(terms))))
-    for i in range(1, len(terms)):
-        probe = first_keys + np.int64(deltas[i])
-        idx = np.searchsorted(keysets[i], probe)
-        ok = (idx < len(keysets[i])) & (keysets[i][np.minimum(idx, len(keysets[i]) - 1)] == probe)
-        match &= ok
-    if match.any():
-        np.add.at(freqs, first_docs[match] - lo, 1)
-    return freqs
-
-
-def _multi_phrase_freqs(slots, ctx: "_SegContext",
-                        lo: int, hi: int,
-                        positions: tuple[int, ...] | None = None
-                        ) -> np.ndarray:
-    """Exact multi-phrase frequency per doc in [lo, hi): position i
-    matches when ANY of ``slots[i]``'s terms occurs there (at builder
-    position ``positions[i]``, default i). Same (doc<<32|pos) key-set
-    algorithm as :func:`_phrase_freqs`, with each slot's key set the
-    np.unique UNION of its alternatives (the reference's
-    UnionPostingsEnum — duplicate (doc, pos) across alternatives
-    counts once)."""
-    offs = list(positions) if positions else list(range(len(slots)))
-    n = hi - lo
-    freqs = np.zeros(n, dtype=np.int64)
-    BIG = np.int64(1) << np.int64(32)
-    slot_keys = []
-    for slot in slots:
-        parts = []
-        for t in slot:
-            tp = ctx.tp(t)
-            if tp is None:
-                continue
-            ids, tfs = tp.decode_all()
-            parts.append(np.repeat(ids, tfs) * BIG + tp.positions())
+def _slot_keys(slots, ctx: "_SegContext", lo: int, hi: int,
+               offsets, union) -> list[np.ndarray] | None:
+    """Per-slot sorted offset-adjusted position keys ``(doc - lo) << 32 |
+    (pos - offsets[j] + pad)`` for every occurrence in [lo, hi). A
+    one-term slot's keys are used as decoded (already sorted); a
+    multi-term slot merges its alternatives' keys with ``union`` —
+    ``np.unique`` for the exact matcher (UnionPostingsEnum: a (doc, pos)
+    hit shared by alternatives counts once) and ``np.sort`` for the
+    sloppy one (every sub's positions, ``MultiPhraseQuery.java:445-461``).
+    None when a slot has no term in the segment."""
+    pad = max(offsets) + 1
+    out = []
+    for slot, off in zip(slots, offsets):
+        parts = [k for t in slot
+                 for k in _clause_pos_keys([t], ctx, lo, hi, [off], pad)
+                 or ()]
         if not parts:
-            return freqs
-        slot_keys.append(np.unique(np.concatenate(parts)))
-    first = slot_keys[0]
-    first_docs = first >> np.int64(32)
-    sel = (first_docs >= lo) & (first_docs < hi)
-    first, first_docs = first[sel], first_docs[sel]
-    if len(first) == 0:
-        return freqs
+            return None
+        out.append(parts[0] if len(slot) == 1
+                   else union(np.concatenate(parts)))
+    return out
+
+
+def _multi_phrase_freqs(keys: list[np.ndarray] | None,
+                        n: int) -> np.ndarray:
+    """ExactPhraseMatcher over offset-adjusted slot keys (see
+    :func:`_slot_keys`): a first-slot occurrence starts a match when
+    every other slot holds the same key; freq per doc = matching
+    starts. Phrase, MultiPhrase and SpanPayloadCheck's payload-filtered
+    clauses all count here."""
+    if keys is None or any(len(k) == 0 for k in keys):
+        return np.zeros(n, dtype=np.int64)
+    first = keys[0]
     match = np.ones(len(first), dtype=bool)
-    for i in range(1, len(slot_keys)):
-        probe = first + np.int64(offs[i] - offs[0])
-        ks = slot_keys[i]
-        idx = np.searchsorted(ks, probe)
-        match &= (idx < len(ks)) & (ks[np.minimum(idx, len(ks) - 1)] == probe)
-    if match.any():
-        np.add.at(freqs, first_docs[match] - lo, 1)
-    return freqs
+    for ks in keys[1:]:
+        idx = np.searchsorted(ks, first)
+        match &= (idx < len(ks)) & (ks[np.minimum(idx, len(ks) - 1)]
+                                    == first)
+    return np.bincount(first[match] >> 32, minlength=n)
 
 
 def _sloppy_multiphrase_freqs(slots, ctx: "_SegContext",
                               lo: int, hi: int, slop: int,
-                              positions: tuple[int, ...] | None = None
-                              ) -> np.ndarray:
-    """Sloppy multi-phrase frequency per doc in [lo, hi), one batched
-    pass: slot j's stream is the sorted merge WITH DUPLICATES of its
-    alternatives' (doc, pos) keys (UnionPostingsEnum,
-    ``MultiPhraseQuery.java:445-461``), offset-adjusted like
-    :func:`_sloppy_phrase_freqs`; repeat analysis
+                              offs: list[int]) -> np.ndarray:
+    """Sloppy phrase frequency per doc in [lo, hi), one batched pass of
+    the SloppyPhraseMatcher walk (``SloppyPhraseMatcher.java:53``) over
+    every candidate doc. Repeat analysis
     (``functions.sloppy.multiphrase_repeat_groups`` — the reference's
     initFirstTime term-component grouping) routes to the no-repeat
-    double-minimal kernel, the single-term repeat walk, or the
-    wave-batched advanceRpts walk with the MTP collide-driven init
-    (``SloppyPhraseMatcher.java:286-466``), all exact."""
+    lockstep kernel, the closed form below, or the wave-batched
+    advanceRpts walk (with the multi-term-repeats collide-driven init
+    when a repeating slot holds several terms,
+    ``SloppyPhraseMatcher.java:286-466``), all exact."""
     from ..functions.sloppy import (batch_lucene_repeat_freqs,
                                     batch_lucene_sloppy_freqs,
                                     multiphrase_repeat_groups)
     n = hi - lo
-    offs = list(positions) if positions else list(range(len(slots)))
-    BIG = np.int64(1) << np.int64(32)
-    pad = max(offs) + 1
-    keys = []
-    for j, slot in enumerate(slots):
-        parts = []
-        for t in slot:
-            tp = ctx.tp(t)
-            if tp is None:
-                continue
-            ids, tfs = tp.decode_all()
-            pos = tp.positions()
-            docs_rep = np.repeat(ids, tfs)
-            sel = (docs_rep >= lo) & (docs_rep < hi)
-            parts.append((docs_rep[sel] - lo) * BIG
-                         + (pos[sel] - offs[j] + pad))
-        if not parts:
-            return np.zeros(n, dtype=np.float64)
-        keys.append(np.sort(np.concatenate(parts)))
+    m = len(slots)
+    if m > 1 and len(slots[0]) == 1 and len(set(slots)) == 1 \
+            and offs == list(range(m)):
+        # "t t ... t" at default positions ("if if"~N on a common term —
+        # the worst realistic candidate set) has a closed form: with
+        # strictly increasing positions, the adjusted window of the
+        # consecutive m-run starting at i is [P[i], P[i+m-1]-(m-1)];
+        # BOTH ends strictly increase across runs, so every run is
+        # containment-minimal and non-consecutive selections are
+        # dominated (fuzz-verified ≡ the advanceRpts walk).
+        freqs = np.zeros(n, dtype=np.float32)  # PhraseScorer f32 chain
+        keys = _slot_keys(slots[:1], ctx, lo, hi, [0], np.sort)
+        if keys is None or len(keys[0]) < m:
+            return freqs.astype(np.float64)
+        key = keys[0]
+        k = len(key) - m + 1
+        ml = (key[m - 1:] - (m - 1)) - key[:k]
+        ok = ((key[:k] >> 32) == (key[m - 1:] >> 32)) & (ml <= slop)
+        if ok.any():
+            from ..functions.spans import sloppy_weights
+            np.add.at(freqs, key[:k][ok] >> 32, sloppy_weights(ml[ok]))
+        return freqs.astype(np.float64)
+    keys = _slot_keys(slots, ctx, lo, hi, offs, np.sort)
+    if keys is None:
+        return np.zeros(n, dtype=np.float64)
     has_rpts, has_mtp, groups = multiphrase_repeat_groups(slots, offs)
     if not has_rpts:
         return batch_lucene_sloppy_freqs(keys, offs, slop, n)
@@ -1186,131 +1127,32 @@ def _clause_pos_keys(terms, ctx: _SegContext, lo: int, hi: int,
     return out
 
 
-def _sloppy_phrase_freqs(terms: tuple[str, ...], ctx: _SegContext,
-                         lo: int, hi: int, slop: int,
-                         positions: tuple[int, ...] | None = None
-                         ) -> np.ndarray:
-    """n-term sloppy phrase frequency per doc in [lo, hi), ONE vectorized
-    pass over every candidate doc at once (the SloppyPhraseMatcher.java:53
-    role): clause positions are offset-adjusted (pos - clause_idx, the
-    reference's ``PhrasePositions.position``), embedded into doc-major
-    global keys, and the batched double-minimal-window kernel
-    (functions.spans.batch_sloppy_phrase_freqs) scores all docs without a
-    per-doc Python loop — two COMMON terms with slop stay on the
-    vectorized path."""
-    from ..functions.sloppy import batch_lucene_sloppy_freqs
-    n = hi - lo
-    offs = list(positions) if positions else list(range(len(terms)))
-    if len(set(terms)) != len(terms):
-        # duplicate clause terms: the exact advanceRpts walk (closed
-        # form for single-term repeats, wave-batched otherwise)
-        return _sloppy_repeat_freqs(terms, ctx, lo, hi, slop, offs)
-    keys = _clause_pos_keys(terms, ctx, lo, hi, offsets=offs,
-                            pad=max(offs) + 1)
-    if keys is None:
-        return np.zeros(n, dtype=np.float64)
-    return batch_lucene_sloppy_freqs(keys, offs, slop, n)
-
-
-def _sloppy_repeat_freqs(terms: tuple[str, ...], ctx: _SegContext,
-                         lo: int, hi: int, slop: int,
-                         offs: list[int]) -> np.ndarray:
-    """Duplicate-clause-term sloppy phrase — the reference's EXACT
-    repeats machinery (``SloppyPhraseMatcher.java`` advanceRpts
-    collision walk, golden-pinned against the compiled reference):
-    single-repeated-term default-position queries keep the consecutive
-    m-run closed form (proven ≡ the exact walk, 4000-case fuzz); every
-    mixed shape runs the wave-lockstep batched walk
-    (``functions.sloppy.batch_lucene_repeat_freqs``)."""
-    m = len(terms)
-    if len(set(terms)) == 1 and offs == list(range(m)):
-        # the "t t ... t" default-positions case ("if if"~N on a common
-        # term — the worst realistic candidate set) has a closed form:
-        # with strictly increasing positions, adjusted window of the
-        # consecutive m-run starting at i is [P[i], P[i+m-1]-(m-1)];
-        # BOTH ends are strictly increasing across runs, so every run
-        # is containment-minimal and non-consecutive selections are
-        # dominated (fuzz-verified ≡ the general matcher, 4000 cases).
-        # One vectorized pass, no per-doc loop.
-        n = hi - lo
-        freqs = np.zeros(n, dtype=np.float32)  # PhraseScorer f32 chain
-        tp = ctx.tp(terms[0])
-        if tp is None:
-            return freqs.astype(np.float64)
-        ids, tfs = tp.decode_all()
-        pos = tp.positions()
-        docs_rep = np.repeat(ids, tfs)
-        sel = (docs_rep >= lo) & (docs_rep < hi)
-        dr, pr = docs_rep[sel], pos[sel]
-        if len(dr) < m:
-            return freqs.astype(np.float64)
-        k = len(dr) - m + 1
-        same_doc = dr[:k] == dr[m - 1:]
-        ml = (pr[m - 1:] - (m - 1)) - pr[:k]
-        ok = same_doc & (ml <= slop)
-        if ok.any():
-            from ..functions.spans import sloppy_weights
-            np.add.at(freqs, (dr[:k][ok] - lo).astype(np.int64),
-                      sloppy_weights(ml[ok]))
-        return freqs.astype(np.float64)
-    return _batched_repeat_freqs(terms, ctx, lo, hi, slop, offs)
-
-
-def _batched_repeat_freqs(terms: tuple[str, ...], ctx: _SegContext,
-                          lo: int, hi: int, slop: int,
-                          offs: list[int]) -> np.ndarray:
-    """Mixed duplicate-clause sloppy phrase for every doc in one
-    wave-lockstep pass — the EXACT advanceRpts walk
-    (``functions.sloppy.batch_lucene_repeat_freqs``; one PhrasePositions
-    step per wave across all candidate docs, so a repeated COMMON term
-    ("if … if" over code) stays off the per-doc Python path)."""
-    from ..functions.sloppy import batch_lucene_repeat_freqs
-    n = hi - lo
-    pad = max(offs) + 1
-    keys = _clause_pos_keys(terms, ctx, lo, hi, offsets=offs, pad=pad)
-    if keys is None:
-        return np.zeros(n, dtype=np.float64)
-    gmap: dict[str, list[int]] = {}
-    for j, t in enumerate(terms):
-        gmap.setdefault(t, []).append(j)
-    groups = [tuple(sorted(g, key=lambda j: offs[j]))
-              for g in gmap.values() if len(g) > 1]
-    return batch_lucene_repeat_freqs(keys, offs, slop, n, groups)
-
-
 def _payload_check_freqs(node: "CPayloadCheck", ctx: _SegContext,
                          lo: int, hi: int) -> np.ndarray:
-    """Exact-phrase chain over payload-filtered positions: clause j
-    keeps positions whose float32 payload equals payloads[j] (None =
-    any), then the adjusted key sets intersect like the exact phrase —
-    freq = surviving start positions per doc."""
+    """Exact phrase over payload-filtered positions: clause j keeps
+    positions whose float32 payload equals payloads[j] (None = any),
+    then the exact phrase matcher counts start positions per doc."""
     n = hi - lo
-    freqs = np.zeros(n, dtype=np.float64)
     BIG = np.int64(1) << np.int64(32)
-    inter = None
+    keys = []
     for j, (t, want) in enumerate(zip(node.terms, node.payloads)):
         tp = ctx.tp(t)
         if tp is None:
-            return freqs
+            return np.zeros(n, dtype=np.int64)
         pays = tp.payloads()
         if pays is None:
             raise ValueError("SpanPayloadCheck over an index built "
                              "without payload_delimiter")
         ids, tfs = tp.decode_all()
-        pos = tp.positions()
         docs_rep = np.repeat(ids, tfs)
         sel = (docs_rep >= lo) & (docs_rep < hi)
         if want is not None:
             sel &= pays == np.float32(want)
         # pad keeps adjusted positions positive inside each doc's key
-        # space (same trick as _clause_pos_keys)
-        keys = (docs_rep[sel] - lo) * BIG + (pos[sel] - j
-                                             + len(node.terms))
-        inter = keys if inter is None else             np.intersect1d(inter, keys, assume_unique=True)
-        if len(inter) == 0:
-            return freqs
-    np.add.at(freqs, (inter >> 32).astype(np.int64), 1.0)
-    return freqs
+        # space (same trick as _slot_keys)
+        keys.append((docs_rep[sel] - lo) * BIG
+                    + (tp.positions()[sel] - j + len(node.terms)))
+    return _multi_phrase_freqs(keys, n)
 
 
 def _span_near_freqs(node: "CSpanNear", ctx: _SegContext,

@@ -37,15 +37,15 @@ class Term(Query):
 
 @dataclass(frozen=True)
 class Phrase(Query):
-    """Exact phrase when ``slop == 0``. With slop > 0, any clause count:
-    minimal-interval sloppy matching over offset-adjusted positions —
-    every minimal complete window [L, R] (complete = all clauses present;
-    minimal = shrinking from either side breaks completeness) contributes
-    ``1/(1 + (R - L))`` when ``R - L <= slop``, matching the reference's
-    ``SloppyPhraseMatcher`` (``search/SloppyPhraseMatcher.java:53``)
-    minimal-interval accumulation; duplicate clause terms (the repeats
-    machinery) are unsupported (documented divergence;
-    differential-tested engine ≡ oracle ≡ DuckDB SQL).
+    """PhraseQuery (reference ``search/PhraseQuery.java``): exact
+    phrase when ``slop == 0`` (``ExactPhraseMatcher``); with slop > 0,
+    the reference's ``SloppyPhraseMatcher`` walk
+    (``search/SloppyPhraseMatcher.java:53``) over offset-adjusted
+    positions — each match contributes ``1/(1 + matchLength)`` when
+    ``matchLength <= slop``, accumulated as a float32 chain. Duplicate
+    clause terms run the reference's repeats machinery (advanceRpts).
+    The engine and Monitor run a phrase as a :class:`MultiPhrase` of
+    one-term slots.
 
     ``positions`` (optional) are the reference's explicit builder
     positions (``PhraseQuery.Builder.add(Term, int position)``,

@@ -58,34 +58,21 @@ def _matches(node, terms: set, positions: dict[str, list[int]]) -> bool:
     if isinstance(node, Q.Synonym):
         return any(t in terms for t in node.terms)
     if isinstance(node, Q.Phrase):
-        if any(t not in terms for t in node.terms):
-            return False
-        offs = (list(node.positions) if node.positions
-                else list(range(len(node.terms))))
-        if node.slop > 0:
-            from ..functions.sloppy import lucene_sloppy_freq
-            return lucene_sloppy_freq(
-                [np.asarray(positions[t], dtype=np.int64)
-                 for t in node.terms], node.slop, offsets=offs) > 0
-        base = set(positions[node.terms[0]])
-        for i, t in enumerate(node.terms[1:], 1):
-            base &= {p - (offs[i] - offs[0]) for p in positions[t]}
-            if not base:
-                return False
-        return True
+        # a phrase is a multi-phrase of one-term slots, as in the engine
+        node = Q.MultiPhrase(tuple((t,) for t in node.terms), node.slop,
+                             node.positions)
     if isinstance(node, Q.MultiPhrase):
-        if getattr(node, "slop", 0) > 0:
-            # sloppy percolation: the exact multi-term walk (incl.
-            # hasMultiTermRpts) on this doc's position lists
+        if node.slop > 0:
+            # sloppy percolation: the exact multi-term walk (incl. the
+            # repeats machinery) on this doc's position lists
             from ..functions.sloppy import (
                 lucene_sloppy_multiphrase_freq)
             return lucene_sloppy_multiphrase_freq(
                 node.slots, positions, node.slop,
-                offsets=getattr(node, "positions", None)) > 0.0
+                offsets=node.positions) > 0.0
         # union-of-alternatives per position (UnionPostingsEnum), then
-        # the same consecutive-chain intersection as the exact phrase
-        offs = list(getattr(node, "positions", None)
-                    or range(len(node.slots)))
+        # the consecutive-chain intersection of the exact phrase
+        offs = list(node.positions or range(len(node.slots)))
         slot_sets = []
         for slot in node.slots:
             s: set = set()

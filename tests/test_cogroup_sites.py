@@ -18,7 +18,8 @@ hand, and only the one segment-set commit builds the term dictionary, with
 one fan-out over term ranges and no Spark writer.
 
 Multi-term queries expand on the driver, and search and percolation
-share one matcher.
+share one matcher. Every phrase and span kernel is reached from the engine
+or the oracle.
 """
 
 from __future__ import annotations
@@ -190,3 +191,33 @@ def test_oracle_matcher_stays_in_the_oracle():
         rel = path.relative_to(PACKAGE).as_posix()
         assert not [n for m, n, _ in _imports(rel)
                     if m == "oracle.py" and n.startswith("_")], rel
+
+
+def test_phrase_and_span_kernels_are_reachable():
+    """Every top-level function of ``functions/spans.py`` and
+    ``functions/sloppy.py`` is reached from a package module outside those
+    two files (the engine or the oracle), directly or through calls inside
+    them. A kernel that only its own tests call fails here."""
+    files = ("functions/spans.py", "functions/sloppy.py")
+    defs = {(rel, node.name): node for rel in files
+            for node in ast.parse((PACKAGE / rel).read_text(
+                encoding="utf-8")).body
+            if isinstance(node, ast.FunctionDef)}
+    edges = {}
+    for (rel, name), node in defs.items():
+        used = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+        edges[rel, name] = {(rel, n) for n in used if (rel, n) in defs} | {
+            (mod, n) for mod, n, scope in _imports(rel)
+            if (mod, n) in defs and (scope.split(".")[0] == name
+                                     or not scope and n in used)}
+    todo = [(mod, n)
+            for path in sorted(PACKAGE.rglob("*.py"))
+            if (rel := path.relative_to(PACKAGE).as_posix()) not in files
+            for mod, n, _ in _imports(rel) if (mod, n) in defs]
+    seen = set()
+    while todo:
+        key = todo.pop()
+        if key not in seen:
+            seen.add(key)
+            todo.extend(edges[key])
+    assert sorted(set(defs) - seen) == []

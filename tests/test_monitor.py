@@ -24,6 +24,7 @@ QUERIES = {
     "q_fuzzy": Q.MultiTerm("fuzzy", "parze", edits=1),
     "q_regexp": Q.MultiTerm("regexp", "pa.+e|tok[a-z]n"),
     "q_sloppy3": Q.Phrase(("if", "return", "value"), slop=6),
+    "q_rep_sloppy": Q.Phrase(("return", "return"), slop=2),
     "q_span": Q.SpanNear(("parse", "emit"), slop=6, in_order=False),
     "q_spannot": Q.SpanNot(Q.SpanNear(("parse", "emit"), slop=8,
                                       in_order=False), Q.Term("codec")),

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 from lucene_spark.functions import codec
 from lucene_spark.functions.analysis import analyze_text
 from lucene_spark.functions.smallfloat import byte4_to_int, int_to_byte4
-from lucene_spark.functions.spans import sloppy_phrase_freq, span_near_freq
+from lucene_spark.functions.spans import span_near_freq
 
 
 @settings(max_examples=200, deadline=None)
@@ -114,52 +114,6 @@ def test_analyzer_invariants(text):
     # re-analysis of the joined terms is a fixpoint for token content
     terms2, _, _ = analyze_text(" ".join(terms))
     assert terms2 == terms
-
-
-def _brute_sloppy_freq(pos_lists, slop):
-    """Independent containment-minimal-window enumeration: every complete
-    window over offset-adjusted positions that contains no proper complete
-    sub-window; counted once with 1/(1+width) when width <= slop."""
-    adj = [sorted(int(p) - j for p in lst)
-           for j, lst in enumerate(pos_lists)]
-    if any(not a for a in adj):
-        return 0.0
-    pts = sorted({p for a in adj for p in a})
-    complete = []
-    for li, L in enumerate(pts):
-        for R in pts[li:]:
-            if all(any(L <= p <= R for p in a) for a in adj):
-                complete.append((L, R))
-                break   # wider windows with this L are non-minimal
-    freq = np.float32(0.0)   # the kernel's f32 += f32 sloppyWeight chain
-    one = np.float32(1.0)
-    for (L, R) in sorted(complete):
-        if any((L2, R2) != (L, R) and L2 >= L and R2 <= R
-               for (L2, R2) in complete):
-            continue
-        if R - L <= slop:
-            freq = np.float32(freq + one / (one + np.float32(R - L)))
-    return float(freq)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_sloppy_phrase_minimal_windows(data):
-    """Engine kernel ≡ independent brute-force minimal-interval
-    enumeration, for 2..4 clauses (the SloppyPhraseMatcher role)."""
-    n = data.draw(st.integers(2, 4))
-    lists = []
-    for _ in range(n):
-        ps = data.draw(st.lists(st.integers(0, 40), min_size=0,
-                                max_size=7, unique=True))
-        lists.append(np.asarray(sorted(ps), dtype=np.int64))
-    slop = data.draw(st.integers(0, 12))
-    got = sloppy_phrase_freq(lists, slop)
-    want = _brute_sloppy_freq(lists, slop)
-    assert got == want, (lists, slop)
-    # wider slop never loses matches (1-ulp slack: f32 chain over a
-    # SUBSEQUENCE is not strictly monotone under rounding)
-    assert sloppy_phrase_freq(lists, slop + 5) >= got - 1e-6
 
 
 @settings(max_examples=200, deadline=None)

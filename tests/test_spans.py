@@ -326,15 +326,14 @@ def _rand_doc_positions(rng, n_clauses, n_docs, density):
     return per_doc
 
 
-def _keys(per_doc, n_clauses, offsets=None, pad=0):
+def _keys(per_doc, n_clauses):
     import numpy as np
     BIG = np.int64(1) << np.int64(32)
     out = []
     for j in range(n_clauses):
         parts = []
         for d in sorted(per_doc[j]):
-            off = (offsets[j] if offsets else 0) - pad
-            parts.append(np.int64(d) * BIG + (per_doc[j][d] - off))
+            parts.append(np.int64(d) * BIG + per_doc[j][d])
         out.append(np.concatenate(parts) if parts
                    else np.empty(0, np.int64))
     return out
@@ -342,12 +341,12 @@ def _keys(per_doc, n_clauses, offsets=None, pad=0):
 
 def test_batched_kernels_match_per_doc():
     """Differential: the batched cross-doc kernels must equal the per-doc
-    matchers exactly on randomized multi-doc inputs (sloppy phrase,
-    ordered and unordered SpanNear)."""
+    matchers exactly on randomized multi-doc inputs (ordered and
+    unordered SpanNear)."""
     import numpy as np
-    from lucene_spark.functions.spans import (
-        batch_ordered_near_freqs, batch_sloppy_phrase_freqs,
-        batch_unordered_near_freqs, sloppy_phrase_freq, span_near_freq)
+    from lucene_spark.functions.spans import (batch_ordered_near_freqs,
+                                              batch_unordered_near_freqs,
+                                              span_near_freq)
 
     rng = np.random.default_rng(7)
     empty = np.empty(0, np.int64)
@@ -365,12 +364,6 @@ def test_batched_kernels_match_per_doc():
                          for j in range(n_clauses)]
                 out[d] = fn(lists)
             return out
-
-        want = per_doc_freqs(lambda ls: sloppy_phrase_freq(ls, slop))
-        got = batch_sloppy_phrase_freqs(
-            _keys(per_doc, n_clauses, offsets=list(range(n_clauses)),
-                  pad=n_clauses), slop, n_docs)
-        assert np.array_equal(want, got), ("sloppy", trial)
 
         want = per_doc_freqs(lambda ls: span_near_freq(ls, slop, True))
         got = batch_ordered_near_freqs(_keys(per_doc, n_clauses),
@@ -509,13 +502,14 @@ def test_span_not_pre_post(spark):
 
 def test_single_term_repeat_closed_form_fuzz():
     """The vectorized 'consecutive m-run' closed form for single-term
-    default-position repeat phrases ≡ the general injective-multiset
-    matcher (4000 random streams)."""
+    default-position repeat phrases ≡ the advanceRpts walk
+    (``functions.sloppy.lucene_sloppy_repeat_freq``, golden-pinned
+    against the compiled reference) on 4000 random streams."""
     import random
 
     import numpy as np
 
-    from lucene_spark.functions.spans import multiset_sloppy_freq
+    from lucene_spark.functions.sloppy import lucene_sloppy_repeat_freq
 
     rng = random.Random(13)
     for _ in range(4000):
@@ -523,8 +517,7 @@ def test_single_term_repeat_closed_form_fuzz():
         k = rng.randint(0, 8)
         P = np.array(sorted(rng.sample(range(22), k)), dtype=np.int64)
         slop = rng.randint(0, 8)
-        want = multiset_sloppy_freq(["t"] * m, {"t": P}, slop,
-                                    list(range(m)))
+        want = lucene_sloppy_repeat_freq([P] * m, slop)
         if len(P) < m:
             got = 0.0
         else:
@@ -538,9 +531,10 @@ def test_single_term_repeat_closed_form_fuzz():
 
 
 def test_repeat_batched_matcher_preserves_results(spark):
-    """The fully batched multiset matcher (Pareto envelopes + interval
-    containment kernel) keeps engine results for duplicate-clause
-    phrase/span queries float-identical to the OracleIndex."""
+    """Duplicate-clause phrase and span queries score float-identically
+    to the OracleIndex: the engine's wave-batched advanceRpts walk
+    against the oracle's per-doc walk for phrases, and the batched
+    NearSpans kernels against the per-doc ports for SpanNear."""
     import tempfile
 
     import numpy as np
@@ -570,46 +564,3 @@ def test_repeat_batched_matcher_preserves_results(spark):
         assert [g[0] for g in got] == [w[0] for w in want], q
         assert np.allclose([g[1] for g in got], [w[1] for w in want],
                            rtol=0, atol=0), q
-
-
-def test_batch_multiset_fuzz_vs_per_doc():
-    """batch_multiset_sloppy_freqs ≡ multiset_sloppy_freq over random
-    corpora — includes spread custom offsets (the "dipping" assignments
-    where a later clause's adjusted position undercuts the first's) and
-    both matchLength conventions."""
-    import random
-
-    import numpy as np
-
-    from lucene_spark.functions.spans import (batch_multiset_sloppy_freqs,
-                                              multiset_sloppy_freq)
-
-    rng = random.Random(11)
-    BIG = np.int64(1) << np.int64(32)
-    for _ in range(800):
-        terms = [f"t{i}" for i in range(rng.choice([2, 2, 3]))]
-        clauses = [rng.choice(terms) for _ in range(rng.randint(2, 4))]
-        while len(set(clauses)) == len(clauses):
-            clauses[rng.randrange(len(clauses))] = clauses[0]
-        offs = (list(range(len(clauses))) if rng.random() < 0.5
-                else sorted(rng.randint(0, 6) for _ in clauses))
-        slop = rng.randint(0, 5)
-        ml_n = rng.choice([None, len(clauses)])
-        n_docs = rng.randint(1, 4)
-        pos = {d: {t: sorted(rng.sample(range(14), rng.randint(0, 5)))
-                   for t in set(clauses)} for d in range(n_docs)}
-        want = np.array([multiset_sloppy_freq(clauses, pos[d], slop,
-                                              offs, ml_n=ml_n)
-                         for d in range(n_docs)])
-        pad = max(offs) + 1
-        offs_by = {}
-        for j, t in enumerate(clauses):
-            offs_by.setdefault(t, []).append(offs[j])
-        keys = {t: np.array(sorted(d * int(BIG) + p + pad
-                                   for d in range(n_docs)
-                                   for p in pos[d][t]), dtype=np.int64)
-                for t in set(clauses)}
-        got = batch_multiset_sloppy_freqs(keys, offs_by, slop, n_docs,
-                                          ml_n=ml_n)
-        assert np.allclose(got, want, atol=1e-12), \
-            (clauses, offs, slop, ml_n, pos)
