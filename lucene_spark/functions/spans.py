@@ -349,24 +349,6 @@ def _batch_double_minimal(key_lists: list[np.ndarray]
     return pairs[:, 0], pairs[:, 1]
 
 
-def batch_unordered_near_freqs(pos_key_lists: list[np.ndarray], slop: int,
-                               n_docs: int) -> np.ndarray:
-    """Per-doc accumulated UNORDERED SpanNear frequency in one pass —
-    reference-exact (functions/nearspans.py batched event-walk kernel;
-    width = maxEnd − minStart, match when width − n <= slop)."""
-    return batch_spans_freqs(batch_near_spans(pos_key_lists, slop, False),
-                             n_docs)
-
-
-def batch_ordered_near_freqs(pos_key_lists: list[np.ndarray], slop: int,
-                             n_docs: int) -> np.ndarray:
-    """Per-doc accumulated ORDERED SpanNear frequency in one pass —
-    reference-exact (one emission per first-clause position whose
-    stretched chain fits; width = Σ internal gaps)."""
-    return batch_spans_freqs(batch_near_spans(pos_key_lists, slop, True),
-                             n_docs)
-
-
 def batch_near_spans(pos_key_lists: list[np.ndarray], slop: int,
                      in_order: bool) -> np.ndarray:
     """Batched :func:`near_spans`: (start_key, end_key, width) triples of

@@ -78,17 +78,9 @@ class CMultiPhrase:
 
 
 @dataclass(frozen=True)
-class CSpanNear:
-    terms: tuple[str, ...]
-    weight: np.float32
-    slop: int = 0
-    in_order: bool = True
-
-
-@dataclass(frozen=True)
 class CSpanTree:
-    """Compiled span-algebra query (SpanOr/SpanNot/SpanFirst over term
-    and near leaves): ``tree`` is the nested-tuple grammar of
+    """Compiled span query (SpanNear, SpanOr, SpanNot, SpanFirst, … over
+    term and near leaves): ``tree`` is the nested-tuple grammar of
     ``functions.spans.eval_span_tree``; ``weight`` is the idf-sum over the
     POSITIVE leaf terms (exclude sides contribute no stats, matching
     ``SpanNotQuery.java:117``)."""
@@ -368,20 +360,16 @@ def compile_query(q: Q.Query, term_dfs: dict[str, int], doc_count: int,
                 tuple((k[0], k[1], tuple(v)) for k, v in sorted(tr.items())),
                 tuple((k, tuple(v)) for k, v in sorted(anyt.items())),
                 frozenset(int(a) for a in node.accepts))
-        if isinstance(node, Q.SpanNear) and \
-                all(isinstance(t, str) for t in node.terms):
-            if any(df_of(t) == 0 for t in node.terms):
-                return None
-            # SpanWeight.buildSimWeight keys termStates by TERM (a Map)
-            # — duplicate clause terms contribute idf ONCE, unlike
-            # PhraseWeight's per-occurrence array (differential q97-q100)
-            w = multi_weight([df_of(t) for t in dict.fromkeys(node.terms)])
-            return CSpanNear(tuple(node.terms), w, node.slop, node.in_order)
         if isinstance(node, (Q.SpanOr, Q.SpanNot, Q.SpanFirst,
                              Q.SpanPositionRange,
                              Q.SpanContaining, Q.SpanWithin, Q.SpanNear)):
             from ..functions.spans import span_tree_terms
             tree = _span_tree(node)
+            if tree[0] == "near" and any(df_of(t) == 0 for t in tree[1]):
+                return None    # a flat SpanNear needs every term
+            # SpanWeight.buildSimWeight keys termStates by TERM (a Map)
+            # — duplicate clause terms contribute idf ONCE, unlike
+            # PhraseWeight's per-occurrence array (differential q97-q100)
             pos = [t for t in
                    dict.fromkeys(span_tree_terms(tree, positive_only=True))
                    if df_of(t) > 0]
@@ -517,12 +505,12 @@ def _span_tree(node) -> tuple:
         return ("term", node)
     if isinstance(node, Q.SpanNear):
         if all(isinstance(t, str) for t in node.terms):
-            # duplicate clause terms are handled inside the near kernels
+            # duplicate clause terms are handled inside the near kernel
             # (ordered: ratchet over equal streams; unordered: the
-            # multiset kernel / per-doc heap walk —
-            # functions/nearspans.py batch_near_spans_exact), exactly as
-            # for the flat CSpanNear path; pinned by the nested-repeat
-            # shapes of tests/data/lucene_diff/spanalg_fuzz.tsv.gz
+            # tie-order-faithful heap walk on docs with duplicated keys —
+            # functions/nearspans.py batch_near_spans_exact), top-level
+            # or nested; pinned by the nested-repeat shapes of
+            # tests/data/lucene_diff/spanalg_fuzz.tsv.gz
             return ("near", tuple(node.terms), node.slop, node.in_order)
         # nested SpanNearQuery(SpanQuery...): clauses may be span nodes
         return ("nearspans", tuple(_span_tree(c) for c in node.terms),
@@ -554,7 +542,7 @@ def _compiled_terms(c) -> list[str]:
         return []
     if isinstance(c, CTerm):
         return [c.term]
-    if isinstance(c, (CSynonym, CConstTerms, CSpanNear, CMultiPhrase,
+    if isinstance(c, (CSynonym, CConstTerms, CMultiPhrase,
                       CTermAutomaton, CPayloadCheck, CIndriAnd)):
         return list(c.terms)
     if isinstance(c, CSpanTree):
@@ -752,6 +740,19 @@ def _f32_boundary(scores: np.ndarray, mask: np.ndarray) -> np.ndarray:
     return scores
 
 
+def _scored(freqs: np.ndarray, node, ctx: _SegContext, lo: int, hi: int):
+    """(mask, float64 scores) of a node scored on a per-doc frequency over
+    [lo, hi): the docs with ``freqs > 0``, scored by the similarity on
+    their float32 freq and ``node.weight``."""
+    mask = freqs > 0
+    scores = np.zeros(hi - lo, dtype=np.float64)
+    if mask.any():
+        scores[mask] = ctx.sim.score(freqs[mask].astype(np.float32),
+                                     ctx.norms[lo:hi][mask], node.weight,
+                                     ctx.cache)
+    return mask, scores
+
+
 def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
     """Evaluate the compiled tree over local docIDs [lo, hi).
 
@@ -819,13 +820,7 @@ def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
             ids, tfs = tp.in_range(lo, hi)
             freqs[ids - lo] += (np.float32(b)
                                 * tfs.astype(np.float32)).astype(np.float64)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
+        return _scored(freqs, node, ctx, lo, hi)
     if isinstance(node, CMultiPhrase):
         offs = list(node.positions or range(len(node.slots)))
         if node.slop > 0:
@@ -835,22 +830,10 @@ def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
             freqs = _multi_phrase_freqs(
                 _slot_keys(node.slots, ctx, lo, hi, offs, np.unique),
                 hi - lo)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
+        return _scored(freqs, node, ctx, lo, hi)
     if isinstance(node, CPayloadCheck):
-        freqs = _payload_check_freqs(node, ctx, lo, hi)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
+        return _scored(_payload_check_freqs(node, ctx, lo, hi), node, ctx,
+                       lo, hi)
     if isinstance(node, CTermAutomaton):
         # position-wave batched NFA: all candidate docs advance the DP
         # together (the per-doc loop remains as the differential twin)
@@ -863,31 +846,10 @@ def _eval_range(node, ctx: _SegContext, lo: int, hi: int):
         anyt = dict(node.any_trans)
         freqs = wave_term_automaton_freqs(keys, n, trans, anyt,
                                           node.accepts)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
-    if isinstance(node, CSpanNear):
-        freqs = _span_near_freqs(node, ctx, lo, hi)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
+        return _scored(freqs, node, ctx, lo, hi)
     if isinstance(node, CSpanTree):
-        freqs = _span_tree_freqs(node, ctx, lo, hi)
-        mask = freqs > 0
-        if mask.any():
-            s = ctx.sim.score(freqs[mask].astype(np.float32),
-                              ctx.norms[lo:hi][mask],
-                              node.weight, ctx.cache)
-            scores[mask] = s.astype(np.float64)
-        return mask, scores
+        return _scored(_span_tree_freqs(node, ctx, lo, hi), node, ctx, lo,
+                       hi)
     if isinstance(node, CInterval):
         from ..functions.intervals import (batch_interval_freqs,
                                            eval_intervals,
@@ -1155,25 +1117,6 @@ def _payload_check_freqs(node: "CPayloadCheck", ctx: _SegContext,
     return _multi_phrase_freqs(keys, n)
 
 
-def _span_near_freqs(node: "CSpanNear", ctx: _SegContext,
-                     lo: int, hi: int) -> np.ndarray:
-    """SpanNear sloppy frequency per doc in [lo, hi), one vectorized pass
-    — the reference-exact batched NearSpans kernels
-    (functions/nearspans.py via functions.spans.batch_*_near_freqs).
-    Duplicate clause terms are handled inside the kernel: ordered stays
-    fully vectorized; unordered runs the tie-order-faithful heap walk
-    only on docs with duplicated position keys."""
-    from ..functions.spans import (batch_ordered_near_freqs,
-                                   batch_unordered_near_freqs)
-    n = hi - lo
-    keys = _clause_pos_keys(node.terms, ctx, lo, hi)
-    if keys is None:
-        return np.zeros(n, dtype=np.float64)
-    fn = batch_ordered_near_freqs if node.in_order \
-        else batch_unordered_near_freqs
-    return fn(keys, node.slop, n)
-
-
 def _span_tree_freqs(node: "CSpanTree", ctx: _SegContext,
                      lo: int, hi: int) -> np.ndarray:
     """Span-algebra sloppy frequency per doc in [lo, hi), one batched
@@ -1427,7 +1370,197 @@ def fan_out(spark, items: list, fn, schema: str):
     return local_frame(spark, rows, "item binary").mapInPandas(run, schema)
 
 
-class Searcher:
+class QueryCompiler:
+    """Driver-side query preparation over one index's term dictionary:
+    rewrite, multi-term expansion, collection stats and weights. A reader
+    answers two reads of its dictionary, ``_term_columns(bounds)`` and
+    ``_global_stats(terms)``, and holds ``similarity``, ``doc_count``,
+    ``sum_ttf`` and ``deletes``. :class:`Searcher` reads committed term
+    dictionaries; ``operators.memoryindex.MemorySegment`` reads the
+    postings of a segment inverted in memory."""
+
+    def expand_terms(self, kind: str, value, max_terms: int = 512
+                     ) -> list[str]:
+        """MultiTermQuery expansion against the term dictionary (the
+        reference's rewrite walks the sorted terms against the query's
+        automaton: ``search/MultiTermQuery.java:55``): the dictionary's
+        terms that ``plans.query.term_matcher(kind, value)`` accepts.
+
+        ``kind``/``value`` are a :class:`~lucene_spark.plans.query.
+        MultiTerm`'s: ``("prefix", p)``, ``("wildcard", pattern)`` with
+        ``*``/``?``/``\\`` escape, ``("regexp", python_regex)`` matched
+        against the whole term, ``("fuzzy", (term, max_edits))`` and
+        ``("range", (lo, hi, lo_inclusive, hi_inclusive))`` with ``None``
+        for an open end. Expansion is capped at ``max_terms`` (the
+        reference's maxClauseCount guard), deterministically: the first
+        ``max_terms`` in UTF-8 byte order. Read on the driver with no
+        Spark job; several dictionaries (MultiSearcher) merge."""
+        return self._dictionary_terms(kind, value)[:max_terms]
+
+    def _dictionary_terms(self, kind: str, value) -> list[str]:
+        """Every dictionary term the matcher accepts, sorted."""
+        bounds, select = Q.term_matcher(kind, value)
+        return sorted({t for col in self._term_columns(bounds)
+                       for t in select(col)})
+
+    def _fuzzy_boosts(self, base: str, max_edits: int, limit: int,
+                      prefix: str = "") -> list[tuple[str, np.float32]]:
+        """The ``limit`` best fuzzy variants of ``base`` that start with
+        ``prefix``, as ``(term, float32 boost)``: FuzzyTermsEnum's boost
+        ``1 - ed/min(len(term), len(base))``, 1.0 for an exact match
+        (``FuzzyTermsEnum.java:248-255``). Ranked by that boost in double
+        precision, then by term, the top-terms queue's order."""
+        bounds, select = Q.term_matcher("prefix", prefix)
+        dist = {}
+        for col in self._term_columns(bounds):
+            col = select(col)
+            dist.update((t, int(d)) for t, d in zip(
+                col, Q.edit_distances(col, base, max_edits))
+                if d <= max_edits)
+        ranked = []
+        for t, d in dist.items():
+            ml = min(len(t), len(base))
+            b = np.float32(1.0) - np.float32(d) / np.float32(ml)
+            ranked.append((-(1.0 - d / ml) if d else -1.0, t,
+                           np.float32(1.0) if d == 0 else b))
+        ranked.sort(key=lambda r: r[:2])
+        return [(t, b) for _, t, b in ranked[:limit]]
+
+    def fuzzy_terms_with_boosts(self, base: str, max_edits: int = 2,
+                                max_expansions: int = 50
+                                ) -> list[tuple[str, float]]:
+        """Fuzzy expansion with FuzzyTermsEnum boosts (see
+        ``_fuzzy_boosts``), capped at the ``max_expansions`` best-boost
+        terms (TopTermsBlendedFreqScoringRewrite's maxExpansions=50,
+        ``FuzzyQuery.java:57``), returned sorted by term."""
+        return sorted((t, float(b)) for t, b in
+                      self._fuzzy_boosts(base, max_edits, max_expansions))
+
+    def _global_dfs(self, terms: list[str]) -> dict[str, int]:
+        return self._global_stats(terms)[0]
+
+    def _resolve(self, q):
+        """Expand MultiTerm nodes against the term dictionary (the
+        reference's rewrite(reader) step for MultiTermQuery:
+        ``search/MultiTermQuery.java:55``)."""
+        if isinstance(q, Q.MultiPhrase) and \
+                any(not isinstance(e, str) for s in q.slots for e in s):
+            # "app* as a multi-phrase": multiterm slot entries expand
+            # against the dictionary into the slot's alternative set
+            # (the reference builds this with a TermsEnum walk —
+            # MultiPhraseQuery javadoc's prefixed-phrase example); slop
+            # and positions carry over
+            for e in (e for s in q.slots for e in s):
+                if not isinstance(e, str) and e[0] not in ("prefix",
+                                                           "wildcard"):
+                    raise ValueError(f"multiphrase slot entry kind {e[0]!r}")
+            return replace(q, slots=tuple(
+                tuple(dict.fromkeys(t for e in slot for t in (
+                    [e] if isinstance(e, str) else self.expand_terms(*e))))
+                for slot in q.slots))
+        if isinstance(q, Q.FuzzyLikeThis):
+            # FuzzyLikeThisQuery.rewrite (sandbox/queries/
+            # FuzzyLikeThisQuery.java:118-255): per-source-term fuzzy
+            # variant queues → boost²·idf rescoring → global top queue →
+            # SHOULD sum over artificial-df=1 term queries
+            from ..functions.analysis import analyze_text
+            toks, _, _ = analyze_text(q.text)
+            variants = {t: self._fuzzy_boosts(t, q.max_edits,
+                                              q.max_variants_per_term,
+                                              t[:q.prefix_len])
+                        for t in dict.fromkeys(toks)}
+            dfs = self._global_dfs(list(variants) + [
+                v for vs in variants.values() for v, _ in vs])
+            num_docs = self.doc_count
+            if self.deletes:
+                num_docs -= sum(len(v) for v in self.deletes.values())
+            scored: list[tuple[float, str]] = []
+            for t, vs in variants.items():
+                if not vs:
+                    continue
+                # else the integer-mean of the variants' dfs (:162-166)
+                df_src = dfs.get(t, 0) or \
+                    sum(dfs[v] for v, _ in vs) // len(vs)
+                idf = np.float32(
+                    np.log((num_docs + 1) / (df_src + 1.0)) + 1.0)
+                scored.extend((float(np.float32(np.float32(b * b) * idf)), v)
+                              for v, b in vs)
+            # global ScoreTermQueue order: score desc, term asc (:362-365)
+            scored.sort(key=lambda p: (-p[0], p[1]))
+            top = scored[:q.max_num_terms]
+            if not top:
+                return _ResolvedMultiTerm((), 1.0)
+            return _FixedStatsTerms(tuple(t for _, t in top),
+                                    tuple(s for s, _ in top))
+        if isinstance(q, Q.MultiTerm):
+            if q.kind == "fuzzy" and q.scored:
+                pairs = self.fuzzy_terms_with_boosts(str(q.value), q.edits)
+                return _BlendedTerms(tuple(t for t, _ in pairs),
+                                     tuple(b for _, b in pairs), q.boost)
+            return _ResolvedMultiTerm(tuple(self.expand_terms(*q.expansion)),
+                                      q.boost)
+        if isinstance(q, Q.Or):
+            return Q.Or(tuple(self._resolve(c) for c in q.clauses),
+                        q.min_should_match)
+        if isinstance(q, Q.And):
+            return Q.And(tuple(self._resolve(c) for c in q.clauses))
+        if isinstance(q, Q.DisMax):
+            return Q.DisMax(tuple(self._resolve(c) for c in q.clauses),
+                            q.tie_breaker)
+        if isinstance(q, Q.Not):
+            return Q.Not(self._resolve(q.positive), self._resolve(q.negative))
+        if isinstance(q, Q.ReqFilter):
+            return Q.ReqFilter(self._resolve(q.positive),
+                               self._resolve(q.filter))
+        if isinstance(q, Q.Interval):
+            from ..functions.intervals import resolve_multi_term_sources
+            return Q.Interval(resolve_multi_term_sources(q.tree,
+                                                         self.expand_terms),
+                              q.pivot, q.boost)
+        if isinstance(q, Q.SpanMultiTermWrapper):
+            # SpanMultiTermQueryWrapper: dictionary expansion → SpanOr of
+            # term spans (reference SpanMultiTermQueryWrapper.java rewrite)
+            expanded = self._resolve(q.query)
+            if isinstance(expanded, _ResolvedMultiTerm):
+                return Q.SpanOr(tuple(Q.Term(t) for t in expanded.terms))
+            return Q.SpanOr(tuple(Q.Term(t) for t in expanded.all_terms()))
+        if isinstance(q, Q.SpanNear) and \
+                not all(isinstance(t, str) for t in q.terms):
+            return Q.SpanNear(tuple(t if isinstance(t, str)
+                                    else self._resolve(t)
+                                    for t in q.terms), q.slop, q.in_order)
+        if isinstance(q, Q.SpanOr):
+            return Q.SpanOr(tuple(self._resolve(c) for c in q.clauses))
+        if isinstance(q, Q.SpanNot):
+            return Q.SpanNot(self._resolve(q.include),
+                             self._resolve(q.exclude), q.pre, q.post)
+        if isinstance(q, Q.SpanFirst):
+            return Q.SpanFirst(self._resolve(q.match), q.end)
+        if isinstance(q, Q.SpanPositionRange):
+            return Q.SpanPositionRange(self._resolve(q.match),
+                                       q.start, q.end)
+        if isinstance(q, Q.SpanContaining):
+            return Q.SpanContaining(self._resolve(q.big),
+                                    self._resolve(q.little))
+        if isinstance(q, Q.SpanWithin):
+            return Q.SpanWithin(self._resolve(q.little),
+                                self._resolve(q.big))
+        return q
+
+    def _compile(self, query):
+        if isinstance(query, str):
+            query = parse_query(query)
+        query = Q.rewrite_fixed_point(query)
+        query = self._resolve(query)
+        dfs, ttfs = self._global_stats(query.all_terms())
+        compiled = compile_query(query, dfs, self.doc_count, self.similarity,
+                                 ttfs, self.sum_ttf)
+        avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
+        cache = self.similarity.norm_cache(avgdl)
+        return compiled, cache
+
+
+class Searcher(QueryCompiler):
     """Point-in-time reader + searcher over a committed snapshot
     (DirectoryReader/IndexSearcher role)."""
 
@@ -1601,9 +1734,6 @@ class Searcher:
         return distance_feature_query(self, field, origin, pivot, weight)
 
     # -- stats -------------------------------------------------------------
-    def _global_dfs(self, terms: list[str]) -> dict[str, int]:
-        return self._global_stats(terms)[0]
-
     def _global_stats(self, terms: list[str]) \
             -> tuple[dict[str, int], dict[str, int]]:
         """(dfs, ttfs) per term in one dictionary probe (TermStates.build
@@ -1625,126 +1755,6 @@ class Searcher:
                 dfs[term] = dfs.get(term, 0) + df
                 ttfs[term] = ttfs.get(term, 0) + ttf
         return dfs, ttfs
-
-    def _resolve(self, q):
-        """Expand MultiTerm nodes against the term dictionary (the
-        reference's rewrite(reader) step for MultiTermQuery:
-        ``search/MultiTermQuery.java:55``)."""
-        if isinstance(q, Q.MultiPhrase) and \
-                any(not isinstance(e, str) for s in q.slots for e in s):
-            # "app* as a multi-phrase": multiterm slot entries expand
-            # against the dictionary into the slot's alternative set
-            # (the reference builds this with a TermsEnum walk —
-            # MultiPhraseQuery javadoc's prefixed-phrase example); slop
-            # and positions carry over
-            for e in (e for s in q.slots for e in s):
-                if not isinstance(e, str) and e[0] not in ("prefix",
-                                                           "wildcard"):
-                    raise ValueError(f"multiphrase slot entry kind {e[0]!r}")
-            return replace(q, slots=tuple(
-                tuple(dict.fromkeys(t for e in slot for t in (
-                    [e] if isinstance(e, str) else self.expand_terms(*e))))
-                for slot in q.slots))
-        if isinstance(q, Q.FuzzyLikeThis):
-            # FuzzyLikeThisQuery.rewrite (sandbox/queries/
-            # FuzzyLikeThisQuery.java:118-255): per-source-term fuzzy
-            # variant queues → boost²·idf rescoring → global top queue →
-            # SHOULD sum over artificial-df=1 term queries
-            from ..functions.analysis import analyze_text
-            toks, _, _ = analyze_text(q.text)
-            variants = {t: self._fuzzy_boosts(t, q.max_edits,
-                                              q.max_variants_per_term,
-                                              t[:q.prefix_len])
-                        for t in dict.fromkeys(toks)}
-            dfs = self._global_dfs(list(variants) + [
-                v for vs in variants.values() for v, _ in vs])
-            num_docs = self.doc_count
-            if self.deletes:
-                num_docs -= sum(len(v) for v in self.deletes.values())
-            scored: list[tuple[float, str]] = []
-            for t, vs in variants.items():
-                if not vs:
-                    continue
-                # else the integer-mean of the variants' dfs (:162-166)
-                df_src = dfs.get(t, 0) or \
-                    sum(dfs[v] for v, _ in vs) // len(vs)
-                idf = np.float32(
-                    np.log((num_docs + 1) / (df_src + 1.0)) + 1.0)
-                scored.extend((float(np.float32(np.float32(b * b) * idf)), v)
-                              for v, b in vs)
-            # global ScoreTermQueue order: score desc, term asc (:362-365)
-            scored.sort(key=lambda p: (-p[0], p[1]))
-            top = scored[:q.max_num_terms]
-            if not top:
-                return _ResolvedMultiTerm((), 1.0)
-            return _FixedStatsTerms(tuple(t for _, t in top),
-                                    tuple(s for s, _ in top))
-        if isinstance(q, Q.MultiTerm):
-            if q.kind == "fuzzy" and q.scored:
-                pairs = self.fuzzy_terms_with_boosts(str(q.value), q.edits)
-                return _BlendedTerms(tuple(t for t, _ in pairs),
-                                     tuple(b for _, b in pairs), q.boost)
-            return _ResolvedMultiTerm(tuple(self.expand_terms(*q.expansion)),
-                                      q.boost)
-        if isinstance(q, Q.Or):
-            return Q.Or(tuple(self._resolve(c) for c in q.clauses),
-                        q.min_should_match)
-        if isinstance(q, Q.And):
-            return Q.And(tuple(self._resolve(c) for c in q.clauses))
-        if isinstance(q, Q.DisMax):
-            return Q.DisMax(tuple(self._resolve(c) for c in q.clauses),
-                            q.tie_breaker)
-        if isinstance(q, Q.Not):
-            return Q.Not(self._resolve(q.positive), self._resolve(q.negative))
-        if isinstance(q, Q.ReqFilter):
-            return Q.ReqFilter(self._resolve(q.positive),
-                               self._resolve(q.filter))
-        if isinstance(q, Q.Interval):
-            from ..functions.intervals import resolve_multi_term_sources
-            return Q.Interval(resolve_multi_term_sources(q.tree,
-                                                         self.expand_terms),
-                              q.pivot, q.boost)
-        if isinstance(q, Q.SpanMultiTermWrapper):
-            # SpanMultiTermQueryWrapper: dictionary expansion → SpanOr of
-            # term spans (reference SpanMultiTermQueryWrapper.java rewrite)
-            expanded = self._resolve(q.query)
-            if isinstance(expanded, _ResolvedMultiTerm):
-                return Q.SpanOr(tuple(Q.Term(t) for t in expanded.terms))
-            return Q.SpanOr(tuple(Q.Term(t) for t in expanded.all_terms()))
-        if isinstance(q, Q.SpanNear) and \
-                not all(isinstance(t, str) for t in q.terms):
-            return Q.SpanNear(tuple(t if isinstance(t, str)
-                                    else self._resolve(t)
-                                    for t in q.terms), q.slop, q.in_order)
-        if isinstance(q, Q.SpanOr):
-            return Q.SpanOr(tuple(self._resolve(c) for c in q.clauses))
-        if isinstance(q, Q.SpanNot):
-            return Q.SpanNot(self._resolve(q.include),
-                             self._resolve(q.exclude), q.pre, q.post)
-        if isinstance(q, Q.SpanFirst):
-            return Q.SpanFirst(self._resolve(q.match), q.end)
-        if isinstance(q, Q.SpanPositionRange):
-            return Q.SpanPositionRange(self._resolve(q.match),
-                                       q.start, q.end)
-        if isinstance(q, Q.SpanContaining):
-            return Q.SpanContaining(self._resolve(q.big),
-                                    self._resolve(q.little))
-        if isinstance(q, Q.SpanWithin):
-            return Q.SpanWithin(self._resolve(q.little),
-                                self._resolve(q.big))
-        return q
-
-    def _compile(self, query):
-        if isinstance(query, str):
-            query = parse_query(query)
-        query = Q.rewrite_fixed_point(query)
-        query = self._resolve(query)
-        dfs, ttfs = self._global_stats(query.all_terms())
-        compiled = compile_query(query, dfs, self.doc_count, self.similarity,
-                                 ttfs, self.sum_ttf)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
-        cache = self.similarity.norm_cache(avgdl)
-        return compiled, cache
 
     # -- per-segment execution -----------------------------------------------
     def map_segments(self, terms, kernel, schema: str,
@@ -1933,30 +1943,6 @@ class Searcher:
             {"doc_id": g, "score": s,
              "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)
 
-    def expand_terms(self, kind: str, value, max_terms: int = 512
-                     ) -> list[str]:
-        """MultiTermQuery expansion against the term dictionary (the
-        reference's rewrite walks the sorted terms against the query's
-        automaton: ``search/MultiTermQuery.java:55``): the dictionary's
-        terms that ``plans.query.term_matcher(kind, value)`` accepts.
-
-        ``kind``/``value`` are a :class:`~lucene_spark.plans.query.
-        MultiTerm`'s: ``("prefix", p)``, ``("wildcard", pattern)`` with
-        ``*``/``?``/``\\`` escape, ``("regexp", python_regex)`` matched
-        against the whole term, ``("fuzzy", (term, max_edits))`` and
-        ``("range", (lo, hi, lo_inclusive, hi_inclusive))`` with ``None``
-        for an open end. Expansion is capped at ``max_terms`` (the
-        reference's maxClauseCount guard), deterministically: the first
-        ``max_terms`` in UTF-8 byte order. Read on the driver with no
-        Spark job; several dictionaries (MultiSearcher) merge."""
-        return self._dictionary_terms(kind, value)[:max_terms]
-
-    def _dictionary_terms(self, kind: str, value) -> list[str]:
-        """Every dictionary term the matcher accepts, sorted."""
-        bounds, select = Q.term_matcher(kind, value)
-        return sorted({t for col in self._term_columns(bounds)
-                       for t in select(col)})
-
     def _term_columns(self, bounds):
         """Each dictionary's ``term`` column, read on the driver with
         ``bounds`` pushed into the read: a prefix, a range or a wildcard
@@ -1994,39 +1980,6 @@ class Searcher:
                 .orderBy(F.desc("df"), F.asc("term"))
                 .limit(max_terms).select("term").collect())
         return frozenset(r["term"] for r in rows)
-
-    def _fuzzy_boosts(self, base: str, max_edits: int, limit: int,
-                      prefix: str = "") -> list[tuple[str, np.float32]]:
-        """The ``limit`` best fuzzy variants of ``base`` that start with
-        ``prefix``, as ``(term, float32 boost)``: FuzzyTermsEnum's boost
-        ``1 - ed/min(len(term), len(base))``, 1.0 for an exact match
-        (``FuzzyTermsEnum.java:248-255``). Ranked by that boost in double
-        precision, then by term, the top-terms queue's order."""
-        bounds, select = Q.term_matcher("prefix", prefix)
-        dist = {}
-        for col in self._term_columns(bounds):
-            col = select(col)
-            dist.update((t, int(d)) for t, d in zip(
-                col, Q.edit_distances(col, base, max_edits))
-                if d <= max_edits)
-        ranked = []
-        for t, d in dist.items():
-            ml = min(len(t), len(base))
-            b = np.float32(1.0) - np.float32(d) / np.float32(ml)
-            ranked.append((-(1.0 - d / ml) if d else -1.0, t,
-                           np.float32(1.0) if d == 0 else b))
-        ranked.sort(key=lambda r: r[:2])
-        return [(t, b) for _, t, b in ranked[:limit]]
-
-    def fuzzy_terms_with_boosts(self, base: str, max_edits: int = 2,
-                                max_expansions: int = 50
-                                ) -> list[tuple[str, float]]:
-        """Fuzzy expansion with FuzzyTermsEnum boosts (see
-        ``_fuzzy_boosts``), capped at the ``max_expansions`` best-boost
-        terms (TopTermsBlendedFreqScoringRewrite's maxExpansions=50,
-        ``FuzzyQuery.java:57``), returned sorted by term."""
-        return sorted((t, float(b)) for t, b in
-                      self._fuzzy_boosts(base, max_edits, max_expansions))
 
     def docs_matching_any(self, terms: list[str]):
         """Constant-score union of exact terms (TermInSetQuery / the

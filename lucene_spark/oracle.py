@@ -521,6 +521,9 @@ class OracleIndex:
             return self._synonym_scores(list(query.terms), k1, b, sim,
                                         boosts=query.boosts)
         if isinstance(query, Phrase):
+            if len(query.terms) == 1:
+                # PhraseQuery.rewrite: a one-term phrase is a TermQuery
+                return self._term_scores(query.terms[0], k1, b, sim=sim)
             if query.slop > 0:
                 return self._sloppy_phrase_scores(list(query.terms),
                                                   query.slop, k1, b,

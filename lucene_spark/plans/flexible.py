@@ -275,14 +275,14 @@ def parse_standard(text: str, default_operator: str = "OR",
             terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
             if not terms:
                 raise QueryParseError(f"empty phrase: {t}")
-            if len(terms) == 1:
-                return Q.Term(terms[0], boost)
-            ph = Q.Phrase(tuple(terms))
+            slop = 0
             nxt = peek()
             if nxt and re.match(r"^~\d+$", nxt):
-                advance()
-                ph = Q.Phrase(ph.terms, int(nxt[1:]))
-            return ph
+                advance()  # a one-word phrase's slop is dropped
+                slop = int(nxt[1:])
+            if len(terms) == 1:
+                return Q.Term(terms[0], boost)
+            return Q.Phrase(tuple(terms), slop)
         m = re.match(r"^(.+?)~(\d*)$", t)
         if m and "*" not in t and "?" not in t:
             edits = int(m.group(2)) if m.group(2) else 2

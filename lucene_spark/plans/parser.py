@@ -150,12 +150,13 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
                                        m.group(4) == "]"))
         atom = _atom(t)
         nxt = peek()
-        if atom is _DROPPED and nxt and re.match(r"^~\d+$", nxt):
-            advance()  # consume slop of a fully-stopped phrase
-            return _DROPPED
-        if isinstance(atom, Phrase) and nxt and re.match(r"^~\d+$", nxt):
-            advance()  # phrase slop: "a b"~2
-            atom = Phrase(atom.terms, int(nxt[1:]))
+        if (t.startswith('"') or atom is _DROPPED
+                or isinstance(atom, Phrase)) \
+                and nxt and re.match(r"^~\d+$", nxt):
+            advance()  # phrase slop: "a b"~2; a one-word or fully-stopped
+            # phrase drops it
+            if isinstance(atom, Phrase):
+                atom = Phrase(atom.terms, int(nxt[1:]))
         return atom
 
     def _atom(t: str) -> Query:

@@ -58,6 +58,11 @@ class Phrase(Query):
     slop: int = 0
     positions: tuple[int, ...] | None = None
 
+    def rewrite(self):
+        # PhraseQuery.rewrite: a one-term phrase is a TermQuery, whatever
+        # its slop or position
+        return Term(self.terms[0]) if len(self.terms) == 1 else self
+
     def all_terms(self):
         return list(dict.fromkeys(self.terms))
 
@@ -349,7 +354,7 @@ def _prefix_end(prefix: str) -> str | None:
     return prefix[:-1] + chr(0xE000 if c == 0xD800 else c)
 
 
-@lru_cache(maxsize=1024)  # Monitor asks again for every document
+@lru_cache(maxsize=1024)  # Monitor asks again for every batch
 def term_matcher(kind: str, value) -> tuple[tuple, object]:
     """What a multi-term query of ``kind`` matches (see :class:`MultiTerm`
     for each value's shape): ``(bounds, select)``. ``bounds`` is a tuple

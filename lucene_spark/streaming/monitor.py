@@ -5,154 +5,61 @@ Reference: the ``lucene/monitor`` module (``monitor/Monitor.java``,
 each incoming document, emitting (document, query) match pairs; used for
 alerting ("tell me when a doc matching Q arrives").
 
-Spark shape: the query set ships broadcast-style in the UDF closure;
-each micro-batch analyzes its documents in one Arrow batch
-(``mapInPandas``) and matches against per-doc term sets/position maps —
-pure map-side work, no index, no shuffle, so a 1000-executor stream
-scales linearly in document throughput. The reference's Presearcher
-(``monitor/TermFilteredPresearcher.java`` — index the QUERIES by their
-terms so each doc only evaluates plausibly-matching rules) is
-implemented: see :class:`Monitor` — per-doc work is proportional to the
-doc's vocabulary, not the rule count.
+Spark shape: the query set ships in the UDF closure; each Arrow batch of
+a micro-batch (``mapInPandas``) is inverted into one in-memory segment
+(``operators.memoryindex.MemorySegment``, the build's own kernel) and
+every candidate query runs over the whole batch through the engine's own
+compile and segment kernel — the reference's CandidateMatcher runs the
+query's Weight over an in-RAM index the same way, so percolation cannot
+disagree with search. Pure map-side work, no index, no shuffle, so a
+1000-executor stream scales linearly in document throughput. The
+reference's Presearcher (``monitor/TermFilteredPresearcher.java`` — index
+the QUERIES by their terms so a document only evaluates plausibly
+matching rules) is the batch's candidate filter: see :class:`Monitor` —
+per-batch work is proportional to the number of queries anchored in the
+batch's vocabulary.
 
-Matching is boolean (MatchAllCandidateMatcher role): scores need global
-collection stats which a stateless stream does not have; the reference's
-scoring matchers are index-backed and out of scope here.
+Matching is boolean (MatchAllCandidateMatcher role). ``scoring=True`` is
+the ScoringMatch matcher: a matched document is scored with its own
+one-doc stats over the batch segment's postings
+(``MemorySegment.doc``). ``highlights=True`` is the HighlightsMatch
+role, with positions read from the batch segment's postings.
 """
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 
-from ..functions.analysis import analyze_batch
+from ..operators.memoryindex import MemorySegment
 from ..plans import query as Q
 from ..plans.parser import parse as parse_query
 
 
-def _needs_positions(node) -> bool:
-    """True when matching this node reads the per-doc position map —
-    lets the batch matcher skip building it for term/boolean-only
-    query sets (the common percolation shape)."""
-    if isinstance(node, (Q.Phrase, Q.MultiPhrase, Q.Interval,
-                         Q.SpanNear, Q.SpanOr, Q.SpanNot, Q.SpanFirst,
-                         Q.SpanPositionRange, Q.SpanContaining,
-                         Q.SpanWithin, Q.SpanMultiTermWrapper)):
-        return True
-    if isinstance(node, (Q.Or, Q.And, Q.DisMax)):
-        return any(_needs_positions(c) for c in node.clauses)
-    if isinstance(node, Q.Not):
-        return _needs_positions(node.positive) \
-            or _needs_positions(node.negative)
-    if isinstance(node, Q.ReqOpt):
-        return _needs_positions(node.required) \
-            or _needs_positions(node.optional)
-    return False
-
-
-def _matches(node, terms: set, positions: dict[str, list[int]]) -> bool:
-    """Boolean match of one compiled query node against one document's
-    (term set, term → sorted positions)."""
-    if isinstance(node, Q.Term):
-        return node.term in terms
-    if isinstance(node, Q.Synonym):
-        return any(t in terms for t in node.terms)
-    if isinstance(node, Q.Phrase):
-        # a phrase is a multi-phrase of one-term slots, as in the engine
-        node = Q.MultiPhrase(tuple((t,) for t in node.terms), node.slop,
-                             node.positions)
-    if isinstance(node, Q.MultiPhrase):
-        if node.slop > 0:
-            # sloppy percolation: the exact multi-term walk (incl. the
-            # repeats machinery) on this doc's position lists
-            from ..functions.sloppy import (
-                lucene_sloppy_multiphrase_freq)
-            return lucene_sloppy_multiphrase_freq(
-                node.slots, positions, node.slop,
-                offsets=node.positions) > 0.0
-        # union-of-alternatives per position (UnionPostingsEnum), then
-        # the consecutive-chain intersection of the exact phrase
-        offs = list(node.positions or range(len(node.slots)))
-        slot_sets = []
-        for slot in node.slots:
-            s: set = set()
-            for t in slot:
-                s.update(positions.get(t, ()))
-            if not s:
-                return False
-            slot_sets.append(s)
-        base = slot_sets[0]
-        for i, s in enumerate(slot_sets[1:], 1):
-            base &= {p - (offs[i] - offs[0]) for p in s}
-            if not base:
-                return False
-        return True
-    if isinstance(node, Q.Interval):
-        # interval percolation: multiterm leaves expand against the
-        # DOC'S OWN term set (the reference Monitor runs the automaton
-        # against the single-doc index), then the shared batched
-        # evaluator runs on this doc's position lists
-        from ..functions.intervals import (eval_intervals,
-                                           interval_tree_terms,
-                                           resolve_multi_term_sources)
-
-        def _doc_expander(kind, value):
-            return Q.term_matcher(kind, value)[1](terms)
-
-        tree = resolve_multi_term_sources(node.tree, _doc_expander)
-        pmap = {t: np.asarray(positions.get(t, ()), dtype=np.int64)
-                for t in set(interval_tree_terms(tree))}
-        return len(eval_intervals(tree, pmap)) > 0
-    if isinstance(node, Q.MultiTerm):
-        # the doc matches iff one of ITS OWN terms does (the reference's
-        # Monitor runs the query against the single-doc index)
-        return bool(Q.term_matcher(*node.expansion)[1](terms))
-    if isinstance(node, (Q.SpanNear, Q.SpanOr, Q.SpanNot, Q.SpanFirst,
-                         Q.SpanPositionRange,
-                         Q.SpanContaining, Q.SpanWithin)):
-        # span percolation: the shared span evaluator over this doc's
-        # position lists (SpanMultiTermWrapper needs a dictionary and is
-        # not supported in the stateless stream)
-        from ..functions.spans import eval_span_tree, span_tree_terms
-        from ..operators.search import _span_tree
-        tree = _span_tree(node)
-        pmap = {t: np.asarray(positions.get(t, ()), dtype=np.int64)
-                for t in set(span_tree_terms(tree))}
-        return len(eval_span_tree(tree, pmap)) > 0
-    if isinstance(node, Q.Or):
-        n = sum(_matches(c, terms, positions) for c in node.clauses)
-        return n >= max(node.min_should_match, 1)
-    if isinstance(node, Q.And):
-        return all(_matches(c, terms, positions) for c in node.clauses)
-    if isinstance(node, Q.DisMax):
-        return any(_matches(c, terms, positions) for c in node.clauses)
-    if isinstance(node, Q.Not):
-        return (_matches(node.positive, terms, positions)
-                and not _matches(node.negative, terms, positions))
-    raise TypeError(type(node))
-
-
-def _positive_terms(node, doc_terms: set) -> set:
+def _positive_terms(node, vocab) -> set:
     """Positive term leaves of a query for highlight reporting, with
-    multiterm leaves expanded against the DOC'S OWN term set (like the
-    percolator's evaluation)."""
+    multiterm leaves expanded against the batch's vocabulary ``vocab``
+    (a term a document lacks has no positions in it)."""
     if isinstance(node, Q.Term):
         return {node.term}
-    if isinstance(node, (Q.Synonym, Q.CommonTerms)):
+    if isinstance(node, Q.Synonym):
         return set(node.terms)
     if isinstance(node, Q.Phrase):
         return set(node.terms)
     if isinstance(node, Q.MultiPhrase):
-        return {t for slot in node.slots for t in slot}
+        return {t for slot in node.slots for e in slot for t in (
+            [e] if isinstance(e, str) else Q.term_matcher(*e)[1](vocab))}
     if isinstance(node, Q.MultiTerm):
-        return set(Q.term_matcher(*node.expansion)[1](doc_terms))
+        return set(Q.term_matcher(*node.expansion)[1](vocab))
     if isinstance(node, (Q.Or, Q.And, Q.DisMax)):
         out: set = set()
         for c in node.clauses:
-            out |= _positive_terms(c, doc_terms)
+            out |= _positive_terms(c, vocab)
         return out
     if isinstance(node, Q.Not):
-        return _positive_terms(node.positive, doc_terms)
+        return _positive_terms(node.positive, vocab)
     if isinstance(node, (Q.SpanNear, Q.SpanOr, Q.SpanNot, Q.SpanFirst,
                          Q.SpanPositionRange, Q.SpanContaining,
                          Q.SpanWithin)):
@@ -228,8 +135,11 @@ def _anchor_terms(node) -> set | None:
         cands = [x for x in (a, b) if x is not None]
         return min(cands, key=len) if cands else None
     if isinstance(node, Q.MultiPhrase):
-        # every slot is required → the smallest slot's alternatives gate
-        return set(min(node.slots, key=len))
+        # every slot is required → the smallest all-term slot's
+        # alternatives gate; a prefix or wildcard entry has no term
+        slots = [s for s in node.slots
+                 if all(isinstance(e, str) for e in s)]
+        return set(min(slots, key=len)) if slots else None
     if isinstance(node, Q.Interval):
         # a matching doc contains at least one leaf term — safe anchor —
         # unless the tree has multiterm leaves (dictionary-dependent)
@@ -241,48 +151,74 @@ def _anchor_terms(node) -> set | None:
     return None  # MultiTerm and anything else: always evaluate
 
 
+def _check_percolatable(node) -> None:
+    """Raise TypeError for a query whose match set depends on collection
+    stats: CommonTerms splits its terms by df and FuzzyLikeThis picks its
+    variants by idf, so either would match differently in another batch."""
+    if isinstance(node, (Q.CommonTerms, Q.FuzzyLikeThis)):
+        raise TypeError(f"{type(node).__name__} cannot be percolated: its "
+                        "match set depends on collection statistics")
+    for f in dataclasses.fields(node):
+        v = getattr(node, f.name)
+        for c in v if isinstance(v, tuple) else (v,):
+            if isinstance(c, Q.Query):
+                _check_percolatable(c)
+
+
+def _hit_positions(seg: MemorySegment, terms, docs: np.ndarray
+                   ) -> list[list[int]]:
+    """Sorted distinct positions of ``terms`` in each local doc of
+    ``docs``, read from the segment's postings."""
+    keys = [np.empty(0, np.int64)]
+    for t in terms:
+        tp = seg.postings(t)
+        if tp is not None:
+            ids, tfs = tp.decode_all()
+            keys.append((np.repeat(ids, tfs) << 32) | tp.positions())
+    keys = np.unique(np.concatenate(keys))
+    bounds = np.searchsorted(keys >> 32, np.stack([docs, docs + 1]))
+    return [(keys[a:b] & 0xFFFFFFFF).tolist() for a, b in zip(*bounds)]
+
+
 class Monitor:
     """Registered query set; matches documents as they arrive.
 
-    ``presearch=True`` builds a term → query-ids inverted map over the
-    registered queries at construction (the reference Presearcher: the
-    Monitor indexes its QUERIES, ``monitor/Presearcher.java`` /
-    ``TermFilteredPresearcher.java``); each incoming document then
-    evaluates only the queries anchored on one of ITS terms plus the
-    un-anchorable rest — for alerting-size query sets (10⁴-10⁶ rules)
-    per-doc work is proportional to the doc's vocabulary, not the rule
-    count. The map ships in the UDF closure like the query set itself.
+    Registration builds a term → query-ids inverted map over the queries
+    (the reference Presearcher: the Monitor indexes its QUERIES,
+    ``monitor/Presearcher.java`` / ``TermFilteredPresearcher.java``): a
+    query is anchored on terms one of which every matching document
+    holds. A batch then evaluates only the queries anchored on a term of
+    its vocabulary plus the un-anchorable rest (``always``). Each of
+    these candidates pays one compile and one evaluation over the batch,
+    a fixed cost per batch, so a rule set whose anchors most batches
+    hold costs more per document in small Arrow batches than in large
+    ones. The map ships in the UDF closure like the query set itself. A
+    query whose match set depends on collection stats (CommonTerms,
+    FuzzyLikeThis) raises TypeError at registration.
     """
 
     def __init__(self, queries: dict[str, object],
                  stopwords: frozenset = frozenset(),
-                 stemmer: str | None = None,
-                 presearch: bool = True):
-        self.queries = {qid: (parse_query(q) if isinstance(q, str) else q)
-                        for qid, q in queries.items()}
+                 stemmer: str | None = None):
+        self.queries: dict[str, Q.Query] = {}
         self.stopwords = stopwords
         self.stemmer = stemmer
-        self.presearch = presearch
         self.term_map: dict[str, list[str]] = {}
         self.always: list[str] = []
-        for qid, node in self.queries.items():
-            anchors = _anchor_terms(node) if presearch else None
-            if anchors:
-                for t in anchors:
-                    self.term_map.setdefault(t, []).append(qid)
-            else:
-                self.always.append(qid)
+        for qid, q in queries.items():
+            self.register(qid, q)
 
     def register(self, query_id: str, query) -> None:
         """Register or UPDATE a query (MonitorQuery lifecycle —
         reference ``monitor/Monitor.java`` register/update: same id
         replaces the previous query and re-indexes its presearcher
         entry)."""
+        node = parse_query(query) if isinstance(query, str) else query
+        _check_percolatable(node)
         if query_id in self.queries:
             self.delete(query_id)
-        node = parse_query(query) if isinstance(query, str) else query
         self.queries[query_id] = node
-        anchors = _anchor_terms(node) if self.presearch else None
+        anchors = _anchor_terms(node)
         if anchors:
             for t in anchors:
                 self.term_map.setdefault(t, []).append(query_id)
@@ -306,87 +242,60 @@ class Monitor:
     def match_batch(self, docs_df, id_col: str = "doc_id",
                     text_col: str = "text", scoring: bool = False,
                     highlights: bool = False):
-        """DataFrame (doc_id, query_id) of every match in ``docs_df``;
-        with ``scoring=True`` a ``score float`` column is added — the
-        reference's ScoringMatch matcher (``monitor/ScoringMatch
-        .java:30-48``): each match scores against the DOCUMENT'S OWN
-        single-doc memory index (N=1, df=1 for present terms, avgdl =
-        the doc's length), BM25 float32 — computed here by the shared
-        brute-force oracle over a one-doc index. ``highlights=True``
-        adds a ``hits array<int>`` column — the HighlightsMatch matcher
-        role (``monitor/HighlightsMatch.java:36``): the matched
-        positions, reported at TERM level (sorted positions of the
-        query's positive terms present in the doc; the reference's
-        Matches API reports per-leaf iterators the same way for term
-        leaves — phrase/span interval grouping is not reconstructed,
-        documented subset)."""
+        """DataFrame (doc_id, query_id) of every match in ``docs_df``.
+
+        ``scoring=True`` adds a ``score float`` column — the reference's
+        ScoringMatch matcher (``monitor/ScoringMatch.java:30-48``): each
+        match is scored with the DOCUMENT'S OWN one-doc stats (N=1, df=1
+        for present terms, avgdl = the doc's length), and a match scoring
+        <= 0 is dropped. ``highlights=True`` adds a ``hits array<int>``
+        column — the HighlightsMatch matcher role
+        (``monitor/HighlightsMatch.java:36``): the matched positions,
+        reported at TERM level (sorted positions of the query's positive
+        terms present in the doc; the reference's Matches API reports
+        per-leaf iterators the same way for term leaves — phrase/span
+        interval grouping is not reconstructed, documented subset)."""
         queries = self.queries
         stopwords, stemmer = self.stopwords, self.stemmer
         term_map, always = self.term_map, self.always
-        presearch = self.presearch
-        # queries that read positions (phrase/span/interval); when the
-        # registered set has none — the common percolation shape — the
-        # per-doc position map is never built
-        pos_qids = {qid for qid, q in queries.items()
-                    if _needs_positions(q)}
 
         def run(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                doc_idx, terms, positions, _ = analyze_batch(
-                    pdf[text_col].astype("string").fillna(""),
-                    stopwords=stopwords, stemmer=stemmer)
-                ids = pdf[id_col].to_numpy()
-                # doc_idx is sorted (tokens emitted in doc order):
-                # contiguous slices, not a full boolean mask per doc
-                bounds = np.searchsorted(doc_idx,
-                                         np.arange(len(pdf) + 1))
+                docs = pd.DataFrame({
+                    "doc_id": pdf[id_col].to_numpy(np.int64),
+                    "text": pdf[text_col].to_numpy(object)}).sort_values(
+                        "doc_id", kind="mergesort", ignore_index=True)
+                seg = MemorySegment(docs, stopwords=stopwords,
+                                    stemmer=stemmer)
+                cand = dict.fromkeys(always)
+                for t in term_map.keys() & seg.rows.keys():
+                    cand.update(dict.fromkeys(term_map[t]))
+                one_doc: dict[int, MemorySegment] = {}
                 out_doc, out_q, out_s, out_h = [], [], [], []
-                for i in range(len(pdf)):
-                    tlist = terms[bounds[i]:bounds[i + 1]]
-                    plist = positions[bounds[i]:bounds[i + 1]]
-                    tset = set(tlist)
-                    pos_map: dict[str, list[int]] = {}
-                    if pos_qids or highlights:
-                        for t, p in zip(tlist, plist):
-                            pos_map.setdefault(t, []).append(int(p))
-                    if presearch:
-                        cand = dict.fromkeys(always)
-                        for t in tset:
-                            for qid in term_map.get(t, ()):
-                                cand[qid] = None
-                    else:
-                        cand = queries
-                    one_doc = None
-                    for qid in cand:
-                        if _matches(queries[qid], tset, pos_map):
-                            out_doc.append(ids[i])
-                            out_q.append(qid)
-                            if scoring:
-                                if one_doc is None:
-                                    from ..oracle import OracleIndex
-                                    one_doc = OracleIndex.build(
-                                        [(0, str(pdf[text_col].iloc[i]))],
-                                        stopwords=stopwords,
-                                        stemmer=stemmer)
-                                sc = one_doc.score(queries[qid]).get(0, 0.0)
-                                if float(sc) <= 0.0:
-                                    # ScoringMatch.doMatch drops score<=0
-                                    out_doc.pop()
-                                    out_q.pop()
-                                    continue
-                                out_s.append(float(sc))
-                            if highlights:
-                                hit = sorted({int(pp)
-                                              for t in _positive_terms(
-                                                  queries[qid], tset)
-                                              for pp in pos_map.get(t, ())})
-                                out_h.append(hit)
-                cols = {"doc_id": np.asarray(out_doc, dtype=np.int64),
+                for qid in cand:
+                    hit = np.flatnonzero(seg.evaluate(queries[qid])[0])
+                    if scoring:
+                        for i in set(hit) - one_doc.keys():
+                            one_doc[i] = seg.doc(i)
+                        sc = np.array([one_doc[i].score(queries[qid])
+                                       for i in hit], dtype=np.float32)
+                        # ScoringMatch.doMatch drops score <= 0
+                        hit = hit[sc > 0]
+                        out_s.append(sc[sc > 0])
+                    if highlights:
+                        out_h.extend(_hit_positions(
+                            seg, _positive_terms(queries[qid],
+                                                 seg.rows.keys()), hit))
+                    out_doc.append(seg.doc_ids[hit])
+                    out_q.extend([qid] * len(hit))
+                cols = {"doc_id": np.concatenate(
+                            out_doc or [np.empty(0, np.int64)]),
                         "query_id": out_q}
                 if scoring:
-                    cols["score"] = np.asarray(out_s, dtype=np.float32)
+                    cols["score"] = np.concatenate(
+                        out_s or [np.empty(0, np.float32)])
                 if highlights:
                     cols["hits"] = out_h
                 yield pd.DataFrame(cols)

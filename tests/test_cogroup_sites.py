@@ -17,9 +17,9 @@ neither ``delete.py`` nor ``docvalues.py`` shuffles or maps partitions by
 hand, and only the one segment-set commit builds the term dictionary, with
 one fan-out over term ranges and no Spark writer.
 
-Multi-term queries expand on the driver, and search and percolation
-share one matcher. Every phrase and span kernel is reached from the engine
-or the oracle.
+Multi-term queries expand on the driver, and search, percolation and
+MemoryIndex share one query compile and one matcher. Every phrase and span
+kernel is reached from the engine or the oracle.
 """
 
 from __future__ import annotations
@@ -160,12 +160,10 @@ def _imports(rel: str) -> list[tuple[str | None, str, str]]:
 
 def test_monitor_uses_the_engine_matcher():
     """Percolation matches with the engine's own matcher. Following its
-    imports through the package, Monitor reaches no glob module. The one
-    oracle name it reaches is ``OracleIndex``, imported in
-    ``match_batch``: ScoringMatch scores a matched document over a one-doc
-    oracle index, so a scored multi-term query is scored by the oracle's
-    own expansion."""
-    seen, todo, oracle = set(), ["streaming/monitor.py"], []
+    imports through the package, Monitor reaches no glob module; no
+    module keeps a matcher of its own beside the engine's, and the query
+    preparation Searcher and the memory segment share is defined once."""
+    seen, todo = set(), ["streaming/monitor.py"]
     while todo:
         rel = todo.pop()
         if rel in seen or not (PACKAGE / rel).is_file():
@@ -173,24 +171,29 @@ def test_monitor_uses_the_engine_matcher():
         seen.add(rel)
         for mod, name, scope in _imports(rel):
             assert "fnmatch" not in name, rel
-            if mod == "oracle.py":
-                oracle.append((rel, name, scope))
-            elif mod:
+            if mod:
                 # importing a module runs its packages' __init__ too
                 todo.append(mod)
                 todo.extend((p / "__init__.py").as_posix()
                             for p in Path(mod).parents)
-    assert oracle == [("streaming/monitor.py", "OracleIndex",
-                       "Monitor.match_batch.run")]
+    defs = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.FunctionDef):
+                defs.setdefault(node.name, []).append(
+                    path.relative_to(PACKAGE).as_posix())
+    assert defs["_resolve"] == defs["_compile"] == ["operators/search.py"]
+    assert "_matches" not in defs and "_needs_positions" not in defs
 
 
 def test_oracle_matcher_stays_in_the_oracle():
-    """The oracle's edit distance and wildcard matcher are its own: no
-    package module imports them."""
+    """The oracle is the test reference, kept apart from the engine: no
+    package module but the oracle itself imports it."""
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
-        assert not [n for m, n, _ in _imports(rel)
-                    if m == "oracle.py" and n.startswith("_")], rel
+        if rel != "oracle.py":
+            assert not [n for m, n, _ in _imports(rel)
+                        if m == "oracle.py"], rel
 
 
 def test_phrase_and_span_kernels_are_reachable():

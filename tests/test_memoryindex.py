@@ -84,6 +84,50 @@ def test_search_matches_one_doc_index():
     assert matched > 0
 
 
+def test_doc_view_scores_like_its_own_index():
+    """``MemorySegment.doc(i)`` scores doc ``i`` over the segment's
+    postings with the doc's own one-doc stats: float32-equal to a
+    one-doc ``OracleIndex`` and to ``MemoryIndex`` of the doc, also with
+    a stopword and stemmer chain."""
+    import pandas as pd
+
+    from lucene_spark.operators.memoryindex import MemorySegment
+
+    corpus = generate_corpus(40, seed=61)
+    texts = [str(t) for t in corpus.content] + ["if if return"]
+    queries = [
+        Q.Term("parse"),
+        parse("parse OR emit OR return"),
+        parse("parse AND emit"),
+        parse('"parse emit"~4'),
+        Q.Phrase(("return", "return"), slop=2),
+        Q.SpanNear(("parse", "emit"), slop=6, in_order=False),
+        Q.Interval(("ordered", (("term", "parse"), ("term", "emit")))),
+        Q.MultiTerm("prefix", "pars"),
+        Q.MultiTerm("fuzzy", "parze", edits=2, scored=True),
+        Q.MultiPhrase(((("prefix", "re"),), ("if",))),
+    ]
+    for chain in ({}, {"stopwords": frozenset({"if"}),
+                       "stemmer": "porter"}):
+        seg = MemorySegment(pd.DataFrame(
+            {"doc_id": np.arange(len(texts)), "text": texts}), **chain)
+        matched = 0
+        for i, text in enumerate(texts):
+            view = seg.doc(i)
+            one = MemoryIndex(text, **chain)
+            assert (view.doc_count, view.sum_ttf) == (
+                1, one._segment().sum_ttf)
+            ref = OracleIndex.build([(0, text)]) if not chain else None
+            for q in queries:
+                got = view.score(q)
+                assert got == one.search(q), (i, q)
+                if ref is not None:
+                    assert np.float32(got) == np.float32(
+                        ref.score(q).get(0, 0.0)), (i, q)
+                matched += got > 0
+        assert matched > 0
+
+
 def test_single_doc_statistics():
     # idf comes from the ONE document: df = 1, N = 1 — exactly the
     # reference's ephemeral-index behavior

@@ -30,6 +30,7 @@ QUERIES = {
                                       in_order=False), Q.Term("codec")),
     "q_spanfirst": Q.SpanFirst(Q.Term("parse"), 15),
     "q_multiphrase": Q.MultiPhrase((("parse", "scan"), ("emit",))),
+    "q_mp_prefix": Q.MultiPhrase(((("prefix", "re"),), ("if",))),
     "q_interval": Q.Interval(("maxgaps", ("ordered", (
         ("term", "if"), ("term", "return"))), 3)),
     "q_interval_mt": Q.Interval(("ordered", (("prefix", "par"),
@@ -73,21 +74,19 @@ def test_presearcher_prunes_without_changing_matches(spark, corpus,
                                                      oracle):
     """TermFilteredPresearcher role: the query-term inverted map must not
     change the match set, and must actually prune (anchored queries are
-    only evaluated against docs containing an anchor term)."""
+    only evaluated against batches whose vocabulary holds an anchor
+    term)."""
     docs = spark.createDataFrame(corpus) \
         .selectExpr("doc_id", "content AS text")
     big_set = dict(QUERIES)
     # pad with queries whose anchor terms are absent from the corpus —
-    # with presearch these cost nothing per doc
+    # with presearch these cost nothing per batch
     for i in range(200):
         big_set[f"q_pad{i}"] = Q.And((Q.Term(f"zzz{i}"), Q.Term("parse")))
-    mon_on = Monitor(big_set, presearch=True)
-    mon_off = Monitor(big_set, presearch=False)
+    mon_on = Monitor(big_set)
     got_on = {(int(r["doc_id"]), r["query_id"])
               for r in mon_on.match_batch(docs).collect()}
-    got_off = {(int(r["doc_id"]), r["query_id"])
-               for r in mon_off.match_batch(docs).collect()}
-    assert got_on == got_off == _expected(oracle)
+    assert got_on == _expected(oracle)
     # the pad queries anchor on their absent zzz term (smallest AND-child
     # anchor), so the term map holds them and `always` stays small
     # only dictionary-dependent queries (multiterm leaves) un-anchorable
@@ -95,6 +94,64 @@ def test_presearcher_prunes_without_changing_matches(spark, corpus,
                                      "q_prefix", "q_regexp"]
     assert all(f"q_pad{i}" in mon_on.term_map[f"zzz{i}"]
                for i in range(0, 200, 50))
+
+
+def test_match_set_does_not_depend_on_batching(spark, corpus):
+    """One Arrow batch or many give the same pairs, and they equal each
+    document's own one-doc oracle. A batch's multi-term expansion is not
+    capped: one batch holds 676 terms of the prefix ``pre`` (above the
+    512-term maxClauseCount) and 676 within two edits of ``mango`` (above
+    fuzzy's 50 maxExpansions)."""
+    import string
+
+    from lucene_spark.plans.parser import parse
+
+    letters = string.ascii_lowercase
+    extra = [(10_000 + i, f"pre{i:04d} ma{letters[i % 26]}"
+              f"{letters[i // 26 % 26]}o parse") for i in range(676)]
+    docs_pd = list(zip(corpus.doc_id, corpus.content)) + extra
+    queries = {qid: parse(q) if isinstance(q, str) else q
+               for qid, q in QUERIES.items()}
+    queries.update({
+        "q_pre": Q.MultiTerm("prefix", "pre"),
+        "q_mango": Q.MultiTerm("fuzzy", "mango", edits=2),
+        "q_mango_scored": Q.MultiTerm("fuzzy", "mango", edits=2,
+                                      scored=True),
+        "q_pre_span": Q.SpanNear((Q.SpanMultiTermWrapper(
+            Q.MultiTerm("prefix", "pre")), "parse"), slop=2),
+    })
+    want = {(int(d), qid) for d, text in docs_pd
+            for qid, q in queries.items()
+            if OracleIndex.build([(d, str(text))]).score(q)}
+    assert sum(q == "q_pre" for _, q in want) == 676
+    assert sum(q == "q_mango_scored" for _, q in want) == 676
+    docs = spark.createDataFrame(docs_pd, "doc_id long, text string")
+    mon = Monitor(queries)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    got = {}
+    try:
+        for name, frame, per_batch in (("one", docs.coalesce(1), 10_000),
+                                       ("many", docs.repartition(3), 37)):
+            spark.conf.set(conf, str(per_batch))
+            got[name] = {(int(r["doc_id"]), r["query_id"])
+                         for r in mon.match_batch(frame).collect()}
+    finally:
+        spark.conf.unset(conf)
+    assert got["one"] == got["many"] == want
+
+
+def test_stats_dependent_queries_are_refused():
+    """CommonTerms and FuzzyLikeThis choose terms by collection stats, so
+    their match set would depend on the batch: registration refuses
+    them, also nested."""
+    for q in (Q.CommonTerms(("parse", "scan")), Q.FuzzyLikeThis("parze"),
+              Q.Or((Q.Term("parse"), Q.CommonTerms(("scan",))))):
+        with pytest.raises(TypeError):
+            Monitor({"q": q})
+        mon = Monitor({"ok": "parse"})
+        with pytest.raises(TypeError):
+            mon.register("q", q)
+        assert list(mon.queries) == ["ok"]
 
 
 def test_monitor_stream(spark, corpus, oracle):
@@ -153,6 +210,33 @@ def test_scoring_matches(spark, corpus, oracle):
     assert set(got) == plain
 
 
+def test_scoring_equals_one_doc_oracle(spark, corpus):
+    """ScoringMatch over every query shape of ``QUERIES``: a match's
+    score is float32-equal to the document's own one-doc oracle, and a
+    pair is reported exactly when that score is positive."""
+    import numpy as np
+
+    from lucene_spark.plans.parser import parse
+
+    docs = spark.createDataFrame(corpus) \
+        .selectExpr("doc_id", "content AS text")
+    got = {(int(r["doc_id"]), r["query_id"]): r["score"]
+           for r in Monitor(QUERIES).match_batch(
+               docs, scoring=True).collect()}
+    want = {}
+    for d, text in zip(corpus.doc_id, corpus.content):
+        one = OracleIndex.build([(int(d), str(text))])
+        for qid, q in QUERIES.items():
+            sc = one.score(parse(q) if isinstance(q, str) else q)
+            if sc.get(int(d), 0.0) > 0:
+                want[(int(d), qid)] = np.float32(sc[int(d)])
+    assert got.keys() == want.keys()
+    assert all(np.float32(got[k]) == want[k] for k in want)
+    assert {q for _, q in want} >= {"q_phrase", "q_rep_sloppy", "q_fuzzy",
+                                    "q_spanfirst", "q_mp_prefix",
+                                    "q_interval"}
+
+
 def test_highlights_matches(spark, corpus, oracle):
     """HighlightsMatch matcher role (monitor/HighlightsMatch.java:36):
     matches carry the positions of the query's positive terms in the
@@ -180,6 +264,24 @@ def test_highlights_matches(spark, corpus, oracle):
     plain = {(int(r["doc_id"]), r["query_id"])
              for r in mon.match_batch(docs).collect()}
     assert {(int(r["doc_id"]), r["query_id"]) for r in rows} == plain
+
+
+def test_highlights_expand_multiphrase_slots(spark, corpus):
+    """A prefix slot of a MultiPhrase highlights the batch terms it
+    expands to, beside the slot's plain terms."""
+    from lucene_spark.functions.analysis import analyze_text
+
+    docs = spark.createDataFrame(corpus) \
+        .selectExpr("doc_id", "content AS text")
+    mon = Monitor({"q": QUERIES["q_mp_prefix"]})
+    rows = mon.match_batch(docs, highlights=True).collect()
+    assert len(rows) > 0
+    texts = dict(zip(corpus.doc_id, corpus.content))
+    for r in rows:
+        terms, poss, _ = analyze_text(texts[r["doc_id"]])
+        assert list(r["hits"]) == sorted(
+            p for t, p in zip(terms, poss)
+            if t.startswith("re") or t == "if"), r["doc_id"]
 
 
 def test_monitor_query_lifecycle(spark, corpus, oracle):

@@ -31,6 +31,16 @@ def test_parse_phrase():
     assert parse('"hello World"') == Phrase(("hello", "world"))
 
 
+def test_one_word_phrase_slop_is_dropped():
+    """A one-word quoted phrase is a term query; its ``~N`` slop is
+    consumed with it, not parsed as a term of its own, in both parsers."""
+    from lucene_spark.plans.flexible import parse_standard
+    for p in (parse, parse_standard):
+        assert p('"alpha"~2') == Term("alpha")
+        assert p('"alpha"~2 beta') == Or((Term("alpha"), Term("beta")))
+        assert p('"alpha beta"~2') == Phrase(("alpha", "beta"), 2)
+
+
 def test_parse_parens():
     q = parse("(a OR b) AND c")
     assert q == And((Or((Term("a"), Term("b"))), Term("c")))

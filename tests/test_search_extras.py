@@ -35,6 +35,22 @@ def searcher(spark, corpus):
     return Searcher(spark, d)
 
 
+def test_one_term_phrase_is_a_term_query(searcher, oracle, corpus):
+    """PhraseQuery.rewrite: a one-term phrase scores as its term, sloppy
+    or not. Searcher, MemoryIndex and the oracle agree bit for bit."""
+    from lucene_spark.operators.memoryindex import MemoryIndex
+    want = oracle.score(Q.Term("parse"))
+    assert len(want) > 0
+    for q in (Q.Phrase(("parse",), slop=2), Q.Phrase(("parse",))):
+        assert oracle.score(q) == want
+        got = {r["doc_id"]: np.float32(r["score"])
+               for r in searcher.score_all(q).collect()}
+        assert got == want
+        for text in corpus.content[:40]:
+            one = OracleIndex.build([(0, str(text))]).score(q)
+            assert MemoryIndex(str(text)).search(q) == one.get(0, 0.0)
+
+
 def test_dismax_rank_and_score_parity(searcher, oracle):
     for tb in (0.0, 0.3):
         q = Q.DisMax((Q.Term("parse"), Q.Term("emit"), Q.Term("token")), tb)

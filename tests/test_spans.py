@@ -344,8 +344,8 @@ def test_batched_kernels_match_per_doc():
     matchers exactly on randomized multi-doc inputs (ordered and
     unordered SpanNear)."""
     import numpy as np
-    from lucene_spark.functions.spans import (batch_ordered_near_freqs,
-                                              batch_unordered_near_freqs,
+    from lucene_spark.functions.spans import (batch_near_spans,
+                                              batch_spans_freqs,
                                               span_near_freq)
 
     rng = np.random.default_rng(7)
@@ -366,13 +366,13 @@ def test_batched_kernels_match_per_doc():
             return out
 
         want = per_doc_freqs(lambda ls: span_near_freq(ls, slop, True))
-        got = batch_ordered_near_freqs(_keys(per_doc, n_clauses),
-                                       slop, n_docs)
+        got = batch_spans_freqs(batch_near_spans(
+            _keys(per_doc, n_clauses), slop, True), n_docs)
         assert np.array_equal(want, got), ("ordered", trial)
 
         want = per_doc_freqs(lambda ls: span_near_freq(ls, slop, False))
-        got = batch_unordered_near_freqs(_keys(per_doc, n_clauses),
-                                         slop, n_docs)
+        got = batch_spans_freqs(batch_near_spans(
+            _keys(per_doc, n_clauses), slop, False), n_docs)
         assert np.array_equal(want, got), ("unordered", trial)
 
 
