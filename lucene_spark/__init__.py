@@ -13,8 +13,9 @@ Architecture (NOT a port):
   * documents live in parquet/Iceberg-style tables; Spark DataFrames declare
     every plan; Catalyst handles pushdown/pruning.
   * per-row work happens only inside vectorized pandas/Arrow UDFs
-    (``applyInPandas`` / ``mapInPandas`` / scalar ``pandas_udf``) backed by
-    numpy kernels — no row-at-a-time Python UDFs anywhere.
+    (``mapInPandas`` over the build's segment partitions, grouped maps in
+    the HNSW pipeline, scalar ``pandas_udf``) backed by numpy kernels — no
+    row-at-a-time Python UDFs anywhere.
   * one Spark partition == one immutable segment (the reference's DWPT
     private-segment model: reference ``lucene/core/src/java/org/apache/
     lucene/index/DocumentsWriter.java:60-66``).

@@ -3,7 +3,7 @@
 Reference semantics (``lucene/analysis/common/.../ngram/`` and
 ``.../path/``), re-expressed as columnar batch kernels that slot into the
 existing Arrow build pipeline (no per-row Python UDFs on the Spark side —
-these run inside the same ``applyInPandas`` segment-build task as the
+these run inside the same ``mapInPandas`` segment-build task as the
 analyzer):
 
 * **NGramTokenFilter** (``ngram/NGramTokenFilter.java:98-146``): for each

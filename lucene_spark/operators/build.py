@@ -1,31 +1,38 @@
 """Distributed segment build: the index write path.
 
-Spark shape (SURVEY.md §3.1): one shuffle partitions documents into
-segments (the reference's DWPT model — each task owns a private segment,
-no locks: ``index/DocumentsWriter.java:60-66``), then a vectorized
-``applyInPandas`` kernel per segment performs the whole
-tokenize → invert → delta/FOR/VByte-encode chain
-(``index/IndexingChain.java:577-1309`` + ``codecs/lucene90/
-Lucene90PostingsWriter.java:219-427``) and flushes an immutable segment
+Spark shape (SURVEY.md §3.1): one shuffle places every document straight
+into its segment's partition — partition ``i`` is segment
+``seg_id_offset + i``, the reference's DWPT model, where each task owns a
+private segment and takes no locks (``index/DocumentsWriter.java:60-66``).
+A vectorized ``mapInPandas`` kernel per partition then hashes each doc's
+content and performs the whole tokenize → invert → delta/FOR/VByte-encode
+chain (``index/IndexingChain.java:577-1309`` + ``codecs/lucene90/
+Lucene90PostingsWriter.java:219-427``), and flushes an immutable segment
 directory. The driver then atomically commits a snapshot listing every
 segment with its lineage metrics (``index/IndexWriter.java:3849``).
 
 Scale design notes (100 TB / 1000 executors):
-  * exactly ONE wide shuffle of the raw documents (by segment key); all
-    per-token work happens map-side inside the segment kernel — the
-    token-level explode/groupBy never hits the shuffle, so near-universal
-    terms (``if``, ``return``) cannot create reducer skew here.
-  * ``sha2(content)`` and the segment key are computed JVM-side before the
-    shuffle (whole-stage codegen), not in Python.
+  * exactly ONE wide shuffle of the raw documents, ``repartitionById`` on
+    ``pmod(doc_id, N)``: each segment is exactly one task, so no partition
+    holds two segments while another idles (a hash partitioner puts 16
+    segment ids on only 10 of 16 partitions), and adaptive execution never
+    coalesces the fixed partition count. All per-token work happens
+    map-side inside the segment kernel — the token-level explode/groupBy
+    never hits the shuffle, so near-universal terms (``if``, ``return``)
+    cannot create reducer skew here.
+  * the JVM side only computes the segment key; the content's sha256 is
+    computed in the kernel, which already holds the text, so the input
+    stage before the shuffle does no per-doc work of its own.
   * segment count is a knob: size segments so one fits executor memory
     (reference slices ~250k docs: ``search/IndexSearcher.java:95-97``).
   * resume: segment directories are durable units with atomic renames; a
-    re-run anti-joins away already-built segments BEFORE the shuffle, so
+    re-run filters away already-built segments BEFORE the shuffle, so
     resuming a 95%-complete build shuffles only the missing 5%.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -512,7 +519,7 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
                    build_partition: int, origin: str = "build",
                    sum_token_len: int | None = None) -> dict:
     """Flush one immutable segment dir atomically (tmp + rename)."""
-    import pyarrow.parquet as pq
+    import pyarrow.compute as pc
 
     seg_dir = os.path.join(catalog_root, "segments", f"seg={seg_id}")
     if os.path.exists(os.path.join(seg_dir, "stats.json")):
@@ -523,9 +530,10 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
 
     tmp = os.path.join(catalog_root, "segments", f"_tmp-{seg_id}-{uuid.uuid4().hex}")
     os.makedirs(tmp, exist_ok=True)
-    write_segment_file(pa.Table.from_pandas(
+    postings_tbl = pa.Table.from_pandas(
         postings, schema=postings_schema("pay_bytes" in postings.columns),
-        preserve_index=False), os.path.join(tmp, "postings.parquet"))
+        preserve_index=False)
+    write_segment_file(postings_tbl, os.path.join(tmp, "postings.parquet"))
     write_segment_file(pa.Table.from_pandas(doc_meta, preserve_index=False),
                        os.path.join(tmp, "doc_meta.parquet"))
     norms_tbl = pa.table({
@@ -536,10 +544,9 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
     })
     write_segment_file(norms_tbl, os.path.join(tmp, "norms.parquet"))
 
-    bytes_compressed = int(sum(
-        postings[c].str.len().sum() for c in
-        ("doc_bytes", "tf_bytes", "pos_bytes", "block_last", "impact_bytes")
-    )) if len(postings) else 0
+    bytes_compressed = sum(
+        pc.sum(pc.binary_length(postings_tbl[c])).as_py() or 0 for c in
+        ("doc_bytes", "tf_bytes", "pos_bytes", "block_last", "impact_bytes"))
     stats = {
         "seg_id": int(seg_id),
         "num_docs": int(norms_payload["num_docs"]),
@@ -608,9 +615,33 @@ def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
                   spec: AnalyzerSpec, store_positions: bool,
                   sort_field: str | None, sort_ascending: bool,
                   store_term_vectors: bool):
-    def build_one_segment(key, pdf):
+    """The ``mapInPandas`` function of a build: one Spark partition holds
+    exactly one segment's docs, in one or more pandas batches. It hashes
+    each doc's content, inverts and flushes the segment, and yields its
+    one row of ``STATS_SCHEMA``; an empty partition yields nothing."""
+    def build_one_segment(batches):
         from pyspark import TaskContext
-        seg_id = int(key[0])
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = (frames[0] if len(frames) == 1
+               else pd.concat(frames, ignore_index=True))
+        segs = pdf[SEG_COL]
+        if segs.isna().any():
+            raise ValueError(f"build_index: column {doc_id_col!r} holds a "
+                             "null doc id")
+        if segs.nunique() != 1:
+            raise ValueError("build_index: a build partition holds segments "
+                             f"{sorted(segs.unique().tolist())}")
+        seg_id = int(segs.iloc[0])
+        # the content's sha256 goes after the source's columns, before the
+        # segment key; it replaces a source column of its name in place
+        hashes = [hashlib.sha256(t.encode("utf-8")).hexdigest()
+                  if isinstance(t, str) else None for t in pdf[content_col]]
+        if SHA_COL in pdf.columns:
+            pdf[SHA_COL] = hashes
+        else:
+            pdf.insert(pdf.columns.get_loc(SEG_COL), SHA_COL, hashes)
         tc = TaskContext.get()
         part = tc.partitionId() if tc else -1
         postings, doc_meta, norms_payload, sum_token_len = invert_segment(
@@ -623,7 +654,7 @@ def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
         if store_term_vectors and stats["status"] == "built":
             _write_term_vectors(catalog_root, seg_id, pdf, content_col,
                                 doc_id_col, spec.stopwords)
-        return pd.DataFrame([{
+        yield pd.DataFrame([{
             "seg_id": stats["seg_id"], "num_docs": stats["num_docs"],
             "num_terms": stats["num_terms"], "num_postings": stats["num_postings"],
             "sum_doc_len": stats["sum_doc_len"],
@@ -784,9 +815,16 @@ def build_index(spark, df, index_dir: str, *,
 
     ``chain`` holds the other :class:`AnalyzerSpec` options as keywords.
     They become one spec before any Spark job, so a bad combination
-    raises ``ValueError`` and an unknown keyword ``TypeError`` here.
+    raises ``ValueError`` and an unknown keyword ``TypeError`` here, as
+    does a content column that is not a string.
+
+    One Spark job builds the segments: the docs shuffle straight to their
+    segment's partition and each task builds one segment. A null doc id
+    fails that job with a ``ValueError`` naming ``doc_id_col``, and no
+    snapshot is committed.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
 
     from ..session import ensure_shipped
     spec = AnalyzerSpec(stopwords=frozenset(stopwords), **chain)
@@ -794,12 +832,14 @@ def build_index(spark, df, index_dir: str, *,
     if store_term_vectors and not spec.plain:
         raise ValueError("term vectors require the plain standard chain "
                          "(offsets must slice the source text)")
+    content_type = df.schema[content_col].dataType
+    if not isinstance(content_type, StringType):
+        raise TypeError(f"build_index: content column {content_col!r} is "
+                        f"{content_type.simpleString()}, not string")
     ensure_shipped(spark)
     catalog = SnapshotCatalog(index_dir)
-    work = df.withColumn(SHA_COL, F.sha2(F.col(content_col).cast("string"), 256))
-    work = work.withColumn(SEG_COL,
-                           (F.pmod(F.col(doc_id_col), F.lit(num_segments))
-                            + F.lit(seg_id_offset)).cast("int"))
+    part = F.pmod(F.col(doc_id_col), F.lit(num_segments)).cast("int")
+    work = df.withColumn(SEG_COL, part + F.lit(seg_id_offset))
 
     # resume set: this build's own seg-id range only, so segment dirs of
     # other builds (merged away, or never committed) stay out of the commit
@@ -807,14 +847,18 @@ def build_index(spark, df, index_dir: str, *,
                if st.get("origin", "build") == "build"
                and seg_id_offset <= sid < seg_id_offset + num_segments}
     if resume and durable:
-        work = work.filter(~F.col(SEG_COL).isin(list(durable.keys())))
+        # a null doc id stays in, for the builder to refuse
+        work = work.filter(F.col(SEG_COL).isNull()
+                           | ~F.col(SEG_COL).isin(list(durable.keys())))
 
     builder = _make_builder(index_dir, content_col, doc_id_col, spec,
                             store_positions, sort_field, sort_ascending,
                             store_term_vectors)
-    new_stats = (work.repartition(num_segments, F.col(SEG_COL))
-                 .groupBy(SEG_COL)
-                 .applyInPandas(builder, schema=STATS_SCHEMA)
+    # partition i is segment seg_id_offset + i (a null doc id lands in
+    # partition 0); a partition count fixed by the call is never
+    # coalesced by adaptive execution
+    new_stats = (work.repartitionById(num_segments, part)
+                 .mapInPandas(builder, STATS_SCHEMA)
                  .collect())
 
     # an append keeps the latest snapshot's segments with their per-doc

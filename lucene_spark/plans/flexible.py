@@ -56,7 +56,7 @@ import re
 
 from ..functions.analysis import analyze_text
 from . import query as Q
-from .parser import QueryParseError
+from .parser import PHRASE_SUFFIX_RE, QueryParseError, phrase_suffix
 
 _TOKEN_RE = re.compile(
     r'"[^"]*"'            # quoted phrase
@@ -275,14 +275,14 @@ def parse_standard(text: str, default_operator: str = "OR",
             terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
             if not terms:
                 raise QueryParseError(f"empty phrase: {t}")
-            slop = 0
+            q = (Q.Term(terms[0], boost) if len(terms) == 1
+                 else Q.Phrase(tuple(terms)))
             nxt = peek()
-            if nxt and re.match(r"^~\d+$", nxt):
-                advance()  # a one-word phrase's slop is dropped
-                slop = int(nxt[1:])
-            if len(terms) == 1:
-                return Q.Term(terms[0], boost)
-            return Q.Phrase(tuple(terms), slop)
+            suffix = PHRASE_SUFFIX_RE.fullmatch(nxt) if nxt else None
+            if suffix:
+                advance()  # "a b"~2^3
+                q = phrase_suffix(q, suffix)
+            return q
         m = re.match(r"^(.+?)~(\d*)$", t)
         if m and "*" not in t and "?" not in t:
             edits = int(m.group(2)) if m.group(2) else 2

@@ -18,9 +18,28 @@ from .query import And, MultiTerm, Not, Or, Phrase, Query, Term
 
 _TOKENS_RE = re.compile(r'"[^"]*"|\(|\)|[^\s()]+')
 
+#: the token that may follow a quoted phrase: ``~slop``, ``^boost`` or both,
+#: slop first (``QueryParser.jj``: ``<QUOTED> [<FUZZY_SLOP>] [^ boost]``)
+PHRASE_SUFFIX_RE = re.compile(r"(?:~(\d+))?(?:\^(\d+(?:\.\d+)?))?")
+
 
 class QueryParseError(ValueError):
     pass
+
+
+def phrase_suffix(q: Query, suffix: re.Match) -> Query:
+    """``q``, a quoted phrase's query, with the slop and boost of
+    ``suffix``, a :data:`PHRASE_SUFFIX_RE` match. A one-word phrase is a
+    :class:`Term`: it drops the slop and takes the boost. A
+    :class:`Phrase` has no boost, so one other than 1 is refused."""
+    slop, boost = suffix.group(1), suffix.group(2)
+    if isinstance(q, Term):
+        return Term(q.term, q.boost * float(boost or 1))
+    if isinstance(q, Phrase):
+        if boost is not None and float(boost) != 1:
+            raise QueryParseError(f"a phrase takes no boost: ^{boost}")
+        return q if slop is None else Phrase(q.terms, int(slop))
+    return q
 
 
 @dataclass
@@ -150,13 +169,11 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
                                        m.group(4) == "]"))
         atom = _atom(t)
         nxt = peek()
+        suffix = PHRASE_SUFFIX_RE.fullmatch(nxt) if nxt else None
         if (t.startswith('"') or atom is _DROPPED
-                or isinstance(atom, Phrase)) \
-                and nxt and re.match(r"^~\d+$", nxt):
-            advance()  # phrase slop: "a b"~2; a one-word or fully-stopped
-            # phrase drops it
-            if isinstance(atom, Phrase):
-                atom = Phrase(atom.terms, int(nxt[1:]))
+                or isinstance(atom, Phrase)) and suffix:
+            advance()  # phrase slop and boost: "a b"~2^3
+            atom = phrase_suffix(atom, suffix)
         return atom
 
     def _atom(t: str) -> Query:

@@ -10,6 +10,10 @@ term-vector sidecar's rows. A change to how documents reach the segment
 kernel (placement, batching, where the content hash is computed) must
 leave all of them as they are. Record with
 ``python tests/test_build_goldens.py --record PATH`` from the repo root.
+
+The tests after the goldens pin the build's shape: one Spark task builds
+exactly one segment, and input the kernel cannot index is refused before
+any snapshot is committed.
 """
 
 from __future__ import annotations
@@ -195,6 +199,44 @@ def test_built_segments_match_golden(spark, goldens, case, tmp_path):
             assert got["segments"][seg][key] == files[key], (case, seg, key)
     for key in set(want) - {"segments"}:
         assert got[key] == want[key], (case, key)
+
+
+def test_each_task_builds_one_segment(spark, tmp_path):
+    """Partition ``i`` of a build holds segment ``seg_id_offset + i``, and
+    nothing else."""
+    from lucene_spark.operators.build import build_index
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(_corpus()), d,
+                num_segments=NUM_SEGMENTS)
+    new = _corpus(90, seed=3)
+    new["doc_id"] = new["doc_id"] + 10_000
+    snap = build_index(spark, spark.createDataFrame(new), d, num_segments=5,
+                       seg_id_offset=NUM_SEGMENTS)
+    assert len(snap.segments) == NUM_SEGMENTS + 5
+    for seg in snap.segments:
+        offset = NUM_SEGMENTS if seg["seg_id"] >= NUM_SEGMENTS else 0
+        assert seg["build_partition"] == seg["seg_id"] - offset, seg
+
+
+def test_null_doc_id_is_refused(spark, tmp_path):
+    from lucene_spark.operators.build import build_index
+    from lucene_spark.sources.catalog import SnapshotCatalog
+    d = str(tmp_path / "idx")
+    df = spark.createDataFrame([(1, "alpha beta"), (None, "gamma"),
+                                (6, "delta")], "key long, content string")
+    with pytest.raises(Exception, match="'key' holds a null doc id"):
+        build_index(spark, df, d, num_segments=4, doc_id_col="key")
+    assert SnapshotCatalog(d).load() is None
+
+
+def test_non_string_content_is_refused(spark, tmp_path):
+    from lucene_spark.operators.build import build_index
+    from lucene_spark.sources.catalog import SnapshotCatalog
+    d = str(tmp_path / "idx")
+    df = spark.createDataFrame([(1, 7), (2, 8)], "doc_id long, content long")
+    with pytest.raises(TypeError, match="'content' is bigint"):
+        build_index(spark, df, d, num_segments=2)
+    assert SnapshotCatalog(d).load() is None
 
 
 if __name__ == "__main__":

@@ -89,6 +89,15 @@ def test_docvalues_has_no_shuffle_or_partition_map():
         assert sites == [], attr
 
 
+def test_build_shuffles_straight_to_its_segment():
+    """One partition per segment: no grouped map sorts the build's input,
+    and the content hash is the kernel's, not a JVM column."""
+    for attr in ("groupBy", "applyInPandas", "sha2"):
+        sites = [s for s in _call_sites(attr)
+                 if s == ("operators/build.py", "build_index")]
+        assert sites == [], attr
+
+
 def test_one_term_stats_call_site():
     assert _call_sites("compute_term_stats") == [
         ("operators/build.py", "commit_segments")]

@@ -23,18 +23,18 @@ QUERIES = {
                   min_should_match=2),
     "q_fuzzy": Q.MultiTerm("fuzzy", "parze", edits=1),
     "q_regexp": Q.MultiTerm("regexp", "pa.+e|tok[a-z]n"),
-    "q_sloppy3": Q.Phrase(("if", "return", "value"), slop=6),
+    "q_sloppy3": Q.Phrase(("if", "return", "token"), slop=6),
     "q_rep_sloppy": Q.Phrase(("return", "return"), slop=2),
-    "q_span": Q.SpanNear(("parse", "emit"), slop=6, in_order=False),
-    "q_spannot": Q.SpanNot(Q.SpanNear(("parse", "emit"), slop=8,
-                                      in_order=False), Q.Term("codec")),
+    "q_span": Q.SpanNear(("token", "yield"), slop=6, in_order=False),
+    "q_spannot": Q.SpanNot(Q.SpanNear(("token", "yield"), slop=8,
+                                      in_order=False), Q.Term("if")),
     "q_spanfirst": Q.SpanFirst(Q.Term("parse"), 15),
-    "q_multiphrase": Q.MultiPhrase((("parse", "scan"), ("emit",))),
+    "q_multiphrase": Q.MultiPhrase((("token", "self"), ("if",))),
     "q_mp_prefix": Q.MultiPhrase(((("prefix", "re"),), ("if",))),
     "q_interval": Q.Interval(("maxgaps", ("ordered", (
         ("term", "if"), ("term", "return"))), 3)),
-    "q_interval_mt": Q.Interval(("ordered", (("prefix", "par"),
-                                             ("term", "emit")))),
+    "q_interval_mt": Q.Interval(("ordered", (("prefix", "lit"),
+                                             ("term", "yield")))),
     "q_atleast": Q.Interval(("atleast", 2, (
         ("term", "if"), ("term", "return"), ("term", "value")))),
 }
@@ -48,6 +48,14 @@ def corpus():
 @pytest.fixture(scope="module")
 def oracle(corpus):
     return OracleIndex.build(list(zip(corpus.doc_id, corpus.content)))
+
+
+def test_every_query_matches_a_doc(oracle):
+    """A query that matches nothing cannot show a lost match."""
+    from lucene_spark.plans.parser import parse
+    for qid, q in QUERIES.items():
+        node = parse(q) if isinstance(q, str) else q
+        assert oracle.score(node), qid
 
 
 def _expected(oracle):
