@@ -32,11 +32,11 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import shutil
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -45,7 +45,7 @@ import pyarrow as pa
 from ..functions.analysis import AnalyzerSpec, analyze_batch
 from ..functions.codec import encode_postings_batch
 from ..functions.smallfloat import int_to_byte4
-from ..sources.catalog import SnapshotCatalog
+from ..sources.catalog import SnapshotCatalog, publish
 
 SEG_COL = "__seg__"
 SHA_COL = "sha256"
@@ -518,32 +518,19 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
                    doc_meta: pd.DataFrame, norms_payload: dict,
                    build_partition: int, origin: str = "build",
                    sum_token_len: int | None = None) -> dict:
-    """Flush one immutable segment dir atomically (tmp + rename)."""
+    """Publish one immutable segment dir, or reuse the one already there."""
     import pyarrow.compute as pc
 
     seg_dir = os.path.join(catalog_root, "segments", f"seg={seg_id}")
-    if os.path.exists(os.path.join(seg_dir, "stats.json")):
-        with open(os.path.join(seg_dir, "stats.json")) as f:
-            stats = json.load(f)
-        stats["status"] = "reused"
-        return stats
-
-    tmp = os.path.join(catalog_root, "segments", f"_tmp-{seg_id}-{uuid.uuid4().hex}")
-    os.makedirs(tmp, exist_ok=True)
     postings_tbl = pa.Table.from_pandas(
         postings, schema=postings_schema("pay_bytes" in postings.columns),
         preserve_index=False)
-    write_segment_file(postings_tbl, os.path.join(tmp, "postings.parquet"))
-    write_segment_file(pa.Table.from_pandas(doc_meta, preserve_index=False),
-                       os.path.join(tmp, "doc_meta.parquet"))
     norms_tbl = pa.table({
         "seg_id": pa.array([norms_payload["seg_id"]], pa.int32()),
         "num_docs": pa.array([norms_payload["num_docs"]], pa.int64()),
         "norm_bytes": pa.array([norms_payload["norm_bytes"]], pa.binary()),
         "global_doc_ids": pa.array([norms_payload["global_doc_ids"]], pa.binary()),
     })
-    write_segment_file(norms_tbl, os.path.join(tmp, "norms.parquet"))
-
     bytes_compressed = sum(
         pc.sum(pc.binary_length(postings_tbl[c])).as_py() or 0 for c in
         ("doc_bytes", "tf_bytes", "pos_bytes", "block_last", "impact_bytes"))
@@ -560,13 +547,18 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
         "origin": origin,
         "status": "built",
     }
-    with open(os.path.join(tmp, "stats.json"), "w") as f:
-        json.dump(stats, f)
     try:
-        os.rename(tmp, seg_dir)
-    except OSError:
-        # concurrent/previous writer won the rename; reuse theirs
-        shutil.rmtree(tmp, ignore_errors=True)
+        with publish(seg_dir) as tmp:
+            os.makedirs(tmp)
+            write_segment_file(postings_tbl,
+                               os.path.join(tmp, "postings.parquet"))
+            write_segment_file(
+                pa.Table.from_pandas(doc_meta, preserve_index=False),
+                os.path.join(tmp, "doc_meta.parquet"))
+            write_segment_file(norms_tbl, os.path.join(tmp, "norms.parquet"))
+            with open(os.path.join(tmp, "stats.json"), "w") as f:
+                json.dump(stats, f)
+    except FileExistsError:
         with open(os.path.join(seg_dir, "stats.json")) as f:
             stats = json.load(f)
         stats["status"] = "reused"
@@ -579,8 +571,8 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
     """Per-doc analyzed (terms, starts, ends) offset sidecar, one parquet
     file per build segment under <index>/term_vectors/, keyed by GLOBAL
     doc_id (seg_id kept so readers can latest-win across updateDocument
-    generations). Executor-written, atomic rename; idempotent on resume
-    (segment status 'built' gates the write)."""
+    generations). Executor-written through :func:`publish`; a file already
+    there stands, and segment status 'built' gates the write on resume."""
     import pyarrow.parquet as pq
 
     from ..functions.analysis import analyze_text_offsets
@@ -588,8 +580,6 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
     tv_dir = os.path.join(catalog_root, "term_vectors")
     os.makedirs(tv_dir, exist_ok=True)
     final = os.path.join(tv_dir, f"seg-{seg_id}.parquet")
-    if os.path.exists(final):
-        return
     rows_t, rows_s, rows_e = [], [], []
     for text in pdf[content_col]:
         t, s, e = analyze_text_offsets(text or "", stopwords=stopwords)
@@ -603,12 +593,8 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
         "starts": pa.array(rows_s, pa.list_(pa.int32())),
         "ends": pa.array(rows_e, pa.list_(pa.int32())),
     })
-    tmp = os.path.join(tv_dir, f"_tmp-{seg_id}-{uuid.uuid4().hex}.parquet")
-    pq.write_table(tbl, tmp)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        os.unlink(tmp)
+    with contextlib.suppress(FileExistsError), publish(final) as tmp:
+        pq.write_table(tbl, tmp)
 
 
 def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
@@ -681,7 +667,7 @@ def compute_term_stats(spark, catalog: SnapshotCatalog, seg_ids: list[int],
     probes (suggest, spell, query stats) prune row groups via parquet
     min/max. A task's work is bounded by its range's rows: at most one row
     per (term, segment), since each segment's kernel already summed its
-    own. The parts land in a fresh directory renamed to ``out_dir``, which
+    own. The parts are published as ``out_dir`` (:func:`publish`), which
     replaces any leftover of a crashed commit."""
     import pyarrow.parquet as pq
 
@@ -690,24 +676,23 @@ def compute_term_stats(spark, catalog: SnapshotCatalog, seg_ids: list[int],
     from .search import fan_out
     ensure_shipped(spark)
     seg_dirs = {s: catalog.segment_dir(s) for s in seg_ids}
-    tmp = os.path.join(os.path.dirname(out_dir), f"_tmp-{uuid.uuid4().hex}")
-    os.makedirs(tmp)
+    with publish(out_dir) as tmp:
+        os.makedirs(tmp)
 
-    def aggregate(item):
-        i, filters = item
-        t = pa.concat_tables([pq.read_table(
-            os.path.join(d, "postings.parquet"),
-            columns=["term", "df", "ttf"], filters=filters)
-            for d in seg_dirs.values()])
-        t = t.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")])
-        write_segment_file(pa.table({
-            "term": t["term"], "df": t["df_sum"], "ttf": t["ttf_sum"],
-        }).sort_by("term"), os.path.join(tmp, f"part-{i:05d}.parquet"))
+        def aggregate(item):
+            i, filters = item
+            t = pa.concat_tables([pq.read_table(
+                os.path.join(d, "postings.parquet"),
+                columns=["term", "df", "ttf"], filters=filters)
+                for d in seg_dirs.values()])
+            t = t.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")])
+            write_segment_file(pa.table({
+                "term": t["term"], "df": t["df_sum"], "ttf": t["ttf_sum"],
+            }).sort_by("term"), os.path.join(tmp, f"part-{i:05d}.parquet"))
 
-    fan_out(spark, list(enumerate(term_ranges(spark, seg_dirs))), aggregate,
-            "part int").collect()
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.rename(tmp, out_dir)
+        fan_out(spark, list(enumerate(term_ranges(spark, seg_dirs))),
+                aggregate, "part int").collect()
+        shutil.rmtree(out_dir, ignore_errors=True)
     return out_dir
 
 

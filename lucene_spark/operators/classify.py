@@ -386,8 +386,8 @@ def doc_to_double_vectors(searcher, doc_ids_df, dense: bool = False):
     a (doc_id) DataFrame selecting the docs. Returns ``(doc_id, vector
     array<double>)``; sparse vectors carry a parallel ``terms`` column.
     The TV read is one pushed broadcast-join scan; counting and vector
-    assembly are Catalyst aggregations (dense adds one broadcast vocab
-    map inside an Arrow-batched kernel)."""
+    assembly are Catalyst aggregations (dense: an Arrow-batched kernel over
+    the sorted dictionary, read on the driver with no Spark job)."""
     live = searcher.term_vectors(doc_ids_df).select("doc_id", "terms")
     tf = (live.select("doc_id", F.explode("terms").alias("term"))
           .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
@@ -399,8 +399,7 @@ def doc_to_double_vectors(searcher, doc_ids_df, dense: bool = False):
                         F.expr("transform(_p, x -> x.term)").alias("terms"),
                         F.expr("transform(_p, x -> cast(x.tf as double))")
                         .alias("vector")))
-    vocab = [r["term"] for r in
-             searcher.term_stats.select("term").orderBy("term").collect()]
+    vocab = searcher._dictionary_terms("prefix", "")   # every term, sorted
     index_of = {t: i for i, t in enumerate(vocab)}
     size = len(vocab)
 

@@ -33,7 +33,7 @@ import numpy as np
 import pandas as pd
 
 from ..functions.codec import decode_postings
-from ..sources.catalog import SnapshotCatalog
+from ..sources.catalog import SnapshotCatalog, publish
 
 #: {extra key: (directory under the index root, extra count key, the
 #: columns that address a row)} of the per-doc state files each
@@ -105,11 +105,9 @@ def write_generation(catalog: SnapshotCatalog, key: str, gen: int,
         return
     out_dir = os.path.join(catalog.root, subdir)
     os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, f"_tmp-{uuid.uuid4().hex}.parquet")
-    pq.write_table(table, tmp)
-    final = os.path.join(out_dir,
-                         f"gen-{gen}-{uuid.uuid4().hex[:8]}.parquet")
-    os.rename(tmp, final)
+    final = os.path.join(out_dir, f"gen-{gen}-{uuid.uuid4().hex[:8]}.parquet")
+    with publish(final) as tmp:
+        pq.write_table(table, tmp)
     extra[key] = os.path.relpath(final, catalog.root)
     extra[count_key] = int(table.num_rows)
 

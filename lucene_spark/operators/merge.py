@@ -29,14 +29,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
 from ..functions.codec import decode_postings, encode_postings_batch
-from ..sources.catalog import SnapshotCatalog
+from ..sources.catalog import SnapshotCatalog, publish
 from .build import (POSTINGS_COLUMNS, commit_segments, postings_schema,
                     write_segment_file)
 
@@ -276,322 +275,317 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     field = sort_info["field"] if sort_info else None
     s_asc = bool(sort_info["ascending"]) if sort_info else True
 
-    tmp = os.path.join(index_dir, "segments",
-                       f"_tmp-{new_seg_id}-{uuid.uuid4().hex}")
-    os.makedirs(tmp, exist_ok=True)
-    norms_path = os.path.join(tmp, "norms.parquet")
-    remap_path = os.path.join(tmp, "remap.parquet")
+    with publish(catalog.segment_dir(new_seg_id)) as tmp:
+        os.makedirs(tmp)
+        norms_path = os.path.join(tmp, "norms.parquet")
+        remap_path = os.path.join(tmp, "remap.parquet")
 
-    # Phase 1 — norms/gids assembly, one executor task (the only place
-    # the whole merged doc axis is materialized): mask each segment's
-    # norms by its tombstones, concatenate at the doc bases; under an
-    # index sort (reference MergeState.needsIndexSort →
-    # ``index/IndexSorter.java:44`` + the sorting DocIDMerger,
-    # ``index/DocIDMerger.java:97``) also merge-sort by (key asc|desc,
-    # global doc_id asc) — each input is already key-ordered — permute,
-    # and write each input's old id → new id table for phase 2. Files land
-    # in the tmp segment dir the same way build tasks write theirs (shared
-    # index storage contract). Retained soft deletes follow their docs to
-    # the new ids here, where the docMap is first known.
-    def assemble(_):
-        norm_parts, gid_parts, key_parts, live_ids = [], [], [], []
-        for s in seg_ids:
-            npdf = pd.read_parquet(os.path.join(seg_dirs[s],
-                                                "norms.parquet"))
-            num = int(npdf.iloc[0]["num_docs"])
-            live = np.ones(num, dtype=bool)
-            dead = seg_deletes.get(s)
-            if dead is not None:
-                live[dead[dead < num]] = False
-            norm_parts.append(np.frombuffer(
-                npdf.iloc[0]["norm_bytes"], dtype=np.uint8)[live])
-            gid_parts.append(np.frombuffer(
-                npdf.iloc[0]["global_doc_ids"], dtype="<i8")[live])
-            if field is not None:
-                kdf = pd.read_parquet(
-                    os.path.join(seg_dirs[s], "doc_meta.parquet"),
-                    columns=["local_doc_id", field]) \
-                    .sort_values("local_doc_id")
-                key_parts.append(kdf[field].reset_index(drop=True)[live])
-                live_ids.append(np.nonzero(live)[0])
-        merged_norms = np.concatenate(norm_parts)
-        merged_gids = np.concatenate(gid_parts)
-        table = None
-        if field is not None:
-            order = (pd.DataFrame({"k": pd.concat(key_parts,
-                                                  ignore_index=True),
-                                   "g": merged_gids})
-                     .sort_values(["k", "g"], ascending=[s_asc, True],
-                                  kind="mergesort").index.to_numpy())
-            inv = np.empty(len(order), dtype=np.int64)
-            inv[order] = np.arange(len(order), dtype=np.int64)
-            merged_norms = merged_norms[order]
-            merged_gids = merged_gids[order]
-            table, off = {}, 0
-            for s, olds in zip(seg_ids, live_ids):
-                table[s] = np.full(seg_nums[s], -1, np.int64)
-                table[s][olds] = inv[off:off + len(olds)]
-                off += len(olds)
-            pq.write_table(pa.table({
-                "seg_id": pa.array(seg_ids, pa.int32()),
-                "new_ids": pa.array([table[s].tobytes() for s in seg_ids],
-                                    pa.binary())}), remap_path)
-        write_segment_file(pa.table({
-            "seg_id": pa.array([new_seg_id], pa.int32()),
-            "num_docs": pa.array([len(merged_norms)], pa.int64()),
-            "norm_bytes": pa.array([merged_norms.tobytes()],
-                                   pa.binary()),
-            "global_doc_ids": pa.array([merged_gids.tobytes()],
-                                       pa.binary()),
-        }), norms_path)
-        new_ids = _doc_map(doc_bases, seg_deletes, table)
-        soft = [new_ids(s, v) for s, v in sorted(retained.items())]
-        return pd.DataFrame({
-            "n_docs": [len(merged_norms)],
-            "soft": [np.concatenate(soft).astype("<i4").tobytes()
-                     if soft else b""]})
-
-    got = fan_out(spark, [None], assemble,
-                  "n_docs long, soft binary").collect()[0]
-    if int(got["n_docs"]) != n_docs:
-        raise RuntimeError(
-            f"norms assembly produced {got['n_docs']} docs, "
-            f"stats+tombstones imply {n_docs}")
-    new_soft = ({new_seg_id: np.frombuffer(got["soft"], "<i4")}
-                if retained else {})
-
-    # Phase 2 — one fan-out over n term ranges (term_ranges) and n
-    # merged-id ranges, one part file each. Every task's closure carries
-    # the merged segments' tombstones (8 bytes each, at most their
-    # num_docs), shipped once per task, 2n ≤ 2P times. Under an index sort
-    # a doc-id range's old ids scatter, so each doc-id item reads every
-    # input's doc_meta whole: doc_meta is read n times (once below
-    # _PART_BYTES).
-    term_filters = term_ranges(spark, seg_dirs)
-    n = len(term_filters)
-    doc_bounds = sorted({n_docs * i // n for i in range(n + 1)})
-    if len(doc_bounds) == 1:
-        doc_bounds *= 2          # an empty merge still writes doc_meta
-    items = [("postings", i, f) for i, f in enumerate(term_filters)]
-    items += [("doc_meta", i, (lo, hi))
-              for i, (lo, hi) in enumerate(zip(doc_bounds, doc_bounds[1:]))]
-    # interleave the kinds, so each task gets a share of both
-    items.sort(key=lambda it: (it[1], it[0] == "doc_meta"))
-    for name in ("postings", "doc_meta"):
-        os.makedirs(os.path.join(tmp, f"{name}.parquet"))
-    overlay_path = _overlay_path(catalog, snap)
-    out_schema = postings_schema(has_payloads)
-    task: dict = {}   # per task: each task unpickles its own copy
-
-    def docmap():
-        if "new_ids" not in task:
+        # Phase 1 — norms/gids assembly, one executor task (the only place the
+        # whole merged doc axis is materialized): mask each segment's norms by
+        # its tombstones, concatenate at the doc bases; under an index sort
+        # (reference MergeState.needsIndexSort → ``index/IndexSorter.java:44``
+        # + the sorting DocIDMerger, ``index/DocIDMerger.java:97``) also
+        # merge-sort by (key asc|desc, global doc_id asc) — each input is
+        # already key-ordered — permute, and write each input's old id → new id
+        # table for phase 2. Files land in the tmp segment dir the same way
+        # build tasks write theirs (shared index storage contract). Retained
+        # soft deletes follow their docs to the new ids here, where the docMap
+        # is first known.
+        def assemble(_):
+            norm_parts, gid_parts, key_parts, live_ids = [], [], [], []
+            for s in seg_ids:
+                npdf = pd.read_parquet(os.path.join(seg_dirs[s],
+                                                    "norms.parquet"))
+                num = int(npdf.iloc[0]["num_docs"])
+                live = np.ones(num, dtype=bool)
+                dead = seg_deletes.get(s)
+                if dead is not None:
+                    live[dead[dead < num]] = False
+                norm_parts.append(np.frombuffer(
+                    npdf.iloc[0]["norm_bytes"], dtype=np.uint8)[live])
+                gid_parts.append(np.frombuffer(
+                    npdf.iloc[0]["global_doc_ids"], dtype="<i8")[live])
+                if field is not None:
+                    kdf = pd.read_parquet(
+                        os.path.join(seg_dirs[s], "doc_meta.parquet"),
+                        columns=["local_doc_id", field]) \
+                        .sort_values("local_doc_id")
+                    key_parts.append(kdf[field].reset_index(drop=True)[live])
+                    live_ids.append(np.nonzero(live)[0])
+            merged_norms = np.concatenate(norm_parts)
+            merged_gids = np.concatenate(gid_parts)
             table = None
             if field is not None:
-                rdf = pd.read_parquet(remap_path)
-                table = {int(s): np.frombuffer(b, "<i8")
-                         for s, b in zip(rdf["seg_id"], rdf["new_ids"])}
-            task["new_ids"] = _doc_map(doc_bases, seg_deletes, table)
-        return task["new_ids"]
-
-    def part_path(name, i):
-        return os.path.join(tmp, f"{name}.parquet", f"part-{i:05d}.parquet")
-
-    def rewrite(item):
-        kind, i, rng = item
-        if kind == "postings":
-            out = reencode(rng)
-            write_segment_file(pa.Table.from_pandas(
-                out, schema=out_schema, preserve_index=False),
-                part_path(kind, i))
+                order = (pd.DataFrame({"k": pd.concat(key_parts,
+                                                      ignore_index=True),
+                                       "g": merged_gids})
+                         .sort_values(["k", "g"], ascending=[s_asc, True],
+                                      kind="mergesort").index.to_numpy())
+                inv = np.empty(len(order), dtype=np.int64)
+                inv[order] = np.arange(len(order), dtype=np.int64)
+                merged_norms = merged_norms[order]
+                merged_gids = merged_gids[order]
+                table, off = {}, 0
+                for s, olds in zip(seg_ids, live_ids):
+                    table[s] = np.full(seg_nums[s], -1, np.int64)
+                    table[s][olds] = inv[off:off + len(olds)]
+                    off += len(olds)
+                pq.write_table(pa.table({
+                    "seg_id": pa.array(seg_ids, pa.int32()),
+                    "new_ids": pa.array([table[s].tobytes() for s in seg_ids],
+                                        pa.binary())}), remap_path)
+            write_segment_file(pa.table({
+                "seg_id": pa.array([new_seg_id], pa.int32()),
+                "num_docs": pa.array([len(merged_norms)], pa.int64()),
+                "norm_bytes": pa.array([merged_norms.tobytes()],
+                                       pa.binary()),
+                "global_doc_ids": pa.array([merged_gids.tobytes()],
+                                           pa.binary()),
+            }), norms_path)
+            new_ids = _doc_map(doc_bases, seg_deletes, table)
+            soft = [new_ids(s, v) for s, v in sorted(retained.items())]
             return pd.DataFrame({
-                "num_terms": [len(out)],
-                "num_postings": [int(out["df"].sum())],
-                "sum_ttf": [int(out["ttf"].sum())],
-                "bytes": [int(sum(out[c].str.len().sum() for c in
-                                  ("doc_bytes", "tf_bytes", "pos_bytes",
-                                   "block_last", "impact_bytes")))],
-                "num_docs": [0], "sum_doc_len": [0]})
-        meta = remap_meta(*rng)
-        write_segment_file(meta, part_path(kind, i))
-        return pd.DataFrame({
-            "num_terms": [0], "num_postings": [0], "sum_ttf": [0],
-            "bytes": [0], "num_docs": [meta.num_rows],
-            "sum_doc_len": [int(meta.column("doc_len").to_numpy().sum())]})
+                "n_docs": [len(merged_norms)],
+                "soft": [np.concatenate(soft).astype("<i4").tobytes()
+                         if soft else b""]})
 
-    def remap_meta(lo, hi):
-        """The doc_meta rows of merged ids [lo, hi), by new id: each
-        input's rows that land there, with the overlay baked in."""
-        new_ids = docmap()
-        if "overlay" not in task:
-            task["overlay"] = (pd.read_parquet(
-                overlay_path, filters=[("seg_id", "in", seg_ids)])
-                if overlay_path else None)
-        overlay = task["overlay"]
-        parts = []
-        for s in seg_ids:
-            filters = None   # sorted: a range's old ids scatter
-            if field is None:    # unsorted: they are contiguous
-                filters = [("local_doc_id", ">=", lo - doc_bases[s]),
-                           ("local_doc_id", "<",
-                            hi - doc_bases[s] + n_dead[s])]
-            meta = pq.read_table(
-                os.path.join(seg_dirs[s], "doc_meta.parquet"),
-                filters=filters)
-            new = new_ids(s, meta.column("local_doc_id").to_numpy())
-            keep = (new >= lo) & (new < hi)
-            meta = meta.filter(pa.array(keep))
-            if overlay is not None:
-                meta = _bake(meta, overlay[overlay["seg_id"] == s])
-            for name, col in (("seg_id", np.full(len(meta), new_seg_id)),
-                              ("local_doc_id", new[keep])):
-                meta = meta.set_column(
-                    meta.column_names.index(name),
-                    pa.field(name, pa.int32()), pa.array(col, pa.int32()))
-            parts.append(meta)
-        return pa.concat_tables(parts, promote_options="permissive") \
-            .sort_by("local_doc_id")
+        got = fan_out(spark, [None], assemble,
+                      "n_docs long, soft binary").collect()[0]
+        if int(got["n_docs"]) != n_docs:
+            raise RuntimeError(
+                f"norms assembly produced {got['n_docs']} docs, "
+                f"stats+tombstones imply {n_docs}")
+        new_soft = ({new_seg_id: np.frombuffer(got["soft"], "<i4")}
+                    if retained else {})
 
-    def reencode(filters):
-        """One term range: decode every (term, segment) row, concatenate
-        per term in segment order at the merged ids, then re-encode ALL
-        the range's terms in one batched pass (``encode_postings_batch``)
-        — per-term Python/Arrow overhead would dominate a merge otherwise."""
-        out_cols = POSTINGS_COLUMNS + (["pay_bytes"] if has_payloads
-                                       else [])
-        pdf = pd.concat(
-            [pd.read_parquet(os.path.join(seg_dirs[s], "postings.parquet"),
-                             filters=filters) for s in seg_ids],
-            ignore_index=True)
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        pdf = pdf.sort_values(["term", "seg_id"], kind="mergesort")
-        new_ids = docmap()
-        if "norms" not in task:
-            task["norms"] = np.frombuffer(
-                pd.read_parquet(norms_path).iloc[0]["norm_bytes"],
-                dtype=np.uint8)
-        norms = task["norms"]
-        ids_parts, tf_parts, pos_parts, pay_parts = [], [], [], []
-        row_lens = np.empty(len(pdf), dtype=np.int64)
-        tok_lens = np.empty(len(pdf), dtype=np.int64)
-        term_of_row = pdf["term"].to_numpy()
-        for i, row in enumerate(pdf.itertuples(index=False)):
-            dec = decode_postings(row._asdict(),
-                                  with_positions=store_positions)
-            ids, tfs = dec["doc_ids"], dec["tfs"]
-            pos = dec.get("positions", np.empty(0, np.int64)) \
-                if store_positions else None
-            pay = np.frombuffer(row.pay_bytes, dtype="<f4") \
-                if has_payloads else None
-            newids = new_ids(int(row.seg_id), ids)
-            keep = newids >= 0
-            if not keep.all():
-                tok_keep = np.repeat(keep, tfs)
+        # Phase 2 — one fan-out over n term ranges (term_ranges) and n
+        # merged-id ranges, one part file each. Every task's closure carries
+        # the merged segments' tombstones (8 bytes each, at most their
+        # num_docs), shipped once per task, 2n ≤ 2P times. Under an index sort
+        # a doc-id range's old ids scatter, so each doc-id item reads every
+        # input's doc_meta whole: doc_meta is read n times (once below
+        # _PART_BYTES).
+        term_filters = term_ranges(spark, seg_dirs)
+        n = len(term_filters)
+        doc_bounds = sorted({n_docs * i // n for i in range(n + 1)})
+        if len(doc_bounds) == 1:
+            doc_bounds *= 2          # an empty merge still writes doc_meta
+        items = [("postings", i, f) for i, f in enumerate(term_filters)]
+        items += [("doc_meta", i, (lo, hi)) for i, (lo, hi)
+                  in enumerate(zip(doc_bounds, doc_bounds[1:]))]
+        # interleave the kinds, so each task gets a share of both
+        items.sort(key=lambda it: (it[1], it[0] == "doc_meta"))
+        for name in ("postings", "doc_meta"):
+            os.makedirs(os.path.join(tmp, f"{name}.parquet"))
+        overlay_path = _overlay_path(catalog, snap)
+        out_schema = postings_schema(has_payloads)
+        task: dict = {}   # per task: each task unpickles its own copy
+
+        def docmap():
+            if "new_ids" not in task:
+                table = None
+                if field is not None:
+                    rdf = pd.read_parquet(remap_path)
+                    table = {int(s): np.frombuffer(b, "<i8")
+                             for s, b in zip(rdf["seg_id"], rdf["new_ids"])}
+                task["new_ids"] = _doc_map(doc_bases, seg_deletes, table)
+            return task["new_ids"]
+
+        def part_path(name, i):
+            return os.path.join(tmp, f"{name}.parquet",
+                                f"part-{i:05d}.parquet")
+
+        def rewrite(item):
+            kind, i, rng = item
+            if kind == "postings":
+                out = reencode(rng)
+                write_segment_file(pa.Table.from_pandas(
+                    out, schema=out_schema, preserve_index=False),
+                    part_path(kind, i))
+                return pd.DataFrame({
+                    "num_terms": [len(out)],
+                    "num_postings": [int(out["df"].sum())],
+                    "sum_ttf": [int(out["ttf"].sum())],
+                    "bytes": [int(sum(out[c].str.len().sum() for c in
+                                      ("doc_bytes", "tf_bytes", "pos_bytes",
+                                       "block_last", "impact_bytes")))],
+                    "num_docs": [0], "sum_doc_len": [0]})
+            meta = remap_meta(*rng)
+            write_segment_file(meta, part_path(kind, i))
+            return pd.DataFrame({
+                "num_terms": [0], "num_postings": [0], "sum_ttf": [0],
+                "bytes": [0], "num_docs": [meta.num_rows],
+                "sum_doc_len": [int(meta.column("doc_len").to_numpy().sum())]})
+
+        def remap_meta(lo, hi):
+            """The doc_meta rows of merged ids [lo, hi), by new id: each
+            input's rows that land there, with the overlay baked in."""
+            new_ids = docmap()
+            if "overlay" not in task:
+                task["overlay"] = (pd.read_parquet(
+                    overlay_path, filters=[("seg_id", "in", seg_ids)])
+                    if overlay_path else None)
+            overlay = task["overlay"]
+            parts = []
+            for s in seg_ids:
+                filters = None   # sorted: a range's old ids scatter
+                if field is None:    # unsorted: they are contiguous
+                    filters = [("local_doc_id", ">=", lo - doc_bases[s]),
+                               ("local_doc_id", "<",
+                                hi - doc_bases[s] + n_dead[s])]
+                meta = pq.read_table(
+                    os.path.join(seg_dirs[s], "doc_meta.parquet"),
+                    filters=filters)
+                new = new_ids(s, meta.column("local_doc_id").to_numpy())
+                keep = (new >= lo) & (new < hi)
+                meta = meta.filter(pa.array(keep))
+                if overlay is not None:
+                    meta = _bake(meta, overlay[overlay["seg_id"] == s])
+                for name, col in (("seg_id", np.full(len(meta), new_seg_id)),
+                                  ("local_doc_id", new[keep])):
+                    meta = meta.set_column(
+                        meta.column_names.index(name),
+                        pa.field(name, pa.int32()), pa.array(col, pa.int32()))
+                parts.append(meta)
+            return pa.concat_tables(parts, promote_options="permissive") \
+                .sort_by("local_doc_id")
+
+        def reencode(filters):
+            """One term range: decode every (term, segment) row, concatenate
+            per term in segment order at the merged ids, then re-encode ALL
+            the range's terms in one batched pass
+            (``encode_postings_batch``) — per-term Python/Arrow overhead
+            would dominate a merge otherwise."""
+            out_cols = POSTINGS_COLUMNS + (["pay_bytes"] if has_payloads
+                                           else [])
+            pdf = pd.concat(
+                [pd.read_parquet(os.path.join(seg_dirs[s], "postings.parquet"),
+                                 filters=filters) for s in seg_ids],
+                ignore_index=True)
+            if len(pdf) == 0:
+                return pd.DataFrame(columns=out_cols)
+            pdf = pdf.sort_values(["term", "seg_id"], kind="mergesort")
+            new_ids = docmap()
+            if "norms" not in task:
+                task["norms"] = np.frombuffer(
+                    pd.read_parquet(norms_path).iloc[0]["norm_bytes"],
+                    dtype=np.uint8)
+            norms = task["norms"]
+            ids_parts, tf_parts, pos_parts, pay_parts = [], [], [], []
+            row_lens = np.empty(len(pdf), dtype=np.int64)
+            tok_lens = np.empty(len(pdf), dtype=np.int64)
+            term_of_row = pdf["term"].to_numpy()
+            for i, row in enumerate(pdf.itertuples(index=False)):
+                dec = decode_postings(row._asdict(),
+                                      with_positions=store_positions)
+                ids, tfs = dec["doc_ids"], dec["tfs"]
+                pos = dec.get("positions", np.empty(0, np.int64)) \
+                    if store_positions else None
+                pay = np.frombuffer(row.pay_bytes, dtype="<f4") \
+                    if has_payloads else None
+                newids = new_ids(int(row.seg_id), ids)
+                keep = newids >= 0
+                if not keep.all():
+                    tok_keep = np.repeat(keep, tfs)
+                    if store_positions:
+                        pos = pos[tok_keep]
+                    if pay is not None:
+                        pay = pay[tok_keep]
+                    ids, tfs = newids[keep], tfs[keep]
+                else:
+                    ids = newids
+                ids_parts.append(ids)
+                tf_parts.append(tfs)
+                row_lens[i] = len(ids)
+                tok_lens[i] = int(tfs.sum())
                 if store_positions:
-                    pos = pos[tok_keep]
+                    pos_parts.append(pos)
                 if pay is not None:
-                    pay = pay[tok_keep]
-                ids, tfs = newids[keep], tfs[keep]
-            else:
-                ids = newids
-            ids_parts.append(ids)
-            tf_parts.append(tfs)
-            row_lens[i] = len(ids)
-            tok_lens[i] = int(tfs.sum())
-            if store_positions:
-                pos_parts.append(pos)
-            if pay is not None:
-                pay_parts.append(pay)
-        ids = np.concatenate(ids_parts)
-        tfs = np.concatenate(tf_parts)
-        pos = np.concatenate(pos_parts) if store_positions else None
-        pay = np.concatenate(pay_parts) if has_payloads else None
-        # term boundaries in posting space (post-purge lengths; terms whose
-        # every posting was deleted are dropped entirely)
-        new_term = np.empty(len(pdf), dtype=bool)
-        new_term[0] = True
-        new_term[1:] = term_of_row[1:] != term_of_row[:-1]
-        term_ids = np.cumsum(new_term) - 1
-        if field is not None and len(ids):
-            # sorting merge: remapped ids follow the index sort key, so a
-            # term's postings from different segments INTERLEAVE — restore
-            # the strictly-ascending-per-term codec invariant with one
-            # lexsort, gathering the token-level streams (positions,
-            # payloads) along via the repeat-offset trick (the sorting
-            # DocIDMerger's priority-queue role, vectorized)
-            row_ids = np.repeat(np.arange(len(pdf)), row_lens)
-            post_term = term_ids[row_ids]
-            ord_ = np.lexsort((ids, post_term))
-            if store_positions or has_payloads:
-                tok_starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1]
-                new_tok_starts = np.concatenate(
-                    ([0], np.cumsum(tfs[ord_])))[:-1]
-                gather = (np.repeat(tok_starts[ord_] - new_tok_starts,
-                                    tfs[ord_])
-                          + np.arange(int(tfs.sum()), dtype=np.int64))
-                if store_positions:
-                    pos = pos[gather]
-                if pay is not None:
-                    pay = pay[gather]
-            ids, tfs = ids[ord_], tfs[ord_]
-        term_tot = np.bincount(term_ids, weights=row_lens).astype(np.int64)
-        term_row_starts = np.nonzero(new_term)[0]
-        alive = term_tot > 0
-        term_off = np.concatenate(([0], np.cumsum(term_tot[alive])))
-        if len(ids) == 0:
-            return pd.DataFrame(columns=out_cols)
-        enc = encode_postings_batch(ids, tfs, pos, norms, term_off)
-        if has_payloads:
-            tok_tot = np.bincount(term_ids,
-                                  weights=tok_lens).astype(np.int64)
-            tok_off = np.concatenate(([0], np.cumsum(tok_tot[alive])))
-            pay_bytes = [pay[tok_off[i]:tok_off[i + 1]]
-                         .astype("<f4").tobytes()
-                         for i in range(len(tok_off) - 1)]
-        return pd.DataFrame({
-            "term": term_of_row[term_row_starts][alive],
-            "seg_id": np.int32(new_seg_id),
-            "df": enc["df"].astype(np.int64),
-            "ttf": enc["ttf"].astype(np.int64),
-            "doc_bytes": enc["doc_bytes"],
-            "tf_bytes": enc["tf_bytes"],
-            "pos_bytes": enc["pos_bytes"],
-            "block_last": enc["block_last"],
-            "impact_bytes": enc["impact_bytes"],
-            **({"pay_bytes": pay_bytes} if has_payloads else {}),
-        }, columns=out_cols)
+                    pay_parts.append(pay)
+            ids = np.concatenate(ids_parts)
+            tfs = np.concatenate(tf_parts)
+            pos = np.concatenate(pos_parts) if store_positions else None
+            pay = np.concatenate(pay_parts) if has_payloads else None
+            # term boundaries in posting space (post-purge lengths; terms whose
+            # every posting was deleted are dropped entirely)
+            new_term = np.empty(len(pdf), dtype=bool)
+            new_term[0] = True
+            new_term[1:] = term_of_row[1:] != term_of_row[:-1]
+            term_ids = np.cumsum(new_term) - 1
+            if field is not None and len(ids):
+                # sorting merge: remapped ids follow the index sort key, so a
+                # term's postings from different segments INTERLEAVE — restore
+                # the strictly-ascending-per-term codec invariant with one
+                # lexsort, gathering the token-level streams (positions,
+                # payloads) along via the repeat-offset trick (the sorting
+                # DocIDMerger's priority-queue role, vectorized)
+                row_ids = np.repeat(np.arange(len(pdf)), row_lens)
+                post_term = term_ids[row_ids]
+                ord_ = np.lexsort((ids, post_term))
+                if store_positions or has_payloads:
+                    tok_starts = np.concatenate(
+                        ([0], np.cumsum(tfs)))[:-1]
+                    new_tok_starts = np.concatenate(
+                        ([0], np.cumsum(tfs[ord_])))[:-1]
+                    gather = (np.repeat(tok_starts[ord_] - new_tok_starts,
+                                        tfs[ord_])
+                              + np.arange(int(tfs.sum()), dtype=np.int64))
+                    if store_positions:
+                        pos = pos[gather]
+                    if pay is not None:
+                        pay = pay[gather]
+                ids, tfs = ids[ord_], tfs[ord_]
+            term_tot = np.bincount(term_ids, weights=row_lens).astype(np.int64)
+            term_row_starts = np.nonzero(new_term)[0]
+            alive = term_tot > 0
+            term_off = np.concatenate(([0], np.cumsum(term_tot[alive])))
+            if len(ids) == 0:
+                return pd.DataFrame(columns=out_cols)
+            enc = encode_postings_batch(ids, tfs, pos, norms, term_off)
+            if has_payloads:
+                tok_tot = np.bincount(term_ids,
+                                      weights=tok_lens).astype(np.int64)
+                tok_off = np.concatenate(([0], np.cumsum(tok_tot[alive])))
+                pay_bytes = [pay[tok_off[i]:tok_off[i + 1]]
+                             .astype("<f4").tobytes()
+                             for i in range(len(tok_off) - 1)]
+            return pd.DataFrame({
+                "term": term_of_row[term_row_starts][alive],
+                "seg_id": np.int32(new_seg_id),
+                "df": enc["df"].astype(np.int64),
+                "ttf": enc["ttf"].astype(np.int64),
+                "doc_bytes": enc["doc_bytes"],
+                "tf_bytes": enc["tf_bytes"],
+                "pos_bytes": enc["pos_bytes"],
+                "block_last": enc["block_last"],
+                "impact_bytes": enc["impact_bytes"],
+                **({"pay_bytes": pay_bytes} if has_payloads else {}),
+            }, columns=out_cols)
 
-    parts = fan_out(spark, items, rewrite, _PART_STATS).toPandas().sum()
-    if field is not None:
-        os.unlink(remap_path)   # phase-internal; not part of the segment
-    if int(parts["num_docs"]) != n_docs:
-        raise RuntimeError(f"doc_meta rewrite wrote {parts['num_docs']} "
-                           f"docs, stats+tombstones imply {n_docs}")
-    stats = {
-        "seg_id": int(new_seg_id),
-        "num_docs": int(n_docs),
-        "num_terms": int(parts["num_terms"]),
-        "num_postings": int(parts["num_postings"]),
-        "sum_doc_len": int(parts["sum_doc_len"]),
-        # exact token count of the merged postings (Σ ttf) — the
-        # sumTotalTermFreq basis; equals sum_doc_len unless index-time
-        # synonym overlaps were discounted from norms
-        "sum_token_len": int(parts["sum_ttf"]),
-        "bytes_compressed": int(parts["bytes"]),
-        "build_partition": -1,
-        "origin": "merge",
-        "merged_from": seg_ids,
-        "status": "built",
-    }
-    with open(os.path.join(tmp, "stats.json"), "w") as f:
-        json.dump(stats, f)
-    seg_dir = catalog.segment_dir(new_seg_id)
-    try:
-        os.rename(tmp, seg_dir)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        parts = fan_out(spark, items, rewrite, _PART_STATS).toPandas().sum()
+        if field is not None:
+            os.unlink(remap_path)   # phase-internal; not part of the segment
+        if int(parts["num_docs"]) != n_docs:
+            raise RuntimeError(f"doc_meta rewrite wrote {parts['num_docs']} "
+                               f"docs, stats+tombstones imply {n_docs}")
+        stats = {
+            "seg_id": int(new_seg_id),
+            "num_docs": int(n_docs),
+            "num_terms": int(parts["num_terms"]),
+            "num_postings": int(parts["num_postings"]),
+            "sum_doc_len": int(parts["sum_doc_len"]),
+            # exact token count of the merged postings (Σ ttf) — the
+            # sumTotalTermFreq basis; equals sum_doc_len unless index-time
+            # synonym overlaps were discounted from norms
+            "sum_token_len": int(parts["sum_ttf"]),
+            "bytes_compressed": int(parts["bytes"]),
+            "build_partition": -1,
+            "origin": "merge",
+            "merged_from": seg_ids,
+            "status": "built",
+        }
+        with open(os.path.join(tmp, "stats.json"), "w") as f:
+            json.dump(stats, f)
 
     return _commit_merge(spark, catalog, seg_ids, stats,
                          lock=_commit_lock, new_soft=new_soft)
@@ -648,6 +642,7 @@ def add_indexes(spark, dest_dir: str, src_dir: str):
     Driver-side copy + seg_id column rewrite per segment: the reference's
     addIndexes is likewise a file-level copy, not a merge.
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     dest = SnapshotCatalog(dest_dir)
@@ -667,27 +662,24 @@ def add_indexes(spark, dest_dir: str, src_dir: str):
         id_map[old_id] = new_id
         next_id += 1
         sdir = src.segment_dir(old_id)
-        tmp = os.path.join(dest_dir, "segments",
-                           f"_tmp-{new_id}-{uuid.uuid4().hex}")
-        os.makedirs(tmp, exist_ok=True)
-        for fname in ("postings.parquet", "doc_meta.parquet",
-                      "norms.parquet"):
-            import pyarrow as pa
-            tbl = pq.read_table(os.path.join(sdir, fname))
-            if "seg_id" in tbl.column_names:
-                i = tbl.column_names.index("seg_id")
-                tbl = tbl.set_column(
-                    i, tbl.field(i),
-                    pa.array(np.full(len(tbl), new_id, dtype=np.int32),
-                             type=tbl.field(i).type))
-            pq.write_table(tbl, os.path.join(tmp, fname))
         stats = dict(src_lineage[old_id])
         stats["seg_id"] = int(new_id)
         stats["origin"] = "addIndexes"
         stats["imported_from"] = os.path.abspath(src_dir)
-        with open(os.path.join(tmp, "stats.json"), "w") as f:
-            json.dump(stats, f)
-        os.rename(tmp, dest.segment_dir(new_id))
+        with publish(dest.segment_dir(new_id)) as tmp:
+            os.makedirs(tmp)
+            for fname in ("postings.parquet", "doc_meta.parquet",
+                          "norms.parquet"):
+                tbl = pq.read_table(os.path.join(sdir, fname))
+                if "seg_id" in tbl.column_names:
+                    i = tbl.column_names.index("seg_id")
+                    tbl = tbl.set_column(
+                        i, tbl.field(i),
+                        pa.array(np.full(len(tbl), new_id, dtype=np.int32),
+                                 type=tbl.field(i).type))
+                write_segment_file(tbl, os.path.join(tmp, fname))
+            with open(os.path.join(tmp, "stats.json"), "w") as f:
+                json.dump(stats, f)
         new_segments.append(stats)
     # the imported segments keep their per-doc state: the reference's
     # addIndexes(Directory) copies segments as-is INCLUDING their .liv and
@@ -733,11 +725,8 @@ def split_index(spark, src_dir: str, dest_dir: str,
     lineage = {s["seg_id"]: s for s in snap.segments}
     kept = []
     for sid in want:
-        sdir = src.segment_dir(sid)
-        tmp = os.path.join(dest_dir, "segments",
-                           f"_tmp-{sid}-{uuid.uuid4().hex}")
-        shutil.copytree(sdir, tmp)
-        os.rename(tmp, dest.segment_dir(sid))
+        with publish(dest.segment_dir(sid)) as tmp:
+            shutil.copytree(src.segment_dir(sid), tmp)
         stats = dict(lineage[sid])
         stats["origin"] = "split"
         stats["split_from"] = os.path.abspath(src_dir)

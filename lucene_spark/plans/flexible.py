@@ -56,7 +56,8 @@ import re
 
 from ..functions.analysis import analyze_text
 from . import query as Q
-from .parser import PHRASE_SUFFIX_RE, QueryParseError, phrase_suffix
+from .parser import (PHRASE_SUFFIX_RE, QueryParseError, phrase_suffix,
+                     term_or_phrase)
 
 _TOKEN_RE = re.compile(
     r'"[^"]*"'            # quoted phrase
@@ -275,8 +276,7 @@ def parse_standard(text: str, default_operator: str = "OR",
             terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
             if not terms:
                 raise QueryParseError(f"empty phrase: {t}")
-            q = (Q.Term(terms[0], boost) if len(terms) == 1
-                 else Q.Phrase(tuple(terms)))
+            q = term_or_phrase(terms, boost)
             nxt = peek()
             suffix = PHRASE_SUFFIX_RE.fullmatch(nxt) if nxt else None
             if suffix:
@@ -296,8 +296,7 @@ def parse_standard(text: str, default_operator: str = "OR",
         terms, _, _ = analyze_text(t, stopwords=stopwords)
         if not terms:
             raise QueryParseError(f"term analyzed to nothing: {t!r}")
-        return Q.Term(terms[0], boost) if len(terms) == 1 \
-            else Q.Phrase(tuple(terms))
+        return term_or_phrase(terms, boost)
 
     # ---- interval functions -----------------------------------------------
     def parse_fn(name: str) -> tuple:

@@ -27,6 +27,14 @@ class QueryParseError(ValueError):
     pass
 
 
+def term_or_phrase(terms: list[str], boost: float = 1.0) -> Query:
+    """A :class:`Term` with ``boost``, or a :class:`Phrase` of several
+    ``terms``, which has no boost: one other than 1 is refused."""
+    if len(terms) > 1 and boost != 1:
+        raise QueryParseError(f"a phrase takes no boost: ^{boost:g}")
+    return Term(terms[0], boost) if len(terms) == 1 else Phrase(tuple(terms))
+
+
 def phrase_suffix(q: Query, suffix: re.Match) -> Query:
     """``q``, a quoted phrase's query, with the slop and boost of
     ``suffix``, a :data:`PHRASE_SUFFIX_RE` match. A one-word phrase is a
@@ -187,7 +195,7 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
             terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
             if not terms:
                 return _DROPPED  # fully-stopped phrase: clause dropped
-            return Term(terms[0], boost) if len(terms) == 1 else Phrase(tuple(terms))
+            return term_or_phrase(terms, boost)
         m = re.match(r"^(.+?)~(\d*)$", t)
         if m and "*" not in t and "?" not in t:  # fuzzy: word~ / word~1
             edits = int(m.group(2)) if m.group(2) else 2
@@ -202,7 +210,7 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
         if not terms:
             return _DROPPED  # stopword-only term: clause dropped
         # multi-token atom → phrase (QueryParserBase re-analysis behavior)
-        return Term(terms[0], boost) if len(terms) == 1 else Phrase(tuple(terms))
+        return term_or_phrase(terms, boost)
 
     if not toks:
         raise QueryParseError("empty query")

@@ -6,9 +6,10 @@ pointer flip (reference ``index/SegmentInfos.java:54-63,131-132``,
 ``index/IndexWriter.java:172-180,3849``). On a real deployment this layer
 is an Iceberg table commit (snapshot-id pinned reads = ``VERSION AS OF``);
 the sandbox has no Iceberg runtime on the classpath, so we implement the
-same contract with manifest JSON files: write-temp + atomic link, highest
-generation wins, every snapshot lists its segments with build metrics
-(docs/terms/postings counts, bytes compressed) and its parent.
+same contract with manifest JSON files: highest generation wins, every
+snapshot lists its segments with build metrics (docs/terms/postings
+counts, bytes compressed) and its parent. Every index file or directory,
+manifests included, is written through one :func:`publish`.
 
 Readers pin a snapshot id and only ever read the segment directories that
 snapshot lists — a point-in-time view identical in spirit to Lucene's
@@ -17,14 +18,45 @@ snapshot lists — a point-in-time view identical in spirit to Lucene's
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import re
+import shutil
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 
 _SNAPSHOT_RE = re.compile(r"^snapshot-(\d+)\.json$")
+
+
+@contextmanager
+def publish(final: str):
+    """Write ``final`` atomically: the body writes a file or a directory at
+    the yielded fresh ``_tmp-<uuid>`` path beside it; a normal exit moves
+    that to ``final`` by ``os.link`` + ``unlink`` or ``os.rename``, and
+    raises ``FileExistsError`` rather than overwrite a file or a non-empty
+    directory. Any exception removes the tmp path and propagates."""
+    tmp = os.path.join(os.path.dirname(final), f"_tmp-{uuid.uuid4().hex}")
+    try:
+        yield tmp
+        if not os.path.isdir(tmp):
+            os.link(tmp, final)   # EEXIST atomically, unlike exists()
+            os.unlink(tmp)
+        else:
+            try:
+                os.rename(tmp, final)
+            except OSError as e:
+                if e.errno != errno.ENOTEMPTY:
+                    raise
+                raise FileExistsError(f"{final} exists") from None
+    except BaseException:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        elif os.path.lexists(tmp):
+            os.unlink(tmp)
+        raise
 
 
 @dataclass
@@ -84,7 +116,7 @@ class SnapshotCatalog:
 
     def commit(self, segments: list[dict], field_stats: dict,
                term_stats_path: str | None = None, extra: dict | None = None) -> Snapshot:
-        """Atomic commit: temp write + link; generation = parent + 1.
+        """Atomic commit: one :func:`publish`; generation = parent + 1.
         Paths under the index root are stored relative so the whole index
         directory can be renamed/copied (segment dirs already are)."""
         parent = self.load()
@@ -97,26 +129,20 @@ class SnapshotCatalog:
                 stored_ts = os.path.relpath(tsp, root)
         snap = Snapshot(sid, parent.snapshot_id if parent else None,
                         segments, field_stats, stored_ts, extra or {})
-        tmp = os.path.join(self.manifest_dir, f"_tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(snap.to_json(), f, indent=1, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
         final = os.path.join(self.manifest_dir, f"snapshot-{sid}.json")
         # single-writer invariant (the reference's IndexWriter holds a
         # write.lock): a lost generation race would silently drop a
-        # commit, so detect it rather than overwrite. link() fails with
-        # EEXIST atomically, where an exists() check before rename() lets
-        # two writers both pass
+        # commit, so detect it rather than overwrite
         try:
-            os.link(tmp, final)
+            with publish(final) as tmp, open(tmp, "w") as f:
+                json.dump(snap.to_json(), f, indent=1, sort_keys=True)
+                f.flush()
+                os.fsync(f.fileno())
         except FileExistsError:
             raise RuntimeError(
                 f"concurrent commit detected: generation {sid} already "
                 f"exists in {self.manifest_dir} (one writer per index)"
             ) from None
-        finally:
-            os.unlink(tmp)
         snap.term_stats_path = term_stats_path
         return snap
 

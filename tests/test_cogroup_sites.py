@@ -19,7 +19,8 @@ one fan-out over term ranges and no Spark writer.
 
 Multi-term queries expand on the driver, and search, percolation and
 MemoryIndex share one query compile and one matcher. Every phrase and span
-kernel is reached from the engine or the oracle.
+kernel is reached from the engine or the oracle. Every index write is
+published through the one primitive, ``sources.catalog.publish``.
 """
 
 from __future__ import annotations
@@ -233,3 +234,26 @@ def test_phrase_and_span_kernels_are_reachable():
             seen.add(key)
             todo.extend(edges[key])
     assert sorted(set(defs) - seen) == []
+
+
+def test_one_publish_primitive():
+    """No package module but ``sources/catalog.py`` moves or links a path
+    with ``os`` (``rename``, ``renames``, ``replace``, ``link``) or names a
+    ``_tmp-`` entry: every index write goes through ``publish``."""
+    moves = {"rename", "renames", "replace", "link"}
+    sites = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel == "sources/catalog.py":
+            continue
+        text = path.read_text(encoding="utf-8")
+        if "_tmp-" in text:
+            sites.append((rel, "_tmp-"))
+        for node in ast.walk(ast.parse(text)):
+            if (isinstance(node, ast.Attribute) and node.attr in moves
+                    and getattr(node.value, "id", None) == "os"):
+                sites.append((rel, f"os.{node.attr}"))
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                sites += [(rel, f"os.{a.name}") for a in node.names
+                          if a.name in moves]
+    assert sites == []

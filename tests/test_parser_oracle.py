@@ -44,7 +44,8 @@ def test_one_word_phrase_slop_is_dropped():
 def test_phrase_slop_comes_before_boost():
     """``"a b"~N^B`` is one phrase with slop N, never a phrase and a term
     ``N``; a phrase has no boost, so one other than 1 is refused rather
-    than dropped, and a one-word phrase takes it as a term boost."""
+    than dropped, and a one-word phrase takes it as a term boost. An
+    unquoted atom that analyzes to several words is a phrase too."""
     from lucene_spark.plans.flexible import parse_standard
     for p in (parse, parse_standard):
         assert p('"alpha beta"~1^1') == Phrase(("alpha", "beta"), 1)
@@ -52,8 +53,12 @@ def test_phrase_slop_comes_before_boost():
                                                  Term("gamma")))
         assert p('"alpha"~3^2') == Term("alpha", 2.0)
         assert p('"alpha"^2 beta') == Or((Term("alpha", 2.0), Term("beta")))
+        assert p("alpha-beta^1") == Phrase(("alpha", "beta"))
+        assert p("alpha-beta^1.0 gamma") == Or((Phrase(("alpha", "beta")),
+                                               Term("gamma")))
         for text in ('"alpha beta"~1^2', '"alpha beta"^2',
-                     'gamma "alpha beta"^0.5'):
+                     'gamma "alpha beta"^0.5', "alpha-beta^2",
+                     "gamma alpha-beta^0.5"):
             with pytest.raises(QueryParseError, match="no boost"):
                 p(text)
 

@@ -80,6 +80,47 @@ def test_add_indexes_carries_both_overlays(spark, tmp_path):
     assert totals["num_dv_updates"] == len(updated_src) + len(updated_dst)
 
 
+def _chunk_layout(path: str) -> list[tuple]:
+    """``(column, encodings, statistics set, min/max set)`` of every column
+    chunk of the parquet file ``path``."""
+    md = pq.ParquetFile(path).metadata
+    out = []
+    for r in range(md.num_row_groups):
+        for c in range(md.num_columns):
+            col = md.row_group(r).column(c)
+            out.append((col.path_in_schema, col.encodings, col.is_stats_set,
+                        col.is_stats_set and col.statistics.has_min_max))
+    return out
+
+
+def test_add_indexes_writes_segment_files_like_the_build(spark, tmp_path):
+    """An imported segment's files follow the one segment-file policy
+    (``build.write_segment_file``): every column chunk has the encodings
+    and the statistics of the same file in the source segment."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    build_index(spark, _frame(spark, generate_corpus(200, seed=31), 1000),
+                src, num_segments=2)
+    build_index(spark, _frame(spark, generate_corpus(60, seed=5)), dst,
+                num_segments=1)
+    snap = add_indexes(spark, dst, src)
+    imported = [s["seg_id"] for s in snap.segments
+                if s.get("origin") == "addIndexes"]
+    assert imported == [1, 2]
+    layouts = set()
+    for old, new in zip((0, 1), imported):
+        for name in ("postings.parquet", "doc_meta.parquet",
+                     "norms.parquet"):
+            want = _chunk_layout(os.path.join(
+                SnapshotCatalog(src).segment_dir(old), name))
+            assert _chunk_layout(os.path.join(
+                SnapshotCatalog(dst).segment_dir(new), name)) == want, name
+            layouts.update((enc, stats) for _, enc, stats, _ in want)
+    # the policy is not pyarrow's default: some chunks carry neither a
+    # dictionary page nor statistics
+    assert any("RLE_DICTIONARY" not in enc for enc, _ in layouts)
+    assert any(not stats for _, stats in layouts)
+
+
 def test_update_after_import_wins_over_the_carried_overlay(spark, tmp_path):
     """The source's overlay rows keep the ``gen`` of the source's
     generations, which may exceed the destination's: an update after the
