@@ -35,7 +35,7 @@ from lucene_spark.operators.stats import term_stats_from_tokens
 from lucene_spark.pipeline import dedup, multimodal, simsearch, textstats
 from lucene_spark.plans import query as Q
 
-_INDEX_VERSION = "v6"   # bump on codec/format changes to drop cached builds
+_INDEX_VERSION = "v7"   # bump on codec/format changes to drop cached builds
 _SEGMENTS = 8
 _BUILT: dict[str, str] = {}
 
@@ -59,7 +59,7 @@ def _searcher(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True)
         _BUILT[key] = idx
@@ -77,7 +77,7 @@ def _searcher_syn(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     synonyms={T_THIRD: (T_COMMON,)})
@@ -101,7 +101,7 @@ def _searcher_shingle(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     shingles=(2, 2))
@@ -118,7 +118,7 @@ def _searcher_cgrams(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     common_grams=frozenset({"the"}))
@@ -152,7 +152,7 @@ def _searcher_stem_de(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     stemmer="german_light")
@@ -192,7 +192,7 @@ def _searcher_kr_de(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     stemmer="german_light", keyword_repeat=True)
@@ -239,7 +239,7 @@ def _searcher_pattern_tok(spark: SparkSession, sf_dir: str) -> Searcher:
             "doc_id",
             F.regexp_replace(F.col("text"), r"(^| )(d)", "$1q9$2")
             .alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer=("pattern", "[a-z]+", 0))
@@ -279,7 +279,7 @@ def _searcher_pattern_replace(spark: SparkSession, sf_dir: str) -> Searcher:
             "doc_id",
             F.regexp_replace(F.col("text"), r"(^| )(t[a-z]*)", "$1$29")
             .alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     pattern_replace=(r"\d+$", "", True))
@@ -312,7 +312,7 @@ def _searcher_compound(spark: SparkSession, sf_dir: str) -> Searcher:
             F.when(F.col("doc_id") % 7 == 0,
                    F.concat(F.lit("scanindextable "), F.col("text")))
             .otherwise(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     dictionary_compound=_COMPOUND_WORDS)
@@ -362,7 +362,7 @@ def _searcher_html_strip(spark: SparkSession, sf_dir: str) -> Searcher:
                      F.lit('</div><script type="text/javascript">'
                            'zqscript();</script><!-- zqcomment -->'
                            ' zq&#120;yz <i>zqtail</i>')).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     char_filters=(("html_strip",),
@@ -402,7 +402,7 @@ def _searcher_reversed(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     reverse_tokens=True)
@@ -444,7 +444,7 @@ def _searcher_delimited_tf(spark: SparkSession, sf_dir: str) -> Searcher:
             F.concat(F.col("text"),
                      F.when(F.col("doc_id") % 5 == 0, F.lit(" zqtf|7"))
                      .otherwise(F.lit(" zqtf|2"))).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=False,
                     tokenizer="whitespace", term_freq_delimiter="|")
@@ -482,7 +482,7 @@ def _searcher_marker(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     stemmer="german_light",
@@ -524,7 +524,7 @@ def _searcher_scandinavian(spark: SparkSession, sf_dir: str) -> Searcher:
             "doc_id",
             F.concat(F.col("text"),
                      F.lit(" blåbärsyltetöj")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     token_filters=(("scandinavian_fold",),))
@@ -550,7 +550,7 @@ def _searcher_hyphenated(spark: SparkSession, sf_dir: str) -> Searcher:
         docs = _docs(spark, sf_dir).select(
             "doc_id",
             F.concat(F.col("text"), F.lit(" zqhy-\nphen")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer="whitespace",
@@ -576,7 +576,7 @@ def _searcher_phonetic(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     phonetic=("soundex", True))
@@ -712,7 +712,7 @@ def _searcher_phon_filter(spark: SparkSession, sf_dir: str, tag: str,
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{h}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _phon_names_content().alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     phonetic=phonetic)
@@ -850,7 +850,7 @@ def _searcher_hunspell(spark: SparkSession, sf_dir: str) -> Searcher:
         docs = _docs(spark, sf_dir).select(
             "doc_id", content.alias("content"))
         aff, dic = _hunspell_paths()
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     hunspell=(aff, dic))
@@ -915,7 +915,7 @@ def _searcher_stempel(spark: SparkSession, sf_dir: str) -> Searcher:
             F.element_at(arr, (F.col("doc_id") % 7 + 1).cast("int")))
         docs = _docs(spark, sf_dir).select(
             "doc_id", content.alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     stemmer="stempel_polish")
@@ -974,7 +974,7 @@ def _searcher_icu(spark: SparkSession, sf_dir: str) -> Searcher:
             F.element_at(arr, (F.col("doc_id") % 7 + 1).cast("int")))
         docs = _docs(spark, sf_dir).select(
             "doc_id", content.alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     icu_folding=True)
@@ -1050,7 +1050,7 @@ def _searcher_smartcn(spark: SparkSession, sf_dir: str) -> Searcher:
             F.element_at(arr, (F.col("doc_id") % 7 + 1).cast("int")))
         docs = _docs(spark, sf_dir).select(
             "doc_id", content.alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     tokenizer="smartcn", stemmer="porter",
                     stopwords=smartcn_stop_set(), store_positions=True)
@@ -1134,7 +1134,7 @@ def _searcher_icu_tok(spark: SparkSession, sf_dir: str) -> Searcher:
             F.element_at(arr, (F.col("doc_id") % 7 + 1).cast("int")))
         docs = _docs(spark, sf_dir).select(
             "doc_id", content.alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=h,
                     content_col="content", doc_id_col="doc_id",
                     tokenizer="icu", stopwords=frozenset(),
                     store_positions=True)
@@ -1190,7 +1190,7 @@ def _q_protected_truncate_stats(spark: SparkSession,
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     token_filters=(("protected", ("customer",),
@@ -1220,7 +1220,7 @@ def _searcher_urlemail(spark: SparkSession, sf_dir: str) -> Searcher:
                      F.lit(" see HTTP://zq.Example.COM/p?q="),
                      (F.col("doc_id") % 3).cast("string"),
                      F.lit(" mail Bob@zqMail.org")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer="url_email")
@@ -1260,7 +1260,7 @@ def _q_url_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.lit(" see HTTP://zq.Example.COM/p?q="),
                      (F.col("doc_id") % 3).cast("string"),
                      F.lit(" mail Bob@zqMail.org")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer=("url_email", "URL"))
@@ -1331,7 +1331,7 @@ def _searcher_capture(spark: SparkSession, sf_dir: str) -> Searcher:
             F.when(F.col("doc_id") % 7 == 0,
                    F.concat(F.lit("getDataValue "), F.col("text")))
             .otherwise(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer="whitespace",
@@ -1381,7 +1381,7 @@ def _searcher_elision_fr(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _elide_content(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     elision=FRENCH_ARTICLES)
@@ -1437,7 +1437,7 @@ def _searcher_cjk(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _cjk_content(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     cjk_bigrams=ALL_CJK)
@@ -1496,7 +1496,7 @@ def _searcher_wdgf(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _wdgf_content(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     tokenizer="whitespace",
@@ -1553,7 +1553,7 @@ def _searcher_greek(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _greek_content(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=GREEK_STOP_WORDS, store_positions=True,
                     stemmer="greek")
@@ -1612,7 +1612,7 @@ def _searcher_snowball_ru(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _snowball_ru_content(F.col("text")).alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     stemmer="snowball_russian")
@@ -1659,7 +1659,7 @@ def _searcher_ngram(spark: SparkSession, sf_dir: str,
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     ngrams=rng, ngram_edge=edge)
@@ -1701,7 +1701,7 @@ def _searcher_path(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", _path_expr().alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=False,
                     tokenizer="path")
@@ -1751,7 +1751,8 @@ def _searchers_combined(spark: SparkSession, sf_dir: str):
             build_index(spark, docs.select("doc_id",
                                            content.alias("content")),
                         os.path.join(base, name), num_segments=_SEGMENTS,
-                        content_col="content", doc_id_col="doc_id")
+                        content_col="content", doc_id_col="doc_id",
+                        build_id=tag)
         _BUILT[key] = base
     base = _BUILT[key]
     return (Searcher(spark, os.path.join(base, "title")),
@@ -1780,7 +1781,7 @@ def _searcher_sorted(spark: SparkSession, sf_dir: str) -> Searcher:
         idx = os.path.join(tempfile.gettempdir(), f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"), "n_chars")
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     sort_field="n_chars", sort_ascending=False)
@@ -2008,7 +2009,7 @@ def _searcher_payload(spark: SparkSession, sf_dir: str) -> Searcher:
             F.expr("array_join(transform(split(text, ' '), (x, i) -> "
                    "concat(x, '|', cast((doc_id + i) % 7 * 0.5 as string))"
                    "), ' ')").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     payload_delimiter="|", tokenizer="whitespace")
@@ -2046,7 +2047,7 @@ def _searcher_dv(spark: SparkSession, sf_dir: str) -> Searcher:
         shutil.rmtree(tmp, ignore_errors=True)
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"), "n_chars", "lang")
-        build_index(spark, docs, tmp, num_segments=_SEGMENTS,
+        build_index(spark, docs, tmp, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True)
         update_numeric_docvalue(spark, tmp, T_RARE, "n_chars", 5000)
@@ -2109,7 +2110,7 @@ def _searcher_feat(spark: SparkSession, sf_dir: str) -> Searcher:
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"),
             _enc(F.col("n_chars")).alias("feat_pr"))
-        build_index(spark, docs, tmp, num_segments=_SEGMENTS,
+        build_index(spark, docs, tmp, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True)
         os.rename(tmp, idx)
@@ -4781,10 +4782,11 @@ def _incremental_searcher(spark: SparkSession, sf_dir: str) -> Searcher:
                                        F.col("text").alias("content"))
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
     build_index(spark, docs.where(F.col("doc_id") <= mid), idx,
-                num_segments=4, content_col="content", doc_id_col="doc_id")
+                num_segments=4, content_col="content", doc_id_col="doc_id",
+                build_id=f"{tag}-lo")
     build_index(spark, docs.where(F.col("doc_id") > mid), idx,
                 num_segments=4, content_col="content", doc_id_col="doc_id",
-                seg_id_offset=4)
+                build_id=f"{tag}-hi")
     return Searcher(spark, idx)
 
 
@@ -6035,7 +6037,7 @@ def _q_highlight_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
                            f"lucene_spark_idx_{tag}")
         docs = _docs(spark, sf_dir).select(
             "doc_id", F.col("text").alias("content"))
-        build_index(spark, docs, idx, num_segments=_SEGMENTS,
+        build_index(spark, docs, idx, num_segments=_SEGMENTS, build_id=tag,
                     content_col="content", doc_id_col="doc_id",
                     stopwords=frozenset(), store_positions=True,
                     store_term_vectors=True)

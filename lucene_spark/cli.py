@@ -9,7 +9,8 @@ Deployment mode required by the north star::
 
 Subcommands:
   build   read a parquet/Iceberg-style table (repo, path, commit, lang,
-          content [, doc_id]) and build/resume the index
+          content [, doc_id]) and append it to the index, or resume the
+          build named by --build-id
   search  run a classic-syntax query against a committed snapshot
   merge   run tiered merge maintenance to the target tier
   stats   recompute global term stats via the salted token-level job
@@ -60,7 +61,7 @@ def cmd_build(args) -> int:
         kw = {"stopwords": ENGLISH_STOP_WORDS, "stemmer": "porter"}
     snap = build_index(spark, df, args.index, num_segments=args.segments,
                        content_col=args.content_col,
-                       resume=not args.no_resume, **kw)
+                       build_id=args.build_id, **kw)
     print(f"committed snapshot {snap.snapshot_id}: "
           f"{snap.field_stats['doc_count']} docs, "
           f"{len(snap.seg_ids)} segments")
@@ -209,7 +210,7 @@ def main(argv=None) -> int:
     b.add_argument("--index", required=True)
     b.add_argument("--segments", type=int, default=128)
     b.add_argument("--content-col", default="content")
-    b.add_argument("--no-resume", action="store_true")
+    b.add_argument("--build-id", help="resume key of this build")
     b.add_argument("--english", action="store_true",
                    help="EnglishAnalyzer chain: stop + possessive + Porter")
     b.set_defaults(fn=cmd_build)

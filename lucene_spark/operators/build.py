@@ -1,9 +1,10 @@
 """Distributed segment build: the index write path.
 
 Spark shape (SURVEY.md §3.1): one shuffle places every document straight
-into its segment's partition — partition ``i`` is segment
-``seg_id_offset + i``, the reference's DWPT model, where each task owns a
-private segment and takes no locks (``index/DocumentsWriter.java:60-66``).
+into its segment's partition — partition ``i`` is the build's ``i``-th
+segment id, named by :meth:`SnapshotCatalog.allocate`; the reference's
+DWPT model, where each task owns a private segment and takes no locks
+(``index/DocumentsWriter.java:60-66``).
 A vectorized ``mapInPandas`` kernel per partition then hashes each doc's
 content and performs the whole tokenize → invert → delta/FOR/VByte-encode
 chain (``index/IndexingChain.java:577-1309`` + ``codecs/lucene90/
@@ -25,9 +26,10 @@ Scale design notes (100 TB / 1000 executors):
     stage before the shuffle does no per-doc work of its own.
   * segment count is a knob: size segments so one fits executor memory
     (reference slices ~250k docs: ``search/IndexSearcher.java:95-97``).
-  * resume: segment directories are durable units with atomic renames; a
-    re-run filters away already-built segments BEFORE the shuffle, so
-    resuming a 95%-complete build shuffles only the missing 5%.
+  * resume is keyed: a build that names a ``build_id`` resumes onto the
+    segment ids its first call claimed, and filters away its already-built
+    segments BEFORE the shuffle, so resuming a 95%-complete build shuffles
+    only the missing 5%. A build without a key appends fresh segments.
 """
 
 from __future__ import annotations
@@ -54,6 +56,7 @@ STATS_SCHEMA = ("seg_id int, num_docs long, num_terms long, num_postings long, "
                 "sum_doc_len long, sum_token_len long, "
                 "bytes_compressed long, build_partition int, "
                 "status string")
+STATS_COLUMNS = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
 
 #: arrow schema of a segment's ``postings.parquet``, written by build and
 #: merge alike; an index with payloads appends ``pay_bytes``
@@ -518,7 +521,9 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
                    doc_meta: pd.DataFrame, norms_payload: dict,
                    build_partition: int, origin: str = "build",
                    sum_token_len: int | None = None) -> dict:
-    """Publish one immutable segment dir, or reuse the one already there."""
+    """Publish one immutable segment dir. A retried Spark task that lost
+    the publish to an earlier attempt of itself reuses the winner's
+    ``stats.json``, with status ``reused``."""
     import pyarrow.compute as pc
 
     seg_dir = os.path.join(catalog_root, "segments", f"seg={seg_id}")
@@ -571,8 +576,9 @@ def _write_term_vectors(catalog_root: str, seg_id: int, pdf: pd.DataFrame,
     """Per-doc analyzed (terms, starts, ends) offset sidecar, one parquet
     file per build segment under <index>/term_vectors/, keyed by GLOBAL
     doc_id (seg_id kept so readers can latest-win across updateDocument
-    generations). Executor-written through :func:`publish`; a file already
-    there stands, and segment status 'built' gates the write on resume."""
+    generations). Executor-written through :func:`publish` before the
+    segment's own publish, so a published segment always has its vectors;
+    a file already there (a retried task's) stands."""
     import pyarrow.parquet as pq
 
     from ..functions.analysis import analyze_text_offsets
@@ -634,21 +640,13 @@ def _make_builder(catalog_root: str, content_col: str, doc_id_col: str,
             pdf, seg_id, content_col, doc_id_col, spec.stopwords,
             store_positions, sort_field=sort_field,
             sort_ascending=sort_ascending, **spec.options())
+        if store_term_vectors:
+            _write_term_vectors(catalog_root, seg_id, pdf, content_col,
+                                doc_id_col, spec.stopwords)
         stats = _write_segment(catalog_root, seg_id, postings, doc_meta,
                                norms_payload, part,
                                sum_token_len=sum_token_len)
-        if store_term_vectors and stats["status"] == "built":
-            _write_term_vectors(catalog_root, seg_id, pdf, content_col,
-                                doc_id_col, spec.stopwords)
-        yield pd.DataFrame([{
-            "seg_id": stats["seg_id"], "num_docs": stats["num_docs"],
-            "num_terms": stats["num_terms"], "num_postings": stats["num_postings"],
-            "sum_doc_len": stats["sum_doc_len"],
-            "sum_token_len": stats.get("sum_token_len",
-                                       stats["sum_doc_len"]),
-            "bytes_compressed": stats["bytes_compressed"],
-            "build_partition": stats["build_partition"], "status": stats["status"],
-        }])
+        yield pd.DataFrame([stats])[STATS_COLUMNS]
     return build_one_segment
 
 
@@ -776,8 +774,7 @@ def build_index(spark, df, index_dir: str, *,
                 doc_id_col: str = "doc_id",
                 stopwords: frozenset = frozenset(),
                 store_positions: bool = True,
-                resume: bool = True,
-                seg_id_offset: int = 0,
+                build_id: str | None = None,
                 sort_field: str | None = None,
                 sort_ascending: bool = True,
                 store_term_vectors: bool = False,
@@ -786,7 +783,16 @@ def build_index(spark, df, index_dir: str, *,
 
     ``df`` must carry a unique int64 ``doc_id`` column — the global docID
     and tie-break order (the role of Lucene's docBase+local docID).
-    Returns the committed :class:`Snapshot`.
+    Returns the committed :class:`Snapshot`, which keeps every segment of
+    the latest one.
+
+    Without a ``build_id`` the build appends ``num_segments`` segments
+    under fresh ids from :meth:`SnapshotCatalog.allocate`. With one, its
+    first call claims those ids in ``builds/<build_id>.json``, and a later
+    call with the same key and input resumes onto them
+    (:meth:`SnapshotCatalog.claim`): it builds only the segments not yet
+    written, never one a merge has since taken, and raises if
+    ``num_segments`` differs from the claim.
 
     ``store_term_vectors`` writes a per-doc (terms, starts, ends) offset
     sidecar alongside the segments (the reference's term-vectors files,
@@ -823,40 +829,35 @@ def build_index(spark, df, index_dir: str, *,
                         f"{content_type.simpleString()}, not string")
     ensure_shipped(spark)
     catalog = SnapshotCatalog(index_dir)
+    seg_ids, done = catalog.claim(num_segments, build_id)
+    if store_term_vectors:   # a segment is whole only with its vectors
+        done = {s: st for s, st in done.items() if st is None
+                or os.path.exists(os.path.join(
+                    index_dir, "term_vectors", f"seg-{s}.parquet"))}
     part = F.pmod(F.col(doc_id_col), F.lit(num_segments)).cast("int")
-    work = df.withColumn(SEG_COL, part + F.lit(seg_id_offset))
-
-    # resume set: this build's own seg-id range only, so segment dirs of
-    # other builds (merged away, or never committed) stay out of the commit
-    durable = {sid: st for sid, st in catalog.durable_segments().items()
-               if st.get("origin", "build") == "build"
-               and seg_id_offset <= sid < seg_id_offset + num_segments}
-    if resume and durable:
+    work = df.withColumn(SEG_COL, part + F.lit(seg_ids[0]))
+    if done:
         # a null doc id stays in, for the builder to refuse
         work = work.filter(F.col(SEG_COL).isNull()
-                           | ~F.col(SEG_COL).isin(list(durable.keys())))
+                           | ~F.col(SEG_COL).isin(list(done)))
 
     builder = _make_builder(index_dir, content_col, doc_id_col, spec,
                             store_positions, sort_field, sort_ascending,
                             store_term_vectors)
-    # partition i is segment seg_id_offset + i (a null doc id lands in
+    # partition i is segment seg_ids[i] (a null doc id lands in
     # partition 0); a partition count fixed by the call is never
     # coalesced by adaptive execution
     new_stats = (work.repartitionById(num_segments, part)
                  .mapInPandas(builder, STATS_SCHEMA)
                  .collect())
 
-    # an append keeps the latest snapshot's segments with their per-doc
-    # state; a segment rebuilt in place (resume=False) drops the state
-    # that addressed its old docs
+    # the latest snapshot's segments stay, with their per-doc state
     latest = catalog.load()
     live = {s["seg_id"]: s for s in latest.segments} if latest else {}
-    seg_stats: dict[int, dict] = {**durable, **live}
+    seg_stats = {**{s: st for s, st in done.items() if st}, **live}
     for row in new_stats:
         seg_stats[row["seg_id"]] = {**row.asDict(), "origin": "build"}
-    rebuilt = {row["seg_id"] for row in new_stats}
-    carry = ([(catalog, latest, {s: s for s in live if s not in rebuilt})]
-             if latest else [])
+    carry = [(catalog, latest, {s: s for s in live})] if latest else []
     from ..functions.codec import CODEC_VERSION
     extra = {"num_segments": num_segments,
              "doc_id_col": doc_id_col,

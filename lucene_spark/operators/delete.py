@@ -311,9 +311,7 @@ def update_documents(spark, index_dir: str, df,
         raise ValueError(f"no snapshot in {index_dir}")
     ids = [int(r[0]) for r in df.select(doc_id_col).distinct().collect()]
     located = locate_global_ids(catalog, snap, ids, spark=spark)
-    next_seg = max(snap.seg_ids) + 1 if snap.seg_ids else 0
-    build_index(spark, df, index_dir, num_segments=1,
-                seg_id_offset=next_seg, doc_id_col=doc_id_col,
+    build_index(spark, df, index_dir, num_segments=1, doc_id_col=doc_id_col,
                 **build_kwargs)
     if located:
         return delete_by_ids(spark, index_dir, located)

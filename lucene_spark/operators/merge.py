@@ -184,9 +184,11 @@ def plan_merges(segments: list[dict], segs_per_tier: int = 10,
 
 
 def merge_segments(spark, index_dir: str, seg_ids: list[int],
-                   new_seg_id: int | None = None, _commit_lock=None,
-                   soft_retention: str | None = None):
-    """Merge ``seg_ids`` into one new segment; returns the new Snapshot.
+                   _commit_lock=None, soft_retention: str | None = None):
+    """Merge ``seg_ids`` into one new segment, named by
+    :meth:`SnapshotCatalog.allocate`; returns the new Snapshot. A merge
+    whose commit failed leaves its segment unreferenced, and a retry
+    writes a new one.
 
     ``_commit_lock`` (used by :func:`maintain` with ``max_concurrent>1``)
     serializes the commit section when several merges run as parallel
@@ -221,8 +223,6 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     if missing:
         raise ValueError(f"segments not in snapshot: {missing}")
     seg_ids = sorted(seg_ids)
-    if new_seg_id is None:
-        new_seg_id = max(snap.seg_ids) + 1
     store_positions = bool(snap.extra.get("store_positions", True))
     has_payloads = bool(snap.extra.get("payloads", False))
 
@@ -275,7 +275,8 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
     field = sort_info["field"] if sort_info else None
     s_asc = bool(sort_info["ascending"]) if sort_info else True
 
-    with publish(catalog.segment_dir(new_seg_id)) as tmp:
+    with (catalog.allocated(1) as [new_seg_id],
+          publish(catalog.segment_dir(new_seg_id)) as tmp):
         os.makedirs(tmp)
         norms_path = os.path.join(tmp, "norms.parquet")
         remap_path = os.path.join(tmp, "remap.parquet")
@@ -653,14 +654,10 @@ def add_indexes(spark, dest_dir: str, src_dir: str):
     if bool(dsnap.extra.get("store_positions", True)) != \
             bool(ssnap.extra.get("store_positions", True)):
         raise ValueError("store_positions mismatch between indexes")
-    next_id = max(dsnap.seg_ids) + 1 if dsnap.seg_ids else 0
     new_segments = list(dsnap.segments)
     src_lineage = {s["seg_id"]: s for s in ssnap.segments}
-    id_map: dict[int, int] = {}
-    for old_id in ssnap.seg_ids:
-        new_id = next_id
-        id_map[old_id] = new_id
-        next_id += 1
+    id_map = dict(zip(ssnap.seg_ids, dest.allocate(len(ssnap.seg_ids))))
+    for old_id, new_id in id_map.items():
         sdir = src.segment_dir(old_id)
         stats = dict(src_lineage[old_id])
         stats["seg_id"] = int(new_id)
@@ -889,9 +886,9 @@ def maintain(spark, index_dir: str, segs_per_tier: int = 10,
     segment-dir writes) is embarrassingly job-parallel, and commits
     serialize on a lock with a commit-time snapshot re-read (so each
     commit swaps its own inputs against the LATEST generation, whatever
-    order siblings landed in). New seg ids are pre-allocated per round
-    to keep the final segment layout identical to the sequential
-    schedule. Single-writer contract unchanged: no other writer
+    order siblings landed in). Each merge names its segment through the
+    catalog's allocator, so the new ids follow the order the merges
+    reach it. Single-writer contract unchanged: no other writer
     (deletes/appends) may run concurrently with maintain — same rule as
     the reference's one-IndexWriter lock."""
     catalog = SnapshotCatalog(index_dir)
@@ -909,12 +906,11 @@ def maintain(spark, index_dir: str, segs_per_tier: int = 10,
         from concurrent.futures import ThreadPoolExecutor
 
         lock = threading.Lock()
-        next_id = max(snap.seg_ids) + 1
         with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
             futs = [pool.submit(merge_segments, spark, index_dir, batch,
-                                new_seg_id=next_id + i, _commit_lock=lock,
+                                _commit_lock=lock,
                                 soft_retention=soft_retention)
-                    for i, batch in enumerate(merges)]
+                    for batch in merges]
             for f in futs:
                 f.result()   # surface the first failure
         snap = catalog.load()

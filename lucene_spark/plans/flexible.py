@@ -56,8 +56,8 @@ import re
 
 from ..functions.analysis import analyze_text
 from . import query as Q
-from .parser import (PHRASE_SUFFIX_RE, QueryParseError, phrase_suffix,
-                     term_or_phrase)
+from .parser import (PHRASE_SUFFIX_RE, QueryParseError, atom, phrase_suffix,
+                     split_atom)
 
 _TOKEN_RE = re.compile(
     r'"[^"]*"'            # quoted phrase
@@ -259,44 +259,23 @@ def parse_standard(text: str, default_operator: str = "OR",
         return _atom(t)
 
     def _atom(t: str) -> Q.Query:
-        boost = 1.0
-        m = re.match(r'^(.*)\^(\d+(?:\.\d+)?)$', t)
-        if m:
-            t, boost = m.group(1), float(m.group(2))
-        if ":" in t and not t.startswith('"'):
-            fld, rest = t.split(":", 1)
-            if fld in points_config:
-                # PointQueryNodeProcessor: exact value = [v, v] inclusive
-                v = _point_value(rest, points_config[fld])
-                return Q.PointRange(fld, v, v, boost)
-            t = rest
-        if t.startswith('"'):
-            if not (t.endswith('"') and len(t) >= 2):
-                raise QueryParseError(f"unterminated phrase: {t}")
-            terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
-            if not terms:
-                raise QueryParseError(f"empty phrase: {t}")
-            q = term_or_phrase(terms, boost)
-            nxt = peek()
-            suffix = PHRASE_SUFFIX_RE.fullmatch(nxt) if nxt else None
-            if suffix:
-                advance()  # "a b"~2^3
-                q = phrase_suffix(q, suffix)
-            return q
-        m = re.match(r"^(.+?)~(\d*)$", t)
-        if m and "*" not in t and "?" not in t:
-            edits = int(m.group(2)) if m.group(2) else 2
-            return Q.MultiTerm("fuzzy", m.group(1).lower(), edits=edits,
-                               boost=boost)
-        if "*" in t or "?" in t:
-            low = t.lower()
-            if low.endswith("*") and "*" not in low[:-1] and "?" not in low:
-                return Q.MultiTerm("prefix", low[:-1], boost=boost)
-            return Q.MultiTerm("wildcard", low, boost=boost)
-        terms, _, _ = analyze_text(t, stopwords=stopwords)
-        if not terms:
-            raise QueryParseError(f"term analyzed to nothing: {t!r}")
-        return term_or_phrase(terms, boost)
+        fld, text, boost = split_atom(t)
+        if fld in points_config:
+            # PointQueryNodeProcessor: exact value = [v, v] inclusive
+            v = _point_value(text, points_config[fld])
+            return Q.PointRange(fld, v, v, boost)
+        quoted = text.startswith('"')
+        if quoted and not (text.endswith('"') and len(text) >= 2):
+            raise QueryParseError(f"unterminated phrase: {text}")
+        q = atom(t, stopwords)
+        if q is None:
+            raise QueryParseError(f"empty phrase: {text}" if quoted else
+                                  f"term analyzed to nothing: {text!r}")
+        if quoted and peek() and (
+                suffix := PHRASE_SUFFIX_RE.fullmatch(peek())):
+            advance()  # "a b"~2^3
+            q = phrase_suffix(q, suffix)
+        return q
 
     # ---- interval functions -----------------------------------------------
     def parse_fn(name: str) -> tuple:

@@ -50,6 +50,38 @@ def phrase_suffix(q: Query, suffix: re.Match) -> Query:
     return q
 
 
+def split_atom(t: str) -> tuple[str | None, str, float]:
+    """``(field, text, boost)`` of an atom token ``field:text^boost``; a
+    quoted phrase has no field."""
+    m = re.match(r'^(.*)\^(\d+(?:\.\d+)?)$', t)
+    t, boost = (m.group(1), float(m.group(2))) if m else (t, 1.0)
+    if ":" in t and not t.startswith('"'):
+        return (*t.split(":", 1), boost)
+    return None, t, boost
+
+
+def atom(t: str, stopwords: frozenset[str]) -> Query | None:
+    """The query of one atom token, for both query parsers. Its field is
+    dropped (one content field is indexed) and its boost kept; then a
+    quoted phrase, ``word~[edits]`` fuzzy, a ``*``/``?`` prefix or
+    wildcard, or else the text re-analyzed into a term or phrase
+    (QueryParserBase behavior). ``None`` when the text analyzes to
+    nothing."""
+    _, t, boost = split_atom(t)
+    if t.startswith('"') and t.endswith('"') and len(t) >= 2:
+        t = t[1:-1]
+    elif "*" in t or "?" in t:
+        low = t.lower()
+        if low.endswith("*") and "*" not in low[:-1] and "?" not in low:
+            return MultiTerm("prefix", low[:-1], boost=boost)
+        return MultiTerm("wildcard", low, boost=boost)
+    elif m := re.match(r"^(.+?)~(\d*)$", t):
+        return MultiTerm("fuzzy", m.group(1).lower(),
+                         edits=int(m.group(2) or 2), boost=boost)
+    terms, _, _ = analyze_text(t, stopwords=stopwords)
+    return term_or_phrase(terms, boost) if terms else None
+
+
 @dataclass
 class _Negated:
     inner: Query
@@ -185,32 +217,8 @@ def parse(text: str, stopwords: frozenset[str] = frozenset()) -> Query:
         return atom
 
     def _atom(t: str) -> Query:
-        boost = 1.0
-        m = re.match(r'^(.*)\^(\d+(?:\.\d+)?)$', t)
-        if m:
-            t, boost = m.group(1), float(m.group(2))
-        if ":" in t and not t.startswith('"'):
-            t = t.split(":", 1)[1]  # field prefix; we index a single field
-        if t.startswith('"') and t.endswith('"') and len(t) >= 2:
-            terms, _, _ = analyze_text(t[1:-1], stopwords=stopwords)
-            if not terms:
-                return _DROPPED  # fully-stopped phrase: clause dropped
-            return term_or_phrase(terms, boost)
-        m = re.match(r"^(.+?)~(\d*)$", t)
-        if m and "*" not in t and "?" not in t:  # fuzzy: word~ / word~1
-            edits = int(m.group(2)) if m.group(2) else 2
-            return MultiTerm("fuzzy", m.group(1).lower(), edits=edits,
-                             boost=boost)
-        if "*" in t or "?" in t:  # wildcard / prefix
-            low = t.lower()
-            if low.endswith("*") and "*" not in low[:-1] and "?" not in low:
-                return MultiTerm("prefix", low[:-1], boost=boost)
-            return MultiTerm("wildcard", low, boost=boost)
-        terms, _, _ = analyze_text(t, stopwords=stopwords)
-        if not terms:
-            return _DROPPED  # stopword-only term: clause dropped
-        # multi-token atom → phrase (QueryParserBase re-analysis behavior)
-        return term_or_phrase(terms, boost)
+        q = atom(t, stopwords)
+        return _DROPPED if q is None else q  # stopped-away clause dropped
 
     if not toks:
         raise QueryParseError("empty query")

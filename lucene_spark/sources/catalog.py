@@ -14,6 +14,12 @@ manifests included, is written through one :func:`publish`.
 Readers pin a snapshot id and only ever read the segment directories that
 snapshot lists — a point-in-time view identical in spirit to Lucene's
 ``DirectoryReader`` over a commit point.
+
+The catalog also names every new segment, as ``SegmentInfos.counter``
+does: :meth:`SnapshotCatalog.allocate` hands out ids above every ``seg=``
+entry, so a segment left behind by a failed write is never named again.
+A build resumes only by an explicit key: :meth:`SnapshotCatalog.claim`
+records a keyed build's ids in ``builds/<build_id>.json``.
 """
 
 from __future__ import annotations
@@ -150,17 +156,72 @@ class SnapshotCatalog:
     def segment_dir(self, seg_id: int) -> str:
         return os.path.join(self.segments_dir, f"seg={seg_id}")
 
-    def durable_segments(self) -> dict[int, dict]:
-        """Segments already written to durable storage (each has a stats.json
-        marker written last) — the resume set, independent of whether a
-        manifest commit happened after they flushed."""
-        out: dict[int, dict] = {}
-        for name in os.listdir(self.segments_dir):
-            if not name.startswith("seg="):
-                continue
-            marker = os.path.join(self.segments_dir, name, "stats.json")
+    def allocate(self, n: int) -> list[int]:
+        """The one namer of new segments: ``n`` contiguous ids above every
+        ``seg=`` entry under ``segments/``, each reserved by an empty
+        directory. ``os.mkdir`` is atomic, so concurrent writers (merge
+        threads, other processes) never share an id, and a leftover of a
+        failed write is never named again; :func:`publish` of the segment
+        replaces its empty reservation."""
+        while True:
+            first = 1 + max((int(name[4:]) for name in
+                             os.listdir(self.segments_dir)
+                             if name.startswith("seg=")), default=-1)
+            ids = range(first, first + n)
+            try:
+                for s in ids:
+                    os.mkdir(self.segment_dir(s))
+                return list(ids)
+            except FileExistsError:     # another writer won; start above it
+                for made in range(first, s):
+                    os.rmdir(self.segment_dir(made))
+
+    @contextmanager
+    def allocated(self, n: int):
+        """:meth:`allocate` for a write that no build claims: a failure in
+        the body removes the reservations, so it leaves nothing behind."""
+        ids = self.allocate(n)
+        try:
+            yield ids
+        except BaseException:
+            for s in ids:
+                os.rmdir(self.segment_dir(s))
+            raise
+
+    def claim(self, n: int, build_id: str | None = None
+              ) -> tuple[list[int], dict[int, dict | None]]:
+        """The ``n`` segment ids a build writes, and those of them it must
+        not build: ``{seg_id: stats}`` for a segment already written, and
+        ``{seg_id: None}`` for one a snapshot since the claim committed and
+        a later one dropped (a merge took its docs). A build without a key
+        gets fresh ids and builds them all. A keyed build's first call
+        publishes ``builds/<build_id>.json`` with its ids and the
+        generation it started from; every later call resumes onto them."""
+        if build_id is None:
+            return self.allocate(n), {}
+        if os.path.basename(build_id) != build_id or build_id[:1] in ".":
+            raise ValueError(f"build_id {build_id!r} is not a file name")
+        path = os.path.join(self.root, "builds", f"{build_id}.json")
+        if not os.path.exists(path):
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with publish(path) as tmp, open(tmp, "w") as f:
+                json.dump({"seg_ids": self.allocate(n), "generation":
+                           max(self.snapshot_ids(), default=0)}, f)
+        with open(path) as f:
+            claim = json.load(f)
+        ids = claim["seg_ids"]
+        if len(ids) != n:
+            raise ValueError(f"build {build_id!r} claimed {len(ids)} "
+                             f"segments, not num_segments={n}")
+        done: dict[int, dict | None] = {}
+        for s in ids:
+            marker = os.path.join(self.segment_dir(s), "stats.json")
             if os.path.exists(marker):
                 with open(marker) as f:
-                    stats = json.load(f)
-                out[int(name.split("=", 1)[1])] = stats
-        return out
+                    done[s] = json.load(f)
+        committed = {s for g in self.snapshot_ids()
+                     if g > claim["generation"] for s in self.load(g).seg_ids}
+        if committed:
+            done.update(dict.fromkeys(
+                committed.intersection(ids) - set(self.load().seg_ids)))
+        return ids, done

@@ -3,22 +3,23 @@
 The reference's NRT model — uncommitted flushes become searchable through a
 refreshed point-in-time reader (``index/DirectoryReader.java``,
 ``search/SearcherManager.java``) — maps to Structured Streaming
-``foreachBatch``: every micro-batch builds new immutable segments (with a
-disjoint seg-id range) and commits a new snapshot generation; readers that
-re-open the catalog see the new snapshot, readers holding an old snapshot id
-keep their point-in-time view. Lucene has no watermark/event-time concept
-(SURVEY.md §2.5); the deliverable here is incremental build + checkpointed
-resume, which Structured Streaming's own checkpoint dir guarantees
-(exactly-once per micro-batch on top of our idempotent segment writes).
+``foreachBatch``: every micro-batch builds new immutable segments under
+fresh ids from the catalog's allocator and commits a new snapshot
+generation; readers that re-open the catalog see the new snapshot, readers
+holding an old snapshot id keep their point-in-time view. Lucene has no
+watermark/event-time concept (SURVEY.md §2.5); the deliverable here is
+incremental build + checkpointed resume, which Structured Streaming's own
+checkpoint dir guarantees (exactly-once per micro-batch on top of keyed
+builds: a replayed micro-batch resumes the build its first run keyed with
+the checkpoint and batch id, and writes no segment twice).
 """
 
 from __future__ import annotations
 
-from ..operators.build import build_index
-from ..sources.catalog import SnapshotCatalog
+import os
+import zlib
 
-#: seg-id stride reserved per micro-batch
-BATCH_STRIDE = 1000
+from ..operators.build import build_index
 
 
 def start_incremental_build(spark, source_stream_df, index_dir: str, *,
@@ -29,19 +30,15 @@ def start_incremental_build(spark, source_stream_df, index_dir: str, *,
     """Start a streaming query that indexes each micro-batch into
     ``index_dir``. ``source_stream_df`` is any streaming DataFrame with the
     corpus schema (must include a globally-unique int64 doc_id)."""
+    stream = zlib.crc32(os.path.abspath(checkpoint_dir).encode())
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        catalog = SnapshotCatalog(index_dir)
-        snap = catalog.load()
-        # disjoint seg-id range per batch; idempotent on micro-batch replay
-        # (same batch => same doc_ids => same segment content, and durable
-        # segments are skipped by the resume path)
-        offset = BATCH_STRIDE * (int(batch_id) + 1)
         build_index(batch_df.sparkSession, batch_df, index_dir,
                     num_segments=segments_per_batch,
-                    seg_id_offset=offset, resume=True, **build_kwargs)
+                    build_id=f"stream-{stream:08x}-{int(batch_id)}",
+                    **build_kwargs)
 
     writer = (source_stream_df.writeStream
               .foreachBatch(process_batch)

@@ -95,6 +95,12 @@ def _build_case(spark, case, d) -> None:
     elif case == "term_vectors":
         build_index(spark, spark.createDataFrame(_corpus()), d,
                     num_segments=4, store_term_vectors=True)
+    elif case == "resume":
+        build_index(spark, spark.createDataFrame(_corpus()), d,
+                    num_segments=NUM_SEGMENTS, build_id=case)
+        shutil.rmtree(SnapshotCatalog(d).segment_dir(RESUMED_SEG))
+        build_index(spark, spark.createDataFrame(_corpus()), d,
+                    num_segments=NUM_SEGMENTS, build_id=case)
     elif case == "small_batches":
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         before = spark.conf.get(key)
@@ -115,12 +121,7 @@ def _build_case(spark, case, d) -> None:
     elif case == "append":
         new = _corpus(90, seed=3)
         new["doc_id"] = new["doc_id"] + 10_000
-        build_index(spark, spark.createDataFrame(new), d, num_segments=5,
-                    seg_id_offset=NUM_SEGMENTS)
-    elif case == "resume":
-        shutil.rmtree(SnapshotCatalog(d).segment_dir(RESUMED_SEG))
-        build_index(spark, spark.createDataFrame(_corpus()), d,
-                    num_segments=NUM_SEGMENTS)
+        build_index(spark, spark.createDataFrame(new), d, num_segments=5)
 
 
 def _rows_digest(tbl, keys) -> str:
@@ -202,16 +203,15 @@ def test_built_segments_match_golden(spark, goldens, case, tmp_path):
 
 
 def test_each_task_builds_one_segment(spark, tmp_path):
-    """Partition ``i`` of a build holds segment ``seg_id_offset + i``, and
-    nothing else."""
+    """Partition ``i`` of a build holds the build's ``i``-th segment id,
+    and nothing else."""
     from lucene_spark.operators.build import build_index
     d = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(_corpus()), d,
                 num_segments=NUM_SEGMENTS)
     new = _corpus(90, seed=3)
     new["doc_id"] = new["doc_id"] + 10_000
-    snap = build_index(spark, spark.createDataFrame(new), d, num_segments=5,
-                       seg_id_offset=NUM_SEGMENTS)
+    snap = build_index(spark, spark.createDataFrame(new), d, num_segments=5)
     assert len(snap.segments) == NUM_SEGMENTS + 5
     for seg in snap.segments:
         offset = NUM_SEGMENTS if seg["seg_id"] >= NUM_SEGMENTS else 0

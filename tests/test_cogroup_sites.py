@@ -20,7 +20,8 @@ one fan-out over term ranges and no Spark writer.
 Multi-term queries expand on the driver, and search, percolation and
 MemoryIndex share one query compile and one matcher. Every phrase and span
 kernel is reached from the engine or the oracle. Every index write is
-published through the one primitive, ``sources.catalog.publish``.
+published through the one primitive, ``sources.catalog.publish``, and
+every new segment is named by the catalog's one allocator.
 """
 
 from __future__ import annotations
@@ -257,3 +258,24 @@ def test_one_publish_primitive():
                 sites += [(rel, f"os.{a.name}") for a in node.names
                           if a.name in moves]
     assert sites == []
+
+
+def test_one_segment_id_allocator():
+    """No package module but ``sources/catalog.py`` derives a new segment
+    id: no ``max(<snapshot>.seg_ids) + 1`` and no ``seg_id_offset``. The
+    one exception is ``Searcher._open``'s read-side offset that places
+    several indexes' segments side by side (MultiSearcher); it names no
+    segment."""
+    patterns = ("seg_ids) + 1", "seg_id_offset")
+    sites = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel == "sources/catalog.py":
+            continue
+        text = path.read_text(encoding="utf-8")
+        sites += [(rel, p) for p in patterns for _ in range(text.count(p))]
+    assert sites == [("operators/search.py", "seg_ids) + 1")]
+    text = (PACKAGE / "operators" / "search.py").read_text(encoding="utf-8")
+    opener = next(n for n in ast.walk(ast.parse(text))
+                  if isinstance(n, ast.FunctionDef) and n.name == "_open")
+    assert "seg_ids) + 1" in ast.get_source_segment(text, opener)

@@ -338,16 +338,25 @@ def test_update_after_merge_keeps_merged_away_segments_out(spark, corpus):
     _assert_matches_oracle(spark, d, live)
 
 
-def test_rebuild_in_place_drops_its_tombstones(spark, corpus, oracle_full):
-    """A build with resume=False over committed segments replaces them,
-    and the tombstones that addressed their old docs go with them."""
-    d = tempfile.mkdtemp(prefix="lucene_spark_rebuild_")
-    df = spark.createDataFrame(corpus)
-    build_index(spark, df, d, num_segments=4)
-    delete_by_term(spark, d, DEL_TERM)
-    build_index(spark, df, d, num_segments=4, resume=False)
+def test_a_build_without_a_key_appends(spark, corpus, oracle_full):
+    """A second build without a key appends segments under new ids: every
+    new doc is indexed, and the first build's segments keep their
+    tombstones. The same ids would have kept the old segments and indexed
+    none of the new text."""
+    import pandas as pd
+
+    d = tempfile.mkdtemp(prefix="lucene_spark_append_")
+    build_index(spark, spark.createDataFrame(corpus), d, num_segments=4)
+    before = delete_by_term(spark, d, DEL_TERM)
     catalog = SnapshotCatalog(d)
-    snap = catalog.load()
-    assert not load_deletes(catalog, snap)
-    assert snap.extra["num_deleted"] == 0
-    _assert_matches_oracle(spark, d, corpus)
+    dead = {s: v.tolist() for s, v in load_deletes(catalog, before).items()}
+    more = corpus.assign(doc_id=corpus.doc_id + N_DOCS,
+                         content=corpus.content + " zzupdated")
+    snap = build_index(spark, spark.createDataFrame(more), d, num_segments=4)
+    assert sorted(snap.seg_ids) == list(range(8))
+    assert {s: v.tolist()
+            for s, v in load_deletes(catalog, snap).items()} == dead
+    force_merge(spark, d, max_segments=1)
+    gone = _deleted_doc_ids(oracle_full)
+    _assert_matches_oracle(
+        spark, d, pd.concat([corpus[~corpus.doc_id.isin(gone)], more]))

@@ -209,10 +209,11 @@ def test_kill_and_resume(spark, corpus, oracle):
     # doc subset that lands in segments 0..3 (same content those segments
     # get in a full run, since seg = doc_id % N)
     partial = df.filter(F.pmod(F.col("doc_id"), F.lit(N_SEGS)) < N_SEGS // 2)
-    snap1 = build_index(spark, partial, d, num_segments=N_SEGS)
+    snap1 = build_index(spark, partial, d, num_segments=N_SEGS,
+                        build_id="resume")
     assert len(snap1.seg_ids) == N_SEGS // 2
     # resume with the FULL input: committed segments must be skipped
-    snap2 = build_index(spark, df, d, num_segments=N_SEGS)
+    snap2 = build_index(spark, df, d, num_segments=N_SEGS, build_id="resume")
     assert snap2.snapshot_id == snap1.snapshot_id + 1
     assert len(snap2.seg_ids) == N_SEGS
     statuses = {s["seg_id"]: s["status"] for s in snap2.segments}

@@ -7,7 +7,7 @@ goes through it: manifests, segment directories, term dictionary
 generations, tombstone and docvalues files, term vectors. The tests below
 check the primitive itself, that a merge failing after its phase files are
 written leaves nothing behind, and a crash-point sweep over a write
-sequence.
+sequence that retries each crashed step in place.
 """
 
 from __future__ import annotations
@@ -154,9 +154,9 @@ def _steps(spark, other: str) -> list:
     first, second = corpus.iloc[:200], corpus.iloc[200:]
     return [
         ("build", lambda d: build_index(spark, _frame(spark, first), d,
-                                        num_segments=2)),
+                                        num_segments=2, build_id="build")),
         ("append", lambda d: build_index(spark, _frame(spark, second), d,
-                                         num_segments=1, seg_id_offset=2)),
+                                         num_segments=1, build_id="append")),
         ("delete", lambda d: delete_by_term(spark, d, "else")),
         ("docvalues", lambda d: update_numeric_docvalue(
             spark, d, "while", FIELD, 100)),
@@ -202,7 +202,10 @@ def test_crash_point_sweep(spark, tmp_path, sweep, i):
     wrote leaves an index whose latest snapshot opens, searches as the
     snapshot before the step (or after it, had its manifest landed),
     passes ``check_index`` and holds no ``_tmp-`` entry. A crashed build
-    leaves no snapshot and resumes to the clean build's result.
+    leaves no snapshot. A step whose manifest did not land is then retried
+    on the crashed index itself (a build resumes by its key), and ends
+    with the uncrashed run's search result, field stats and a passing
+    ``check_index``, with no ``_tmp-`` entry left.
 
     The executor-side publishes (a build's segment directories and term
     vectors) run in Python workers the driver patch does not reach; the
@@ -210,7 +213,8 @@ def test_crash_point_sweep(spark, tmp_path, sweep, i):
     cover them."""
     other, states = sweep
     name, (before_dir, before_id, before_hits), after, n_calls = states[i]
-    _, after_id, after_hits = after
+    after_dir, after_id, after_hits = after
+    after_stats = SnapshotCatalog(after_dir).load().field_stats
     step = dict(_steps(spark, other))[name]
     assert n_calls >= 2     # at least a dictionary and a manifest
     for k in range(1, n_calls + 1):
@@ -224,11 +228,15 @@ def test_crash_point_sweep(spark, tmp_path, sweep, i):
         snap = SnapshotCatalog(work).load()
         if before_dir is None:
             assert snap is None, (name, k)
-            step(work)          # resume
-            assert _search(spark, work) == after_hits, (name, k)
         else:
             assert snap.snapshot_id in (before_id, after_id), (name, k)
             want = after_hits if snap.snapshot_id == after_id \
                 else before_hits
             assert _search(spark, work) == want, (name, k)
-        check_index(work)
+            check_index(work)
+        if snap is None or snap.snapshot_id == before_id:
+            step(work)          # retry in place
+            assert _leftovers(work) == [], (name, k)
+            assert SnapshotCatalog(work).load().field_stats == after_stats
+            assert _search(spark, work) == after_hits, (name, k)
+            check_index(work)

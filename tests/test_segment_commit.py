@@ -197,9 +197,8 @@ def test_directory_overlay_updates_bakes_and_carries(spark, tmp_path):
     assert check_index(d)["num_dv_updates"] == len(left)
 
 
-def test_split_and_rebuild_carry_the_overlay(spark, tmp_path):
-    """A split keeps the kept segments' rows; a resume=False rebuild of a
-    segment drops the rows that addressed its old docs."""
+def test_split_carries_the_overlay(spark, tmp_path):
+    """A split keeps the kept segments' rows."""
     corpus = generate_corpus(200, seed=31)
     d = str(tmp_path / "idx")
     build_index(spark, _frame(spark, corpus), d, num_segments=4)
@@ -213,14 +212,6 @@ def test_split_and_rebuild_carry_the_overlay(spark, tmp_path):
     assert got.to_dict("list") == rows[rows["seg_id"].isin(kept)] \
         .reset_index(drop=True).to_dict("list")
     check_index(out)
-
-    s = kept[0]
-    build_index(spark, _frame(spark, corpus[corpus["doc_id"] % 4 == s]), d,
-                num_segments=1, seg_id_offset=s, resume=False)
-    after = load_updates(SnapshotCatalog(d), SnapshotCatalog(d).load())
-    assert s not in set(after["seg_id"])
-    assert len(after) == int((rows["seg_id"] != s).sum())
-    check_index(d)
 
 
 @pytest.fixture(scope="module")
@@ -365,7 +356,7 @@ def test_tombstones_and_overlay_survive_an_append(spark, tmp_path):
     cat = SnapshotCatalog(d)
     before = cat.load()
     build_index(spark, _frame(spark, corpus[corpus.doc_id >= 150]), d,
-                num_segments=1, seg_id_offset=3)
+                num_segments=1)
     after = cat.load()
     assert len(after.seg_ids) == 4
     assert {s: v.tolist() for s, v in load_deletes(cat, after).items()} == \
