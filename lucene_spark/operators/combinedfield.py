@@ -26,9 +26,10 @@ the same ``doc_id`` space with the same ``num_segments`` — the build
 partitioner is ``doc_id % num_segments``, so segment i of every field
 holds the same documents in the same local order and the combination
 is segment-local: one shuffle-free ``fan_out`` task reads segment i of
-every field. The pseudo-stats are O(fields) driver reads of the
-term dictionaries and field stats, and the ≤ k·S candidates merge on
-the driver, so a call runs one Spark job.
+every field through its Python worker's open segment readers
+(``operators/segreader.py``). The pseudo-stats are O(fields) driver
+reads of the term dictionaries and field stats, and the ≤ k·S
+candidates merge on the driver, so a call runs one Spark job.
 
 Seam vs the reference (documented): our ``field_stats.doc_count``
 counts every doc in the index, while Lucene's per-field docCount
@@ -80,9 +81,7 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     ``num_segments`` (checked per segment via global-id equality).
     Returns (doc_id, score float32, rank) like ``Searcher.search``.
     """
-    import os
-
-    import pyarrow.parquet as pq
+    from .segreader import open_segment
 
     if not fields:
         raise ValueError("fields must be non-empty")
@@ -101,23 +100,17 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
         """One segment of every field: ``item`` is ``(seg_id, [segment
         directory or None per field], [tombstones or None per field])``."""
         seg_id, seg_dirs, tombstones = item
-        postings = [
-            pq.read_table(os.path.join(d, "postings.parquet"),
-                          filters=[("term", "==", term)]).to_pylist()
-            if d else [] for d in seg_dirs]
+        readers = [open_segment(d, [term]) if d else None for d in seg_dirs]
+        postings = [r.rows([term]) if r else {} for r in readers]
         if not any(postings):
             return None
         gids = None
         n = 0
         comb_len = None
-        for i, (d, w) in enumerate(zip(seg_dirs, weights)):
-            if d is None:
+        for i, (r, w) in enumerate(zip(readers, weights)):
+            if r is None:
                 continue
-            nrow = pq.read_table(
-                os.path.join(d, "norms.parquet"),
-                columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
-            g = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            nb = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
+            nb, g = r.norms()
             if gids is None:
                 gids = g
                 n = len(nb)
@@ -136,7 +129,7 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
             np.floor(comb_len + np.float32(0.5)).astype(np.int64))
         freq = np.zeros(n, dtype=np.float32)
         for rows, w in zip(postings, weights):
-            for r in rows:
+            for r in rows.values():
                 ids, tfs = TermSegPostings(r).decode_all()
                 freq[ids] += w * tfs.astype(np.float32)
         live = np.ones(n, dtype=bool)

@@ -4,13 +4,15 @@ Spark shape (SURVEY.md §3.2): global term statistics are read on the
 driver from the precomputed ``term_stats`` dictionary, pushed down to the
 query's terms (the reference aggregates df/ttf across all leaves at
 weight creation: ``index/TermStates.java:99,184-190``); one Spark job then
-fans out over segment ids with no shuffle, and each task reads its own
-segments' postings, filtered to the query's terms (parquet predicate
-pushdown — the term dictionary's role), and norms. A vectorized kernel per
-segment scores and collects a local top-k with the exact reference
-tie-break (score desc, docID asc: ``search/HitQueue.java:78-84``); the
-driver merges the ≤ k·S candidates with the same tie-break (postings
-never move at query time; reference merge: ``search/TopDocs.java:71-90``).
+fans out over segment ids with no shuffle, and each task takes its own
+segments' postings rows for the query's terms, and their norms, from the
+segment readers its Python worker keeps open across queries
+(``operators/segreader.py``, the reference's ``SegmentReader``). A
+vectorized kernel per segment scores and collects a local top-k with the
+exact reference tie-break (score desc, docID asc:
+``search/HitQueue.java:78-84``); the driver merges the ≤ k·S candidates
+with the same tie-break (postings never move at query time; reference
+merge: ``search/TopDocs.java:71-90``).
 
 Two execution strategies, mirroring Boolean scorer selection
 (``search/Boolean2ScorerSupplier.java:141-244``):
@@ -1576,7 +1578,7 @@ class Searcher(QueryCompiler):
         tombstones and collection stats, on the driver, with no Spark job.
         Each sub-index's seg ids shift past the previous ones' (the
         MultiReader docBase role), so ``seg_dirs`` and ``deletes`` key
-        every segment uniquely; a query task reads the files itself."""
+        every segment uniquely; a query task opens the segments itself."""
         from collections import OrderedDict
 
         from ..functions.codec import check_codec_version
@@ -1764,33 +1766,29 @@ class Searcher(QueryCompiler):
         of the strings ``terms`` — the one per-segment execution every
         postings kernel runs through. A shuffle-free job fans out over the
         segments (:func:`fan_out`); each item is ``(seg_id, segment
-        directory, that segment's tombstones)``, and its task reads the
-        segment's ``postings.parquet`` with a pushed ``term in`` filter
-        over the sorted terms, then ``norms.parquet``. A segment with no
-        matching postings is skipped. The kernel gets the segment's
+        directory, that segment's tombstones)``, and its task takes the
+        terms' postings rows from the segment's reader
+        (:func:`~lucene_spark.operators.segreader.open_segment`), which the
+        task's Python worker keeps open across queries; the first query
+        to reach a segment in a worker reads its whole ``postings.parquet``,
+        with no pushed filter. A segment with no matching postings is
+        skipped before its norms are read. The kernel gets the segment's
         :class:`_SegContext` (postings rows by term, norm bytes, liveDocs,
         ``cache``, ``sim`` — default the searcher's) and its global doc
         ids, and returns a pandas frame of the DDL ``schema``, or None for
         no rows."""
-        import os
-
-        import pyarrow.parquet as pq
+        from .segreader import open_segment
         sim = sim or self.similarity
         terms = sorted(set(terms))
 
         def run(item):
             seg_id, seg_dir, tombstones = item
-            rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
-                                 filters=[("term", "in", terms)]).to_pylist()
+            reader = open_segment(seg_dir, terms)
+            rows = reader.rows(terms)
             if not rows:
                 return None
-            nrow = pq.read_table(
-                os.path.join(seg_dir, "norms.parquet"),
-                columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            ctx = _SegContext({r["term"]: r for r in rows}, norm_bytes,
-                              cache, sim,
+            norm_bytes, gids = reader.norms()
+            ctx = _SegContext(rows, norm_bytes, cache, sim,
                               live=_live_mask({seg_id: tombstones}, seg_id,
                                               len(norm_bytes)))
             return kernel(seg_id, ctx, gids)
@@ -2395,25 +2393,31 @@ class Searcher(QueryCompiler):
         """Score breakdown for one document (Weight.explain role:
         reference ``search/Weight.java:128``, BM25's explain at
         ``similarities/BM25Similarity.java:271+``). Term and boolean trees
-        are explained from pyarrow reads on the driver: a pushed
-        ``doc_id`` read of each segment's ``doc_meta.parquet`` finds the
-        doc, then that one segment's postings are read for the query's
-        terms. Returns a nested dict mirroring Lucene's Explanation tree:
-        value, description, details."""
+        are explained on the driver: a pushed ``doc_id`` read of each
+        segment's ``doc_meta.parquet`` finds the doc's live copy (a
+        tombstoned copy, such as the old one of an updated doc, is
+        skipped), then the query's terms' postings rows come from that
+        segment's reader (:func:`~lucene_spark.operators.segreader.
+        open_segment`), kept open in the driver across calls. Returns a
+        nested dict mirroring Lucene's Explanation tree: value,
+        description, details."""
         import os
 
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
+        from .segreader import open_segment
+
         compiled, cache = self._compile(query)
         if compiled is None:
             return {"match": False, "value": 0.0,
                     "description": "no scorer (all terms absent)"}
-        for seg_dir in self.seg_dirs.values():
-            meta = pq.read_table(
+        for seg_id, seg_dir in self.seg_dirs.items():
+            meta = [m for m in pq.read_table(
                 os.path.join(seg_dir, "doc_meta.parquet"),
                 columns=["local_doc_id", "doc_len", "norm_byte"],
                 filters=[("doc_id", "==", int(doc_id))]).to_pylist()
+                if m["local_doc_id"] not in self.deletes.get(seg_id, ())]
             if meta:
                 break
         else:
@@ -2423,11 +2427,9 @@ class Searcher(QueryCompiler):
         norm_byte = int(meta[0]["norm_byte"])
         doc_len = int(meta[0]["doc_len"])
         terms = sorted(set(_compiled_terms(compiled)))
-        rows = pq.read_table(os.path.join(seg_dir, "postings.parquet"),
-                             filters=[("term", "in", terms)]).to_pylist() \
-            if terms else []
+        rows = open_segment(seg_dir, terms).rows(terms) if terms else {}
         tf_of: dict[str, int] = {}
-        for r in rows:
+        for r in rows.values():
             ids, tfs = TermSegPostings(r).decode_all()
             j = np.searchsorted(ids, local)
             if j < len(ids) and ids[j] == local:

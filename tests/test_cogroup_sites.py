@@ -21,7 +21,9 @@ Multi-term queries expand on the driver, and search, percolation and
 MemoryIndex share one query compile and one matcher. Every phrase and span
 kernel is reached from the engine or the oracle. Every index write is
 published through the one primitive, ``sources.catalog.publish``, and
-every new segment is named by the catalog's one allocator.
+every new segment is named by the catalog's one allocator. Every query
+reads a segment's postings and norms through the one query-time reader,
+``operators/segreader.py``.
 """
 
 from __future__ import annotations
@@ -279,3 +281,21 @@ def test_one_segment_id_allocator():
     opener = next(n for n in ast.walk(ast.parse(text))
                   if isinstance(n, ast.FunctionDef) and n.name == "_open")
     assert "seg_ids) + 1" in ast.get_source_segment(text, opener)
+
+
+def test_one_segment_reader():
+    """Query-time code takes a segment's postings and norms from the one
+    per-process reader, ``operators/segreader.py``: no other code in
+    ``search.py`` or ``combinedfield.py`` names ``postings.parquet`` or
+    ``norms.parquet``. Writers (build, merge, delete, ``check_index``)
+    read the files themselves."""
+    files = {"postings.parquet", "norms.parquet"}
+
+    def named(rel):
+        return {node.value for node in ast.walk(ast.parse(
+            (PACKAGE / rel).read_text(encoding="utf-8")))
+            if isinstance(node, ast.Constant) and node.value in files}
+
+    assert named("operators/segreader.py") == files
+    for rel in ("operators/search.py", "operators/combinedfield.py"):
+        assert named(rel) == set(), rel

@@ -344,6 +344,38 @@ def test_explain(searcher, oracle):
     assert searcher.explain(q, non)["match"] is False
 
 
+def test_explain_skips_the_deleted_copy_of_an_updated_doc(spark):
+    """An updated doc has a tombstoned old copy and a live new one in a
+    later segment; explain scores the live copy, the one search scores,
+    in a Searcher and, with its seg ids shifted, in a MultiSearcher."""
+    import pandas as pd
+
+    from lucene_spark.operators.delete import update_documents
+    from lucene_spark.operators.search import MultiSearcher
+
+    def frame(rows):
+        return spark.createDataFrame(pd.DataFrame(
+            rows, columns=["doc_id", "content"]))
+
+    d = tempfile.mkdtemp(prefix="lucene_spark_explain_upd_")
+    build_index(spark, frame([(1, "alpha beta"), (2, "alpha gamma"),
+                              (3, "beta gamma")]), d, num_segments=1)
+    update_documents(spark, d, frame([(1, "delta delta delta")]))
+    other = tempfile.mkdtemp(prefix="lucene_spark_explain_other_")
+    build_index(spark, frame([(10, "delta alpha"), (11, "beta")]), other,
+                num_segments=2)
+    for s in (Searcher(spark, d), MultiSearcher(spark, [other, d])):
+        assert 1 not in {r["doc_id"]
+                         for r in s.search(Q.Term("alpha")).collect()}
+        assert s.explain(Q.Term("alpha"), 1)["match"] is False
+        hit = {r["doc_id"]: r["score"]
+               for r in s.search(Q.Term("delta")).collect()}[1]
+        ex = s.explain(Q.Term("delta"), 1)
+        assert ex["match"] is True
+        assert np.float32(ex["value"]) == np.float32(hit)
+        assert ex["details"]["freq"] == 3
+
+
 def test_search_many_matches_single_searches(searcher):
     from lucene_spark.plans.parser import parse
     workload = {
