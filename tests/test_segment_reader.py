@@ -2,12 +2,12 @@
 segment's decoded postings and norms, bounded in bytes.
 
 In-process tests check the cache itself over hand-written segment files:
-eviction by bytes in least-recently-used order, a reader too large to keep
-(returned, not kept), a postings file larger than the bound (read for the
-query's terms only) and a directory replaced at the same path (read
-again). The ``local[4]`` tests check what a query sees through the Python
-workers' readers: a rebuilt index, an older snapshot after an append and
-a merge, and cold against warm answers.
+eviction by bytes in least-recently-used order, a segment too large to
+keep (read for the query's terms only, not kept) and a directory replaced
+at the same path (read again). The ``local[4]`` tests check the footer's
+size estimate against built segments, and what a query sees through the
+Python workers' readers: a rebuilt index, an older snapshot after an
+append and a merge, and cold against warm answers.
 """
 
 from __future__ import annotations
@@ -84,29 +84,42 @@ def test_eviction_by_bytes_least_recently_used_first(tmp_path):
     assert a not in cache and b in cache and c in cache
 
 
-def test_reader_larger_than_the_bound_is_returned_not_kept(tmp_path):
+def test_segment_larger_than_the_bound_is_read_for_its_terms(tmp_path):
+    """Whether a segment is kept is settled from its footer, before the
+    read: one whose file fits the bound on disk but whose decoded size
+    does not is read for the query's terms only, and nothing is evicted
+    for it."""
     small = _write_segment(tmp_path / "small", ["x"])
-    big = _write_segment(tmp_path / "big", [f"t{i:04d}" for i in range(400)])
-    on_disk = os.path.getsize(os.path.join(big, "postings.parquet"))
-    assert _size(small) + on_disk < _size(big)
-    cache = ReaderCache(_size(small) + on_disk)
-    cache.open(small, [])
-    r = cache.open(big, ["t0007"])
-    assert r.rows(["t0007"])["t0007"]["df"] == 8
-    assert r.norms()[1].tolist() == [0, 1, 2, 3]
-    assert big not in cache and small in cache   # nothing evicted for it
-
-
-def test_postings_file_larger_than_the_bound_is_read_for_its_terms(
-        tmp_path):
     big = _write_segment(tmp_path / "big", [f"t{i:04d}" for i in range(400)],
                          blob=512)
-    cache = ReaderCache(
-        os.path.getsize(os.path.join(big, "postings.parquet")) // 2)
-    r = cache.open(big, ["t0399", "t0001", "nope"])
+    on_disk = os.path.getsize(os.path.join(big, "postings.parquet"))
+    decoded = pq.read_table(os.path.join(big, "postings.parquet")).nbytes
+    cache = ReaderCache(_size(small) + 2 * on_disk)
+    assert on_disk < cache.max_bytes < decoded
+    cache.open(small, [])
+    r = cache.open(big, ["t0399", "t0007", "nope"])
     assert r.postings.num_rows == 2
-    assert list(r.rows(["t0001", "t0399", "nope"])) == ["t0001", "t0399"]
-    assert big not in cache
+    assert list(r.rows(["t0399", "t0007", "nope"])) == ["t0007", "t0399"]
+    assert r.rows(["t0007"])["t0007"]["df"] == 8
+    assert r.norms()[1].tolist() == [0, 1, 2, 3]
+    assert big not in cache and small in cache
+
+
+def test_footer_estimate_covers_a_built_segment(spark):
+    """The size a kept reader is counted at, estimated from the footer,
+    is at least what its table and ``term → row`` dict measure, and not
+    far over."""
+    import sys
+    d = tempfile.mkdtemp(prefix="lucene_spark_segreader_size_")
+    build_index(spark, spark.createDataFrame(generate_corpus(300, seed=2)),
+                d, num_segments=2, store_positions=True)
+    for seg_dir in Searcher(spark, d).seg_dirs.values():
+        r = ReaderCache(1 << 30).open(seg_dir, [])
+        row = r._row
+        measured = (r.postings.nbytes + sys.getsizeof(row)
+                    + sum(map(sys.getsizeof, row))
+                    + sum(sys.getsizeof(i) for i in row.values() if i > 256))
+        assert measured <= r.nbytes <= 1.25 * measured
 
 
 def test_directory_replaced_at_the_same_path_is_read_again(tmp_path):
@@ -137,6 +150,12 @@ def test_merged_postings_parts_read_in_range_order(tmp_path):
     r = ReaderCache(1 << 30).open(d, [])
     assert r.postings.column("term").to_pylist() == list("abcde")
     assert list(r.rows(["e", "a", "c"])) == ["a", "c", "e"]
+    small = ReaderCache(1)                   # read for the terms only
+    for terms in (["e", "a", "c", "zz"], ["b"], ["0", "bb", "zz"], []):
+        r = small.open(d, terms)
+        assert r.postings.column("term").to_pylist() == sorted(
+            set(terms) & set("abcde")), terms
+    assert d not in small
 
 
 def test_threads_share_one_cache(tmp_path):
