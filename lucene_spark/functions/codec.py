@@ -25,11 +25,24 @@ Layout per term (each piece lives in its own BinaryType column):
                search bound a block's doc range without decoding it.
   impact_bytes = per block: VByte [n_pairs, tf_1, norm_1, ...] pairs forming
                the Pareto frontier of (tf, norm_byte) in that block.
+
+This module owns the segment formats, as the reference's codec owns each
+file's one writer and one reader (``Lucene90PostingsWriter`` /
+``PostingsReader``, ``Lucene90NormsConsumer`` / ``NormsProducer``; its
+``SegmentMerger`` writes through the consumers a flush uses). Build and
+merge turn postings into ``postings.parquet`` rows with
+:func:`postings_rows` and :func:`postings_table`; every reader decodes a
+row with :class:`TermSegPostings` (by block, for block-max windows) or
+:func:`decode_postings`. A segment's ``norms.parquet`` is one row, written
+from :func:`norms_row` and read back with :func:`decode_norms`. Callers
+read and write the parquet files themselves.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 
@@ -68,6 +81,14 @@ __all__ = [
     "decode_block_ranges",
     "impacts_frontier",
     "decode_impacts",
+    "POSTINGS_SCHEMA",
+    "postings_schema",
+    "postings_rows",
+    "postings_table",
+    "TermSegPostings",
+    "norms_row",
+    "norms_table",
+    "decode_norms",
 ]
 
 
@@ -639,3 +660,213 @@ def decode_positions(pos_bytes: bytes, tfs: np.ndarray) -> np.ndarray:
 def decode_block_ranges(block_last: bytes) -> np.ndarray:
     """Last local docID per block, int64 array."""
     return np.frombuffer(block_last, dtype="<u4").astype(np.int64)
+
+
+# ---------------------------------------------------------------------------
+# Segment files: postings rows and the norms row
+# ---------------------------------------------------------------------------
+
+#: arrow schema of a segment's ``postings.parquet``, written by build and
+#: merge alike; an index with payloads appends ``pay_bytes``
+POSTINGS_SCHEMA = pa.schema([
+    ("term", pa.string()), ("seg_id", pa.int32()), ("df", pa.int32()),
+    ("ttf", pa.int64()), ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
+    ("pos_bytes", pa.binary()), ("block_last", pa.binary()),
+    ("impact_bytes", pa.binary()),
+])
+
+#: the encoded columns whose bytes a segment's ``bytes_compressed`` counts
+_BLOB_COLUMNS = ("doc_bytes", "tf_bytes", "pos_bytes", "block_last",
+                 "impact_bytes")
+
+#: arrow schema of a segment's ``norms.parquet``: one row holding the norm
+#: byte and the global doc id of every local doc
+_NORMS_SCHEMA = pa.schema([
+    ("seg_id", pa.int32()), ("num_docs", pa.int64()),
+    ("norm_bytes", pa.binary()), ("global_doc_ids", pa.binary()),
+])
+
+
+def postings_schema(payloads: bool) -> pa.Schema:
+    return (POSTINGS_SCHEMA.append(pa.field("pay_bytes", pa.binary()))
+            if payloads else POSTINGS_SCHEMA)
+
+
+def postings_rows(terms, seg_id: int, ids: np.ndarray, tfs: np.ndarray,
+                  positions: np.ndarray | None,
+                  payloads: np.ndarray | None, norm_bytes: np.ndarray,
+                  term_offsets: np.ndarray) -> pd.DataFrame:
+    """A segment's postings rows, one per term, for build and merge alike.
+
+    ``terms`` are sorted; ``ids``/``tfs``/``positions``/``term_offsets``
+    are :func:`encode_postings_batch`'s arguments. ``payloads`` (float32,
+    aligned with the positions) is None for an index without payloads,
+    else each term's slice becomes its ``pay_bytes``. No terms give an
+    empty frame of object columns."""
+    cols = postings_schema(payloads is not None).names
+    if len(terms) == 0:
+        return pd.DataFrame(columns=cols)
+    enc = encode_postings_batch(ids, tfs, positions, norm_bytes,
+                                term_offsets)
+    if payloads is not None:
+        tok = np.concatenate(([0], np.cumsum(tfs)))[term_offsets]
+        enc["pay_bytes"] = [payloads[a:b].astype("<f4").tobytes()
+                            for a, b in zip(tok[:-1], tok[1:])]
+    return pd.DataFrame({"term": terms, "seg_id": np.int32(seg_id), **enc},
+                        columns=cols)
+
+
+def postings_table(rows: pd.DataFrame) -> tuple[pa.Table, int]:
+    """:func:`postings_rows` as the Arrow table of ``postings.parquet``,
+    and the bytes of its encoded postings (a segment's
+    ``bytes_compressed``)."""
+    import pyarrow.compute as pc
+    table = pa.Table.from_pandas(
+        rows, schema=postings_schema("pay_bytes" in rows.columns),
+        preserve_index=False)
+    return table, sum(pc.sum(pc.binary_length(table[c])).as_py() or 0
+                      for c in _BLOB_COLUMNS)
+
+
+def norms_row(seg_id: int, norm_bytes: np.ndarray,
+              global_ids: np.ndarray) -> dict:
+    """The one row of a segment's ``norms.parquet``: each local doc's
+    norm byte and global doc id, in local doc id order."""
+    return {"seg_id": seg_id, "num_docs": len(norm_bytes),
+            "norm_bytes": np.asarray(norm_bytes, np.uint8).tobytes(),
+            "global_doc_ids": np.asarray(global_ids, "<i8").tobytes()}
+
+
+def norms_table(row: dict) -> pa.Table:
+    """:func:`norms_row` as the Arrow table of ``norms.parquet``."""
+    return pa.Table.from_pylist([row], schema=_NORMS_SCHEMA)
+
+
+def decode_norms(row) -> tuple[np.ndarray, np.ndarray]:
+    """(norm bytes ``uint8``, global doc ids ``int64``) of a norms row,
+    one per local doc id."""
+    return (np.frombuffer(row["norm_bytes"], dtype=np.uint8),
+            np.frombuffer(row["global_doc_ids"], dtype="<i8"))
+
+
+# ---------------------------------------------------------------------------
+# The postings reader
+# ---------------------------------------------------------------------------
+
+class TermSegPostings:
+    """Lazy reader over one (term, segment) postings row: decodes 128-doc
+    FOR blocks on demand; never touches blocks outside visited windows."""
+
+    def __init__(self, row: dict):
+        self.df = int(row["df"])
+        self.doc_buf = row["doc_bytes"]
+        self.tf_buf = row["tf_bytes"]
+        self.pos_buf = row["pos_bytes"]
+        # optional payload stream (payload-indexed builds only): raw
+        # little-endian float32, one per position, doc-major
+        self.pay_buf = row.get("pay_bytes")
+        self.block_last = decode_block_ranges(row["block_last"])
+        self.impact_bytes = row["impact_bytes"]
+        self.n_blocks = len(self.block_last)
+        self.n_full = self.df // BLOCK_SIZE
+        self._block_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._offsets: tuple[np.ndarray, np.ndarray] | None = None
+        self._all: tuple[np.ndarray, np.ndarray] | None = None
+        self._positions: np.ndarray | None = None
+
+    # -- offsets of each FOR block inside doc/tf streams --------------------
+    def _block_offsets(self):
+        if self._offsets is None:
+            doc_off = np.zeros(self.n_full + 1, dtype=np.int64)
+            tf_off = np.zeros(self.n_full + 1, dtype=np.int64)
+            for b in range(self.n_full):
+                # PFOR header: width | nexc<<5 → block length is
+                # header-computable
+                doc_off[b + 1] = doc_off[b] + \
+                    _pfor_block_size(self.doc_buf[doc_off[b]])
+                tf_off[b + 1] = tf_off[b] + \
+                    _pfor_block_size(self.tf_buf[tf_off[b]])
+            self._offsets = (doc_off, tf_off)
+        return self._offsets
+
+    def _decode_block(self, b: int):
+        """(doc_ids, tfs) of block b."""
+        hit = self._block_cache.get(b)
+        if hit is not None:
+            return hit
+        doc_off, tf_off = self._block_offsets()
+        base = int(self.block_last[b - 1]) if b > 0 else None
+        if b < self.n_full:
+            deltas, _ = for_unpack(self.doc_buf, int(doc_off[b]))
+            tfs, _ = for_unpack(self.tf_buf, int(tf_off[b]))
+            ids = np.cumsum(deltas.astype(np.int64))
+            ids += base if base is not None else 0
+            tfs = tfs.astype(np.int64)
+        else:  # tail block (VByte)
+            ntail = self.df - self.n_full * BLOCK_SIZE
+            deltas = vbyte_decode(self.doc_buf, ntail, offset=int(doc_off[-1]))
+            tfs = vbyte_decode(self.tf_buf, ntail, offset=int(tf_off[-1]))
+            ids = np.cumsum(deltas)
+            ids += base if base is not None else 0
+        self._block_cache[b] = (ids, tfs)
+        return ids, tfs
+
+    def decode_all(self):
+        """(doc_ids, tfs) of every posting: one sequential walk of the
+        streams, :func:`decode_postings`'s."""
+        if self._all is None:
+            self._all = (np.cumsum(_decode_blocked(self.doc_buf, self.df)),
+                         _decode_blocked(self.tf_buf, self.df))
+        return self._all
+
+    def in_range(self, lo: int, hi: int):
+        """(doc_ids, tfs) with lo <= id < hi, decoding only needed blocks."""
+        if self._all is not None:
+            ids, tfs = self._all
+            i0, i1 = np.searchsorted(ids, [lo, hi])
+            return ids[i0:i1], tfs[i0:i1]
+        if self.n_blocks == 0:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        b0 = int(np.searchsorted(self.block_last, lo, side="left"))
+        if b0 >= self.n_blocks:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        ids_parts, tf_parts = [], []
+        for b in range(b0, self.n_blocks):
+            start = int(self.block_last[b - 1]) + 1 if b > 0 else 0
+            if start >= hi:
+                break
+            ids, tfs = self._decode_block(b)
+            ids_parts.append(ids)
+            tf_parts.append(tfs)
+        if not ids_parts:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        ids = np.concatenate(ids_parts)
+        tfs = np.concatenate(tf_parts)
+        i0, i1 = np.searchsorted(ids, [lo, hi])
+        return ids[i0:i1], tfs[i0:i1]
+
+    def positions(self):
+        """Decoded positions aligned with repeat(doc_ids, tfs)."""
+        if self._positions is None:
+            self._positions = decode_positions(self.pos_buf,
+                                               self.decode_all()[1])
+        return self._positions
+
+    def payloads(self) -> np.ndarray | None:
+        """Decoded payload floats aligned with repeat(doc_ids, tfs);
+        None when the index carries no payloads."""
+        if self.pay_buf is None:
+            return None
+        return np.frombuffer(self.pay_buf, dtype="<f4")
+
+    def block_max_scores(self, weight: np.float32, cache: np.ndarray,
+                         sim) -> np.ndarray:
+        """Each block's best score under the similarity ``sim``, from its
+        impact frontier."""
+        imps = decode_impacts(self.impact_bytes, self.n_blocks)
+        out = np.empty(len(imps), dtype=np.float32)
+        for i, pairs in enumerate(imps):
+            out[i] = (np.float32(0.0) if len(pairs) == 0 else
+                      sim.score(pairs[:, 0], pairs[:, 1], weight,
+                                cache).max())
+        return out

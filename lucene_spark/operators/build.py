@@ -45,7 +45,8 @@ import pandas as pd
 import pyarrow as pa
 
 from ..functions.analysis import AnalyzerSpec, analyze_batch
-from ..functions.codec import encode_postings_batch
+from ..functions.codec import (norms_row, norms_table, postings_rows,
+                               postings_table)
 from ..functions.smallfloat import int_to_byte4
 from ..sources.catalog import SnapshotCatalog, publish
 
@@ -57,22 +58,6 @@ STATS_SCHEMA = ("seg_id int, num_docs long, num_terms long, num_postings long, "
                 "bytes_compressed long, build_partition int, "
                 "status string")
 STATS_COLUMNS = [f.split()[0] for f in STATS_SCHEMA.split(", ")]
-
-#: arrow schema of a segment's ``postings.parquet``, written by build and
-#: merge alike; an index with payloads appends ``pay_bytes``
-POSTINGS_SCHEMA = pa.schema([
-    ("term", pa.string()), ("seg_id", pa.int32()), ("df", pa.int32()),
-    ("ttf", pa.int64()), ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
-    ("pos_bytes", pa.binary()), ("block_last", pa.binary()),
-    ("impact_bytes", pa.binary()),
-])
-POSTINGS_COLUMNS = POSTINGS_SCHEMA.names
-
-
-def postings_schema(payloads: bool) -> pa.Schema:
-    return (POSTINGS_SCHEMA.append(pa.field("pay_bytes", pa.binary()))
-            if payloads else POSTINGS_SCHEMA)
-
 
 def write_segment_file(table: pa.Table, path: str) -> None:
     """Write one parquet file of a segment, built or merged alike: no
@@ -449,58 +434,30 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
     sum_token_len = int(total_lengths.sum())
     norm_bytes = int_to_byte4(norm_lengths)
 
-    if len(terms):
-        # term order = sorted unicode order (FreqProxTermsWriter.flush sorts
-        # terms before the codec sees them: index/FreqProxTermsWriter.java:83)
-        codes, uniques = pd.factorize(terms, sort=True)
-        order = np.lexsort((positions, doc_idx, codes))
-        c, d, p = codes[order], doc_idx[order], positions[order]
-        # posting boundaries: change of (term, doc)
-        new_post = np.empty(len(c), dtype=bool)
-        new_post[0] = True
-        new_post[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
-        post_starts = np.nonzero(new_post)[0]
-        post_ends = np.concatenate((post_starts[1:], [len(c)]))
-        tfs_all = (post_ends - post_starts).astype(np.int64)
-        post_docs = d[post_starts]
-        post_codes = c[post_starts]
-        # term boundaries over postings
-        new_term = np.empty(len(post_codes), dtype=bool)
-        new_term[0] = True
-        new_term[1:] = post_codes[1:] != post_codes[:-1]
-        term_starts = np.nonzero(new_term)[0]
-        term_off = np.concatenate((term_starts, [len(post_codes)]))
-        enc = encode_postings_batch(post_docs, tfs_all,
-                                    p if store_positions else None,
-                                    norm_bytes, term_off)
-        if payloads is not None:
-            # payload stream parallel to the position stream: raw
-            # float32 per position, doc-major, sliced per term (parquet
-            # page compression handles the bytes; FloatEncoder payloads
-            # are uncompressed 4-byte values in the reference too)
-            pay_sorted = payloads[order]
-            tok_bounds = np.concatenate(([0], np.cumsum(tfs_all)))
-            tok_off = tok_bounds[term_off]
-            pay_bytes = [pay_sorted[tok_off[i]:tok_off[i + 1]]
-                         .astype("<f4").tobytes()
-                         for i in range(len(term_off) - 1)]
-        postings = pd.DataFrame({
-            "term": uniques[post_codes[term_starts]],
-            "seg_id": np.int32(seg_id),
-            "df": enc["df"].astype(np.int64),
-            "ttf": enc["ttf"].astype(np.int64),
-            "doc_bytes": enc["doc_bytes"],
-            "tf_bytes": enc["tf_bytes"],
-            "pos_bytes": enc["pos_bytes"],
-            "block_last": enc["block_last"],
-            "impact_bytes": enc["impact_bytes"],
-        }, columns=POSTINGS_COLUMNS)
-        if payloads is not None:
-            postings["pay_bytes"] = pay_bytes
-    else:
-        cols = POSTINGS_COLUMNS + (["pay_bytes"]
-                                   if payloads is not None else [])
-        postings = pd.DataFrame(columns=cols)
+    # term order = sorted unicode order (FreqProxTermsWriter.flush sorts
+    # terms before the codec sees them: index/FreqProxTermsWriter.java:83)
+    codes, uniques = pd.factorize(terms, sort=True)
+    order = np.lexsort((positions, doc_idx, codes))
+    c, d, p = codes[order], doc_idx[order], positions[order]
+    # posting boundaries: change of (term, doc)
+    new_post = np.ones(len(c), dtype=bool)
+    new_post[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
+    post_starts = np.nonzero(new_post)[0]
+    tfs_all = np.diff(np.append(post_starts, len(c))).astype(np.int64)
+    post_docs = d[post_starts]
+    post_codes = c[post_starts]
+    # term boundaries over postings
+    new_term = np.ones(len(post_codes), dtype=bool)
+    new_term[1:] = post_codes[1:] != post_codes[:-1]
+    term_starts = np.nonzero(new_term)[0]
+    term_off = np.append(term_starts, len(post_codes))
+    # payloads: a raw float32 stream parallel to the position stream,
+    # doc-major (FloatEncoder payloads are uncompressed 4-byte values in
+    # the reference too)
+    postings = postings_rows(
+        uniques[post_codes[term_starts]], seg_id, post_docs, tfs_all,
+        p if store_positions else None,
+        None if payloads is None else payloads[order], norm_bytes, term_off)
 
     doc_meta = pdf.drop(columns=[content_col, SEG_COL], errors="ignore").copy()
     doc_meta.insert(0, "seg_id", np.int32(seg_id))
@@ -508,13 +465,8 @@ def invert_segment(pdf: pd.DataFrame, seg_id: int, content_col: str,
     doc_meta["doc_len"] = norm_lengths
     doc_meta["norm_byte"] = norm_bytes.astype(np.int32)
 
-    norms_payload = {
-        "seg_id": seg_id,
-        "num_docs": n_docs,
-        "norm_bytes": norm_bytes.tobytes(),
-        "global_doc_ids": pdf[doc_id_col].to_numpy(dtype="<i8").tobytes(),
-    }
-    return postings, doc_meta, norms_payload, sum_token_len
+    return (postings, doc_meta, norms_row(seg_id, norm_bytes, pdf[doc_id_col]),
+            sum_token_len)
 
 
 def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
@@ -524,21 +476,8 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
     """Publish one immutable segment dir. A retried Spark task that lost
     the publish to an earlier attempt of itself reuses the winner's
     ``stats.json``, with status ``reused``."""
-    import pyarrow.compute as pc
-
     seg_dir = os.path.join(catalog_root, "segments", f"seg={seg_id}")
-    postings_tbl = pa.Table.from_pandas(
-        postings, schema=postings_schema("pay_bytes" in postings.columns),
-        preserve_index=False)
-    norms_tbl = pa.table({
-        "seg_id": pa.array([norms_payload["seg_id"]], pa.int32()),
-        "num_docs": pa.array([norms_payload["num_docs"]], pa.int64()),
-        "norm_bytes": pa.array([norms_payload["norm_bytes"]], pa.binary()),
-        "global_doc_ids": pa.array([norms_payload["global_doc_ids"]], pa.binary()),
-    })
-    bytes_compressed = sum(
-        pc.sum(pc.binary_length(postings_tbl[c])).as_py() or 0 for c in
-        ("doc_bytes", "tf_bytes", "pos_bytes", "block_last", "impact_bytes"))
+    postings_tbl, bytes_compressed = postings_table(postings)
     stats = {
         "seg_id": int(seg_id),
         "num_docs": int(norms_payload["num_docs"]),
@@ -560,7 +499,8 @@ def _write_segment(catalog_root: str, seg_id: int, postings: pd.DataFrame,
             write_segment_file(
                 pa.Table.from_pandas(doc_meta, preserve_index=False),
                 os.path.join(tmp, "doc_meta.parquet"))
-            write_segment_file(norms_tbl, os.path.join(tmp, "norms.parquet"))
+            write_segment_file(norms_table(norms_payload),
+                               os.path.join(tmp, "norms.parquet"))
             with open(os.path.join(tmp, "stats.json"), "w") as f:
                 json.dump(stats, f)
     except FileExistsError:

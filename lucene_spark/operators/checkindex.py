@@ -52,9 +52,8 @@ def check_segment(seg_dir: str, seg_id: int,
         int_to_byte4(meta.sort_values("local_doc_id")["doc_len"]
                      .to_numpy()).astype(np.int32)),
         seg_id, "norm_byte != SmallFloat(doc_len)")
-    nb = np.frombuffer(norms.iloc[0]["norm_bytes"], dtype=np.uint8)
+    nb, gids = codec.decode_norms(norms.iloc[0])
     _check(len(nb) == n, seg_id, "norms length != num_docs")
-    gids = np.frombuffer(norms.iloc[0]["global_doc_ids"], dtype="<i8")
     _check(len(gids) == n, seg_id, "global_doc_ids length != num_docs")
     # gids are sorted in fresh segments but merge concatenates docBase
     # ranges of mod-partitioned inputs — only uniqueness is invariant

@@ -46,8 +46,9 @@ import pandas as pd
 
 from ..functions import bm25
 from ..functions.smallfloat import LENGTH_TABLE, int_to_byte4
-from .search import (TermSegPostings, _live_mask, _topk_merge, empty_frame,
-                     fan_out, local_frame)
+from ..functions.codec import TermSegPostings
+from .search import (_live_mask, _topk_merge, empty_frame, fan_out,
+                     merged_top_k)
 
 
 def _pseudo_stats(fields, term: str):
@@ -86,9 +87,8 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     if not fields:
         raise ValueError("fields must be non-empty")
     doc_freq, _ttf, doc_count, sum_ttf = _pseudo_stats(fields, term)
-    out_schema = "doc_id long, score float, rank int"
     if doc_freq == 0:
-        return empty_frame(spark, out_schema)
+        return empty_frame(spark, "doc_id long, score float, rank int")
 
     idf = bm25.idf(doc_freq, doc_count)
     weight = np.float32(np.float32(boost) * idf)
@@ -148,10 +148,5 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     items = [(s, [searcher.seg_dirs.get(s) for searcher, _ in fields],
               [searcher.deletes.get(s) for searcher, _ in fields])
              for s in seg_ids]
-    cand = fan_out(spark, items, seg_combined,
-                   "doc_id long, score float").toPandas()
-    g, s = _topk_merge(cand["doc_id"].to_numpy(np.int64),
-                       cand["score"].to_numpy(np.float32), k)
-    return local_frame(spark, pd.DataFrame(
-        {"doc_id": g, "score": s,
-         "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)
+    return merged_top_k(spark, fan_out(spark, items, seg_combined,
+                                       "doc_id long, score float"), k)

@@ -32,7 +32,7 @@ import uuid
 import numpy as np
 import pandas as pd
 
-from ..functions.codec import decode_postings
+from ..functions.codec import decode_norms, decode_postings
 from ..sources.catalog import SnapshotCatalog, publish
 
 #: {extra key: (directory under the index root, extra count key, the
@@ -216,25 +216,22 @@ def delete_by_ids(spark, index_dir: str,
                               lambda c, s, t: _union(t, doc_ids))
 
 
-def locate_global_ids(catalog: SnapshotCatalog, snap,
-                      global_ids, spark=None) -> dict[int, np.ndarray]:
+def locate_global_ids(catalog: SnapshotCatalog, snap, global_ids,
+                      spark) -> dict[int, np.ndarray]:
     """Map global doc_ids → {seg_id: local ids}.
 
-    Each segment's ``norms.parquet`` row holds its global_doc_ids array;
-    a probe reads it and returns the local ids of the wanted ids. With a
-    SparkSession the probes fan out over the segments
-    (:func:`~.search.fan_out`) and only the hits return, so the driver
-    never reads a segment blob; without one (tiny-index/test convenience)
-    the driver runs them."""
+    Each segment's ``norms.parquet`` row holds its global doc ids; a
+    probe reads it and returns the local ids of the wanted ids. The
+    probes fan out over the segments (:func:`~.search.fan_out`) and only
+    the hits return, so the driver never reads a segment blob."""
     import pyarrow.parquet as pq
 
     want = np.unique(np.asarray(list(global_ids), dtype=np.int64))
 
     def probe(item):
         seg_id, path = item
-        blob = pq.read_table(path, columns=["global_doc_ids"]).column(0)[0]
-        hit = np.nonzero(np.isin(np.frombuffer(blob.as_py(), "<i8"),
-                                 want))[0]
+        gids = decode_norms(pq.read_table(path).to_pylist()[0])[1]
+        hit = np.nonzero(np.isin(gids, want))[0]
         return pd.DataFrame({"seg_id": np.full(len(hit), seg_id, np.int32),
                              "local_doc_id": hit.astype(np.int32)})
 
@@ -242,8 +239,6 @@ def locate_global_ids(catalog: SnapshotCatalog, snap,
              for s in snap.seg_ids]
     if not items:
         return {}
-    if spark is None:
-        return ids_by_segment(pd.concat([probe(it) for it in items]))
     from ..session import ensure_shipped
     from .search import fan_out
     ensure_shipped(spark)
@@ -310,7 +305,7 @@ def update_documents(spark, index_dir: str, df,
     if snap is None:
         raise ValueError(f"no snapshot in {index_dir}")
     ids = [int(r[0]) for r in df.select(doc_id_col).distinct().collect()]
-    located = locate_global_ids(catalog, snap, ids, spark=spark)
+    located = locate_global_ids(catalog, snap, ids, spark)
     build_index(spark, df, index_dir, num_segments=1, doc_id_col=doc_id_col,
                 **build_kwargs)
     if located:

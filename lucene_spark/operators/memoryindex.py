@@ -41,11 +41,12 @@ import numpy as np
 import pandas as pd
 
 from ..functions.bm25 import B_DEFAULT, K1_DEFAULT
+from ..functions.codec import TermSegPostings, decode_norms
 from ..functions.similarity import BM25Similarity, Similarity
 from ..plans.parser import parse
 from ..plans.query import Query
 from .build import invert_segment
-from .search import QueryCompiler, TermSegPostings, _eval_range, _SegContext
+from .search import QueryCompiler, _eval_range, _SegContext
 
 
 class MemorySegment(QueryCompiler):
@@ -65,8 +66,7 @@ class MemorySegment(QueryCompiler):
         self.rows = {r["term"]: r for r in (
             dict(zip(postings.columns, vals)) for vals in zip(
                 *(postings[c].tolist() for c in postings.columns)))}
-        self.norms = np.frombuffer(norms["norm_bytes"], dtype=np.uint8)
-        self.doc_ids = np.frombuffer(norms["global_doc_ids"], dtype="<i8")
+        self.norms, self.doc_ids = decode_norms(norms)
         self.doc_count = len(self.norms)
         self.sum_ttf = sum_token_len
         self.deletes: dict = {}

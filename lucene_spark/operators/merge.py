@@ -34,10 +34,10 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 
-from ..functions.codec import decode_postings, encode_postings_batch
+from ..functions.codec import (decode_norms, decode_postings, norms_row,
+                               norms_table, postings_rows, postings_table)
 from ..sources.catalog import SnapshotCatalog, publish
-from .build import (POSTINGS_COLUMNS, commit_segments, postings_schema,
-                    write_segment_file)
+from .build import commit_segments, write_segment_file
 
 #: the fan-out result row of one merge task: a term range's postings
 #: stats or a doc-id range's doc count and length sum
@@ -295,17 +295,14 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         def assemble(_):
             norm_parts, gid_parts, key_parts, live_ids = [], [], [], []
             for s in seg_ids:
-                npdf = pd.read_parquet(os.path.join(seg_dirs[s],
-                                                    "norms.parquet"))
-                num = int(npdf.iloc[0]["num_docs"])
-                live = np.ones(num, dtype=bool)
+                norms, gids = decode_norms(pd.read_parquet(
+                    os.path.join(seg_dirs[s], "norms.parquet")).iloc[0])
+                live = np.ones(len(norms), dtype=bool)
                 dead = seg_deletes.get(s)
                 if dead is not None:
-                    live[dead[dead < num]] = False
-                norm_parts.append(np.frombuffer(
-                    npdf.iloc[0]["norm_bytes"], dtype=np.uint8)[live])
-                gid_parts.append(np.frombuffer(
-                    npdf.iloc[0]["global_doc_ids"], dtype="<i8")[live])
+                    live[dead[dead < len(norms)]] = False
+                norm_parts.append(norms[live])
+                gid_parts.append(gids[live])
                 if field is not None:
                     kdf = pd.read_parquet(
                         os.path.join(seg_dirs[s], "doc_meta.parquet"),
@@ -335,14 +332,8 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                     "seg_id": pa.array(seg_ids, pa.int32()),
                     "new_ids": pa.array([table[s].tobytes() for s in seg_ids],
                                         pa.binary())}), remap_path)
-            write_segment_file(pa.table({
-                "seg_id": pa.array([new_seg_id], pa.int32()),
-                "num_docs": pa.array([len(merged_norms)], pa.int64()),
-                "norm_bytes": pa.array([merged_norms.tobytes()],
-                                       pa.binary()),
-                "global_doc_ids": pa.array([merged_gids.tobytes()],
-                                           pa.binary()),
-            }), norms_path)
+            write_segment_file(norms_table(norms_row(
+                new_seg_id, merged_norms, merged_gids)), norms_path)
             new_ids = _doc_map(doc_bases, seg_deletes, table)
             soft = [new_ids(s, v) for s, v in sorted(retained.items())]
             return pd.DataFrame({
@@ -379,7 +370,6 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         for name in ("postings", "doc_meta"):
             os.makedirs(os.path.join(tmp, f"{name}.parquet"))
         overlay_path = _overlay_path(catalog, snap)
-        out_schema = postings_schema(has_payloads)
         task: dict = {}   # per task: each task unpickles its own copy
 
         def docmap():
@@ -400,17 +390,13 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
             kind, i, rng = item
             if kind == "postings":
                 out = reencode(rng)
-                write_segment_file(pa.Table.from_pandas(
-                    out, schema=out_schema, preserve_index=False),
-                    part_path(kind, i))
+                table, size = postings_table(out)
+                write_segment_file(table, part_path(kind, i))
                 return pd.DataFrame({
                     "num_terms": [len(out)],
                     "num_postings": [int(out["df"].sum())],
                     "sum_ttf": [int(out["ttf"].sum())],
-                    "bytes": [int(sum(out[c].str.len().sum() for c in
-                                      ("doc_bytes", "tf_bytes", "pos_bytes",
-                                       "block_last", "impact_bytes")))],
-                    "num_docs": [0], "sum_doc_len": [0]})
+                    "bytes": [size], "num_docs": [0], "sum_doc_len": [0]})
             meta = remap_meta(*rng)
             write_segment_file(meta, part_path(kind, i))
             return pd.DataFrame({
@@ -454,33 +440,27 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
         def reencode(filters):
             """One term range: decode every (term, segment) row, concatenate
             per term in segment order at the merged ids, then re-encode ALL
-            the range's terms in one batched pass
-            (``encode_postings_batch``) — per-term Python/Arrow overhead
-            would dominate a merge otherwise."""
-            out_cols = POSTINGS_COLUMNS + (["pay_bytes"] if has_payloads
-                                           else [])
+            the range's terms in one batched pass (``postings_rows``) —
+            per-term Python/Arrow overhead would dominate a merge
+            otherwise."""
             pdf = pd.concat(
                 [pd.read_parquet(os.path.join(seg_dirs[s], "postings.parquet"),
                                  filters=filters) for s in seg_ids],
                 ignore_index=True)
-            if len(pdf) == 0:
-                return pd.DataFrame(columns=out_cols)
             pdf = pdf.sort_values(["term", "seg_id"], kind="mergesort")
             new_ids = docmap()
             if "norms" not in task:
-                task["norms"] = np.frombuffer(
-                    pd.read_parquet(norms_path).iloc[0]["norm_bytes"],
-                    dtype=np.uint8)
-            norms = task["norms"]
+                task["norms"] = decode_norms(
+                    pd.read_parquet(norms_path).iloc[0])[0]
+            empty = [np.empty(0, np.int64)]
             ids_parts, tf_parts, pos_parts, pay_parts = [], [], [], []
             row_lens = np.empty(len(pdf), dtype=np.int64)
-            tok_lens = np.empty(len(pdf), dtype=np.int64)
             term_of_row = pdf["term"].to_numpy()
             for i, row in enumerate(pdf.itertuples(index=False)):
                 dec = decode_postings(row._asdict(),
                                       with_positions=store_positions)
                 ids, tfs = dec["doc_ids"], dec["tfs"]
-                pos = dec.get("positions", np.empty(0, np.int64)) \
+                pos = dec.get("positions", empty[0]) \
                     if store_positions else None
                 pay = np.frombuffer(row.pay_bytes, dtype="<f4") \
                     if has_payloads else None
@@ -498,19 +478,18 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                 ids_parts.append(ids)
                 tf_parts.append(tfs)
                 row_lens[i] = len(ids)
-                tok_lens[i] = int(tfs.sum())
                 if store_positions:
                     pos_parts.append(pos)
                 if pay is not None:
                     pay_parts.append(pay)
-            ids = np.concatenate(ids_parts)
-            tfs = np.concatenate(tf_parts)
-            pos = np.concatenate(pos_parts) if store_positions else None
-            pay = np.concatenate(pay_parts) if has_payloads else None
+            ids = np.concatenate(ids_parts + empty)
+            tfs = np.concatenate(tf_parts + empty)
+            pos = np.concatenate(pos_parts + empty) if store_positions else None
+            pay = np.concatenate(pay_parts + [np.empty(0, "<f4")]) \
+                if has_payloads else None
             # term boundaries in posting space (post-purge lengths; terms whose
             # every posting was deleted are dropped entirely)
-            new_term = np.empty(len(pdf), dtype=bool)
-            new_term[0] = True
+            new_term = np.ones(len(pdf), dtype=bool)
             new_term[1:] = term_of_row[1:] != term_of_row[:-1]
             term_ids = np.cumsum(new_term) - 1
             if field is not None and len(ids):
@@ -537,31 +516,11 @@ def merge_segments(spark, index_dir: str, seg_ids: list[int],
                         pay = pay[gather]
                 ids, tfs = ids[ord_], tfs[ord_]
             term_tot = np.bincount(term_ids, weights=row_lens).astype(np.int64)
-            term_row_starts = np.nonzero(new_term)[0]
             alive = term_tot > 0
             term_off = np.concatenate(([0], np.cumsum(term_tot[alive])))
-            if len(ids) == 0:
-                return pd.DataFrame(columns=out_cols)
-            enc = encode_postings_batch(ids, tfs, pos, norms, term_off)
-            if has_payloads:
-                tok_tot = np.bincount(term_ids,
-                                      weights=tok_lens).astype(np.int64)
-                tok_off = np.concatenate(([0], np.cumsum(tok_tot[alive])))
-                pay_bytes = [pay[tok_off[i]:tok_off[i + 1]]
-                             .astype("<f4").tobytes()
-                             for i in range(len(tok_off) - 1)]
-            return pd.DataFrame({
-                "term": term_of_row[term_row_starts][alive],
-                "seg_id": np.int32(new_seg_id),
-                "df": enc["df"].astype(np.int64),
-                "ttf": enc["ttf"].astype(np.int64),
-                "doc_bytes": enc["doc_bytes"],
-                "tf_bytes": enc["tf_bytes"],
-                "pos_bytes": enc["pos_bytes"],
-                "block_last": enc["block_last"],
-                "impact_bytes": enc["impact_bytes"],
-                **({"pay_bytes": pay_bytes} if has_payloads else {}),
-            }, columns=out_cols)
+            return postings_rows(
+                term_of_row[np.nonzero(new_term)[0]][alive], new_seg_id, ids,
+                tfs, pos, pay, task["norms"], term_off)
 
         parts = fan_out(spark, items, rewrite, _PART_STATS).toPandas().sum()
         if field is not None:

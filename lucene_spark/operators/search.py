@@ -37,7 +37,8 @@ from functools import cached_property, reduce
 import numpy as np
 import pandas as pd
 
-from ..functions import bm25, codec
+from ..functions import bm25
+from ..functions.codec import TermSegPostings, check_codec_version
 from ..functions.similarity import BM25Similarity, Similarity
 from ..functions.smallfloat import LENGTH_TABLE
 from ..plans import query as Q
@@ -581,127 +582,6 @@ def _bmw_eligible(c) -> bool:
     if isinstance(c, CAnd):
         return all(_bmw_eligible(k) for k in c.children)
     return False
-
-
-# ---------------------------------------------------------------------------
-# Per-segment term postings with lazy block decode
-# ---------------------------------------------------------------------------
-
-class TermSegPostings:
-    """Lazy reader over one (term, segment) postings row: decodes 128-doc
-    FOR blocks on demand; never touches blocks outside visited windows."""
-
-    def __init__(self, row: dict):
-        self.df = int(row["df"])
-        self.doc_buf = row["doc_bytes"]
-        self.tf_buf = row["tf_bytes"]
-        self.pos_buf = row["pos_bytes"]
-        # optional payload stream (payload-indexed builds only): raw
-        # little-endian float32, one per position, doc-major
-        self.pay_buf = row.get("pay_bytes") if hasattr(row, "get") \
-            else (row["pay_bytes"] if "pay_bytes" in row else None)
-        self.block_last = codec.decode_block_ranges(row["block_last"])
-        self.impact_bytes = row["impact_bytes"]
-        self.n_blocks = len(self.block_last)
-        self.n_full = self.df // codec.BLOCK_SIZE
-        self._block_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self._offsets: tuple[np.ndarray, np.ndarray] | None = None
-        self._all: tuple[np.ndarray, np.ndarray] | None = None
-        self._positions: np.ndarray | None = None
-
-    # -- offsets of each FOR block inside doc/tf streams --------------------
-    def _block_offsets(self):
-        if self._offsets is None:
-            doc_off = np.zeros(self.n_full + 1, dtype=np.int64)
-            tf_off = np.zeros(self.n_full + 1, dtype=np.int64)
-            for b in range(self.n_full):
-                # PFOR header: width | nexc<<5 → block length is
-                # header-computable (codec._pfor_block_size)
-                doc_off[b + 1] = doc_off[b] + \
-                    codec._pfor_block_size(self.doc_buf[doc_off[b]])
-                tf_off[b + 1] = tf_off[b] + \
-                    codec._pfor_block_size(self.tf_buf[tf_off[b]])
-            self._offsets = (doc_off, tf_off)
-        return self._offsets
-
-    def _decode_block(self, b: int):
-        """(doc_ids, tfs) of block b."""
-        hit = self._block_cache.get(b)
-        if hit is not None:
-            return hit
-        doc_off, tf_off = self._block_offsets()
-        base = int(self.block_last[b - 1]) if b > 0 else None
-        if b < self.n_full:
-            deltas, _ = codec.for_unpack(self.doc_buf, int(doc_off[b]))
-            tfs, _ = codec.for_unpack(self.tf_buf, int(tf_off[b]))
-            ids = np.cumsum(deltas.astype(np.int64))
-            ids += base if base is not None else 0
-            tfs = tfs.astype(np.int64)
-        else:  # tail block (VByte)
-            ntail = self.df - self.n_full * codec.BLOCK_SIZE
-            deltas = codec.vbyte_decode(self.doc_buf, ntail, offset=int(doc_off[-1]))
-            tfs = codec.vbyte_decode(self.tf_buf, ntail, offset=int(tf_off[-1]))
-            ids = np.cumsum(deltas)
-            ids += base if base is not None else 0
-        self._block_cache[b] = (ids, tfs)
-        return ids, tfs
-
-    def decode_all(self):
-        if self._all is None:
-            if self.n_blocks == 0:
-                self._all = (np.empty(0, np.int64), np.empty(0, np.int64))
-            else:
-                parts = [self._decode_block(b) for b in range(self.n_blocks)]
-                self._all = (np.concatenate([p[0] for p in parts]),
-                             np.concatenate([p[1] for p in parts]))
-        return self._all
-
-    def in_range(self, lo: int, hi: int):
-        """(doc_ids, tfs) with lo <= id < hi, decoding only needed blocks."""
-        if self.n_blocks == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        b0 = int(np.searchsorted(self.block_last, lo, side="left"))
-        if b0 >= self.n_blocks:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        ids_parts, tf_parts = [], []
-        for b in range(b0, self.n_blocks):
-            start = int(self.block_last[b - 1]) + 1 if b > 0 else 0
-            if start >= hi:
-                break
-            ids, tfs = self._decode_block(b)
-            ids_parts.append(ids)
-            tf_parts.append(tfs)
-        if not ids_parts:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        ids = np.concatenate(ids_parts)
-        tfs = np.concatenate(tf_parts)
-        i0, i1 = np.searchsorted(ids, [lo, hi])
-        return ids[i0:i1], tfs[i0:i1]
-
-    def positions(self):
-        """Decoded positions aligned with repeat(doc_ids, tfs)."""
-        if self._positions is None:
-            self._positions = codec.decode_positions(self.pos_buf,
-                                                     self.decode_all()[1])
-        return self._positions
-
-    def payloads(self) -> np.ndarray | None:
-        """Decoded payload floats aligned with repeat(doc_ids, tfs);
-        None when the index carries no payloads."""
-        if self.pay_buf is None:
-            return None
-        return np.frombuffer(self.pay_buf, dtype="<f4")
-
-    def block_max_scores(self, weight: np.float32, cache: np.ndarray,
-                         sim: Similarity | None = None) -> np.ndarray:
-        imps = codec.decode_impacts(self.impact_bytes, self.n_blocks)
-        sim = sim or BM25Similarity()
-        out = np.empty(len(imps), dtype=np.float32)
-        for i, pairs in enumerate(imps):
-            out[i] = (np.float32(0.0) if len(pairs) == 0 else
-                      sim.score(pairs[:, 0], pairs[:, 1], weight,
-                                cache).max())
-        return out
 
 
 # ---------------------------------------------------------------------------
@@ -1346,6 +1226,30 @@ def ranked_top_k(spark, rows, key: str, ascending: bool, k: int):
     return spark.createDataFrame(top.append_column("rank", pa.array(rank)))
 
 
+def merged_top_k(spark, cand, k: int, by: str | None = None):
+    """The global top ``k`` of the per-segment candidates ``cand`` (a
+    DataFrame of ``doc_id long, score float``), per value of its string
+    column ``by`` when given: merged on the driver with the segments'
+    tie-break (TopDocs.merge) and numbered by a 1-based ``rank int``, as a
+    local frame."""
+    schema = "doc_id long, score float, rank int"
+    if by is not None:
+        schema = f"{by} string, {schema}"
+    pdf = cand.toPandas()
+    tops = []
+    for key, c in pdf.groupby(by) if by is not None else [(None, pdf)]:
+        g, s = _topk_merge(c["doc_id"].to_numpy(np.int64),
+                           c["score"].to_numpy(np.float32), k)
+        top = pd.DataFrame({"doc_id": g, "score": s, "rank": np.arange(
+            1, len(g) + 1, dtype=np.int32)})
+        if by is not None:
+            top.insert(0, by, key)
+        tops.append(top)
+    if not tops:
+        return empty_frame(spark, schema)
+    return local_frame(spark, pd.concat(tops, ignore_index=True), schema)
+
+
 def empty_frame(spark, schema: str):
     """A typed empty DataFrame that runs no Spark job."""
     return local_frame(spark, pd.DataFrame(columns=_columns(schema)), schema)
@@ -1549,17 +1453,27 @@ class QueryCompiler:
                                 self._resolve(q.big))
         return q
 
-    def _compile(self, query):
-        if isinstance(query, str):
-            query = parse_query(query)
-        query = Q.rewrite_fixed_point(query)
-        query = self._resolve(query)
-        dfs, ttfs = self._global_stats(query.all_terms())
-        compiled = compile_query(query, dfs, self.doc_count, self.similarity,
-                                 ttfs, self.sum_ttf)
+    def _compile_many(self, queries: dict) -> tuple[dict, np.ndarray]:
+        """({key: compiled query or None}, norm cache) of ``queries``
+        ({key: query or query string}): each rewritten and resolved, then
+        weighted with the stats of ONE dictionary probe for the union of
+        their terms."""
+        resolved = {key: self._resolve(Q.rewrite_fixed_point(
+            parse_query(q) if isinstance(q, str) else q))
+            for key, q in queries.items()}
+        dfs, ttfs = self._global_stats(
+            [t for q in resolved.values() for t in q.all_terms()])
         avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
-        cache = self.similarity.norm_cache(avgdl)
-        return compiled, cache
+        return ({key: compile_query(q, dfs, self.doc_count, self.similarity,
+                                    ttfs, self.sum_ttf)
+                 for key, q in resolved.items()},
+                self.similarity.norm_cache(avgdl))
+
+    def _compile(self, query):
+        """(compiled query or None, norm cache): :meth:`_compile_many` of
+        one query."""
+        compiled, cache = self._compile_many({0: query})
+        return compiled[0], cache
 
 
 class Searcher(QueryCompiler):
@@ -1581,7 +1495,6 @@ class Searcher(QueryCompiler):
         every segment uniquely; a query task opens the segments itself."""
         from collections import OrderedDict
 
-        from ..functions.codec import check_codec_version
         from ..session import ensure_shipped
         from .delete import load_deletes
         ensure_shipped(spark)
@@ -1924,22 +1837,18 @@ class Searcher(QueryCompiler):
                                        after=after)
 
         compiled, cache = self._compile(query)
-        out_schema = "doc_id long, score float, rank int"
         if compiled is None:
-            return empty_frame(self.spark, out_schema)
+            return empty_frame(self.spark,
+                               "doc_id long, score float, rank int")
 
         def seg_topk(seg_id, ctx, gids):
             g, s, _ = score_segment(compiled, ctx.rows, ctx.norms, gids,
                                     cache, k, mode, after, ctx=ctx)
             return pd.DataFrame({"doc_id": g, "score": s.astype(np.float32)})
 
-        cand = self.map_segments(_compiled_terms(compiled), seg_topk,
-                                 "doc_id long, score float", cache).toPandas()
-        g, s = _topk_merge(cand["doc_id"].to_numpy(np.int64),
-                           cand["score"].to_numpy(np.float32), k)
-        return local_frame(self.spark, pd.DataFrame(
-            {"doc_id": g, "score": s,
-             "rank": np.arange(1, len(g) + 1, dtype=np.int32)}), out_schema)
+        return merged_top_k(self.spark, self.map_segments(
+            _compiled_terms(compiled), seg_topk, "doc_id long, score float",
+            cache), k)
 
     def _term_columns(self, bounds):
         """Each dictionary's ``term`` column, read on the driver with
@@ -2336,29 +2245,17 @@ class Searcher(QueryCompiler):
     def search_many(self, queries: dict[str, object], k: int = 10,
                     mode: str = "auto"):
         """Batch top-k for a whole query workload in ONE job — the shape a
-        cluster actually runs: a single postings scan fetches the union of
-        all queries' terms (one pushed-down ``In`` filter), each segment is
-        decoded ONCE into a shared block cache and every query is scored
-        against it. Job overhead and segment decode amortize over the
-        workload instead of per query. Each query's ≤ k·S per-segment
-        candidates are merged on the driver, as :meth:`search` merges.
+        cluster actually runs: the queries compile with one dictionary
+        probe (:meth:`_compile_many`), each segment task takes the union of
+        their terms' postings rows from its reader, decodes each row ONCE
+        into a shared block cache and scores every query against it. Job
+        overhead and segment decode amortize over the workload instead of
+        per query. Each query's ≤ k·S per-segment candidates are merged on
+        the driver, as :meth:`search` merges (:func:`merged_top_k`).
 
         Returns DataFrame (query_id string, doc_id long, score float,
         rank int)."""
-        resolved: dict[str, object] = {}
-        for qid, q in queries.items():
-            if isinstance(q, str):
-                q = parse_query(q)
-            resolved[qid] = self._resolve(Q.rewrite_fixed_point(q))
-        union_terms = sorted({t for q in resolved.values()
-                              for t in q.all_terms()})
-        dfs, ttfs = self._global_stats(union_terms)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
-        sim = self.similarity
-        cache = sim.norm_cache(avgdl)
-        compiled = {qid: compile_query(q, dfs, self.doc_count, sim,
-                                       ttfs, self.sum_ttf)
-                    for qid, q in resolved.items()}
+        compiled, cache = self._compile_many(queries)
         compiled = {qid: c for qid, c in compiled.items() if c is not None}
         out_schema = "query_id string, doc_id long, score float"
         if not compiled:
@@ -2375,19 +2272,9 @@ class Searcher(QueryCompiler):
                         "score": s.astype(np.float32)}))
             return pd.concat(parts, ignore_index=True) if parts else None
 
-        cand = self.map_segments(union_terms, seg_many, out_schema,
-                                 cache).toPandas()
-        tops = []
-        for qid, c in cand.groupby("query_id"):
-            g, s = _topk_merge(c["doc_id"].to_numpy(np.int64),
-                               c["score"].to_numpy(np.float32), k)
-            tops.append(pd.DataFrame({
-                "query_id": qid, "doc_id": g, "score": s,
-                "rank": np.arange(1, len(g) + 1, dtype=np.int32)}))
-        if not tops:
-            return empty_frame(self.spark, out_schema + ", rank int")
-        return local_frame(self.spark, pd.concat(tops, ignore_index=True),
-                           out_schema + ", rank int")
+        terms = [t for c in compiled.values() for t in _compiled_terms(c)]
+        return merged_top_k(self.spark, self.map_segments(
+            terms, seg_many, out_schema, cache), k, by="query_id")
 
     def explain(self, query, doc_id: int) -> dict:
         """Score breakdown for one document (Weight.explain role:

@@ -22,8 +22,9 @@ row groups whose term statistics span them, and not kept.
 Entries are Arrow tables, numpy arrays and one dict of strings to ints:
 no per-term Python row objects, which the full ``gc.collect()`` the
 PySpark daemon runs after every task would walk. Writers (build, merge,
-delete, ``check_index``) read the files themselves: they must see the
-bytes on disk.
+delete, ``check_index``) still read the files themselves, since they must
+see the bytes on disk, but decode them through ``functions/codec.py``, the
+one owner of the segment formats, as this reader does.
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+from ..functions.codec import decode_norms
 
 #: Decoded bytes of open segment readers one process keeps. Spark runs one
 #: Python worker per concurrent task, so an executor's workers hold up to
@@ -100,11 +103,8 @@ class SegmentReader:
         """(norm bytes ``uint8``, global doc ids ``int64``), one per local
         doc id."""
         if self._norms is None:
-            row = pq.ParquetFile(
-                os.path.join(self.seg_dir, "norms.parquet")).read(
-                columns=["norm_bytes", "global_doc_ids"]).to_pylist()[0]
-            self._norms = (np.frombuffer(row["norm_bytes"], dtype=np.uint8),
-                           np.frombuffer(row["global_doc_ids"], dtype="<i8"))
+            self._norms = decode_norms(pq.ParquetFile(os.path.join(
+                self.seg_dir, "norms.parquet")).read().to_pylist()[0])
         return self._norms
 
 

@@ -3,7 +3,7 @@
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from lucene_spark.functions import codec
 
@@ -86,6 +86,7 @@ def postings(draw):
 
 
 @given(postings())
+@example((np.arange(0, 1500, 5, dtype=np.int64), np.full(300, 2, np.int64)))
 @settings(max_examples=50, deadline=None)
 def test_postings_roundtrip(p):
     doc_ids, tfs = p
@@ -102,6 +103,21 @@ def test_postings_roundtrip(p):
     assert np.array_equal(dec["doc_ids"], doc_ids)
     assert np.array_equal(dec["tfs"], tfs)
     assert np.array_equal(dec["positions"], pos)
+    # the postings reader agrees: its sequential walk, its positions, and
+    # its by-block reads over windows that cut through blocks (on a fresh
+    # reader, and on one that has walked the whole row)
+    bounds = list(range(0, max_doc, 97)) + [max_doc]
+    for walked in (False, True):
+        tp = codec.TermSegPostings(enc)
+        if walked:
+            ids, got_tfs = tp.decode_all()
+            assert ids.dtype == got_tfs.dtype == np.int64
+            assert np.array_equal(ids, doc_ids)
+            assert np.array_equal(got_tfs, tfs)
+            assert np.array_equal(tp.positions(), pos)
+        parts = [tp.in_range(lo, hi) for lo, hi in zip(bounds, bounds[1:])]
+        assert np.array_equal(np.concatenate([i for i, _ in parts]), doc_ids)
+        assert np.array_equal(np.concatenate([t for _, t in parts]), tfs)
     # block_last covers every block and ends at the last doc
     bl = codec.decode_block_ranges(enc["block_last"])
     assert len(bl) == (len(doc_ids) + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE

@@ -23,7 +23,9 @@ kernel is reached from the engine or the oracle. Every index write is
 published through the one primitive, ``sources.catalog.publish``, and
 every new segment is named by the catalog's one allocator. Every query
 reads a segment's postings and norms through the one query-time reader,
-``operators/segreader.py``.
+``operators/segreader.py``. Every segment file format has one owner,
+``functions/codec.py``: build and merge write postings rows and the norms
+row through it, and every reader decodes them through it.
 """
 
 from __future__ import annotations
@@ -299,3 +301,23 @@ def test_one_segment_reader():
     assert named("operators/segreader.py") == files
     for rel in ("operators/search.py", "operators/combinedfield.py"):
         assert named(rel) == set(), rel
+
+
+def test_one_segment_codec():
+    """No package module but ``functions/codec.py`` names the norms row's
+    columns (``"norm_bytes"``, ``"global_doc_ids"``), encodes postings
+    rows (``encode_postings_batch``) or walks the PFOR block stream
+    (``for_unpack``, ``vbyte_decode``, ``_pfor_block_size``)."""
+    codec = "functions/codec.py"
+    names = {"norm_bytes", "global_doc_ids"}
+    sites = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel != codec:
+            sites += [(rel, node.value) for node in ast.walk(ast.parse(
+                path.read_text(encoding="utf-8")))
+                if isinstance(node, ast.Constant) and node.value in names]
+    for attr in ("encode_postings_batch", "for_unpack", "vbyte_decode",
+                 "_pfor_block_size"):
+        sites += [(rel, attr) for rel, _ in _call_sites(attr) if rel != codec]
+    assert sites == []

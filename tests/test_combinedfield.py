@@ -130,7 +130,7 @@ def test_deletes_mask_combined(spark, two_field_indexes):
     victim = int(base[0]["doc_id"])
     cat = SnapshotCatalog(dirs["body"])
     delete_by_ids(spark, dirs["body"],
-                  locate_global_ids(cat, cat.load(), [victim]))
+                  locate_global_ids(cat, cat.load(), [victim], spark))
     s_body2 = Searcher(spark, dirs["body"])
     after = combined_field_topk(
         spark, [(s_title, 2.0), (s_body2, 1.0)], "parse", k=5).collect()
